@@ -86,11 +86,6 @@ def _bigram_pairs(text_col: str) -> Column:
     )
 
 
-# window-vs-groupBy form gate memo for the self-scoring NLL paths,
-# keyed like queries.spread_scan's decision memo (session pinned so
-# id() can't be recycled)
-_FORM_GATE: dict[tuple, tuple] = {}
-
 # Input-partition threshold below which the window form is used for
 # self-scoring NLL. ~200 default-size splits ≈ 25 GB of corpus; past
 # that, an unbounded-frame window partitioned by first token shuffles
@@ -109,15 +104,15 @@ def _window_form_ok(docs: DataFrame) -> bool:
     """True when `docs` is small enough for the window-form fast path
     (scan partition count as the size proxy — a corpus table at
     production scale splits into thousands of tasks on its own, so the
-    gate picks the skew-safe groupBy form there with no size job)."""
-    key = (id(docs.sparkSession), docs.semanticHash())
-    hit = _FORM_GATE.get(key)
-    if hit is None or hit[0] is not docs.sparkSession:
-        _FORM_GATE[key] = (
-            docs.sparkSession,
-            docs.rdd.getNumPartitions() <= _WINDOW_FORM_MAX_PARTS,
-        )
-    return _FORM_GATE[key][1]
+    gate picks the skew-safe groupBy form there with no size job).
+    Memoized per (session, canonical plan) like queries.spread_scan."""
+    from ..queries import memo_unlocked
+
+    return memo_unlocked(
+        docs.sparkSession,
+        ("window_form_ok", docs.semanticHash()),
+        lambda: docs.rdd.getNumPartitions() <= _WINDOW_FORM_MAX_PARTS,
+    )
 
 
 def bigram_counts(docs: DataFrame, *, text_col: str = "text") -> DataFrame:

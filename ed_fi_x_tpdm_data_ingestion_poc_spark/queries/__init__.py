@@ -13,6 +13,19 @@ Conventions that make cross-engine value-hashing stable:
   * explicit casts where engine result types differ (e.g. DuckDB EXTRACT
     -> BIGINT vs Spark year() -> INT),
   * total ORDER BY wherever a LIMIT exists.
+
+Cache rule: everything the engine keeps between calls that belongs to a
+session -- memo() artifacts and verdicts, fixture frames, the table
+cache, tune()'s done-flag and the broadcast_if_small / spread_scan /
+window-form gate decisions -- lives in session_cache(spark), a dict
+attached to the session object. Entries die with the session, nothing
+is keyed by id(), and a second session (spark.newSession(), or a new
+one after stop()) rebuilds instead of reading frames planned against
+another session. BUILD_TIMES stays process-wide: it is a report that
+bench.py and perfbench read by name, not a cache. The only
+process-wide caches are streaming.replay._replay_cache (on-disk replay
+directories, valid for any session) and pipeline_q._STUB_CACHE (the one
+REST stub server a process serves its queries from).
 """
 
 from __future__ import annotations
@@ -50,12 +63,29 @@ BUILD_TIMES: dict[str, float] = {}
 _BUILD_STACK: list[float] = []
 
 
-def memo(cache: dict, key, build, label: str | None = None):
-    """Thread-safe build-once memoization: cache[key] = build() exactly once.
+def session_cache(spark) -> dict:
+    """The per-session store behind every engine cache (see the module
+    docstring): a dict attached to `spark`, so its entries live exactly
+    as long as the session object. Also accepts a SparkContext, for
+    state every session on that context shares. dict.setdefault makes
+    the first attach atomic when threads race on a fresh session."""
+    return spark.__dict__.setdefault("_engine_cache", {})
+
+
+def memo(spark: SparkSession, key: tuple, build, label: str | None = None):
+    """Thread-safe build-once memoization in the session store:
+    session_cache(spark)[key] = build() exactly once. `key` starts with a
+    string unique to the call site (usually `label`)."""
+    return build_once(session_cache(spark), key, build, label)
+
+
+def build_once(cache: dict, key, build, label: str | None = None):
+    """cache[key] = build() exactly once, under _BUILD_LOCK.
     With `label`, the (cold) build's wall-clock EXCLUSIVE of nested
     labeled builds is accumulated into BUILD_TIMES under that name
     (nested artifact builds report under their own labels; unlabeled
-    children stay in the parent)."""
+    children stay in the parent). Session-scoped callers go through
+    memo(); only process-wide fixtures pass their own cache."""
     import time
 
     with _BUILD_LOCK:
@@ -83,11 +113,29 @@ def memo(cache: dict, key, build, label: str | None = None):
         return cache[key]
 
 
-# gate-probe memo for broadcast_if_small: (session ref kept so id() can't
-# be recycled) — keyed by the side's CANONICALIZED plan, so re-built
-# expressions over the same tables (a fresh .where() per query eval)
-# share one probe count instead of paying a count job per evaluation
-_GATE_COUNTS: dict[tuple, tuple] = {}
+def memo_unlocked(spark: SparkSession, key: tuple, probe):
+    """Session-memoized cheap decision (a size/partition probe, a table
+    handle) kept OUTSIDE _BUILD_LOCK: a duplicate probe under a race
+    does no harm, but waiting behind a multi-second memo() build would.
+    The first stored result wins, so racing callers agree."""
+    cache = session_cache(spark)
+    if key not in cache:
+        cache.setdefault(key, probe())
+    return cache[key]
+
+
+def fixture_df(spark: SparkSession, name: str, data, schema: str) -> DataFrame:
+    """Inline-literal fixture frame, persisted and materialized once per
+    session: a bare createDataFrame(list) plans as a Python-RDD scan
+    (applySchemaToPythonRDD) that round-trips a Python worker on EVERY
+    downstream execution; caching pins the rows JVM-side once."""
+
+    def build():
+        df = spark.createDataFrame(data, schema).persist()
+        df.count()
+        return df
+
+    return memo(spark, ("fixture_dfs", name), build, label="fixture_dfs")
 
 
 def _est_row_bytes(dt) -> int:
@@ -158,18 +206,13 @@ def broadcast_if_small(
     conversion when the side turns out small after filters)."""
     from pyspark.sql import functions as _F
 
-    key = (id(df.sparkSession), df.semanticHash())
-    hit = _GATE_COUNTS.get(key)
-    if hit is None or hit[0] is not df.sparkSession:
-        _GATE_COUNTS[key] = (df.sparkSession, df.count())
-    n = _GATE_COUNTS[key][1]
+    # keyed by the side's CANONICALIZED plan, so re-built expressions over
+    # the same tables (a fresh .where() per query eval) share one probe
+    n = memo_unlocked(
+        df.sparkSession, ("broadcast_if_small", df.semanticHash()), df.count
+    )
     small = n <= max_rows and n * _est_row_bytes(df.schema) <= max_bytes
     return _F.broadcast(df) if small else df
-
-
-# spread_scan decision memo: (session id, semantic hash) -> bool, with the
-# session object pinned so id() can't be recycled (the _GATE_COUNTS rule)
-_SPREAD_DECISIONS: dict[tuple, tuple] = {}
 
 
 def spread_scan(df: DataFrame, factor: float = 1) -> DataFrame:
@@ -208,28 +251,26 @@ def spread_scan(df: DataFrame, factor: float = 1) -> DataFrame:
     therefore capped at ~1 worker lane per 1.5 GiB of MemAvailable
     (floor 8, the core count where those queries measured healthy):
     a 128 GiB box keeps the full 32-way spread, a 32 GiB box spreads
-    ~12-wide instead of pinning 32 workers it cannot feed. Production
+    ~12-wide instead of pinning 32 workers it cannot feed. MemAvailable
+    is sampled once per session, so every plan in a session shares one
+    cap whatever order the plans are first seen in. Production
     posture unchanged: corpus tables split past defaultParallelism on
     their own, the under-split gate fails, and this returns the frame
     untouched."""
-    key = (id(df.sparkSession), df.semanticHash(), factor)
-    hit = _SPREAD_DECISIONS.get(key)
-    if hit is None or hit[0] is not df.sparkSession:
+    spark = df.sparkSession
+
+    def decide() -> tuple[bool, int]:
         from ..session import mem_available_gb
 
-        par = max(
-            1,
-            int(df.sparkSession.sparkContext.defaultParallelism * factor),
-        )
-        avail = mem_available_gb()
+        par = max(1, int(spark.sparkContext.defaultParallelism * factor))
+        avail = memo_unlocked(spark, ("mem_available_gb",), mem_available_gb)
         if avail is not None:
             par = min(par, max(8, int(avail / 1.5)))
-        _SPREAD_DECISIONS[key] = (
-            df.sparkSession,
-            df.rdd.getNumPartitions() < par,
-            par,
-        )
-    _, under_split, par = _SPREAD_DECISIONS[key]
+        return df.rdd.getNumPartitions() < par, par
+
+    under_split, par = memo_unlocked(
+        spark, ("spread_scan", df.semanticHash(), factor), decide
+    )
     return df.repartition(par) if under_split else df
 
 

@@ -33,9 +33,6 @@ _STOP_SQL = "('the','a','of','and','to','in','is','it')"
 # recall oracle for the sketch operators (q50c/q50d). Build it once per
 # (session, sf) and persist — the three queries share the computation the
 # way a production pipeline would share a materialized intermediate.
-_EXACT_PAIRS: dict[tuple[int, str], DataFrame] = {}
-
-
 def _exact_pairs(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.dedup import ngram_jaccard_pairs
 
@@ -43,14 +40,11 @@ def _exact_pairs(spark: SparkSession, sf: str) -> DataFrame:
         d = table(spark, sf, "documents")
         return built(ngram_jaccard_pairs(d, k=5, threshold=0.8).persist())
 
-    return memo(_EXACT_PAIRS, (id(spark), sf), build, label="exact_pairs")
+    return memo(spark, ("exact_pairs", sf), build, label="exact_pairs")
 
 
 # Exact cosine top-10: declared result (q51a) and the recall oracle for
 # both ANN variants (q51b LSH, q51c IVF) — shared like _exact_pairs.
-_EXACT_TOPK: dict[tuple[int, str], DataFrame] = {}
-
-
 def _exact_topk(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.similarity import cosine_topk
 
@@ -59,21 +53,15 @@ def _exact_topk(spark: SparkSession, sf: str) -> DataFrame:
         qs = e.filter(F.col("vec_id") < 5)
         return built(cosine_topk(e, qs, k=10).persist())
 
-    return memo(_EXACT_TOPK, (id(spark), sf), build, label="exact_topk")
+    return memo(spark, ("exact_topk", sf), build, label="exact_topk")
 
 
 # Sketch signatures and ANN indexes are materialize-once corpus artifacts
 # in production (persist/write once, dedup/query against them many times);
 # memoized per (session, sf) like _exact_pairs so repeated declared-query
 # runs amortize the build instead of re-sketching the corpus.
-_ARTIFACTS: dict[tuple, object] = {}
-
-
 def _artifact(spark: SparkSession, sf: str, kind: str, build):
-    return memo(_ARTIFACTS, (id(spark), sf, kind), build, label=kind)
-
-
-_ANN_OK: dict[tuple, float] = {}
+    return memo(spark, (kind, sf), build, label=kind)
 
 
 def _recall_memo(spark, sf: str, kind: str, approx, exact) -> float:
@@ -85,7 +73,7 @@ def _recall_memo(spark, sf: str, kind: str, approx, exact) -> float:
     from ..operators.similarity import recall_at_k
 
     return memo(
-        _ANN_OK, (id(spark), sf, kind),
+        spark, (f"{kind}_recall", sf),
         lambda: recall_at_k(approx, exact), label=f"{kind}_recall",
     )
 

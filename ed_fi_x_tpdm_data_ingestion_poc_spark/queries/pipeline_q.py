@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import memo, query
+from . import build_once, fixture_df, memo, query
 
 # --------------------------------------------------------------- fixtures --
 # (pidm, first, last, birth_date 'YYYY-MM-DD'|None, sex_code, source_order)
@@ -44,26 +44,6 @@ _ATYP_VOCAB = [("MA", "uri://ed-fi.org/AddressTypeDescriptor"),
 _REMOTE = [("101", "res-101"), ("102", "res-102"), ("900", "res-900"), ("901", "res-901")]
 
 
-# Fixture DataFrames per (session, literal-set), persisted + materialized:
-# a bare createDataFrame(list) plans as a Python-RDD scan
-# (applySchemaToPythonRDD) that round-trips a Python worker on EVERY
-# downstream execution; caching pins the rows JVM-side once.
-_FIX_DFS: dict[tuple, DataFrame] = {}
-
-
-def _fixture_df(spark: SparkSession, name: str, data, schema: str) -> DataFrame:
-    def build():
-        df = spark.createDataFrame(data, schema).persist()
-        df.count()  # materialize: downstream scans hit the JVM cache
-        return df
-
-    return memo(_FIX_DFS, (id(spark), name), build, label="fixture_dfs")
-
-
-# One Derby "remote RDBMS" per (session, sf): the database is the fixture;
-# the declared operator is the partitioned JDBC scan against it.
-_DERBY_FIXTURE: dict[tuple, tuple[str, int, int]] = {}
-
 # One REST stub server per process: the server is the fixture ("the remote
 # ODS API"); the declared operator is the paginated executor-side read.
 _STUB_CACHE: dict = {}
@@ -81,7 +61,7 @@ def _stub_server():
         atexit.register(lambda: server.__exit__())
         return server
 
-    return memo(_STUB_CACHE, "server", build, label="rest_stub")
+    return build_once(_STUB_CACHE, "server", build, label="rest_stub")
 
 
 def _values(rows: list[tuple]) -> str:
@@ -153,7 +133,7 @@ def q60(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.rename import rename_columns
 
     # Physical (Banner-style) column names prove the rename layer (R6).
-    cand = _fixture_df(
+    cand = fixture_df(
         spark, "cand", _CANDS,
         "SPRIDEN_PIDM long, SPRIDEN_FIRST_NAME string, SPRIDEN_LAST_NAME string,"
         " SPBPERS_BIRTH_DATE string, SPBPERS_SEX string, SOURCE_ORDER int",
@@ -171,16 +151,16 @@ def q60(spark: SparkSession, sf: str) -> DataFrame:
     )
     cand = cast_columns(cand, {"birth_date": "date"})
     cand = latest_per_key(cand, ["tcid"], ["ord"])
-    sexv = _fixture_df(spark, "sexv", _SEX_VOCAB, "codeValue string, namespace string")
+    sexv = fixture_df(spark, "sexv", _SEX_VOCAB, "codeValue string, namespace string")
     cand = enrich_descriptor_uri(cand, sexv, code_col="sex_code", out_col="sex_uri")
 
-    addr = _fixture_df(
+    addr = fixture_df(
         spark, "addr", _ADDRS,
         "pidm long, street string, city string, state_code string, zip string,"
         " atyp string, b string, e string",
     )
-    statev = _fixture_df(spark, "statev", _STATE_VOCAB, "codeValue string, namespace string")
-    atypv = _fixture_df(spark, "atypv", _ATYP_VOCAB, "codeValue string, namespace string")
+    statev = fixture_df(spark, "statev", _STATE_VOCAB, "codeValue string, namespace string")
+    atypv = fixture_df(spark, "atypv", _ATYP_VOCAB, "codeValue string, namespace string")
     addr = enrich_descriptor_uri(addr, atypv, code_col="atyp", out_col="atype_uri")
     addr = enrich_descriptor_uri(addr, statev, code_col="state_code", out_col="state_uri")
     addr = addr.withColumn(
@@ -235,10 +215,10 @@ def q61(spark: SparkSession, sf: str) -> DataFrame:
     bookkeeping."""
     from ..operators.relational import reconcile_snapshot
 
-    src = _fixture_df(
+    src = fixture_df(
         spark, "src_keys", [(str(r[0]),) for r in _CANDS], "k string"
     ).distinct()
-    remote = _fixture_df(spark, "remote", _REMOTE, "k string, rid string")
+    remote = fixture_df(spark, "remote", _REMOTE, "k string, rid string")
     upserts, deletes = reconcile_snapshot(src, remote, "k")
     return (
         upserts.select(F.lit("upsert").alias("op"), "k")
@@ -283,8 +263,10 @@ def q02(spark: SparkSession, sf: str) -> DataFrame:
         lo, hi = src_rows.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
         return (db_url, int(lo), int(hi))
 
+    # one Derby "remote RDBMS" per (session, sf): the database is the
+    # fixture; the declared operator is the partitioned JDBC scan against it
     url, lo, hi = memo(
-        _DERBY_FIXTURE, (id(spark), sf), build_fixture, label="derby_fixture"
+        spark, ("derby_fixture", sf), build_fixture, label="derby_fixture"
     )
 
     jdbc = JdbcSource(url=url, driver="org.apache.derby.jdbc.EmbeddedDriver")
@@ -474,9 +456,6 @@ def q99(spark: SparkSession, sf: str) -> DataFrame:
     return run_to_memory(stream, output_mode="append")
 
 
-_JDBC_SINK_FIXTURE: dict[tuple, tuple[str, int, int]] = {}
-
-
 @query(
     "q298_jdbc_write_roundtrip",
     oracle="""
@@ -544,7 +523,7 @@ def q298(spark: SparkSession, sf: str) -> DataFrame:
         return (db_url, int(lo), int(hi))
 
     url, lo, hi = memo(
-        _JDBC_SINK_FIXTURE, (id(spark), sf), build_fixture,
+        spark, ("jdbc_sink_fixture", sf), build_fixture,
         label="jdbc_sink_fixture",
     )
     sink = JdbcSource(url=url, driver="org.apache.derby.jdbc.EmbeddedDriver")

@@ -18,7 +18,6 @@ from . import memo, query
 
 _CHUNK, _STRIDE = 64, 48
 _ASOF_TS = "2024-01-15 00:00:00"
-_CLIPS: dict[tuple, DataFrame] = {}
 
 # q127's moment-exactness law collects vectors to the driver for a local
 # numpy oracle; above this row count it switches to a deterministic hash
@@ -348,8 +347,8 @@ def q88(spark: SparkSession, sf: str) -> DataFrame:
     from . import spread_scan
 
     clips = memo(
-        _CLIPS,
-        (id(spark), sf),
+        spark,
+        ("video_clips", sf),
         lambda: _built(
             spread_scan(d, factor=0.25).mapInPandas(
                 gen, "doc_id long, content binary")
@@ -398,9 +397,6 @@ def q88(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("luma_ok"),
         )
     )
-
-
-_DHASH_IMGS: dict[tuple, DataFrame] = {}
 
 
 @query(
@@ -476,8 +472,8 @@ def q104(spark: SparkSession, sf: str) -> DataFrame:
     from . import spread_scan
 
     imgs = memo(
-        _DHASH_IMGS,
-        (id(spark), sf),
+        spark,
+        ("dhash_images", sf),
         lambda: _built(
             spread_scan(d, factor=0.25).mapInPandas(
                 gen, "doc_id long, content binary")
@@ -555,7 +551,7 @@ def q122(spark: SparkSession, sf: str) -> DataFrame:
     corpus = d.where(F.col("doc_id") >= 5)
     queries = d.where(F.col("doc_id") < 5)
     post = memo(
-        _CLIPS, (id(spark), sf, "bm25_postings"),
+        spark, ("bm25_postings", sf),
         lambda: _built(bm25_postings(corpus)),
         label="bm25_postings",
     )
@@ -772,7 +768,7 @@ def q126(spark: SparkSession, sf: str) -> DataFrame:
 
     def _laws() -> bool:
         fit = memo(
-            _CLIPS, ("kmeans", sf), lambda: kmeans_fit(e, k=10, iters=4),
+            spark, ("kmeans_fit", sf), lambda: kmeans_fit(e, k=10, iters=4),
             label="kmeans_fit",
         )
         n = e.count()
@@ -846,7 +842,7 @@ def q126(spark: SparkSession, sf: str) -> DataFrame:
     # fits, one extra inertia evaluation, the planted k=5 fit + purity
     # join) run once per (session, sf) and land in build_s; re-asks of
     # the certified flag are free, like every other law-check artifact
-    ok = memo(_CLIPS, ("kmeans_laws", sf), _laws, label="kmeans_laws")
+    ok = memo(spark, ("kmeans_laws", sf), _laws, label="kmeans_laws")
     from . import ok_flag
 
     return ok_flag(spark, ok)
@@ -892,7 +888,7 @@ def q127(spark: SparkSession, sf: str) -> DataFrame:
     e = table(spark, sf, "embeddings")
     k = 8
     model = memo(
-        _CLIPS, ("pca", sf), lambda: pca_fit(e, n_components=k),
+        spark, ("pca_fit", sf), lambda: pca_fit(e, n_components=k),
         label="pca_fit",
     )
 
@@ -933,7 +929,7 @@ def q127(spark: SparkSession, sf: str) -> DataFrame:
         ey_ok = abs(sse - n * float(w[k:].sum())) <= 1e-6 * max(sse, 1.0)
         return mom_ok and orth_ok and desc_ok and var_ok and ey_ok
 
-    ok = memo(_CLIPS, ("pca_laws", sf), _laws, label="pca_laws")
+    ok = memo(spark, ("pca_laws", sf), _laws, label="pca_laws")
     from . import ok_flag
 
     return ok_flag(spark, ok)
@@ -1007,7 +1003,7 @@ def q130(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("doc_id") + 10_000_000).alias("id"),
     )
     post = memo(
-        _CLIPS, (id(spark), sf, "bm25_postings_hn"),
+        spark, ("bm25_postings_hn", sf),
         lambda: _built(bm25_postings(corpus)),
         label="bm25_postings_hn",
     )

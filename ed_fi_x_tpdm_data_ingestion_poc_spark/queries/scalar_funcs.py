@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import query
+from . import fixture_df, query
 
 
 @query(
@@ -197,11 +197,6 @@ _FIXTURE_DESCRIPTORS = [
 ]
 
 
-# fixture DataFrames per session: createDataFrame is a py4j round-trip per
-# call; the literals never change
-_FIXTURE_DFS: dict[int, tuple] = {}
-
-
 def _codes_values_sql() -> str:
     return ", ".join(f"('{c}')" for c in _FIXTURE_CODES)
 
@@ -229,20 +224,13 @@ def q40(spark: SparkSession, sf: str) -> DataFrame:
     """
     from ..operators.enrich import enrich_descriptor_uri
 
-    key = id(spark)
-    if key not in _FIXTURE_DFS:
-        codes = spark.createDataFrame(
-            [(c,) for c in _FIXTURE_CODES], "code string"
-        ).persist()
-        descriptors = spark.createDataFrame(
-            _FIXTURE_DESCRIPTORS, "codeValue string, namespace string"
-        ).persist()
-        # materialize: a bare createDataFrame(list) re-runs a Python-RDD
-        # scan (applySchemaToPythonRDD) on every execution; the cache pins
-        # the rows JVM-side once
-        codes.count(), descriptors.count()
-        _FIXTURE_DFS[key] = (codes, descriptors)
-    codes, descriptors = _FIXTURE_DFS[key]
+    codes = fixture_df(
+        spark, "desc_codes", [(c,) for c in _FIXTURE_CODES], "code string"
+    )
+    descriptors = fixture_df(
+        spark, "descriptors", _FIXTURE_DESCRIPTORS,
+        "codeValue string, namespace string",
+    )
     out = enrich_descriptor_uri(
         codes, descriptors, code_col="code", out_col="uri"
     )

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from ..tables import table
 from . import memo, query, spread_scan
 
-_BLOOMS: dict[tuple, dict] = {}
 _FPP = 0.01
 
 
@@ -120,8 +119,8 @@ def q90(spark: SparkSession, sf: str) -> DataFrame:
     corp_sh = full_idx.filter(F.col("id") >= 20)
 
     bloom = memo(
-        _BLOOMS,
-        (id(spark), sf),
+        spark,
+        ("bloom_eval_5gram", sf),
         lambda: build_bloom(ev_sh, "s", fpp=_FPP),
         label="bloom_eval_5gram",
     )
@@ -158,7 +157,6 @@ def q90(spark: SparkSession, sf: str) -> DataFrame:
     return ok_flag(spark, fn == 0 and fpr_ok)
 
 
-_REPLAYS: dict[tuple, str] = {}
 _DOC_DDL = "doc_id long, text string"
 
 
@@ -217,8 +215,8 @@ def q94(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     bloom = memo(
-        _BLOOMS,
-        (id(spark), sf, "str"),
+        spark,
+        ("bloom_eval_str", sf),
         lambda: build_bloom(ev_sh, "s", fpp=_FPP),
         label="bloom_eval_str",
     )
@@ -234,7 +232,7 @@ def q94(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     replay = memo(
-        _REPLAYS, (sf,), lambda: _docs_replay_dir(spark, sf),
+        spark, ("docs_replay", sf), lambda: _docs_replay_dir(spark, sf),
         label="docs_replay",
     )
     streamed = run_to_memory(
@@ -394,14 +392,13 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
 
     d = table(spark, sf, "documents")
     words = d.select("doc_id", F.explode(tokens("text")).alias("w"))
-    cms_key = ("cms", sf)
     full = memo(
-        _BLOOMS, cms_key,
+        spark, ("cms_tokens", sf),
         lambda: cms_build(words, "w", d=4, w=2048),
         label="cms_tokens",
     )
     halves = memo(
-        _BLOOMS, ("cms_halves", sf),
+        spark, ("cms_tokens_halves", sf),
         lambda: cms_merge(
             cms_build(words.filter(F.col("doc_id") % 2 == 0), "w", d=4, w=2048),
             cms_build(words.filter(F.col("doc_id") % 2 == 1), "w", d=4, w=2048),
@@ -472,13 +469,10 @@ def q123(spark: SparkSession, sf: str) -> DataFrame:
             spark, sf, kmv_build, kmv_estimate, kmv_intersect_estimate, kmv_merge
         )
 
-    ok = memo(_KMV_OK, ("kmv", id(spark), sf), _laws, label="kmv_laws")
+    ok = memo(spark, ("kmv_laws", sf), _laws, label="kmv_laws")
     from . import ok_flag
 
     return ok_flag(spark, ok)
-
-
-_KMV_OK: dict[tuple, bool] = {}
 
 
 def _kmv_laws(
@@ -531,7 +525,6 @@ def _kmv_laws(
 # q151 — Misra-Gries heavy hitters: the no-false-negative law
 # ---------------------------------------------------------------------------
 
-_MG: dict[tuple, bool] = {}
 _MG_K = 128
 
 
@@ -623,7 +616,7 @@ def q151(spark: SparkSession, sf: str) -> DataFrame:
         exact.unpersist()
         return bool(ok)
 
-    ok = memo(_MG, ("mg_laws", id(spark), sf), _laws, label="mg_laws")
+    ok = memo(spark, ("mg_laws", sf), _laws, label="mg_laws")
     from . import ok_flag
 
     return ok_flag(spark, ok)
@@ -632,8 +625,6 @@ def q151(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q153 — CMS inner product: sketch-estimated join cardinality
 # ---------------------------------------------------------------------------
-
-_CMS_JS: dict[tuple, bool] = {}
 
 
 @query(
@@ -697,7 +688,7 @@ def q153(spark: SparkSession, sf: str) -> DataFrame:
         f2_bound = math.e * e_sk["n"] * e_sk["n"] / e_sk["w"]
         return ok and f2 <= f2_est <= f2 + f2_bound
 
-    ok = memo(_CMS_JS, ("cms_js", id(spark), sf), _laws, label="cms_join_size")
+    ok = memo(spark, ("cms_join_size", sf), _laws, label="cms_join_size")
     from . import ok_flag
 
     return ok_flag(spark, ok)
@@ -707,7 +698,6 @@ def q153(spark: SparkSession, sf: str) -> DataFrame:
 # q161 — streaming Misra-Gries: stateful sketch maintenance on an ingest
 # ---------------------------------------------------------------------------
 
-_SMG: dict[tuple, bool] = {}
 _SMG_K = 2  # small enough that the 31-token fixture vocabulary forces
 #             real decrements in every shard (k >= vocab would be exact)
 _SMG_SHARDS = 8
@@ -798,7 +788,7 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
 
     def _laws() -> bool:
         replay = memo(
-            _REPLAYS, (sf,), lambda: _docs_replay_dir(spark, sf),
+            spark, ("docs_replay", sf), lambda: _docs_replay_dir(spark, sf),
             label="docs_replay",
         )
         docs = read_replay_stream(spark, replay, _DOC_DDL)
@@ -894,7 +884,7 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
             multi_batch and acct and budget and j["missed"] == 0 and j["viol"] == 0
         )
 
-    ok = memo(_SMG, ("smg", id(spark), sf), _laws, label="stream_mg_laws")
+    ok = memo(spark, ("stream_mg_laws", sf), _laws, label="stream_mg_laws")
     from . import ok_flag
 
     return ok_flag(spark, ok)

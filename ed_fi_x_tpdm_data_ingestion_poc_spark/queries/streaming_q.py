@@ -704,7 +704,6 @@ def q84(spark: SparkSession, sf: str) -> DataFrame:
 # q162 — streaming per-group quantile summaries (mergeable MRL on a stream)
 # ---------------------------------------------------------------------------
 
-_SQ: dict[tuple, bool] = {}
 _SQ_EPS = 0.05
 
 
@@ -841,7 +840,7 @@ def q162(spark: SparkSession, sf: str) -> DataFrame:
                 ok &= lo <= true_rank <= hi
         return bool(ok)
 
-    ok = memo(_SQ, ("sq", id(spark), sf), _laws, label="stream_quantile_laws")
+    ok = memo(spark, ("stream_quantile_laws", sf), _laws, label="stream_quantile_laws")
     return ok_flag(spark, ok)
 
 
@@ -986,8 +985,6 @@ def q179(spark: SparkSession, sf: str) -> DataFrame:
 # q182 — streaming PSI drift monitor (q162's stream state x q177's PSI)
 # ---------------------------------------------------------------------------
 
-_PSI_MON: dict[tuple, DataFrame] = {}
-
 
 @query(
     "qz182_stream_psi_monitor",
@@ -1125,7 +1122,6 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
     from ..streaming.replay import run_to_memory
     from ..tables import table
     from . import memo
-    from .quality_q import _CLIPS
     from .stats_q import _PSI_PHIS
 
     e_batch = table(spark, sf, "events")
@@ -1139,7 +1135,7 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
             rank_den=10,
         )
 
-    thr = memo(_CLIPS, ("psi_ev_edges", sf), _edges, label="psi_ev_edges")
+    thr = memo(spark, ("psi_ev_edges", sf), _edges, label="psi_ev_edges")
 
     def _monitor() -> DataFrame:
         bucket = sum(
@@ -1188,7 +1184,7 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     return memo(
-        _PSI_MON, (id(spark), sf, "rec"), _monitor, label="psi_stream_rec"
+        spark, ("psi_stream_rec", sf), _monitor, label="psi_stream_rec"
     )
 
 
@@ -1196,7 +1192,6 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
 # q192 — streaming sketch-KS drift monitor (q162's stream state x q170's law)
 # ---------------------------------------------------------------------------
 
-_SKM: dict[tuple, DataFrame] = {}
 _SKM_EPS = 0.05
 _SKM_MON = "purchase"  # monitored feed
 _SKM_REF = "view"      # reference feed
@@ -1500,14 +1495,12 @@ def q192(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(1 if ok else 0).cast("int").alias("ok"),
         )
 
-    return memo(_SKM, (id(spark), sf), _build, label="sketch_ks_stream")
+    return memo(spark, ("sketch_ks_stream", sf), _build, label="sketch_ks_stream")
 
 
 # ---------------------------------------------------------------------------
 # q206 — streaming last-touch attribution (qz193's live form)
 # ---------------------------------------------------------------------------
-
-_SLT: dict[tuple, DataFrame] = {}
 
 # the per-user last-touch state contract: shared by q206 and
 # tests/test_monitor_recovery.py (the q192/q161 rationale — a
@@ -1606,7 +1599,7 @@ def q206(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy(F.col("n").desc(), "touch")
         )
 
-    out = memo(_SLT, (id(spark), sf), _build, label="last_touch_stream")
+    out = memo(spark, ("last_touch_stream", sf), _build, label="last_touch_stream")
     return out
 
 
@@ -1615,8 +1608,6 @@ def q206(spark: SparkSession, sf: str) -> DataFrame:
 # updater family: PSI contingency vectors, MRL summaries, and now raw
 # numeric moments)
 # ---------------------------------------------------------------------------
-
-_MOM_MON: dict[tuple, DataFrame] = {}
 
 # the per-key moments-state contract: shared by q278 and
 # tests/test_monitor_recovery.py (the PSI/MRL DDL rationale — a state
@@ -1772,7 +1763,7 @@ def q278(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     return memo(
-        _MOM_MON, (id(spark), sf), _monitor, label="moments_stream"
+        spark, ("moments_stream", sf), _monitor, label="moments_stream"
     )
 
 

@@ -32,18 +32,15 @@ LLM-pipeline components per the build brief.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
 from . import memo, ok_flag, query
 
-# Corpus row counts, memoized per (session, sf): a snapshot constant in
-# any real pipeline (computed once at ingest), not worth a job per query.
-_NDOCS: dict[tuple[int, str], int] = {}
-
 _CHUNK, _STRIDE = 64, 48
-_PROFILES: dict[tuple, object] = {}
 _PACK_CAP, _PACK_SHARDS = 256, 16
 
 
@@ -256,8 +253,10 @@ def q58(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.text import tokens
 
     d = table(spark, sf, "documents")
+    # the corpus row count is a snapshot constant in any real pipeline
+    # (computed once at ingest), not worth a job per query
     n_docs = float(
-        memo(_NDOCS, (id(spark), sf), lambda: d.count(), label="n_docs")
+        memo(spark, ("n_docs", sf), lambda: d.count(), label="n_docs")
     )
     toks = tokens("text")
     tf = (
@@ -362,7 +361,7 @@ def q49e(spark: SparkSession, sf: str) -> DataFrame:
             table(spark, sf, "orders"), ["o_custkey", "o_totalprice"]
         )
 
-    return memo(_PROFILES, (id(spark), sf), build, label="profile")
+    return memo(spark, ("profile", sf), build, label="profile")
 
 
 @query(
@@ -463,7 +462,7 @@ def q49h(spark: SparkSession, sf: str) -> DataFrame:
             top_k=3,
         )
 
-    return memo(_PROFILES, (id(spark), sf, "typed"), build, label="profile_typed")
+    return memo(spark, ("profile_typed", sf), build, label="profile_typed")
 
 
 # Fixture BPE merges: trained once (pure Python, deterministic — counts
@@ -477,19 +476,11 @@ _BPE_FIXTURE = (
 )
 
 
-_BPE_VOCAB: dict = {}
-
-
-def _bpe_merges():
-    from functools import lru_cache
-
+@lru_cache(maxsize=1)
+def _bpe_merges() -> tuple:
     from ..operators.bpe import train_bpe
 
-    @lru_cache(maxsize=1)
-    def build():
-        return tuple(train_bpe(list(_BPE_FIXTURE), 24))
-
-    return list(build())
+    return tuple(train_bpe(list(_BPE_FIXTURE), 24))
 
 
 @query(
@@ -523,8 +514,8 @@ def q111(spark: SparkSession, sf: str) -> DataFrame:
     from . import built
 
     voc = memo(
-        _BPE_VOCAB,
-        (id(spark), sf),
+        spark,
+        ("bpe_vocab", sf),
         lambda: built(encode_vocab(d, merges).persist()),
         label="bpe_vocab",
     )

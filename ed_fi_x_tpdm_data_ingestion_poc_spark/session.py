@@ -18,6 +18,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from .queries import session_cache
+
 
 @dataclass(frozen=True)
 class EngineConfig:
@@ -131,14 +133,6 @@ def _default_driver_memory(par: int) -> str:
     return f"{int(max(8, min(20, heap)))}g"
 
 
-# id -> session: holding the reference keeps id() from being reused by a
-# later session object after GC (which would wrongly skip tuning it)
-_TUNED: dict[int, SparkSession] = {}
-
-# SparkContext id -> context (same id-pinning rationale as _TUNED)
-_SHIPPED: dict[int, object] = {}
-
-
 def ship_package(spark: SparkSession) -> None:
     """Ship this package to executors via addPyFile (the --py-files path).
 
@@ -151,9 +145,12 @@ def ship_package(spark: SparkSession) -> None:
     once per SparkContext and addPyFile-ing it makes worker imports
     location-independent — identical to shipping --py-files on a real
     cluster, where executor hosts share nothing with the driver's
-    filesystem. ~100 KB, once per context."""
+    filesystem. ~100 KB, once per context: sessions from newSession()
+    share their context's files, so the flag lives in the context's
+    store, not the session's."""
     sc = spark.sparkContext
-    if id(sc) in _SHIPPED:
+    shipped = session_cache(sc)
+    if ("ship_package",) in shipped:
         return
     import tempfile
     import zipfile
@@ -172,7 +169,7 @@ def ship_package(spark: SparkSession) -> None:
                 rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                 zf.write(full, rel)
     sc.addPyFile(zip_path)
-    _SHIPPED[id(sc)] = sc
+    shipped[("ship_package",)] = zip_path
 
 
 def tune(spark: SparkSession, cfg: EngineConfig | None = None) -> SparkSession:
@@ -183,7 +180,8 @@ def tune(spark: SparkSession, cfg: EngineConfig | None = None) -> SparkSession:
     Idempotent per session: every conf set is a py4j round-trip, and table()
     calls this on each load.
     """
-    if cfg is None and id(spark) in _TUNED:
+    cache = session_cache(spark)
+    if cfg is None and ("tune",) in cache:
         return spark
     cfg = cfg or EngineConfig()
     conf = {
@@ -215,7 +213,7 @@ def tune(spark: SparkSession, cfg: EngineConfig | None = None) -> SparkSession:
         except Exception:
             pass  # non-runtime conf on a live session: keep going
     ship_package(spark)
-    _TUNED[id(spark)] = spark
+    cache[("tune",)] = True
     return spark
 
 

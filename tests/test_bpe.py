@@ -152,3 +152,25 @@ def test_large_merges_table_switches_to_arrow_vocab_encoder(spark):
     assert jvm == arrow
     plan = arrow_df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan  # the fallback actually engaged
+
+
+def test_fixture_merges_are_trained_once(monkeypatch):
+    """qz111's fixture merges table is trained once per process, not on
+    every evaluation: two calls run train_bpe once."""
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.operators import bpe
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.queries import training_q
+
+    calls = []
+
+    def counting_train(texts, n_merges):
+        calls.append(n_merges)
+        return train_bpe(texts, n_merges)
+
+    monkeypatch.setattr(bpe, "train_bpe", counting_train)
+    training_q._bpe_merges.cache_clear()
+    try:
+        first = training_q._bpe_merges()
+        assert training_q._bpe_merges() == first
+        assert len(calls) == 1
+    finally:
+        training_q._bpe_merges.cache_clear()

@@ -139,13 +139,16 @@ def test_broadcast_if_small_gate_and_memo(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ed_fi_x_tpdm_data_ingestion_poc_spark.queries import (
-        _GATE_COUNTS,
         broadcast_if_small,
+        session_cache,
     )
     from ed_fi_x_tpdm_data_ingestion_poc_spark.tables import table
 
+    def gate_probes() -> int:
+        return sum(1 for k in session_cache(spark) if k[0] == "broadcast_if_small")
+
     n = table(spark, sf_dir, "nation").where(F.col("n_nationkey") >= 0)
-    before = len(_GATE_COUNTS)
+    before = gate_probes()
     out1 = broadcast_if_small(n)
     # hinted below the cap: joining against it plans a broadcast join
     c = table(spark, sf_dir, "customer")
@@ -153,19 +156,19 @@ def test_broadcast_if_small_gate_and_memo(spark, sf_dir):
 
     f = audit(c.join(out1, c.c_nationkey == out1.n_nationkey))
     assert f.broadcast_joins >= 1
-    grew = len(_GATE_COUNTS) - before
+    grew = gate_probes() - before
     assert grew == 1
     # a RE-BUILT identical expression (fresh .where object) memo-hits
     n2 = table(spark, sf_dir, "nation").where(F.col("n_nationkey") >= 0)
     broadcast_if_small(n2)
-    assert len(_GATE_COUNTS) - before == 1  # no new probe
+    assert gate_probes() - before == 1  # no new probe
     # above the cap: unhinted frame returned as-is (same object)
     big = table(spark, sf_dir, "customer")
     out2 = broadcast_if_small(big, max_rows=1)
     assert out2 is big
     # ... and the decision uses the memoized count, not max_rows, as key:
     # the same side with a different cap flips the hint without re-probing
-    probes = len(_GATE_COUNTS)
+    probes = gate_probes()
     out3 = broadcast_if_small(big, max_rows=10_000_000)
     assert out3 is not big  # hinted now
-    assert len(_GATE_COUNTS) == probes
+    assert gate_probes() == probes

@@ -339,7 +339,7 @@ def test_interval_join_hash_form_equals_sortmerge(spark):
     assert smj == shj and len(smj) > 200
 
 
-def test_memo_build_times_are_exclusive_of_nested_labels():
+def test_memo_build_times_are_exclusive_of_nested_labels(spark):
     """r15: BUILD_TIMES must be ADDITIVE — a labeled build that builds
     another labeled artifact inside reports only its own time, so the
     bench's build_s no longer depends on which query happens to build
@@ -349,7 +349,7 @@ def test_memo_build_times_are_exclusive_of_nested_labels():
 
     from ed_fi_x_tpdm_data_ingestion_poc_spark import queries as Q
 
-    cache: dict = {}
+    s = spark.newSession()  # a fresh store: nothing memoized yet
     saved = dict(Q.BUILD_TIMES)
     try:
         Q.BUILD_TIMES.clear()
@@ -361,16 +361,16 @@ def test_memo_build_times_are_exclusive_of_nested_labels():
         def unlabeled_mid():
             # unlabeled: its own 0.02 s stays with the PARENT, but its
             # labeled child's time must not
-            Q.memo(cache, "child", child, label="t_child")
+            Q.memo(s, ("t_child",), child, label="t_child")
             time.sleep(0.02)
             return "m"
 
         def parent():
-            Q.memo(cache, "mid", unlabeled_mid)  # no label
+            Q.memo(s, ("t_mid",), unlabeled_mid)  # no label
             time.sleep(0.03)
             return "p"
 
-        Q.memo(cache, "parent", parent, label="t_parent")
+        Q.memo(s, ("t_parent",), parent, label="t_parent")
         assert 0.04 <= Q.BUILD_TIMES["t_child"] <= 0.2
         # parent keeps its 0.03 + the unlabeled 0.02, NOT the child 0.05
         assert 0.04 <= Q.BUILD_TIMES["t_parent"] <= 0.2
