@@ -362,9 +362,6 @@ def extract_features(
     """Executor-side feature extraction over binary content via mapInPandas
     (Arrow-batched). Features are deterministic byte-level stand-ins for the
     stubbed decoder: size, head bytes (hex), md5 digest.
-
-    The closure is self-contained (stdlib only) — see sinks/rest_sink.py for
-    why executor closures must not reference module globals.
     """
     idc, cc = id_col, content_col
 

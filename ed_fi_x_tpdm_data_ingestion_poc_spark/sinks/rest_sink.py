@@ -14,10 +14,6 @@ Spark-first: documents post from executor partitions in parallel
 executors push concurrently instead of the reference's single thread.
 Upserts are idempotent on the natural key (the ODS upserts on natural key),
 making at-least-once delivery safe.
-
-Executor closures are SELF-CONTAINED (plain data + stdlib/pandas only):
-cloudpickle serializes module-level symbols by reference, and executor
-Python workers may not have this package importable.
 """
 
 from __future__ import annotations
@@ -27,7 +23,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from ..sources.rest import OAuthConfig
+from ..session import ship_package
+from ..sources.http import Client, OAuthConfig, fetch_token, resource_url
 
 OUTCOME_SCHEMA = "key string, op string, status int, ok boolean, error string"
 
@@ -40,70 +37,39 @@ class RestSink:
     timeout_sec: float = 30.0
 
 
-def _sender(auth_tuple: tuple | None, timeout: float):
-    """Build the self-contained per-partition HTTP helper set."""
+def _endpoint(sink: RestSink) -> str:
+    return f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
 
-    def make():
-        import base64 as _b64
-        import json as _json
-        import urllib.error as _ue
-        import urllib.request as _ur
 
-        state = {"token": None}
+def _send_all(df: DataFrame, sink: RestSink, op: str, request) -> DataFrame:
+    """One request per row of `df`, from executor partitions; returns one
+    outcome row each (key, op, status, ok, error), keyed by the row's first
+    column. request(*row) gives (method, url, body, headers)."""
+    ship_package(df.sparkSession)
+    auth, timeout = sink.auth, sink.timeout_sec
 
-        def fetch_token():
-            tok_url, cid, secret = auth_tuple
-            basic = _b64.b64encode(f"{cid}:{secret}".encode()).decode()
-            req = _ur.Request(
-                tok_url,
-                data=b"grant_type=client_credentials",
-                headers={
-                    "Authorization": f"Basic {basic}",
-                    "Content-Type": "application/x-www-form-urlencoded",
-                },
-                method="POST",
-            )
-            with _ur.urlopen(req, timeout=timeout) as resp:
-                return _json.loads(resp.read())["access_token"]
+    def send_partition(batches):
+        import pandas as pd
 
-        def send(url, method, body, extra_headers=None):
-            headers = {"Content-Type": "application/json"}
-            if state["token"]:
-                headers["Authorization"] = f"Bearer {state['token']}"
-            if extra_headers:
-                headers.update(extra_headers)
-            req = _ur.Request(url, data=body, headers=headers, method=method)
+        client = Client(auth, timeout)
+        if auth is not None:
             try:
-                with _ur.urlopen(req, timeout=timeout) as resp:
-                    return resp.status, resp.read()
-            except _ue.HTTPError as e:
-                return e.code, e.read()
-            except Exception as e:  # connection errors -> recorded, not fatal
-                return -1, str(e).encode()
-
-        def send_with_refresh(url, method, body, extra_headers=None):
-            status, resp = send(url, method, body, extra_headers)
-            if status == 401 and auth_tuple is not None:
-                state["token"] = fetch_token()
-                status, resp = send(url, method, body, extra_headers)
-            return status, resp
-
-        if auth_tuple is not None:
-            try:
-                state["token"] = fetch_token()
+                client.token = fetch_token(auth, timeout)
             except Exception:
-                state["token"] = None  # first 401 will retry the fetch
-        return send_with_refresh
+                pass  # start without a token; the first 401 retries the fetch
+        for pdf in batches:
+            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
+            for row in pdf.itertuples(index=False, name=None):
+                status, resp, _ = client.call(*request(*row))
+                ok = 200 <= status < 300
+                out["key"].append(str(row[0]))
+                out["op"].append(op)
+                out["status"].append(status)
+                out["ok"].append(ok)
+                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
+            yield pd.DataFrame(out)
 
-    return make
-
-
-def _auth_tuple(sink: RestSink) -> tuple | None:
-    return (
-        (sink.auth.token_url, sink.auth.client_id, sink.auth.client_secret)
-        if sink.auth
-        else None
-    )
+    return df.mapInPandas(send_partition, OUTCOME_SCHEMA)
 
 
 def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str) -> DataFrame:
@@ -113,52 +79,20 @@ def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str)
     docs must carry the natural key and the serialized JSON body
     (build with F.to_json(F.struct(...)) — ref R23).
     """
-    url = f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
-    make_sender = _sender(_auth_tuple(sink), sink.timeout_sec)
-    kc, jc = key_col, json_col
-
-    def post_partition(batches):
-        import pandas as pd
-
-        send = make_sender()
-        for pdf in batches:
-            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
-            for key, body in zip(pdf[kc], pdf[jc]):
-                status, resp = send(url, "POST", str(body).encode())
-                ok = 200 <= status < 300
-                out["key"].append(str(key))
-                out["op"].append("upsert")
-                out["status"].append(status)
-                out["ok"].append(ok)
-                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
-            yield pd.DataFrame(out)
-
-    return docs.select(key_col, json_col).mapInPandas(post_partition, OUTCOME_SCHEMA)
+    url = _endpoint(sink)
+    return _send_all(
+        docs.select(key_col, json_col), sink, "upsert",
+        lambda key, body: (url, "POST", str(body).encode(), None),
+    )
 
 
 def rest_delete(ids: DataFrame, sink: RestSink, *, id_col: str) -> DataFrame:
     """DELETE by resource id; outcome rows as in rest_upsert (ref R19)."""
-    base = f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
-    make_sender = _sender(_auth_tuple(sink), sink.timeout_sec)
-    ic = id_col
-
-    def delete_partition(batches):
-        import pandas as pd
-
-        send = make_sender()
-        for pdf in batches:
-            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
-            for rid in pdf[ic]:
-                status, resp = send(f"{base}/{rid}", "DELETE", None)
-                ok = 200 <= status < 300
-                out["key"].append(str(rid))
-                out["op"].append("delete")
-                out["status"].append(status)
-                out["ok"].append(ok)
-                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
-            yield pd.DataFrame(out)
-
-    return ids.select(id_col).mapInPandas(delete_partition, OUTCOME_SCHEMA)
+    base = _endpoint(sink)
+    return _send_all(
+        ids.select(id_col), sink, "delete",
+        lambda rid: (resource_url(base, rid), "DELETE", None, None),
+    )
 
 
 def rest_update(
@@ -174,32 +108,14 @@ def rest_update(
     carries If-Match — a remote 412 (precondition failed) means the
     document changed since it was read, and is RECORDED like any other
     per-document failure."""
-    base = f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
-    make_sender = _sender(_auth_tuple(sink), sink.timeout_sec)
-    ic, jc, ec = id_col, json_col, etag_col
+    base = _endpoint(sink)
 
-    def put_partition(batches):
-        import pandas as pd
-
-        send = make_sender()
-        for pdf in batches:
-            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
-            etags = pdf[ec] if ec else [None] * len(pdf)
-            for rid, body, etag in zip(pdf[ic], pdf[jc], etags):
-                headers = {"If-Match": str(etag)} if etag is not None else None
-                status, resp = send(
-                    f"{base}/{rid}", "PUT", str(body).encode(), headers
-                )
-                ok = 200 <= status < 300
-                out["key"].append(str(rid))
-                out["op"].append("update")
-                out["status"].append(status)
-                out["ok"].append(ok)
-                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
-            yield pd.DataFrame(out)
+    def request(rid, body, etag=None):
+        headers = {"If-Match": str(etag)} if etag is not None else None
+        return resource_url(base, rid), "PUT", str(body).encode(), headers
 
     cols = [id_col, json_col] + ([etag_col] if etag_col else [])
-    return docs.select(*cols).mapInPandas(put_partition, OUTCOME_SCHEMA)
+    return _send_all(docs.select(*cols), sink, "update", request)
 
 
 def serialize_json(value) -> str:

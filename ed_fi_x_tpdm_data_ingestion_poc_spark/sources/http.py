@@ -1,0 +1,135 @@
+"""The package's one HTTP client: the OAuth2 client-credentials grant
+(TokenRetriever.java:44-73), bearer requests, and the reference's "on 401
+refresh the token and retry once" rule (SisConnectorService.java:184-198),
+plus the Ed-Fi paging surface built on them (offset/limit URLs and the
+Total-Count probe).
+
+Executor code (mapInPandas closures, DataSource readers and writers) may
+import this module because session.ship_package zips the package onto
+every worker; the entry points that run it there call ship_package first.
+
+Only stdlib HTTP (urllib) — no extra dependencies.
+"""
+
+from __future__ import annotations
+
+import base64
+import http.client
+import json
+import urllib.error
+import urllib.parse
+import urllib.request
+from dataclasses import dataclass
+
+
+@dataclass
+class OAuthConfig:
+    """OAuth2 client-credentials grant (TokenRetriever.java:44-73)."""
+
+    token_url: str
+    client_id: str
+    client_secret: str
+
+
+def fetch_token(auth: OAuthConfig, timeout: float = 30.0) -> str:
+    """POST grant_type=client_credentials with Basic auth; parse access_token."""
+    basic = base64.b64encode(
+        f"{auth.client_id}:{auth.client_secret}".encode()
+    ).decode()
+    req = urllib.request.Request(
+        auth.token_url,
+        data=b"grant_type=client_credentials",
+        headers={
+            "Authorization": f"Basic {basic}",
+            "Content-Type": "application/x-www-form-urlencoded",
+        },
+        method="POST",
+    )
+    with urllib.request.urlopen(req, timeout=timeout) as resp:
+        return json.loads(resp.read())["access_token"]
+
+
+def _page_url(
+    endpoint: str, offset: int, limit: int, params: dict[str, str],
+    total_count: bool = False,
+) -> str:
+    """``endpoint?offset=..&limit=..&<params>`` (ref R17 paging surface)."""
+    q = {"offset": str(offset), "limit": str(limit), **params}
+    if total_count:
+        q["totalCount"] = "true"
+    return f"{endpoint}?{urllib.parse.urlencode(q)}"
+
+
+def resource_url(endpoint: str, rid) -> str:
+    """``endpoint/<id>`` with the id percent-encoded: ids come from remote
+    snapshots, and a raw ``/`` or ``?`` would address another resource."""
+    return f"{endpoint}/{urllib.parse.quote(str(rid), safe='')}"
+
+
+class Client:
+    """Bearer-token client. Plain attributes, so it pickles to executors;
+    a token refreshed by a 401 is kept for this client's later calls."""
+
+    def __init__(
+        self, auth: OAuthConfig | None, timeout: float, token: str | None = None
+    ) -> None:
+        self.auth = auth
+        self.timeout = timeout
+        self.token = token
+
+    @classmethod
+    def login(cls, auth: OAuthConfig | None, timeout: float) -> Client:
+        """A client holding a fresh token (no token without auth)."""
+        return cls(auth, timeout, fetch_token(auth, timeout) if auth else None)
+
+    def _send(self, url, method, body, headers):
+        h = {"Accept": "application/json"}
+        if body is not None:
+            h["Content-Type"] = "application/json"
+        if self.token:
+            h["Authorization"] = f"Bearer {self.token}"
+        h.update(headers or {})
+        req = urllib.request.Request(url, data=body, headers=h, method=method)
+        try:
+            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
+                return resp.status, resp.read(), resp.headers
+        except urllib.error.HTTPError as e:
+            return e.code, e.read(), e.headers
+        except (OSError, http.client.HTTPException) as e:
+            return -1, str(e).encode(), http.client.HTTPMessage()
+
+    def call(
+        self,
+        url: str,
+        method: str = "GET",
+        body: bytes | None = None,
+        headers: dict[str, str] | None = None,
+    ) -> tuple[int, bytes, http.client.HTTPMessage]:
+        """One request -> (status, body, headers); headers look up names
+        case-insensitively. HTTP errors return their status, connection
+        errors status -1 with the error text as body. A 401 with auth set
+        refreshes the token once and retries."""
+        status, resp, hdrs = self._send(url, method, body, headers)
+        if status == 401 and self.auth is not None:
+            self.token = fetch_token(self.auth, self.timeout)
+            status, resp, hdrs = self._send(url, method, body, headers)
+        return status, resp, hdrs
+
+    def get_page(
+        self, endpoint: str, offset: int, limit: int, params: dict[str, str]
+    ) -> list[dict]:
+        """One page of rows; any status but 200 raises."""
+        url = _page_url(endpoint, offset, limit, params)
+        status, body, _ = self.call(url)
+        if status != 200:
+            raise OSError(f"REST GET {url} failed: HTTP {status}: {body[:200]!r}")
+        return json.loads(body)
+
+    def total_count(
+        self, endpoint: str, params: dict[str, str], header: str = "Total-Count"
+    ) -> int | None:
+        """Probe (offset=0, limit=1, totalCount=true) for the row count;
+        None when the endpoint does not answer 200 with the count header."""
+        status, _, hdrs = self.call(_page_url(endpoint, 0, 1, params, total_count=True))
+        count = hdrs.get(header) if status == 200 else None
+        return None if count is None else int(count)

@@ -14,18 +14,14 @@ Engine fixes + scale design:
     fetched IN EXECUTORS via mapInPandas (driver never holds the dataset);
   * 401 -> one token refresh + retry, per call (the reference's retry
     pattern, SisConnectorService.java:494-501), token re-fetchable inside
-    executors from broadcast client credentials.
+    executors from the shipped client credentials.
 
-Only stdlib HTTP (urllib) — no extra dependencies.
+All HTTP goes through sources/http.py.
 """
 
 from __future__ import annotations
 
-import base64
 import json
-import urllib.error
-import urllib.parse
-import urllib.request
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
@@ -33,14 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-
-@dataclass
-class OAuthConfig:
-    """OAuth2 client-credentials grant (TokenRetriever.java:44-73)."""
-
-    token_url: str
-    client_id: str
-    client_secret: str
+from ..session import ship_package
+from .http import Client, OAuthConfig, fetch_token, resource_url  # noqa: F401 (re-exported)
 
 
 @dataclass
@@ -53,63 +43,30 @@ class RestSource:
     timeout_sec: float = 30.0
 
 
-def fetch_token(auth: OAuthConfig, timeout: float = 30.0) -> str:
-    """POST grant_type=client_credentials with Basic auth; parse access_token."""
-    basic = base64.b64encode(
-        f"{auth.client_id}:{auth.client_secret}".encode()
-    ).decode()
-    req = urllib.request.Request(
-        auth.token_url,
-        data=b"grant_type=client_credentials",
-        headers={
-            "Authorization": f"Basic {basic}",
-            "Content-Type": "application/x-www-form-urlencoded",
-        },
-        method="POST",
-    )
-    with urllib.request.urlopen(req, timeout=timeout) as resp:
-        return json.loads(resp.read())["access_token"]
+def _endpoint(src: RestSource) -> str:
+    return f"{src.base_url.rstrip('/')}/{src.path.lstrip('/')}"
 
 
-def _get(url: str, token: str | None, timeout: float) -> tuple[int, bytes, dict]:
-    headers = {"Accept": "application/json"}
-    if token:
-        headers["Authorization"] = f"Bearer {token}"
-    req = urllib.request.Request(url, headers=headers)
-    try:
-        with urllib.request.urlopen(req, timeout=timeout) as resp:
-            return resp.status, resp.read(), dict(resp.headers)
-    except urllib.error.HTTPError as e:
-        return e.code, e.read(), dict(e.headers)
-
-
-def _page_url(src: RestSource, offset: int, limit: int, total_count: bool = False) -> str:
-    params = {"offset": str(offset), "limit": str(limit), **src.extra_params}
-    if total_count:
-        params["totalCount"] = "true"
-    return f"{src.base_url.rstrip('/')}/{src.path.lstrip('/')}?" + urllib.parse.urlencode(params)
+def _client(src: RestSource, token: str | None) -> Client:
+    """A client starting from `token`, or from a fresh one when None."""
+    if token is None:
+        return Client.login(src.auth, src.timeout_sec)
+    return Client(src.auth, src.timeout_sec, token)
 
 
 def fetch_page(src: RestSource, offset: int, token: str | None) -> list[dict]:
     """One page with the reference's 401-refresh-retry pattern."""
-    url = _page_url(src, offset, src.page_size)
-    status, body, _ = _get(url, token, src.timeout_sec)
-    if status == 401 and src.auth is not None:
-        token = fetch_token(src.auth, src.timeout_sec)
-        status, body, _ = _get(url, token, src.timeout_sec)
-    if status != 200:
-        raise OSError(f"REST GET {url} failed: HTTP {status}: {body[:200]!r}")
-    return json.loads(body)
+    client = Client(src.auth, src.timeout_sec, token)
+    return client.get_page(_endpoint(src), offset, src.page_size, src.extra_params)
 
 
 def iter_all_rows(src: RestSource, token: str | None = None) -> Iterator[dict]:
     """Loop offset += page_size until a short page (fixes the reference's
     first-page-only truncation)."""
-    if token is None and src.auth is not None:
-        token = fetch_token(src.auth, src.timeout_sec)
+    client = _client(src, token)
     offset = 0
     while True:
-        page = fetch_page(src, offset, token)
+        page = client.get_page(_endpoint(src), offset, src.page_size, src.extra_params)
         yield from page
         if len(page) < src.page_size:
             return
@@ -122,24 +79,13 @@ def get_by_id(
     """GET a single resource by id with optional If-None-Match conditional
     read (ref R20, TeacherCandidatesApi.java:508): returns (status, doc,
     etag); 304 -> (304, None, etag) meaning the cached copy is current."""
-    if token is None and src.auth is not None:
-        token = fetch_token(src.auth, src.timeout_sec)
-    url = f"{src.base_url.rstrip('/')}/{src.path.lstrip('/')}/{rid}"
-    headers = {"Accept": "application/json"}
-    if token:
-        headers["Authorization"] = f"Bearer {token}"
-    if etag is not None:
-        headers["If-None-Match"] = str(etag)
-    req = urllib.request.Request(url, headers=headers)
-    try:
-        with urllib.request.urlopen(req, timeout=src.timeout_sec) as resp:
-            status, body, hdrs = resp.status, resp.read(), dict(resp.headers)
-    except urllib.error.HTTPError as e:
-        status, body, hdrs = e.code, e.read(), dict(e.headers)
+    headers = {"If-None-Match": str(etag)} if etag is not None else None
+    status, body, hdrs = _client(src, token).call(
+        resource_url(_endpoint(src), rid), headers=headers
+    )
     if status == 304:
         return 304, None, etag
-    new_etag = next((v for k, v in hdrs.items() if k.lower() == "etag"), None)
-    return status, (json.loads(body) if status == 200 and body else None), new_etag
+    return status, (json.loads(body) if status == 200 and body else None), hdrs.get("ETag")
 
 
 def read_rest(
@@ -157,19 +103,12 @@ def read_rest(
     Fallback when the endpoint doesn't report a count: sequential driver
     pagination (still complete, just not parallel).
     """
-    token = fetch_token(src.auth, src.timeout_sec) if src.auth else None
-    status, body, headers = _get(
-        _page_url(src, 0, 1, total_count=True), token, src.timeout_sec
-    )
-    total: int | None = None
-    if status == 200:
-        for k, v in headers.items():
-            if k.lower() == total_count_header.lower():
-                total = int(v)
-                break
+    client = Client.login(src.auth, src.timeout_sec)
+    endpoint = _endpoint(src)
+    total = client.total_count(endpoint, src.extra_params, total_count_header)
 
     if total is None:
-        rows = list(iter_all_rows(src, token))
+        rows = list(iter_all_rows(src, client.token))
         return spark.createDataFrame(rows, schema=schema)  # type: ignore[arg-type]
 
     # spark.range with step = page_size plans the offsets as a pure-JVM
@@ -180,69 +119,16 @@ def read_rest(
         0, max(total, 1), src.page_size, min(n_offsets, 64)
     ).withColumnRenamed("id", "offset")
 
-    # Executor closure must be SELF-CONTAINED: cloudpickle serializes
-    # module-level functions/classes by reference, and executor Python
-    # workers need not have this package on sys.path. Close over plain data
-    # and use only stdlib + pandas inside.
-    endpoint = f"{src.base_url.rstrip('/')}/{src.path.lstrip('/')}"
-    extra_params = dict(src.extra_params)
-    page_size = src.page_size
-    timeout = src.timeout_sec
-    auth_tuple = (
-        (src.auth.token_url, src.auth.client_id, src.auth.client_secret)
-        if src.auth
-        else None
-    )
+    ship_package(spark)
+    params, page_size = dict(src.extra_params), src.page_size
     field_names = [f.name for f in schema.fields]
-    init_token = token
 
     def fetch_partition(batches):
-        import base64 as _b64
-        import json as _json
-        import urllib.parse as _up
-        import urllib.request as _ur
-        import urllib.error as _ue
-
         import pandas as pd
 
-        def _fetch_token():
-            tok_url, cid, secret = auth_tuple
-            basic = _b64.b64encode(f"{cid}:{secret}".encode()).decode()
-            req = _ur.Request(
-                tok_url,
-                data=b"grant_type=client_credentials",
-                headers={
-                    "Authorization": f"Basic {basic}",
-                    "Content-Type": "application/x-www-form-urlencoded",
-                },
-                method="POST",
-            )
-            with _ur.urlopen(req, timeout=timeout) as resp:
-                return _json.loads(resp.read())["access_token"]
-
-        def _get_page(offset, tok):
-            url = endpoint + "?" + _up.urlencode(
-                {"offset": str(offset), "limit": str(page_size), **extra_params}
-            )
-            headers = {"Accept": "application/json"}
-            if tok:
-                headers["Authorization"] = f"Bearer {tok}"
-            try:
-                with _ur.urlopen(_ur.Request(url, headers=headers), timeout=timeout) as r:
-                    return r.status, r.read()
-            except _ue.HTTPError as e:
-                return e.code, e.read()
-
-        tok = init_token
         for pdf in batches:
             for off in pdf["offset"]:
-                status, body = _get_page(int(off), tok)
-                if status == 401 and auth_tuple is not None:
-                    tok = _fetch_token()
-                    status, body = _get_page(int(off), tok)
-                if status != 200:
-                    raise OSError(f"REST page offset={off} failed: HTTP {status}")
-                page = _json.loads(body)
+                page = client.get_page(endpoint, int(off), page_size, params)
                 yield pd.DataFrame(
                     {name: [r.get(name) for r in page] for name in field_names}
                 )

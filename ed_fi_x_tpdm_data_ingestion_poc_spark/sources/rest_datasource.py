@@ -27,18 +27,13 @@ first-class integration: the reader participates in Catalyst planning, so
   run inside each partition read (TokenRetriever.java:44-73,
   SisConnectorService.java:494-501).
 
-Executor-side note: the reader object is pickled by reference to this
-module, which reaches workers via session.ship_package (addPyFile); the
-read path itself uses only stdlib.
+All HTTP goes through sources/http.py.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-import urllib.error
-import urllib.parse
-import urllib.request
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -53,6 +48,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from ..session import ship_package
+from .http import Client, OAuthConfig
+
 
 class _Page(InputPartition):
     def __init__(self, offset: int | None, take: int | None = None):
@@ -63,16 +61,15 @@ class _Page(InputPartition):
 class RestDataSourceReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self.fields = [f.name for f in schema.fields]
-        self.base_url = options["base_url"].rstrip("/")
-        self.path = options.get("path", "/").strip("/")
+        self.endpoint = (
+            options["base_url"].rstrip("/") + "/" + options.get("path", "/").strip("/")
+        )
         self.page_size = int(options.get("page_size", "100"))
         self.timeout = float(options.get("timeout_sec", "30"))
-        self.total_count_header = options.get(
-            "total_count_header", "total-count"
-        ).lower()
+        self.total_count_header = options.get("total_count_header", "total-count")
         self.auth = None
         if "token_url" in options:
-            self.auth = (
+            self.auth = OAuthConfig(
                 options["token_url"],
                 options.get("client_id", ""),
                 options.get("client_secret", ""),
@@ -104,69 +101,20 @@ class RestDataSourceReader(DataSourceReader):
             yield f
 
     # -- http ----------------------------------------------------------
-    def _token(self) -> str | None:
-        if self.auth is None:
-            return None
-        import base64
+    def _client(self) -> Client:
+        return Client.login(self.auth, self.timeout)
 
-        tok_url, cid, secret = self.auth
-        basic = base64.b64encode(f"{cid}:{secret}".encode()).decode()
-        req = urllib.request.Request(
-            tok_url,
-            data=b"grant_type=client_credentials",
-            headers={
-                "Authorization": f"Basic {basic}",
-                "Content-Type": "application/x-www-form-urlencoded",
-            },
-            method="POST",
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            return json.loads(resp.read())["access_token"]
+    def _fetch(self, client: Client, offset: int) -> list[dict]:
+        """GET one page; a 401-refreshed token stays on `client`, so later
+        pages do not each pay a 401 round-trip plus a token fetch."""
+        return client.get_page(self.endpoint, offset, self.page_size, self.params)
 
-    def _get(self, url: str, token: str | None):
-        headers = {"Accept": "application/json"}
-        if token:
-            headers["Authorization"] = f"Bearer {token}"
-        req = urllib.request.Request(url, headers=headers)
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                return resp.status, resp.read(), dict(resp.headers)
-        except urllib.error.HTTPError as e:
-            return e.code, e.read(), dict(e.headers)
-
-    def _url(self, offset: int, limit: int, total_count: bool = False) -> str:
-        params = {"offset": str(offset), "limit": str(limit), **self.params}
-        if total_count:
-            params["totalCount"] = "true"
-        return (
-            f"{self.base_url}/{self.path}?" + urllib.parse.urlencode(params)
-        )
-
-    def _fetch(
-        self, offset: int, token: str | None
-    ) -> tuple[list[dict], str | None]:
-        """GET one page; returns (rows, token) so a 401-refreshed token
-        propagates back to the pagination loop instead of every later
-        page paying a 401 round-trip plus a token fetch."""
-        url = self._url(offset, self.page_size)
-        status, body, _ = self._get(url, token)
-        if status == 401 and self.auth is not None:
-            token = self._token()
-            status, body, _ = self._get(url, token)
-        if status != 200:
-            raise OSError(f"REST GET {url}: HTTP {status}: {body[:200]!r}")
-        return json.loads(body), token
+    def _total(self, client: Client) -> int | None:
+        return client.total_count(self.endpoint, self.params, self.total_count_header)
 
     # -- planning + read ------------------------------------------------
     def partitions(self) -> Sequence[InputPartition]:
-        token = self._token()
-        status, _, headers = self._get(self._url(0, 1, total_count=True), token)
-        total = None
-        if status == 200:
-            for k, v in headers.items():
-                if k.lower() == self.total_count_header:
-                    total = int(v)
-                    break
+        total = self._total(self._client())
         if total is None:
             return [_Page(None)]
         # plan only the pages covering the declared [offset, offset+limit)
@@ -181,12 +129,12 @@ class RestDataSourceReader(DataSourceReader):
         return pages or [_Page(lo, take=0)]
 
     def read(self, partition: _Page) -> Iterator[tuple]:
-        token = self._token()
+        client = self._client()
         if partition.offset is None:
             offset = self.opt_offset
             remaining = self.opt_limit  # None -> drain to exhaustion
             while remaining is None or remaining > 0:
-                page, token = self._fetch(offset, token)
+                page = self._fetch(client, offset)
                 take = page if remaining is None else page[:remaining]
                 for r in take:
                     yield tuple(r.get(f) for f in self.fields)
@@ -196,7 +144,7 @@ class RestDataSourceReader(DataSourceReader):
                 if remaining is not None:
                     remaining -= len(take)
         else:
-            page, token = self._fetch(partition.offset, token)
+            page = self._fetch(client, partition.offset)
             if partition.take is not None:
                 page = page[: partition.take]
             for r in page:
@@ -241,6 +189,7 @@ def register_rest_datasource(spark) -> None:
     opaque unknown-format error."""
     if getattr(spark, "_edfi_rest_registered", False):
         return
+    ship_package(spark)
     # default-off gate for Python DSv2 pushdown; runtime-mutable
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     try:
@@ -284,15 +233,10 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         return {"offset": 0}
 
     def _total(self) -> int:
-        r = self.inner
-        token = r._token()
-        status, _, headers = r._get(r._url(0, 1, total_count=True), token)
-        if status != 200:
-            raise OSError(f"REST count probe failed: HTTP {status}")
-        for k, v in headers.items():
-            if k.lower() == r.total_count_header:
-                return int(v)
-        raise OSError("endpoint reports no Total-Count; cannot stream")
+        total = self.inner._total(self.inner._client())
+        if total is None:
+            raise OSError("REST count probe got no Total-Count; cannot stream")
+        return total
 
     def _slice(self, start: int, end: int) -> tuple[list[tuple], int]:
         """Fetch rows in [start, end); returns (rows, reached) where
@@ -303,11 +247,11 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         the caller commits `reached`, and the next poll re-reads from
         there."""
         r = self.inner
-        token = r._token()
+        client = r._client()
         offset = start
         rows: list[tuple] = []
         while offset < end:
-            page, token = r._fetch(offset, token)
+            page = r._fetch(client, offset)
             take = page[: end - offset]
             for row in take:
                 rows.append(tuple(row.get(f) for f in r.fields))
@@ -357,40 +301,17 @@ class RestDataSourceWriter(DataSourceWriter):
 
     def write(self, rows) -> _Posted:
         r = self.inner
-        url = f"{r.base_url}/{r.path}"
-        token = r._token()
+        client = r._client()
         ok = failed = 0
         for row in rows:
             body = json.dumps(row.asDict(), default=str).encode()
-            req = urllib.request.Request(
-                url,
-                data=body,
-                headers={"Content-Type": "application/json"},
-                method="POST",
-            )
-            if token:
-                req.add_header("Authorization", f"Bearer {token}")
-            try:
-                with urllib.request.urlopen(req, timeout=r.timeout) as resp:
-                    status = resp.status
-            except urllib.error.HTTPError as e:
-                status = e.code
-                if status == 401 and r.auth is not None:
-                    token = r._token()
-                    req.add_header("Authorization", f"Bearer {token}")
-                    try:
-                        with urllib.request.urlopen(
-                            req, timeout=r.timeout
-                        ) as resp:
-                            status = resp.status
-                    except urllib.error.HTTPError as e2:
-                        status = e2.code
+            status, resp, _ = client.call(r.endpoint, "POST", body)
             if 200 <= status < 300:
                 ok += 1
             elif self.best_effort:
                 failed += 1
             else:
-                raise OSError(f"REST POST {url}: HTTP {status}")
+                raise OSError(f"REST POST {r.endpoint}: HTTP {status}: {resp[:200]!r}")
         return _Posted(ok=ok, failed=failed)
 
     def commit(self, messages) -> None:

@@ -71,6 +71,11 @@ class StubRestServer:
                 auth = self.headers.get("Authorization", "")
                 return auth.removeprefix("Bearer ").strip()
 
+            def _rid(self) -> str:
+                """Resource id: the percent-decoded last path segment."""
+                path = urllib.parse.urlparse(self.path).path
+                return urllib.parse.unquote(path.rsplit("/", 1)[-1])
+
             def _reply(self, status: int, body: bytes, headers: dict | None = None):
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")
@@ -124,7 +129,7 @@ class StubRestServer:
                 body = self.rfile.read(length)
                 if not self._auth_gate():
                     return
-                rid = self.path.rsplit("/", 1)[-1]
+                rid = self._rid()
                 if_match = self.headers.get("If-Match")
                 with stub._lock:
                     _, cur = stub.store.get(rid, ({}, 0))
@@ -139,7 +144,7 @@ class StubRestServer:
             def do_DELETE(self):
                 if not self._auth_gate():
                     return
-                rid = self.path.rsplit("/", 1)[-1]
+                rid = self._rid()
                 with stub._lock:
                     stub.deletes.append(rid)
                 self._reply(204, b"")
@@ -148,7 +153,7 @@ class StubRestServer:
                 if not self._auth_gate():
                     return
                 parsed = urllib.parse.urlparse(self.path)
-                rid = parsed.path.rsplit("/", 1)[-1]
+                rid = self._rid()
                 if rid and rid in stub.store:  # get-by-id + If-None-Match (R20)
                     doc, ver = stub.store[rid]
                     if self.headers.get("If-None-Match") == str(ver):
