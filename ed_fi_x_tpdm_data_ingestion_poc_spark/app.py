@@ -119,44 +119,52 @@ def run(
     docs, key_col, json_col = build_docs(spark, frames, spec.column_maps)
 
     out_dir = cfg.get("output.dir", "output")
-    if cfg.flag("output.data.to.dir") and cfg.flag("tpdm.api.save", True):
-        # Both outputs consume docs: persist so the JSON written to disk and
-        # the documents POSTed come from ONE execution of the JDBC reads
-        # (unpersisted, a source change between actions could diverge them).
-        docs = docs.persist()
-    if cfg.flag("output.data.to.dir"):
-        write_json_docs(
-            docs.select(key_col, json_col),
-            os.path.join(out_dir, "documents"),
-        )
-
-    if cfg.flag("tpdm.api.save", True):
-        sink = RestSink(
-            base_url=cfg.get("api.base.path"),
-            path=resource_path,
-            auth=cfg.oauth(),
-        )
-        outcomes = rest_upsert(docs, sink, key_col=key_col, json_col=json_col)
-        if remote_snapshot is not None:
-            src_keys = docs.select(F.col(key_col).alias("k"))
-            # snapshot contract: (natural key, resource_id) — the key column
-            # is whichever column isn't resource_id, so callers can pass the
-            # REST snapshot frame as-read
-            rk = [c for c in remote_snapshot.columns if c != "resource_id"][0]
-            remote = remote_snapshot.select(F.col(rk).alias("k"), "resource_id")
-            _, deletes = reconcile_snapshot(src_keys, remote, "k")
-            outcomes = outcomes.unionByName(
-                rest_delete(deletes.select("resource_id"), sink, id_col="resource_id")
+    persisted: list[DataFrame] = []
+    try:
+        if cfg.flag("output.data.to.dir") and cfg.flag("tpdm.api.save", True):
+            # Both outputs consume docs: persist so the JSON written to disk and
+            # the documents POSTed come from ONE execution of the JDBC reads
+            # (unpersisted, a source change between actions could diverge them).
+            docs = docs.persist()
+            persisted.append(docs)
+        if cfg.flag("output.data.to.dir"):
+            write_json_docs(
+                docs.select(key_col, json_col),
+                os.path.join(out_dir, "documents"),
             )
-        # The outcome rows are the record of side effects already performed;
-        # persist so no later action can re-fire the HTTP calls.
-        outcomes = outcomes.persist()
-        t0 = report.start_time
-        report = build_report(outcomes)
-        report.start_time = t0
-    else:
-        n = docs.count()
-        report.errors = [f"dry run: {n} documents built, sink disabled"]
+
+        if cfg.flag("tpdm.api.save", True):
+            sink = RestSink(
+                base_url=cfg.get("api.base.path"),
+                path=resource_path,
+                auth=cfg.oauth(),
+            )
+            outcomes = rest_upsert(docs, sink, key_col=key_col, json_col=json_col)
+            if remote_snapshot is not None:
+                src_keys = docs.select(F.col(key_col).alias("k"))
+                # snapshot contract: (natural key, resource_id) — the key column
+                # is whichever column isn't resource_id, so callers can pass the
+                # REST snapshot frame as-read
+                rk = [c for c in remote_snapshot.columns if c != "resource_id"][0]
+                remote = remote_snapshot.select(F.col(rk).alias("k"), "resource_id")
+                _, deletes = reconcile_snapshot(src_keys, remote, "k")
+                outcomes = outcomes.unionByName(
+                    rest_delete(deletes.select("resource_id"), sink, id_col="resource_id")
+                )
+            # The outcome rows are the record of side effects already performed;
+            # persist so no later action can re-fire the HTTP calls.
+            outcomes = outcomes.persist()
+            persisted.append(outcomes)
+            t0 = report.start_time
+            report = build_report(outcomes)
+            report.start_time = t0
+        else:
+            n = docs.count()
+            report.errors = [f"dry run: {n} documents built, sink disabled"]
+    finally:
+        # the report holds everything the run keeps; free the cached frames
+        for df in persisted:
+            df.unpersist()
 
     report.end_time = time.time()
     os.makedirs(out_dir, exist_ok=True)
@@ -233,11 +241,13 @@ def load_descriptor_vocabularies(
     initializeMaps' 7 load*DescriptorsMap calls) — reading ALL pages, not
     the first 100 (the reference truncates silently,
     SisConnectorService.java:493). Returns name -> (codeValue, namespace)
-    DataFrame, persisted: vocabularies are broadcast-sized dims reused by
-    every enrichment join in the run."""
+    DataFrame. The pages are read on the driver and each vocabulary is a
+    local relation: vocabularies are broadcast-sized dims, which the
+    enrichment joins collect to the driver anyway, so loading them runs
+    no Spark job."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from .sources.rest import RestSource, read_rest
+    from .sources.rest import RestSource, iter_all_rows, local_frame
 
     schema = StructType(
         [
@@ -253,7 +263,5 @@ def load_descriptor_vocabularies(
             auth=auth,
             page_size=page_size,
         )
-        df = read_rest(spark, src, schema).persist()
-        df.count()  # materialize while building the run graph
-        out[name] = df
+        out[name] = local_frame(spark, list(iter_all_rows(src)), schema)
     return out

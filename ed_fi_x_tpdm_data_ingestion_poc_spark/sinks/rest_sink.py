@@ -14,6 +14,15 @@ Spark-first: documents post from executor partitions in parallel
 executors push concurrently instead of the reference's single thread.
 Upserts are idempotent on the natural key (the ODS upserts on natural key),
 making at-least-once delivery safe.
+
+One sink task per task slot: the input is narrowed with
+coalesce(defaultParallelism) before the send, so each slot starts one
+Python task and fetches one token. Without it the send runs one task per
+shuffle partition (spark.sql.shuffle.partitions), because app.run persists
+the outcomes and AQE does not coalesce the shuffles inside a cached plan
+(spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is false).
+coalesce is narrow: it adds no shuffle and never raises the partition
+count, and tasks beyond the slot count never ran at the same time anyway.
 """
 
 from __future__ import annotations
@@ -69,7 +78,8 @@ def _send_all(df: DataFrame, sink: RestSink, op: str, request) -> DataFrame:
                 out["error"].append(None if ok else resp[:500].decode(errors="replace"))
             yield pd.DataFrame(out)
 
-    return df.mapInPandas(send_partition, OUTCOME_SCHEMA)
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    return df.coalesce(slots).mapInPandas(send_partition, OUTCOME_SCHEMA)
 
 
 def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str) -> DataFrame:

@@ -115,15 +115,31 @@ class Client:
             status, resp, hdrs = self._send(url, method, body, headers)
         return status, resp, hdrs
 
+    def _get_rows(self, url: str) -> tuple[list[dict], http.client.HTTPMessage]:
+        status, body, hdrs = self.call(url)
+        if status != 200:
+            raise OSError(f"REST GET {url} failed: HTTP {status}: {body[:200]!r}")
+        return json.loads(body), hdrs
+
     def get_page(
         self, endpoint: str, offset: int, limit: int, params: dict[str, str]
     ) -> list[dict]:
         """One page of rows; any status but 200 raises."""
-        url = _page_url(endpoint, offset, limit, params)
-        status, body, _ = self.call(url)
-        if status != 200:
-            raise OSError(f"REST GET {url} failed: HTTP {status}: {body[:200]!r}")
-        return json.loads(body)
+        return self._get_rows(_page_url(endpoint, offset, limit, params))[0]
+
+    def first_page(
+        self, endpoint: str, limit: int, params: dict[str, str],
+        header: str = "Total-Count",
+    ) -> tuple[list[dict], int | None]:
+        """The page at offset 0 with totalCount=true -> (rows, row count or
+        None when the endpoint sends no count header); any status but 200
+        raises. A server may cap `limit`: the rows it returns are the page
+        step for the remaining offsets."""
+        rows, hdrs = self._get_rows(
+            _page_url(endpoint, 0, limit, params, total_count=True)
+        )
+        count = hdrs.get(header)
+        return rows, None if count is None else int(count)
 
     def total_count(
         self, endpoint: str, params: dict[str, str], header: str = "Total-Count"

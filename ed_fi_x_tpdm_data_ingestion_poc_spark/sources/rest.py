@@ -9,9 +9,12 @@ Replaces the reference's REST reads (ref R16/R22):
     (service/SisConnectorService.java:493, 694).
 
 Engine fixes + scale design:
-  * pagination loops until a short page — no truncation;
-  * when the endpoint reports a total count, pages are planned up front and
-    fetched IN EXECUTORS via mapInPandas (driver never holds the dataset);
+  * the first page asks for the total count, and the rows it returns are the
+    step for the remaining offsets — no truncation, also when the server
+    caps `limit` below page_size;
+  * when the endpoint reports a total count, the remaining pages are planned
+    up front and fetched IN EXECUTORS via mapInPandas; a read whose first
+    page holds every row stays on the driver as a local relation;
   * 401 -> one token refresh + retry, per call (the reference's retry
     pattern, SisConnectorService.java:494-501), token re-fetchable inside
     executors from the shipped client credentials.
@@ -60,17 +63,44 @@ def fetch_page(src: RestSource, offset: int, token: str | None) -> list[dict]:
     return client.get_page(_endpoint(src), offset, src.page_size, src.extra_params)
 
 
+def _page_frame(rows: list[dict], names: list[str]):
+    """pandas columns of `rows`, kept as python objects (no int -> float
+    upcast around nulls) for Arrow to convert to the declared types."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {name: pd.Series([r.get(name) for r in rows], dtype=object) for name in names}
+    )
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """Rows already on the driver as a DataFrame. Through Arrow this plans
+    as a LocalTableScan, and building it runs no Spark job."""
+    return spark.createDataFrame(_page_frame(rows, schema.fieldNames()), schema)
+
+
+def _rows_after_first_page(
+    client: Client, src: RestSource, step: int, total: int | None
+) -> Iterator[dict]:
+    """The rows of the pages after the first, `step` rows apart: up to
+    offset `total` when the count is known, and never past an empty page
+    (the only stop when it is not)."""
+    offset = step
+    while step and (total is None or offset < total):
+        page = client.get_page(_endpoint(src), offset, step, src.extra_params)
+        if not page:
+            return
+        yield from page
+        offset += step
+
+
 def iter_all_rows(src: RestSource, token: str | None = None) -> Iterator[dict]:
-    """Loop offset += page_size until a short page (fixes the reference's
+    """Every row, page by page on the driver (fixes the reference's
     first-page-only truncation)."""
     client = _client(src, token)
-    offset = 0
-    while True:
-        page = client.get_page(_endpoint(src), offset, src.page_size, src.extra_params)
-        yield from page
-        if len(page) < src.page_size:
-            return
-        offset += src.page_size
+    first, total = client.first_page(_endpoint(src), src.page_size, src.extra_params)
+    yield from first
+    yield from _rows_after_first_page(client, src, len(first), total)
 
 
 def get_by_id(
@@ -97,44 +127,47 @@ def read_rest(
 ) -> DataFrame:
     """Paginated REST endpoint as a DataFrame.
 
-    Scale path: HEAD-style count probe (offset=0, limit=1, totalCount=true)
-    -> plan page offsets -> executors fetch pages in parallel and parse JSON
-    into `schema` (distributed; the driver holds only the offset list).
-    Fallback when the endpoint doesn't report a count: sequential driver
-    pagination (still complete, just not parallel).
+    The driver reads the first page with the total count. When that page
+    holds every row it is returned as a local relation (no executor job).
+    Otherwise the remaining offsets are planned and executors fetch those
+    pages in parallel and parse JSON into `schema` (the driver holds only
+    the first page and the offset list). Fallback when the endpoint doesn't
+    report a count: sequential driver pagination (still complete, just not
+    parallel).
     """
     client = Client.login(src.auth, src.timeout_sec)
     endpoint = _endpoint(src)
-    total = client.total_count(endpoint, src.extra_params, total_count_header)
-
+    first, total = client.first_page(
+        endpoint, src.page_size, src.extra_params, total_count_header
+    )
+    step = len(first)
     if total is None:
-        rows = list(iter_all_rows(src, client.token))
-        return spark.createDataFrame(rows, schema=schema)  # type: ignore[arg-type]
+        rows = first + list(_rows_after_first_page(client, src, step, None))
+        return local_frame(spark, rows, schema)
+    head = local_frame(spark, first, schema)
+    if step == 0 or step >= total:
+        return head
 
-    # spark.range with step = page_size plans the offsets as a pure-JVM
-    # Range scan, one partition per slice (a createDataFrame(list) plan is
-    # a Python-RDD scan + repartition exchange re-executed per run)
-    n_offsets = len(range(0, max(total, 1), src.page_size))
+    # spark.range plans the remaining offsets as a pure-JVM Range scan, at
+    # most one partition per task slot (a createDataFrame(list) plan is a
+    # Python-RDD scan + repartition exchange re-executed per run)
+    n_offsets = len(range(step, total, step))
     plan = spark.range(
-        0, max(total, 1), src.page_size, min(n_offsets, 64)
+        step, total, step, min(n_offsets, spark.sparkContext.defaultParallelism)
     ).withColumnRenamed("id", "offset")
 
     ship_package(spark)
-    params, page_size = dict(src.extra_params), src.page_size
-    field_names = [f.name for f in schema.fields]
+    params = dict(src.extra_params)
+    field_names = schema.fieldNames()
 
     def fetch_partition(batches):
-        import pandas as pd
-
         for pdf in batches:
             for off in pdf["offset"]:
-                page = client.get_page(endpoint, int(off), page_size, params)
-                yield pd.DataFrame(
-                    {name: [r.get(name) for r in page] for name in field_names}
-                )
+                page = client.get_page(endpoint, int(off), step, params)
+                yield _page_frame(page, field_names)
 
     json_df = plan.mapInPandas(fetch_partition, schema=schema)
     # Columns arrive as python objects; enforce declared types.
-    return json_df.select(
-        *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+    return head.unionByName(
+        json_df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
     )

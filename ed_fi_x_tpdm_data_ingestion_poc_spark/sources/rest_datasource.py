@@ -20,7 +20,7 @@ first-class integration: the reader participates in Catalyst planning, so
   covering [offset, offset+limit) instead of the whole collection —
   the reference's own paging surface (TeacherCandidatesApi.java:187-191);
 * pagination is planned as one InputPartition per page from the probed
-  Total-Count (same plan ``read_rest`` builds by hand), fetched in
+  Total-Count (as ``read_rest`` plans the pages after its first), fetched in
   parallel by executors; endpoints that report no count fall back to one
   sequential partition — complete, just not parallel;
 * OAuth2 client-credentials + the reference's 401-refresh-retry pattern
