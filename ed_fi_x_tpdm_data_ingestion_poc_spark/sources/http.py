@@ -21,6 +21,10 @@ import urllib.parse
 import urllib.request
 from dataclasses import dataclass
 
+# the response header carrying an endpoint's row count (looked up
+# case-insensitively)
+TOTAL_COUNT = "Total-Count"
+
 
 @dataclass
 class OAuthConfig:
@@ -128,8 +132,7 @@ class Client:
         return self._get_rows(_page_url(endpoint, offset, limit, params))[0]
 
     def first_page(
-        self, endpoint: str, limit: int, params: dict[str, str],
-        header: str = "Total-Count",
+        self, endpoint: str, limit: int, params: dict[str, str]
     ) -> tuple[list[dict], int | None]:
         """The page at offset 0 with totalCount=true -> (rows, row count or
         None when the endpoint sends no count header); any status but 200
@@ -138,14 +141,12 @@ class Client:
         rows, hdrs = self._get_rows(
             _page_url(endpoint, 0, limit, params, total_count=True)
         )
-        count = hdrs.get(header)
+        count = hdrs.get(TOTAL_COUNT)
         return rows, None if count is None else int(count)
 
-    def total_count(
-        self, endpoint: str, params: dict[str, str], header: str = "Total-Count"
-    ) -> int | None:
+    def total_count(self, endpoint: str, params: dict[str, str]) -> int | None:
         """Probe (offset=0, limit=1, totalCount=true) for the row count;
         None when the endpoint does not answer 200 with the count header."""
         status, _, hdrs = self.call(_page_url(endpoint, 0, 1, params, total_count=True))
-        count = hdrs.get(header) if status == 200 else None
+        count = hdrs.get(TOTAL_COUNT) if status == 200 else None
         return None if count is None else int(count)

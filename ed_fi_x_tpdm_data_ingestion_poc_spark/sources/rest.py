@@ -118,13 +118,7 @@ def get_by_id(
     return status, (json.loads(body) if status == 200 and body else None), hdrs.get("ETag")
 
 
-def read_rest(
-    spark: SparkSession,
-    src: RestSource,
-    schema: StructType,
-    *,
-    total_count_header: str = "Total-Count",
-) -> DataFrame:
+def read_rest(spark: SparkSession, src: RestSource, schema: StructType) -> DataFrame:
     """Paginated REST endpoint as a DataFrame.
 
     The driver reads the first page with the total count. When that page
@@ -137,9 +131,7 @@ def read_rest(
     """
     client = Client.login(src.auth, src.timeout_sec)
     endpoint = _endpoint(src)
-    first, total = client.first_page(
-        endpoint, src.page_size, src.extra_params, total_count_header
-    )
+    first, total = client.first_page(endpoint, src.page_size, src.extra_params)
     step = len(first)
     if total is None:
         rows = first + list(_rows_after_first_page(client, src, step, None))

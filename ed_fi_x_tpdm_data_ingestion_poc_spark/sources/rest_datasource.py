@@ -19,10 +19,12 @@ first-class integration: the reader participates in Catalyst planning, so
 * ``option("limit", n)`` / ``option("offset", n)`` plan only the pages
   covering [offset, offset+limit) instead of the whole collection —
   the reference's own paging surface (TeacherCandidatesApi.java:187-191);
-* pagination is planned as one InputPartition per page from the probed
-  Total-Count (as ``read_rest`` plans the pages after its first), fetched in
-  parallel by executors; endpoints that report no count fall back to one
-  sequential partition — complete, just not parallel;
+* pagination is planned as one InputPartition per page from the first
+  page and its Total-Count, stepping by the rows that page returns (as
+  ``read_rest`` does, so a server capping ``limit`` below ``page_size``
+  loses no rows), fetched in parallel by executors; endpoints that report
+  no count fall back to one sequential partition — complete, just not
+  parallel;
 * OAuth2 client-credentials + the reference's 401-refresh-retry pattern
   run inside each partition read (TokenRetriever.java:44-73,
   SisConnectorService.java:494-501).
@@ -53,9 +55,9 @@ from .http import Client, OAuthConfig
 
 
 class _Page(InputPartition):
-    def __init__(self, offset: int | None, take: int | None = None):
+    def __init__(self, offset: int | None, take: int = 0):
         self.offset = offset  # None -> sequential drain fallback
-        self.take = take  # rows to keep from this page (limit window tail)
+        self.take = take  # rows this page holds (the page's limit)
 
 
 class RestDataSourceReader(DataSourceReader):
@@ -66,7 +68,6 @@ class RestDataSourceReader(DataSourceReader):
         )
         self.page_size = int(options.get("page_size", "100"))
         self.timeout = float(options.get("timeout_sec", "30"))
-        self.total_count_header = options.get("total_count_header", "total-count")
         self.auth = None
         if "token_url" in options:
             self.auth = OAuthConfig(
@@ -104,50 +105,51 @@ class RestDataSourceReader(DataSourceReader):
     def _client(self) -> Client:
         return Client.login(self.auth, self.timeout)
 
-    def _fetch(self, client: Client, offset: int) -> list[dict]:
+    def _fetch(self, client: Client, offset: int, limit: int) -> list[dict]:
         """GET one page; a 401-refreshed token stays on `client`, so later
         pages do not each pay a 401 round-trip plus a token fetch."""
-        return client.get_page(self.endpoint, offset, self.page_size, self.params)
+        return client.get_page(self.endpoint, offset, limit, self.params)
 
     def _total(self, client: Client) -> int | None:
-        return client.total_count(self.endpoint, self.params, self.total_count_header)
+        return client.total_count(self.endpoint, self.params)
+
+    def _drain(self, client: Client, start: int, stop: int | None) -> Iterator[tuple]:
+        """The rows in [start, stop) (stop None: to the end), page by page.
+        Each page starts where the rows of the one before end, since a
+        server may cap `limit` below page_size; an empty page ends it."""
+        offset = start
+        while stop is None or offset < stop:
+            limit = self.page_size if stop is None else min(self.page_size, stop - offset)
+            page = self._fetch(client, offset, limit)[:limit]
+            if not page:
+                return
+            for r in page:
+                yield tuple(r.get(f) for f in self.fields)
+            offset += len(page)
 
     # -- planning + read ------------------------------------------------
     def partitions(self) -> Sequence[InputPartition]:
-        total = self._total(self._client())
-        if total is None:
+        first, total = self._client().first_page(
+            self.endpoint, self.page_size, self.params
+        )
+        step = len(first)
+        if total is None or not step:
             return [_Page(None)]
         # plan only the pages covering the declared [offset, offset+limit)
-        # window — a LIMIT-style read fetches ceil(n/page_size) pages, not
-        # the whole collection (R17, TeacherCandidatesApi.java:187-191)
+        # window — a LIMIT-style read fetches ceil(n/step) pages, not the
+        # whole collection (R17, TeacherCandidatesApi.java:187-191)
         lo = min(self.opt_offset, total)
         hi = total if self.opt_limit is None else min(total, lo + self.opt_limit)
-        pages = [
-            _Page(o, take=min(self.page_size, hi - o))
-            for o in range(lo, hi, self.page_size)
-        ]
+        pages = [_Page(o, take=min(step, hi - o)) for o in range(lo, hi, step)]
         return pages or [_Page(lo, take=0)]
 
     def read(self, partition: _Page) -> Iterator[tuple]:
-        client = self._client()
         if partition.offset is None:
-            offset = self.opt_offset
-            remaining = self.opt_limit  # None -> drain to exhaustion
-            while remaining is None or remaining > 0:
-                page = self._fetch(client, offset)
-                take = page if remaining is None else page[:remaining]
-                for r in take:
-                    yield tuple(r.get(f) for f in self.fields)
-                if len(page) < self.page_size:
-                    return
-                offset += self.page_size
-                if remaining is not None:
-                    remaining -= len(take)
-        else:
-            page = self._fetch(client, partition.offset)
-            if partition.take is not None:
-                page = page[: partition.take]
-            for r in page:
+            stop = None if self.opt_limit is None else self.opt_offset + self.opt_limit
+            yield from self._drain(self._client(), self.opt_offset, stop)
+        elif partition.take:
+            page = self._fetch(self._client(), partition.offset, partition.take)
+            for r in page[: partition.take]:
                 yield tuple(r.get(f) for f in self.fields)
 
 
@@ -246,19 +248,8 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         probed count then would permanently skip the rows in between, so
         the caller commits `reached`, and the next poll re-reads from
         there."""
-        r = self.inner
-        client = r._client()
-        offset = start
-        rows: list[tuple] = []
-        while offset < end:
-            page = r._fetch(client, offset)
-            take = page[: end - offset]
-            for row in take:
-                rows.append(tuple(row.get(f) for f in r.fields))
-            offset += len(take)
-            if len(page) < r.page_size:
-                break
-        return rows, offset
+        rows = list(self.inner._drain(self.inner._client(), start, end))
+        return rows, start + len(rows)
 
     def read(self, start: dict):
         # rows are prefetched driver-side and PICKLED by the engine —

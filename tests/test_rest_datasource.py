@@ -284,3 +284,37 @@ def test_write_overwrite_rejected(spark, stub):
             .option("path", "/items")
             .save()
         )
+
+
+def test_server_limit_cap_below_page_size_loses_no_rows(spark, stub):
+    """The stub caps `limit` at 100. With page_size=500 every page holds
+    100 rows, so pages must step by the rows the first page returned,
+    not by page_size — in the planned read, inside an offset/limit
+    window, and in the sequential fallback."""
+    from pyspark.sql.types import StructType
+
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.sources.rest_datasource import (
+        RestDataSourceReader,
+        _Page,
+    )
+
+    def read(**opts):
+        r = (
+            spark.read.format("edfi_rest")
+            .schema("id long, name string, grp long")
+            .option("base_url", stub.url)
+            .option("path", "/items")
+            .option("page_size", "500")
+        )
+        for k, v in opts.items():
+            r = r.option(k, v)
+        return sorted(x.id for x in r.load().collect())
+
+    register_rest_datasource(spark)
+    assert read() == list(range(250))
+    assert read(offset="30", limit="150") == list(range(30, 180))
+    reader = RestDataSourceReader(
+        StructType.fromDDL("id long, name string, grp long"),
+        {"base_url": stub.url, "path": "/items", "page_size": "500"},
+    )
+    assert [row[0] for row in reader.read(_Page(None))] == list(range(250))
