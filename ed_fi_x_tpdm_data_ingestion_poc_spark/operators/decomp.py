@@ -131,13 +131,14 @@ def pca_transform(
     ).mapInPandas(gen, "id long, proj array<double>")
 
 
-def reconstruction_sse(
+def reconstruction_sse_plan(
     emb: DataFrame, model: dict, *, vec_col: str = "embedding"
-) -> float:
-    """Total squared reconstruction error sum ||x − mean − VᵀV(x−mean)||²
-    in one map pass with a scalar-per-batch reduce. The Eckart–Young
-    check: equals n · sum of the residual eigenvalues (a law the tests
-    pin) — no basis can do better."""
+) -> DataFrame:
+    """One-row `sse` plan: the total squared reconstruction error
+    sum ||x − mean − VᵀV(x−mean)||² in one map pass with a
+    scalar-per-batch reduce. The Eckart–Young check: equals n · sum of
+    the residual eigenvalues (a law the tests pin) — no basis can do
+    better."""
     sc = emb.sparkSession.sparkContext
     bc = sc.broadcast((model["mean"], model["components"]))
 
@@ -161,7 +162,12 @@ def reconstruction_sse(
     return (
         emb.select(F.col(vec_col).alias("v"))
         .mapInPandas(gen, "sse double")
-        .agg(F.sum("sse").alias("t"))
-        .collect()[0]
-        .t
+        .agg(F.sum("sse").alias("sse"))
     )
+
+
+def reconstruction_sse(
+    emb: DataFrame, model: dict, *, vec_col: str = "embedding"
+) -> float:
+    """reconstruction_sse_plan's error, evaluated on the driver."""
+    return reconstruction_sse_plan(emb, model, vec_col=vec_col).first().sse

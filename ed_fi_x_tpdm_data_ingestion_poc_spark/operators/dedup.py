@@ -33,16 +33,6 @@ def shingles(text_col, k: int = 5):
     )
 
 
-def exact_dup_groups(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact-duplicate groups by content digest: (digest, n_docs, keep_id).
-    keep_id = min doc id (the canonical survivor)."""
-    return (
-        docs.select(id_col, F.md5(text_col).alias("digest"))
-        .groupBy("digest")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
-    )
-
-
 def exact_dedup(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

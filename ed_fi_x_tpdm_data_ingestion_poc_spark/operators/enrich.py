@@ -42,18 +42,3 @@ def enrich_descriptor_uri(
     )
     keep = [c for c in df.columns if c != out_col]
     return joined.select(*keep, uri.alias(out_col))
-
-
-def enrich_many(
-    df: DataFrame,
-    vocabularies: dict[str, DataFrame],
-    *,
-    suffix: str = "",
-) -> DataFrame:
-    """Apply enrich_descriptor_uri for several {column: vocabulary} pairs —
-    the reference does this 7 times per document (sex, addressType, locale,
-    stateAbbreviation, academicSubject, gradeLevel, tppDegreeType)."""
-    out = df
-    for col, vocab in vocabularies.items():
-        out = enrich_descriptor_uri(out, vocab, code_col=col, out_col=col + suffix)
-    return out

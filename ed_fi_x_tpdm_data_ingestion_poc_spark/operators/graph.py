@@ -265,30 +265,30 @@ def orient_edges(und: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(und: DataFrame) -> DataFrame:
-    """Global triangle count of an undirected graph given as a
-    deduplicated (u, v) edge DataFrame (one row per edge, u != v;
-    orientation of the input rows is irrelevant — edges are
-    canonicalized here). Returns one row (n_edges, n_tri).
-
-    Plan: canonicalize + distinct, orient by (degree, id) via
-    orient_edges, self-join oriented edges on their source to form each
-    wedge exactly once at its lowest-(degree, id) apex, then close
-    wedges against the oriented edge set with an (s, t)-keyed hash
-    join. Every triangle is counted exactly once (its apex is unique).
-    The caller should persist `und` if it is expensive to recompute —
-    the edge set feeds the degree pass, the wedge join, and the closing
-    join."""
+def oriented_edges(und: DataFrame) -> DataFrame:
+    """The edge set triangle counting consumes: an undirected (u, v)
+    edge DataFrame (orientation of the input rows is irrelevant)
+    canonicalized + deduplicated, then oriented by (degree, id) via
+    orient_edges. Eager: it feeds three plan branches (both wedge sides
+    and the closing join), so localCheckpoint runs orientation once AND
+    the three branches embed a one-line ExistingRDD scan instead of
+    re-printing the full orientation lineage (a persist here nested the
+    edge-artifact's InMemoryRelation under every branch — qz150's r17
+    plan dump was 10k lines; guide §3.3 plan truncation). Build it once
+    per input and reuse it across counts."""
     canon = und.select(
         F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
     ).distinct()
-    # the oriented set feeds three plan branches (both wedge sides and
-    # the closing join): localCheckpoint so orientation runs once AND
-    # the three branches embed a one-line ExistingRDD scan instead of
-    # re-printing the full orientation lineage (a persist here nested
-    # the edge-artifact's InMemoryRelation under every branch — qz150's
-    # r17 plan dump was 10k lines; guide §3.3 plan truncation)
-    ori = orient_edges(canon).localCheckpoint()
+    return orient_edges(canon).localCheckpoint()
+
+
+def oriented_triangle_count(ori: DataFrame) -> DataFrame:
+    """One row (n_edges, n_tri) from an oriented_edges() set: self-join
+    oriented edges on their source to form each wedge exactly once at
+    its lowest-(degree, id) apex, then close wedges against the oriented
+    edge set with an (s, t)-keyed hash join. Every triangle is counted
+    exactly once (its apex is unique). A pure plan: no job runs until
+    it is executed."""
     e1, e2, e3 = ori.alias("e1"), ori.alias("e2"), ori.alias("e3")
     wedges = e1.join(
         e2,
@@ -297,9 +297,18 @@ def triangle_count(und: DataFrame) -> DataFrame:
     tri = wedges.join(
         e3, (F.col("e3.s") == F.col("w1")) & (F.col("e3.t") == F.col("w2"))
     )
-    n_edges = canon.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
+    # orientation maps each canonical edge to exactly one oriented row
+    n_edges = ori.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     n_tri = tri.agg(F.count(F.lit(1)).cast("bigint").alias("n_tri"))
     return n_edges.crossJoin(n_tri)
+
+
+def triangle_count(und: DataFrame) -> DataFrame:
+    """Global triangle count of an undirected graph given as a (u, v)
+    edge DataFrame (u != v): one row (n_edges, n_tri). The caller should
+    persist `und` if it is expensive to recompute — the edge set feeds
+    the degree pass and the orientation."""
+    return oriented_triangle_count(oriented_edges(und))
 
 
 def core_numbers(

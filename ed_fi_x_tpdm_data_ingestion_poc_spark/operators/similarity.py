@@ -344,24 +344,24 @@ def ivf_topk(
     return _rank_topk(scored, k)
 
 
-def recall_at_k(approx: DataFrame, exact: DataFrame) -> float:
-    """|approx ∩ exact| / |exact| over (qid, nid) pairs — hit total and
-    exact total in ONE job (left join + aggregate), not separate
-    intersect().count() + count() round-trips."""
-    hit = (
-        approx.select("qid", "nid").dropDuplicates(["qid", "nid"])
-        .withColumn("__hit", F.lit(1))
-    )
-    row = (
-        exact.select("qid", "nid")
-        .join(hit, ["qid", "nid"], "left")
+def recall_at_k(
+    approx: DataFrame, exact: DataFrame, keys: tuple[str, ...] = ("qid", "nid")
+) -> DataFrame:
+    """One-row `recall` plan: |approx ∩ exact| / |exact| over the `keys`
+    pairs ((qid, nid) for top-k lists, (ida, idb) for near-dup pairs) —
+    hit total and exact total in one left join + aggregate. An empty
+    exact side has nothing to miss, so its recall is 1.0."""
+    keys = list(keys)
+    hit = approx.select(*keys).dropDuplicates(keys).withColumn("__hit", F.lit(1))
+    return (
+        exact.select(*keys)
+        .join(hit, keys, "left")
         .agg(
             F.count(F.lit(1)).alias("t"),
             F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("h"),
         )
-        .first()
+        .select(F.coalesce(F.try_divide("h", "t"), F.lit(1.0)).alias("recall"))
     )
-    return (row["h"] / row["t"]) if row["t"] else 1.0
 
 
 # ---------------------------------------------------------------- PQ (ADC) --
@@ -1132,21 +1132,22 @@ def dim_variance_profile(
     )
 
 
-def variance_drift(baseline: DataFrame, current: DataFrame) -> float:
-    """Total-variation distance (0..1) between two per-dimension
-    variance-share profiles: 0.5 * sum_i |share_a - share_b|. The
-    retrain-on-drift trigger for stored ANN codebooks — PQ assumes the
-    variance balance it was trained under (qz286's rationale), so a
-    profile shift is exactly the failure mode that degrades recall.
-    Joins two d-row artifacts; the corpus is not touched (the baseline
-    was stored at train time, the current profile is one batch pass).
+def variance_drift_plan(baseline: DataFrame, current: DataFrame) -> DataFrame:
+    """One-row `drift` plan: the total-variation distance (0..1) between
+    two per-dimension variance-share profiles, 0.5 * sum_i |share_a -
+    share_b|. The retrain-on-drift trigger for stored ANN codebooks — PQ
+    assumes the variance balance it was trained under (qz286's
+    rationale), so a profile shift is exactly the failure mode that
+    degrades recall. Joins two d-row artifacts; the corpus is not
+    touched (the baseline was stored at train time, the current profile
+    is one batch pass).
 
-    An EMPTY current profile (a night with zero new vectors) returns
-    0.0, not the raw TV distance of 0.5 — no data is no evidence of
-    drift, and 0.5 would schedule a full retrain for a no-op batch."""
+    An EMPTY current profile (a night with zero new vectors) gives 0.0,
+    not the raw TV distance of 0.5 — no data is no evidence of drift,
+    and 0.5 would schedule a full retrain for a no-op batch."""
     a = baseline.select("i", F.col("var_share").alias("a"))
     b = current.select("i", F.col("var_share").alias("b"))
-    row = (
+    return (
         a.join(b, "i", "full")
         .agg(
             (
@@ -1160,11 +1161,17 @@ def variance_drift(baseline: DataFrame, current: DataFrame) -> float:
             ).alias("tv"),
             F.count("b").alias("nb"),
         )
-        .first()
+        .select(
+            F.when(F.col("tv").isNull() | (F.col("nb") == 0), 0.0)
+            .otherwise(F.col("tv"))
+            .alias("drift")
+        )
     )
-    if row["tv"] is None or row["nb"] == 0:
-        return 0.0
-    return float(row["tv"])
+
+
+def variance_drift(baseline: DataFrame, current: DataFrame) -> float:
+    """variance_drift_plan's distance, evaluated on the driver."""
+    return float(variance_drift_plan(baseline, current).first()["drift"])
 
 
 def maintain_ivfpq_index(

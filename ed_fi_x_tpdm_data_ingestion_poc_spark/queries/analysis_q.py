@@ -466,9 +466,8 @@ def q133(spark: SparkSession, sf: str) -> DataFrame:
       whole column at sf-test size, where 'exact' is affordable).
 
     All passes are map-only with k-row/driver-bounded outputs; the
-    verdict memoizes per (session, sf) like every law artifact."""
-    import math
-
+    summaries memoize per (session, sf) like every law artifact, and the
+    rank checks run per evaluation."""
     from ..operators.quantiles import (
         exact_quantiles_via_summary,
         quantile_summary,
@@ -477,46 +476,25 @@ def q133(spark: SparkSession, sf: str) -> DataFrame:
         summary_quantile,
         summary_rank_bounds,
     )
-    from . import memo
+    from . import law, memo
 
     li = table(spark, sf, "lineitem")
-
-    def _laws() -> bool:
-        # laws verify the CONSTRUCTION, so they hold on any row set; a
-        # deterministic quarter-sample keeps this artifact's build at
-        # ~1/4 the passes' cost without weakening any check (the
-        # production path's cost is the single map pass, benched via
-        # q138's build)
-        base = li.where(
-            F.pmod(
-                F.xxhash64(F.col("l_orderkey"), F.col("l_linenumber")),
-                F.lit(4),
-            )
-            == 0
+    # laws verify the CONSTRUCTION, so they hold on any row set; a
+    # deterministic quarter-sample keeps the summary builds at ~1/4 the
+    # passes' cost without weakening any check (the production path's
+    # cost is the single map pass, benched via q138's build)
+    base = li.where(
+        F.pmod(
+            F.xxhash64(F.col("l_orderkey"), F.col("l_linenumber")),
+            F.lit(4),
         )
-        v = base.select(F.col("l_extendedprice").alias("v"))
+        == 0
+    )
+    v = base.select(F.col("l_extendedprice").alias("v"))
+    phis = [i / 10 for i in range(1, 10)]
+
+    def _summaries() -> dict:
         s = quantile_summary(v, "v", eps=0.01)
-        phis = [i / 10 for i in range(1, 10)]
-        qv = {phi: summary_quantile(s, phi) for phi in phis}
-        probes = sorted(set(qv.values()))
-        row = v.agg(
-            F.sum(F.col("v").isNotNull().cast("long")).alias("n"),
-            *[
-                F.sum((F.col("v") <= F.lit(p)).cast("long")).alias(f"r{i}")
-                for i, p in enumerate(probes)
-            ],
-        ).first()
-        n = int(row["n"])
-        true_rank = {p: int(row[f"r{i}"]) for i, p in enumerate(probes)}
-        max_w = max(w for _, w in s["points"])
-        ok_n = s["n"] == n
-        ok_bounds = True
-        for phi in phis:
-            val, target = qv[phi], max(1, math.ceil(phi * n))
-            lo, hi = summary_rank_bounds(s, val)
-            t = true_rank[val]
-            ok_bounds &= lo <= t <= hi
-            ok_bounds &= target <= t <= target - 1 + s["slack"] + max_w
         # disjoint 3-way split on a row key (orderkey, linenumber):
         # partition-independent, so each shard builds its own summary
         key = F.pmod(
@@ -530,47 +508,72 @@ def q133(spark: SparkSession, sf: str) -> DataFrame:
             "shard",
             eps=0.01,
         )
-        shards = [by[str(i)] for i in range(3)]
-        merged = summary_merge(summary_merge(shards[0], shards[1]), shards[2])
-        assoc = summary_merge(shards[0], summary_merge(shards[1], shards[2]))
-        ok_merge = (
+        return {
+            "s": s,
+            "shards": [by[str(i)] for i in range(3)],
+            "exact": exact_quantiles_via_summary(
+                v, "v", [0.25, 0.5, 0.9], eps=0.01, summary=s
+            ),
+        }
+
+    art = memo(
+        spark, ("quantile_summaries", sf), _summaries, label="quantile_summaries"
+    )
+    s, shards = art["s"], art["shards"]
+    qv = {phi: summary_quantile(s, phi) for phi in phis}
+    probes = sorted(set(qv.values()))
+    pairs = sorted(art["exact"].items())
+    merged = summary_merge(summary_merge(shards[0], shards[1]), shards[2])
+    assoc = summary_merge(shards[0], summary_merge(shards[1], shards[2]))
+    max_w = max(w for _, w in s["points"])
+
+    # exact ranks of every probe, and of every refined answer x (x is the
+    # target-th smallest IFF count(v < x) < target <= count(v <= x)), in
+    # ONE conditional-aggregate pass — no sort and no big collect
+    row = v.agg(
+        F.sum(F.col("v").isNotNull().cast("long")).alias("n"),
+        *[
+            F.sum((F.col("v") <= F.lit(p)).cast("long")).alias(f"r{i}")
+            for i, p in enumerate(probes)
+        ],
+        *[
+            a
+            for i, (_, x) in enumerate(pairs)
+            for a in (
+                F.sum((F.col("v") < F.lit(x)).cast("long")).alias(f"lt{i}"),
+                F.sum((F.col("v") <= F.lit(x)).cast("long")).alias(f"le{i}"),
+            )
+        ],
+    )
+    n = F.col("n")
+
+    def target(phi: float):
+        return F.greatest(F.lit(1), F.ceil(F.lit(phi) * n))
+
+    # accounting, then merge: associative, n and slack add
+    ok = (
+        (F.lit(s["n"]) == n)
+        & F.lit(
             merged == assoc
-            and merged["n"] == n
-            and merged["slack"]
-            == shards[0]["slack"] + shards[1]["slack"] + shards[2]["slack"]
+            and merged["slack"] == sum(sh["slack"] for sh in shards)
         )
-        for phi in phis:
-            lo, hi = summary_rank_bounds(merged, qv[phi])
-            ok_merge &= lo <= true_rank[qv[phi]] <= hi
-        # exact refine: x is the target-th smallest IFF
-        # count(v < x) < target <= count(v <= x) — one conditional
-        # aggregate pass verifies all phis, no sort and no big collect
-        got = exact_quantiles_via_summary(
-            v, "v", [0.25, 0.5, 0.9], eps=0.01, summary=s
+        & (F.lit(merged["n"]) == n)
+    )
+    for phi in phis:
+        val = qv[phi]
+        lo, hi = summary_rank_bounds(s, val)
+        mlo, mhi = summary_rank_bounds(merged, val)
+        t = F.col(f"r{probes.index(val)}")
+        ok = (
+            ok
+            & t.between(lo, hi)
+            & (target(phi) <= t)
+            & (t <= target(phi) - 1 + s["slack"] + max_w)
+            & t.between(mlo, mhi)
         )
-        pairs = sorted(got.items())
-        row2 = v.agg(
-            *[
-                a
-                for i, (_, x) in enumerate(pairs)
-                for a in (
-                    F.sum((F.col("v") < F.lit(x)).cast("long")).alias(f"lt{i}"),
-                    F.sum((F.col("v") <= F.lit(x)).cast("long")).alias(
-                        f"le{i}"
-                    ),
-                )
-            ]
-        ).first()
-        ok_exact = True
-        for i, (phi, _) in enumerate(pairs):
-            target = max(1, math.ceil(phi * n))
-            ok_exact &= int(row2[f"lt{i}"]) < target <= int(row2[f"le{i}"])
-        return bool(ok_n and ok_bounds and ok_merge and ok_exact)
-
-    ok = memo(spark, ("quantile_laws", sf), _laws, label="quantile_laws")
-    from . import ok_flag
-
-    return ok_flag(spark, ok)
+    for i, (phi, _) in enumerate(pairs):
+        ok = ok & (F.col(f"lt{i}") < target(phi)) & (target(phi) <= F.col(f"le{i}"))
+    return row.select(law(ok))
 
 
 # ---------------------------------------------------------------------------

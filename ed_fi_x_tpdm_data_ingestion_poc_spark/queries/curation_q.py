@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import broadcast_if_small, built, ok_flag, query, spread_scan
+from . import broadcast_if_small, built, law, query, spread_scan
 
 _STOP_SQL = "('the','a','of','and','to','in','is','it')"
 
@@ -361,6 +361,28 @@ def q80(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _roundtrip_ok(d: DataFrame, back: DataFrame) -> DataFrame:
+    """ok iff a written-and-read-back copy of documents keeps every row:
+    equal count and order-insensitive digest-sum over all fields."""
+
+    def digest(df: DataFrame, suffix: str) -> DataFrame:
+        return df.select(
+            F.count(F.lit(1)).alias("n" + suffix),
+            F.sum(
+                F.xxhash64("doc_id", "text", "lang", "source", "n_chars").cast(
+                    "decimal(38,0)"
+                )
+            ).alias("h" + suffix),
+        )
+
+    return digest(d, "").crossJoin(digest(back, "_back")).select(
+        law(
+            (F.col("n") == F.col("n_back"))
+            & F.col("h").eqNullSafe(F.col("h_back"))
+        )
+    )
+
+
 @query(
     "qz81_jsonl_roundtrip",
     oracle="SELECT CAST(1 AS INT) AS ok",
@@ -388,20 +410,7 @@ def q81(spark: SparkSession, sf: str) -> DataFrame:
     back = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
     ).json(path)
-
-    def digest(df: DataFrame):
-        return df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64("doc_id", "text", "lang", "source", "n_chars").cast(
-                    "decimal(38,0)"
-                )
-            ).alias("h"),
-        )
-
-    a = digest(d).collect()[0]
-    b = digest(back).collect()[0]
-    return ok_flag(spark, a["n"] == b["n"] and a["h"] == b["h"])
+    return _roundtrip_ok(d, back)
 
 
 @query(
@@ -643,20 +652,7 @@ def q97(spark: SparkSession, sf: str) -> DataFrame:
 
     path = _artifact(spark, sf, "orc_dir", _write)
     back = spark.read.orc(path)
-
-    def digest(df: DataFrame):
-        return df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64("doc_id", "text", "lang", "source", "n_chars").cast(
-                    "decimal(38,0)"
-                )
-            ).alias("h"),
-        )
-
-    a = digest(d).collect()[0]
-    b = digest(back).collect()[0]
-    return ok_flag(spark, a["n"] == b["n"] and a["h"] == b["h"])
+    return _roundtrip_ok(d, back)
 
 
 def _q100_oracle() -> str:

@@ -228,10 +228,16 @@ def q150(spark: SparkSession, sf: str) -> DataFrame:
     node-sized and broadcast under the broadcast_if_small guard
     (operators/graph.py::orient_edges); the undirected edge set is a
     persisted artifact because degree, wedge, and closing stages all
-    reuse it."""
-    from ..operators.graph import triangle_count
+    reuse it. Its oriented form is an artifact too, so a warm build
+    runs no job."""
+    from ..operators.graph import oriented_edges, oriented_triangle_count
+    from .llm import _artifact
 
-    return triangle_count(_copurchase_und(spark, sf))
+    ori = _artifact(
+        spark, sf, "copurchase_oriented",
+        lambda: oriented_edges(_copurchase_und(spark, sf)),
+    )
+    return oriented_triangle_count(ori)
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..tables import table
-from . import broadcast_if_small, ok_flag, query
+from . import broadcast_if_small, query
 
 # ---------------------------------------------------------------- scans ----
 
@@ -456,7 +456,7 @@ def q69(spark: SparkSession, sf: str) -> DataFrame:
     o = table(spark, sf, "orders")
     # Fully lazy: the flag is a zip_with/forall expression over the two
     # sketch arrays, so one bench iteration is ONE job (the old .first()
-    # + ok_flag form ran two).
+    # + constant-flag form ran two).
     return o.agg(
         F.percentile_approx(
             "o_totalprice", [0.5, 0.9, 0.99], 10_000

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import memo, query, spread_scan
+from . import built, law, memo, query, spread_scan
 
 _FPP = 0.01
 
@@ -140,21 +140,21 @@ def q90(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(hit * (1 - inev)).alias("fp_occ"),
         F.sum(1 - inev).alias("neg_occ"),
     )
-    # one verification job: false-negative docs (the law) + occurrence-
+    # one verification pass: false-negative docs (the law) + occurrence-
     # weighted FPR among non-eval shingle occurrences (shingles here are
     # near-unique, so occurrence weighting ~= distinct-shingle FPR and
     # saves the extra distinct+probe pass)
-    v = per_doc.agg(
+    return per_doc.agg(
         F.sum(
             ((F.col("c") >= 0.5) & (F.col("hit_frac") < 0.5)).cast("int")
         ).alias("fn"),
         (F.sum("fp_occ") / F.sum("neg_occ")).alias("fpr"),
-    ).collect()[0]
-    fn, fpr_ok = v.fn, (v.fpr or 0.0) <= 5 * _FPP
-
-    from . import ok_flag
-
-    return ok_flag(spark, fn == 0 and fpr_ok)
+    ).select(
+        law(
+            (F.col("fn") == 0)
+            & (F.coalesce(F.col("fpr"), F.lit(0.0)) <= 5 * _FPP)
+        )
+    )
 
 
 _DOC_DDL = "doc_id long, text string"
@@ -231,28 +231,30 @@ def q94(spark: SparkSession, sf: str) -> DataFrame:
             ((hits / F.size(sh)) >= 0.5).cast("int").alias("drop"),
         )
 
-    replay = memo(
-        spark, ("docs_replay", sf), lambda: _docs_replay_dir(spark, sf),
-        label="docs_replay",
-    )
-    streamed = run_to_memory(
-        verdict(read_replay_stream(spark, replay, _DOC_DDL)),
-        output_mode="append",
+    def stream():
+        replay = memo(
+            spark, ("docs_replay", sf), lambda: _docs_replay_dir(spark, sf),
+            label="docs_replay",
+        )
+        return run_to_memory(
+            verdict(read_replay_stream(spark, replay, _DOC_DDL)),
+            output_mode="append",
+        )
+
+    streamed = memo(
+        spark, ("decontam_stream", sf), stream, label="decontam_stream"
     )
     batch = verdict(d)
-    mismatches = (
+    return (
         streamed.join(batch, "doc_id", "full")
         .filter(
             streamed["drop"].isNull()
             | batch["drop"].isNull()
             | (streamed["drop"] != batch["drop"])
         )
-        .count()
+        .agg(F.count(F.lit(1)).alias("mismatches"))
+        .select(law(F.col("mismatches") == 0))
     )
-
-    from . import ok_flag
-
-    return ok_flag(spark, mismatches == 0)
 
 
 @query(
@@ -276,10 +278,10 @@ def q96(spark: SparkSession, sf: str) -> DataFrame:
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
     split = e.agg(
-        F.expr("percentile_approx(unix_date(day), 0.5, 1000)").alias("m")
-    ).collect()[0].m
-    old = e.filter(F.unix_date("day") <= F.lit(split))
-    new = e.filter(F.unix_date("day") > F.lit(split))
+        F.expr("percentile_approx(unix_date(day), 0.5, 1000)")
+    ).scalar()
+    old = e.filter(F.unix_date("day") <= split)
+    new = e.filter(F.unix_date("day") > split)
 
     stored = hll_sketch_table(old, ["event_type"], "user_id", lgk=14)
     fresh = hll_sketch_table(new, ["event_type"], "user_id", lgk=14)
@@ -347,19 +349,15 @@ def q105(spark: SparkSession, sf: str) -> DataFrame:
     exact = users.filter(
         (F.col("h") >= 40) & (F.col("h") < 60)
     ).agg(F.count_distinct("user_id").alias("x"))
-    row = (
+    inter_est = F.col("a") + F.col("b") - F.col("u")
+    x = F.col("x")
+    return (
         ests.crossJoin(union_est)
         .crossJoin(exact)
         .select(
-            (F.col("a") + F.col("b") - F.col("u")).alias("inter_est"),
-            "x",
+            law((x > 0) & (F.try_divide(F.abs(inter_est - x), x) <= 0.10))
         )
-        .collect()[0]
     )
-    from . import ok_flag
-
-    ok = row.x > 0 and abs(row.inter_est - row.x) / row.x <= 0.10
-    return ok_flag(spark, ok)
 
 
 @query(
@@ -413,16 +411,13 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
         .limit(50)
     )
     bound = 3 * math.ceil(math.e * full["n"] / full["w"])
-    probed = top.select(
+    return top.select(
         "true_cnt", cms_point(full, F.col("w")).alias("est")
     ).agg(
         F.min(F.col("est") >= F.col("true_cnt")).alias("law"),
         F.max(F.col("est") - F.col("true_cnt")).alias("max_err"),
-    ).collect()[0]
-    from . import ok_flag
-
-    return ok_flag(
-        spark, bool(probed.law) and probed.max_err <= bound and merge_ok
+    ).select(
+        law(F.col("law") & (F.col("max_err") <= bound) & F.lit(bool(merge_ok)))
     )
 
 
@@ -464,20 +459,6 @@ def q123(spark: SparkSession, sf: str) -> DataFrame:
         kmv_merge,
     )
 
-    def _laws() -> bool:
-        return _kmv_laws(
-            spark, sf, kmv_build, kmv_estimate, kmv_intersect_estimate, kmv_merge
-        )
-
-    ok = memo(spark, ("kmv_laws", sf), _laws, label="kmv_laws")
-    from . import ok_flag
-
-    return ok_flag(spark, ok)
-
-
-def _kmv_laws(
-    spark, sf, kmv_build, kmv_estimate, kmv_intersect_estimate, kmv_merge
-) -> bool:
     li = table(spark, sf, "lineitem")
     keys = li.select("l_orderkey").distinct().select(
         F.col("l_orderkey").alias("id"),
@@ -487,38 +468,48 @@ def _kmv_laws(
         ),
     )
     a = keys.filter(F.col("h") < 55)
-    b = keys.filter(F.col("h") >= 50)
-    k = 1024
-    sk_a = kmv_build(a, "id", k)
-    sk_b = kmv_build(b, "id", k)
-    sk_a_halves = kmv_merge(
-        kmv_build(a.filter(F.col("half") == 0), "id", k),
-        kmv_build(a.filter(F.col("half") == 1), "id", k),
-    )
-    merge_ok = sk_a_halves["mins"] == sk_a["mins"]
-    exact = keys.agg(
+
+    def _sketches() -> dict:
+        k = 1024
+        return {
+            "a": kmv_build(a, "id", k),
+            "b": kmv_build(keys.filter(F.col("h") >= 50), "id", k),
+            "a_halves": kmv_merge(
+                kmv_build(a.filter(F.col("half") == 0), "id", k),
+                kmv_build(a.filter(F.col("half") == 1), "id", k),
+            ),
+            # 2048 > the h<1 bucket's distinct count at every test SF
+            # (1502 at sf0.1), so this sketch retains the whole set — the
+            # exactness claim is about the operator, not the luck of the
+            # bucket size
+            "small": kmv_build(keys.filter(F.col("h") < 1), "id", 2048),
+        }
+
+    sk = memo(spark, ("kmv_sketches", sf), _sketches, label="kmv_sketches")
+
+    def rel(est: float, true: str):
+        # |est - true| / true, or |est| when the true count is 0
+        return F.coalesce(
+            F.try_divide(F.abs(F.lit(est) - F.col(true)), F.col(true)),
+            F.lit(abs(est)),
+        )
+
+    return keys.agg(
         F.sum((F.col("h") < 55).cast("long")).alias("na"),
         F.sum((F.col("h") >= 50).cast("long")).alias("nb"),
         F.sum(((F.col("h") >= 50) & (F.col("h") < 55)).cast("long")).alias(
             "ni"
         ),
         F.sum((F.col("h") < 1).cast("long")).alias("ns"),
-    ).collect()[0]
-
-    def _rel(est: float, true: int) -> float:
-        return abs(est - true) / true if true else abs(est)
-
-    est_ok = (
-        _rel(kmv_estimate(sk_a), exact.na) <= 0.10
-        and _rel(kmv_estimate(sk_b), exact.nb) <= 0.10
+    ).select(
+        law(
+            F.lit(bool(sk["a_halves"]["mins"] == sk["a"]["mins"]))
+            & (rel(kmv_estimate(sk["a"]), "na") <= 0.10)
+            & (rel(kmv_estimate(sk["b"]), "nb") <= 0.10)
+            & (rel(kmv_intersect_estimate(sk["a"], sk["b"]), "ni") <= 0.25)
+            & (F.lit(kmv_estimate(sk["small"])) == F.col("ns").cast("double"))
+        )
     )
-    inter_ok = _rel(kmv_intersect_estimate(sk_a, sk_b), exact.ni) <= 0.25
-    # 2048 > the h<1 bucket's distinct count at every test SF (1502 at
-    # sf0.1), so this sketch retains the whole set — the exactness claim
-    # is about the operator, not the luck of the bucket size
-    sk_small = kmv_build(keys.filter(F.col("h") < 1), "id", 2048)
-    exact_ok = kmv_estimate(sk_small) == float(exact.ns)
-    return bool(merge_ok and est_ok and inter_ok and exact_ok)
 
 
 # ---------------------------------------------------------------------------
@@ -536,8 +527,8 @@ _MG_K = 128
 def q151(spark: SparkSession, sf: str) -> DataFrame:
     """Laws of the Misra-Gries heavy-hitter summary
     (operators/sketches.py::mg_build/mg_merge) over the document token
-    stream, verified distributed (the exact count table stays a
-    persisted DataFrame; the driver only ever holds k counters):
+    stream, verified distributed (the exact counts are a grouped plan;
+    the driver only ever holds k counters):
 
     * accounting — summary n == exact non-null token count;
     * error budget — err <= 2n/(k+1) (per-batch cuts + final compress);
@@ -550,10 +541,10 @@ def q151(spark: SparkSession, sf: str) -> DataFrame:
       same rows, combined with mg_merge, satisfy the SAME coverage and
       bound laws with the (larger) merged err, and n adds exactly.
 
-    The check joins the k-row counter table (broadcast) against the
+    Each check joins a k-row counter table (broadcast) against the
     exact counts — the corpus is scanned once per summary build
-    (map-only mapInPandas) and once for the exact side; production
-    keeps only the first."""
+    (map-only mapInPandas, memoized) and once per check for the exact
+    side; production keeps only the first."""
     from ..operators.sketches import mg_build, mg_merge
 
     # laws verify the CONSTRUCTION, so they hold on any row set; a
@@ -567,59 +558,67 @@ def q151(spark: SparkSession, sf: str) -> DataFrame:
         F.explode(F.split("text", " ")).alias("tok")
     ).where(F.col("tok") != "")
 
-    def _laws() -> bool:
-        k = _MG_K
-        s = mg_build(toks, "tok", k=k)
-        exact = (
-            toks.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .persist()
-        )
-        n = exact.agg(F.sum("cnt")).first()[0]
+    k = _MG_K
 
-        def check(summary: dict) -> bool:
-            cdf = F.broadcast(
-                spark.createDataFrame(
-                    list(summary["counters"].items()), "item string, est long"
-                )
-            )
-            j = exact.join(
-                cdf, exact["tok"] == cdf["item"], "left"
-            ).persist()
-            err = summary["err"]
-            missed_heavy = j.where(
-                (F.col("cnt") > err) & F.col("item").isNull()
-            ).count()
-            bound_viol = j.where(
-                F.col("item").isNotNull()
-                & (
-                    (F.col("est") > F.col("cnt"))
-                    | (F.col("cnt") - F.col("est") > err)
-                )
-            ).count()
-            j.unpersist()
-            return (
-                summary["n"] == n
-                and 0 <= err <= 2 * n / (k + 1)
-                and missed_heavy == 0
-                and bound_viol == 0
-            )
-
-        ok = check(s)
+    def _summaries() -> list:
         # disjoint row split on the token hash: shards build
         # independently, mg_merge combines — the nightly-shard contract
         half = F.pmod(F.xxhash64("tok"), F.lit(2))
-        s0 = mg_build(toks.where(half == 0), "tok", k=k)
-        s1 = mg_build(toks.where(half == 1), "tok", k=k)
-        m = mg_merge(s0, s1)
-        ok = ok and m["n"] == n and check(m)
-        exact.unpersist()
-        return bool(ok)
+        merged = mg_merge(
+            mg_build(toks.where(half == 0), "tok", k=k),
+            mg_build(toks.where(half == 1), "tok", k=k),
+        )
+        return [
+            (
+                built(spark.createDataFrame(
+                    list(m["counters"].items()), "item string, est long"
+                ).persist()),
+                m["n"],
+                m["err"],
+            )
+            for m in (mg_build(toks, "tok", k=k), merged)
+        ]
 
-    ok = memo(spark, ("mg_laws", sf), _laws, label="mg_laws")
-    from . import ok_flag
+    exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
 
-    return ok_flag(spark, ok)
+    def check(counters: DataFrame, n: int, err: int) -> DataFrame:
+        return (
+            exact.join(
+                F.broadcast(counters), exact["tok"] == counters["item"], "left"
+            )
+            .agg(
+                F.sum("cnt").alias("n"),
+                F.sum(
+                    ((F.col("cnt") > err) & F.col("item").isNull()).cast("long")
+                ).alias("missed_heavy"),
+                F.sum(
+                    (
+                        F.col("item").isNotNull()
+                        & (
+                            (F.col("est") > F.col("cnt"))
+                            | (F.col("cnt") - F.col("est") > err)
+                        )
+                    ).cast("long")
+                ).alias("bound_viol"),
+            )
+            .select(
+                (
+                    (F.col("n") == n)
+                    & F.lit(0 <= err)
+                    & (F.lit(err) <= 2 * F.col("n") / (k + 1))
+                    & (F.col("missed_heavy") == 0)
+                    & (F.col("bound_viol") == 0)
+                ).alias("ok")
+            )
+        )
+
+    full, merged = (
+        check(*m)
+        for m in memo(spark, ("mg_summaries", sf), _summaries, label="mg_summaries")
+    )
+    return full.crossJoin(merged.withColumnRenamed("ok", "ok_merged")).select(
+        law(F.col("ok") & F.col("ok_merged"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -650,48 +649,56 @@ def q153(spark: SparkSession, sf: str) -> DataFrame:
       events sketch bounds the skew statistic F2 the same way, the
       input a shuffle planner needs BEFORE choosing salting.
 
-    True values are computed distributed (one groupBy each); the driver
-    compares five longs."""
+    True values are computed distributed (one aggregate each) and
+    compared in the plan against the memoized sketches' estimates."""
     import math
 
     from ..operators.sketches import cms_build, cms_inner_product, cms_merge
 
-    def _laws() -> bool:
-        orders = table(spark, sf, "orders")
-        cust = table(spark, sf, "customer")
-        ev = table(spark, sf, "events")
+    orders = table(spark, sf, "orders")
+    cust = table(spark, sf, "customer")
+    ev = table(spark, sf, "events")
 
-        a = cms_build(orders, "o_custkey")
-        b = cms_build(cust, "c_custkey")
-        est = cms_inner_product(a, b)
-        true = orders.join(
-            cust, orders["o_custkey"] == cust["c_custkey"]
-        ).count()
-        bound = math.e * a["n"] * b["n"] / a["w"]
-        ok = true <= est <= true + bound
-
-        # merge-transparency: disjoint halves of orders, cell-sum merge
+    def _sketches() -> dict:
+        # merge-transparency input: disjoint halves of orders
         half = F.pmod(F.col("o_orderkey"), F.lit(2))
-        a0 = cms_build(orders.where(half == 0), "o_custkey")
-        a1 = cms_build(orders.where(half == 1), "o_custkey")
-        ok = ok and cms_inner_product(cms_merge(a0, a1), b) == est
+        return {
+            "a": cms_build(orders, "o_custkey"),
+            "b": cms_build(cust, "c_custkey"),
+            "a_merged": cms_merge(
+                cms_build(orders.where(half == 0), "o_custkey"),
+                cms_build(orders.where(half == 1), "o_custkey"),
+            ),
+            "e": cms_build(ev, "user_id"),
+        }
 
-        # self-join size (F2) on the event stream's user key
-        e_sk = cms_build(ev, "user_id")
-        f2_est = cms_inner_product(e_sk, e_sk)
-        f2 = (
-            ev.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.sum(F.col("c") * F.col("c")).alias("f2"))
-            .first()["f2"]
+    sk = memo(spark, ("cms_join_sketches", sf), _sketches, label="cms_join_sketches")
+    a, b, e_sk = sk["a"], sk["b"], sk["e"]
+    est = cms_inner_product(a, b)
+    bound = math.e * a["n"] * b["n"] / a["w"]
+    # merge-transparency: the cell-sum merge estimates identically
+    merge_ok = cms_inner_product(sk["a_merged"], b) == est
+    # self-join size (F2) on the event stream's user key
+    f2_est = cms_inner_product(e_sk, e_sk)
+    f2_bound = math.e * e_sk["n"] * e_sk["n"] / e_sk["w"]
+
+    true = orders.join(cust, orders["o_custkey"] == cust["c_custkey"]).agg(
+        F.count(F.lit(1)).alias("true")
+    )
+    f2 = (
+        ev.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .agg(F.sum(F.col("c") * F.col("c")).alias("f2"))
+    )
+    return true.crossJoin(f2).select(
+        law(
+            (F.col("true") <= est)
+            & (F.lit(est) <= F.col("true") + bound)
+            & F.lit(bool(merge_ok))
+            & (F.col("f2") <= f2_est)
+            & (F.lit(f2_est) <= F.col("f2") + f2_bound)
         )
-        f2_bound = math.e * e_sk["n"] * e_sk["n"] / e_sk["w"]
-        return ok and f2 <= f2_est <= f2 + f2_bound
-
-    ok = memo(spark, ("cms_join_size", sf), _laws, label="cms_join_size")
-    from . import ok_flag
-
-    return ok_flag(spark, ok)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -786,7 +793,7 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
     k, shards = _SMG_K, _SMG_SHARDS
     shard_of = lambda c: F.pmod(F.xxhash64(c), F.lit(shards)).cast("int")  # noqa: E731
 
-    def _laws() -> bool:
+    def _stream() -> tuple:
         replay = memo(
             spark, ("docs_replay", sf), lambda: _docs_replay_dir(spark, sf),
             label="docs_replay",
@@ -819,72 +826,77 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
         for r in res:
             if r.shard not in final or r.b > final[r.shard].b:
                 final[r.shard] = r
-        multi_batch = max(r.b for r in final.values()) > 1
+        shards_df = built(spark.createDataFrame(
+            [(s, r.n, r.err) for s, r in final.items()],
+            "shard int, n long, err long",
+        ).persist())
+        counters = built(spark.createDataFrame(
+            [
+                (s, t, int(c))
+                for s, r in final.items()
+                for t, c in zip(r.items, r.counts)
+            ] or [(0, "", 0)],
+            "shard int, item string, est long",
+        ).persist())
+        return shards_df, counters, max(r.b for r in final.values()) > 1
 
-        # exact side, distributed, with the same shard assignment
-        exact = (
-            table(spark, sf, "documents")
-            .select(F.explode(F.split("text", " ")).alias("tok"))
-            .where(F.col("tok") != "")
-            .withColumn("shard", shard_of(F.col("tok")))
-            .groupBy("shard", "tok")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .persist()
+    shards_df, counters, multi_batch = memo(
+        spark, ("stream_mg_summaries", sf), _stream, label="stream_mg_summaries"
+    )
+    # exact side, distributed, with the same shard assignment
+    exact = (
+        table(spark, sf, "documents")
+        .select(F.explode(F.split("text", " ")).alias("tok"))
+        .where(F.col("tok") != "")
+        .withColumn("shard", shard_of(F.col("tok")))
+        .groupBy("shard", "tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    # accounting and error budget per shard; a shard missing on either
+    # side fails the law
+    budget = (
+        exact.groupBy("shard").agg(F.sum("cnt").alias("n_exact"))
+        .join(shards_df, "shard", "full")
+        .agg(
+            F.min(
+                F.coalesce(
+                    (F.col("n") == F.col("n_exact"))
+                    & (F.col("err") <= F.col("n_exact") / (k + 1)),
+                    F.lit(False),
+                )
+            ).alias("budget")
         )
-        totals = {
-            r.shard: r.n
-            for r in exact.groupBy("shard").agg(F.sum("cnt").alias("n")).collect()
-        }
-        acct = totals == {s: r.n for s, r in final.items()} and set(
-            totals
-        ) == set(final)
-        budget = all(r.err <= totals[s] / (k + 1) for s, r in final.items())
-
-        counter_rows = [
-            (s, t, int(c))
-            for s, r in final.items()
-            for t, c in zip(r.items, r.counts)
-        ]
-        err_rows = [(s, r.err) for s, r in final.items()]
-        cdf = F.broadcast(
-            spark.createDataFrame(
-                counter_rows or [(0, "", 0)], "shard int, item string, est long"
-            )
+    )
+    cdf = F.broadcast(counters)
+    bounds = (
+        exact.join(F.broadcast(shards_df.select("shard", "err")), "shard")
+        .join(
+            cdf,
+            (exact["shard"] == cdf["shard"]) & (exact["tok"] == cdf["item"]),
+            "left",
         )
-        edf = F.broadcast(
-            spark.createDataFrame(err_rows, "shard int, err long")
+        .agg(
+            F.sum(
+                ((F.col("cnt") > F.col("err")) & F.col("item").isNull()).cast(
+                    "long"
+                )
+            ).alias("missed"),
+            F.sum(
+                (
+                    F.col("item").isNotNull()
+                    & (
+                        (F.col("est") > F.col("cnt"))
+                        | (F.col("cnt") - F.col("est") > F.col("err"))
+                    )
+                ).cast("long")
+            ).alias("viol"),
         )
-        j = (
-            exact.join(edf, "shard")
-            .join(
-                cdf,
-                (exact["shard"] == cdf["shard"]) & (exact["tok"] == cdf["item"]),
-                "left",
-            )
-            .agg(
-                F.sum(
-                    (
-                        (F.col("cnt") > F.col("err")) & F.col("item").isNull()
-                    ).cast("long")
-                ).alias("missed"),
-                F.sum(
-                    (
-                        F.col("item").isNotNull()
-                        & (
-                            (F.col("est") > F.col("cnt"))
-                            | (F.col("cnt") - F.col("est") > F.col("err"))
-                        )
-                    ).cast("long")
-                ).alias("viol"),
-            )
-            .first()
+    )
+    return budget.crossJoin(bounds).select(
+        law(
+            F.lit(multi_batch)
+            & F.col("budget")
+            & (F.col("missed") == 0)
+            & (F.col("viol") == 0)
         )
-        exact.unpersist()
-        return bool(
-            multi_batch and acct and budget and j["missed"] == 0 and j["viol"] == 0
-        )
-
-    ok = memo(spark, ("stream_mg_laws", sf), _laws, label="stream_mg_laws")
-    from . import ok_flag
-
-    return ok_flag(spark, ok)
+    )

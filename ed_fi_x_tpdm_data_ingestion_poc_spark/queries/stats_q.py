@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import query
+from . import law, query
 
 # ---------------------------------------------------------------------------
 # q165 — exact Mann-Whitney AUC from grouped counts (no global row sort)
@@ -710,26 +710,13 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("c1").over(tot).alias("n1"),
         F.sum("c2").over(tot).alias("n2"),
     )
-    row = (
-        w.groupBy("n1", "n2")
-        .agg(
-            F.max(
-                F.abs(
-                    F.col("cum1").cast("decimal(38,0)") * F.col("n2")
-                    - F.col("cum2").cast("decimal(38,0)") * F.col("n1")
-                )
-            ).alias("dnum")
-        )
-        .first()
-    )
-    n1, n2 = int(row["n1"]), int(row["n2"])
-    d_exact = float(int(row["dnum"]) / (1.0 * n1 * n2))
-    # HALF_UP like F.round / DuckDB ROUND (Python round is half-even —
-    # a .5 tie at the 7th decimal is reachable for rationals over n1*n2)
-    from decimal import ROUND_HALF_UP, Decimal
-
-    d_exact_r = float(
-        Decimal(repr(d_exact)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+    exact = w.groupBy("n1", "n2").agg(
+        F.max(
+            F.abs(
+                F.col("cum1").cast("decimal(38,0)") * F.col("n2")
+                - F.col("cum2").cast("decimal(38,0)") * F.col("n1")
+            )
+        ).alias("dnum")
     )
 
     # sketch estimate: evaluate both summaries' LOWER rank bounds at the
@@ -761,16 +748,24 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
     bound = (sa["slack"] + maxw_a) / sa["n"] + (sb["slack"] + maxw_b) / sb[
         "n"
     ]
-    ok = (
-        abs(d_sketch - d_exact) <= bound
-        and sum(wgt for _, wgt in sa["points"]) == sa["n"] == n1
-        and sum(wgt for _, wgt in sb["points"]) == sb["n"] == n2
+    accounting = (
+        sum(wgt for _, wgt in sa["points"]) == sa["n"]
+        and sum(wgt for _, wgt in sb["points"]) == sb["n"]
     )
-    return spark.range(1).select(
-        F.lit(d_exact_r).alias("d_exact"),
-        F.lit(n1).cast("bigint").alias("n1"),
-        F.lit(n2).cast("bigint").alias("n2"),
-        F.lit(1 if ok else 0).cast("int").alias("ok"),
+    n1, n2 = F.col("n1"), F.col("n2")
+    d_exact = F.col("dnum").cast("double") / (n1.cast("double") * n2)
+    # F.round is HALF_UP like DuckDB ROUND (Python round is half-even —
+    # a .5 tie at the 7th decimal is reachable for rationals over n1*n2)
+    return exact.select(
+        F.round(d_exact, 6).alias("d_exact"),
+        n1.cast("bigint").alias("n1"),
+        n2.cast("bigint").alias("n2"),
+        law(
+            (F.abs(F.lit(d_sketch) - d_exact) <= bound)
+            & F.lit(accounting)
+            & (n1 == sa["n"])
+            & (n2 == sb["n"])
+        ),
     )
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import ok_flag, query
+from . import law, memo, query
 
 
 def _events_stream(
@@ -151,44 +151,49 @@ def q47(spark: SparkSession, sf: str) -> DataFrame:
     from ..streaming.replay import events_replay_dir
     from ..tables import table
 
-    staging = events_replay_dir(spark, sf, layout="late")
-    live = tempfile.mkdtemp(prefix="q47-live-")
-    ckpt = tempfile.mkdtemp(prefix="q47-ckpt-")
-    out = tempfile.mkdtemp(prefix="q47-out-")
-    dropped = 0
+    def _stream() -> tuple[DataFrame, int]:
+        staging = events_replay_dir(spark, sf, layout="late")
+        live = tempfile.mkdtemp(prefix="q47-live-")
+        ckpt = tempfile.mkdtemp(prefix="q47-ckpt-")
+        out = tempfile.mkdtemp(prefix="q47-out-")
+        dropped = 0
 
-    for fname in sorted(os.listdir(staging)):
-        shutil.copy(os.path.join(staging, fname), os.path.join(live, fname))
-        ev = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string"
-        ).parquet(live)
-        agg = (
-            ev.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "5 minutes"), "event_type")
-            .count()
-            .select(
-                F.unix_timestamp("window.start").alias("w_start"),
-                "event_type",
-                F.col("count").alias("n"),
+        for fname in sorted(os.listdir(staging)):
+            shutil.copy(os.path.join(staging, fname), os.path.join(live, fname))
+            ev = spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, event_type string,"
+                " value double, props string"
+            ).parquet(live)
+            agg = (
+                ev.withWatermark("ts", "10 minutes")
+                .groupBy(F.window("ts", "5 minutes"), "event_type")
+                .count()
+                .select(
+                    F.unix_timestamp("window.start").alias("w_start"),
+                    "event_type",
+                    F.col("count").alias("n"),
+                )
             )
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dropped += sum(
-            p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            if p["stateOperators"]
-        )
+            q = (
+                agg.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            dropped += sum(
+                p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
+                for p in q.recentProgress
+                if p["stateOperators"]
+            )
+        res = spark.read.parquet(out).select("w_start", "event_type", "n")
+        return res, dropped
 
-    res = spark.read.parquet(out).select("w_start", "event_type", "n")
+    res, dropped = memo(
+        spark, ("watermark_stream", sf), _stream, label="watermark_stream"
+    )
     ebatch = table(spark, sf, "events")
     earliest = ebatch.orderBy("ts", "event_id").limit(1)
     expected = (
@@ -199,9 +204,11 @@ def q47(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    delta = res.exceptAll(expected).unionAll(expected.exceptAll(res))
-    ok = 1 if dropped == 1 and delta.limit(1).count() == 0 else 0
-    return ok_flag(spark, bool(ok))
+    return (
+        res.exceptAll(expected).unionAll(expected.exceptAll(res))
+        .agg(F.count(F.lit(1)).alias("delta"))
+        .select(law(F.lit(dropped == 1) & (F.col("delta") == 0)))
+    )
 
 
 @query(
@@ -734,14 +741,17 @@ def q162(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.quantiles import batch_points, summary_rank_bounds
+    from ..operators.quantiles import (
+        batch_points,
+        summary_quantile,
+        summary_rank_bounds,
+    )
     from ..streaming.replay import run_to_memory
     from ..tables import table
-    from . import memo
 
     eps = _SQ_EPS
 
-    def _laws() -> bool:
+    def _stream() -> tuple[dict, bool]:
         ev = _events_stream(spark, sf, layout="thirds", shuffle_n=4).select(
             "event_type", "value"
         )
@@ -793,7 +803,6 @@ def q162(spark: SparkSession, sf: str) -> DataFrame:
             if r.event_type not in final or r.b > final[r.event_type].b:
                 final[r.event_type] = r
         multi_batch = max(r.b for r in final.values()) > 1
-
         summaries = {
             t: {
                 "points": sorted(zip(r.pv, r.pw)),
@@ -802,46 +811,31 @@ def q162(spark: SparkSession, sf: str) -> DataFrame:
             }
             for t, r in final.items()
         }
-        # quartile answers per type -> one conditional-aggregate pass
-        # computes every true rank; driver holds types x quartiles rows
-        from ..operators.quantiles import summary_quantile
+        return summaries, multi_batch
 
-        probes = {
-            t: sorted({summary_quantile(s, p) for p in (0.25, 0.5, 0.75)})
-            for t, s in summaries.items()
-        }
-        e = table(spark, sf, "events")
-        counts = {
-            r["event_type"]: r["n"]
-            for r in e.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        # exact ranks: broadcast the (type, probe) table — types x
-        # quartiles rows — onto events and count value <= probe per
-        # pair; the corpus is scanned once, never collected
-        probe_rows = [(t, float(v)) for t, vs in probes.items() for v in vs]
-        pdf_probes = F.broadcast(
-            spark.createDataFrame(probe_rows, "event_type string, probe double")
-        )
-        ranks = {
-            (r["event_type"], r["probe"]): r["rk"]
-            for r in e.join(pdf_probes, "event_type")
-            .groupBy("event_type", "probe")
-            .agg(F.sum((F.col("value") <= F.col("probe")).cast("long")).alias("rk"))
-            .collect()
-        }
-        ok = set(counts) == set(summaries) and multi_batch
-        for t, s in summaries.items():
-            ok &= s["n"] == int(counts[t]) and s["slack"] > 0
-            for v in probes[t]:
-                true_rank = int(ranks[(t, v)])
-                lo, hi = summary_rank_bounds(s, v)
-                ok &= lo <= true_rank <= hi
-        return bool(ok)
-
-    ok = memo(spark, ("stream_quantile_laws", sf), _laws, label="stream_quantile_laws")
-    return ok_flag(spark, ok)
+    summaries, multi_batch = memo(
+        spark, ("stream_quantile_summaries", sf), _stream,
+        label="stream_quantile_summaries",
+    )
+    # every type's count and the true rank of each of its quartile
+    # answers in ONE conditional-aggregate pass over events
+    e = table(spark, sf, "events")
+    is_t = lambda t: F.col("event_type") == t  # noqa: E731
+    aggs = [F.count_distinct("event_type").alias("n_types")]
+    ok = F.lit(multi_batch) & (F.col("n_types") == len(summaries))
+    for i, (t, s) in enumerate(sorted(summaries.items())):
+        aggs.append(F.sum(is_t(t).cast("long")).alias(f"n{i}"))
+        ok = ok & (F.col(f"n{i}") == s["n"]) & F.lit(s["slack"] > 0)
+        for j, v in enumerate(
+            sorted({summary_quantile(s, p) for p in (0.25, 0.5, 0.75)})
+        ):
+            aggs.append(
+                F.sum((is_t(t) & (F.col("value") <= v)).cast("long")).alias(
+                    f"r{i}_{j}"
+                )
+            )
+            ok = ok & F.col(f"r{i}_{j}").between(*summary_rank_bounds(s, v))
+    return e.agg(*aggs).select(law(ok))
 
 
 # ---------------------------------------------------------------------------

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import memo, ok_flag, query
+from . import law, memo, query
 
 _CHUNK, _STRIDE = 64, 48
 _PACK_CAP, _PACK_SHARDS = 256, 16
@@ -527,7 +527,7 @@ def q111(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.size(F.split("text", " "))).alias("n_words"),
         F.sum(F.length(F.regexp_replace("text", " ", ""))).alias("n_chars"),
     )
-    agg = (
+    return (
         jvm.join(ref, "id", "full")
         .select(
             F.count(F.lit(1)).alias("n"),
@@ -541,13 +541,14 @@ def q111(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("n_bpe").alias("total_bpe"),
         )
         .crossJoin(stats)
-        .collect()[0]
-    )
-    return ok_flag(
-        spark,
-        agg["bad"] == 0
-        and agg["n"] > 0
-        and agg["n_words"] < agg["total_bpe"] < agg["n_chars"],
+        .select(
+            law(
+                (F.col("bad") == 0)
+                & (F.col("n") > 0)
+                & (F.col("n_words") < F.col("total_bpe"))
+                & (F.col("total_bpe") < F.col("n_chars"))
+            )
+        )
     )
 
 

@@ -27,7 +27,6 @@ count, and tasks beyond the slot count never ran at the same time anyway.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -126,8 +125,3 @@ def rest_update(
 
     cols = [id_col, json_col] + ([etag_col] if etag_col else [])
     return _send_all(docs.select(*cols), sink, "update", request)
-
-
-def serialize_json(value) -> str:
-    """Canonical JSON for request bodies (sorted keys, compact)."""
-    return json.dumps(value, sort_keys=True, separators=(",", ":"))

@@ -26,7 +26,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -108,9 +107,3 @@ def read_table(
             .option("numPartitions", str(num_partitions))
         )
     return reader.load()
-
-
-def scan_join_ids(detail: DataFrame, ids: DataFrame, key: str) -> DataFrame:
-    """The reference's per-id prepared-statement loop (R2) as one join:
-    ids are usually small -> broadcast, so the detail side never shuffles."""
-    return detail.join(F.broadcast(ids.select(key).distinct()), on=key, how="inner")

@@ -57,12 +57,6 @@ def _client(src: RestSource, token: str | None) -> Client:
     return Client(src.auth, src.timeout_sec, token)
 
 
-def fetch_page(src: RestSource, offset: int, token: str | None) -> list[dict]:
-    """One page with the reference's 401-refresh-retry pattern."""
-    client = Client(src.auth, src.timeout_sec, token)
-    return client.get_page(_endpoint(src), offset, src.page_size, src.extra_params)
-
-
 def _page_frame(rows: list[dict], names: list[str]):
     """pandas columns of `rows`, kept as python objects (no int -> float
     upcast around nulls) for Arrow to convert to the declared types."""

@@ -66,15 +66,3 @@ def _read_events(spark: SparkSession, path: str):
             "ts", F.timestamp_micros((F.col("ts") / F.lit(1000)).cast("long"))
         )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table and pin engine runtime conf on the session."""
-    tune(spark)
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views for spark.sql access."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -14,6 +14,24 @@ from tools.oracle_check import duck_result, frame_digest
 
 _SPECS = all_queries()
 
+# Builders that still launch Spark jobs while a warm plan is built. Each
+# is not a law query; the reason says what runs. Any other non-streaming
+# builder must build its plan with no job: a law computes `ok` in the
+# plan (see the queries package docstring), and heavy work is a memo()
+# artifact, which the first build made.
+BUILD_JOB_EXCEPTIONS = {
+    "qz70_dup_clusters": "label propagation tests convergence and checkpoints per round",
+    "qz154_balanced_shards": "global_ranks collects per-partition totals for its offsets",
+    "qz160_token_budget_select": "global_running_sums collects per-partition totals",
+    "qz200_pmi_collocations": "unigram and bigram totals are collected as constants",
+    "qz186_js_divergence": "the grand total is collected as a constant",
+    "qz188_type_weekday_mi": "the grand total is collected as a constant",
+    "qz101_nightly_rollup": "the median split doc_id is collected",
+    "qz129_dsir_resample": "the bigram-carrying document count is collected",
+    "qz205_token_coverage": "global_running_sums and the token total are collected",
+    "qz04_sink_roundtrip": "writes the JSON sink it reads back",
+}
+
 
 @pytest.mark.parametrize("name", sorted(_SPECS))
 def test_query_matches_oracle(name: str, spark, sf_dir: str) -> None:
@@ -23,6 +41,19 @@ def test_query_matches_oracle(name: str, spark, sf_dir: str) -> None:
     got = frame_digest(list(df.columns), rows)
     if spec.oracle is None:
         assert got[0] >= 0  # rows-only check (non-SQL-expressible op)
+    else:
+        want = duck_result(spec.oracle, sf_dir)
+        assert got == want, f"{name}: spark {got} != duckdb {want}"
+    if "streaming" in spec.tags or name in BUILD_JOB_EXCEPTIONS:
         return
-    want = duck_result(spec.oracle, sf_dir)
-    assert got == want, f"{name}: spark {got} != duckdb {want}"
+    # warm rebuild: artifacts exist, so building the plan runs no job
+    sc = spark.sparkContext
+    group = f"build:{name}"
+    sc.setJobGroup(group, group)
+    try:
+        spec.build(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert not jobs, f"{name}: building the plan ran {len(jobs)} Spark jobs"

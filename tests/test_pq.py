@@ -131,3 +131,43 @@ def test_pq_incremental_encode_equals_full(spark, emb):
     }
     full = {r.id: list(r.codes) for r in pq_encode(emb, books).collect()}
     assert merged == full
+
+
+_PAIR_DDL = "ida long, idb long"
+
+
+def test_recall_at_k_pairs(spark):
+    """recall_at_k is one plan over the given key columns: 9 of 10 exact
+    (ida, idb) pairs found gives 0.9, and extra or duplicated approximate
+    pairs add nothing."""
+    exact = spark.createDataFrame([(i, i + 1) for i in range(10)], _PAIR_DDL)
+    approx = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)] + [(0, 1), (50, 60)], _PAIR_DDL
+    )
+    r = recall_at_k(approx, exact, ("ida", "idb")).collect()
+    assert len(r) == 1 and r[0]["recall"] == pytest.approx(0.9)
+
+
+def test_recall_at_k_empty_exact_side_is_one(spark):
+    exact = spark.createDataFrame([], _PAIR_DDL)
+    approx = spark.createDataFrame([(1, 2)], _PAIR_DDL)
+    assert recall_at_k(approx, exact, ("ida", "idb")).first()["recall"] == 1.0
+
+
+def test_recall_law_tail_fails_below_threshold(spark):
+    """The law tail the ANN queries end in yields ok=0 when recall falls
+    below its 0.9 threshold — the failure the oracle's constant ok=1
+    cannot catch, since the plan itself must compute it."""
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.queries import law
+
+    exact = spark.createDataFrame([(i, i + 1) for i in range(10)], _PAIR_DDL)
+    approx = spark.createDataFrame([(i, i + 1) for i in range(8)], _PAIR_DDL)
+    tail = recall_at_k(approx, exact, ("ida", "idb")).select(
+        law(F.col("recall") >= 0.9)
+    )
+    assert tail.columns == ["ok"]
+    assert tail.collect()[0]["ok"] == 0
+    full = recall_at_k(exact, exact, ("ida", "idb")).select(
+        law(F.col("recall") >= 0.9)
+    )
+    assert full.collect()[0]["ok"] == 1
