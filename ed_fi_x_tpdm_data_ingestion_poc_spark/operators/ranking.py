@@ -4,8 +4,8 @@ The naive global rank — ``row_number().over(Window.orderBy(...))`` — is
 the canonical 100 TB scale-killer: an empty ``partitionBy`` funnels the
 ENTIRE dataset through one task (Spark even warns). The exact shape that
 survives scale is the one ``ORDER BY`` itself uses (range exchange +
-local sort), extended with a driver-side prefix sum over per-partition
-counts:
+local sort), extended with a prefix sum over per-partition totals, all
+in ONE plan:
 
 1. ``repartitionByRange(P, keys)`` + ``sortWithinPartitions(keys)`` —
    one range shuffle, each partition holds a contiguous, sorted key
@@ -13,12 +13,16 @@ counts:
 2. one ``mapInPandas`` pass numbers rows 1..n_p WITHIN each partition
    (a running counter across that partition's Arrow batches — no second
    shuffle, no state beyond one long) and tags the partition id;
-3. per-partition counts (P rows) come back to the driver, a prefix sum
-   turns them into offsets, and a broadcast P-row join makes
-   ``rank = offset + local_rank``.
+3. the per-partition totals of that same pass (P rows) collapse to one
+   row, an array ``aggregate`` turns them into offsets, and a broadcast
+   P-row join makes ``rank = offset + local_rank``.
 
-The driver never holds more than P longs; no task ever sees more than
-its own range. Ties are broken by the caller-supplied key list, so pass
+Both sides of that join read the same range exchange, so a partition id
+names the same key range on both: the range sampler is seeded per RDD,
+and offsets taken from a second execution (a driver collect) land on
+the wrong partitions once a partition outgrows the sample. Building
+the plan runs no Spark job; no task ever sees more than its own range
+(or P totals). Ties are broken by the caller-supplied key list, so pass
 a unique final key (e.g. the id) to make ranks a pure function of the
 data — partition BOUNDARIES from range sampling are not deterministic,
 but with a total order the assigned ranks are.
@@ -42,7 +46,6 @@ def global_running_sums(
     *,
     num_partitions: int = 64,
     sum_col: str = "run_total",
-    total_out: list | None = None,
 ) -> DataFrame:
     """Add ``sum_col`` = inclusive running sum of ``value`` (a bigint
     expression over ``df``'s columns) in the given total order, without
@@ -55,19 +58,10 @@ def global_running_sums(
     ``order`` must define a TOTAL order (append a unique id as the last
     key) or equal-key rows get an arbitrary-but-valid prefix order.
 
-    ``total_out``: pass a list and the GRAND total of ``value`` (an
-    exact Python int, the sum of the per-partition totals this
-    operator already collects for the offset prefix) is appended to
-    it. Budget-capped selection needs exactly this scalar; deriving it
-    here saves the caller a full extra aggregation pass over ``df``
-    (round 17, guide §1.2 "don't compute things you throw away" —
-    the totals were on the driver all along).
-
     Plan: range exchange + local sort; one Arrow pass cumsums each
-    partition (a running carry across that partition's batches); the
-    per-partition totals (P rows, from a count-side aggregation that
-    REUSES the same shuffle files) prefix-sum on the driver into
-    offsets a broadcast P-row join adds back.
+    partition (a running carry across that partition's batches); that
+    pass's per-partition totals (P rows) fold into offsets in one row,
+    and a broadcast P-row join adds them back.
     """
     if not order:
         raise ValueError("global_running_sums needs at least one order column")
@@ -102,26 +96,30 @@ def global_running_sums(
         ]
     )
     summed = ranged.mapInPandas(cumsum, schema)
-    # the P-row total side reads the SAME range exchange (identical
-    # lineage -> Spark reuses the shuffle files, no second sort of df)
-    # and skips the Arrow pass entirely; spark_partition_id() in this
-    # post-shuffle stage equals TaskContext.partitionId() in `cumsum`
-    totals = sorted(
-        ranged.select(F.spark_partition_id().alias("__pid"), "__v")
-        .groupBy("__pid")
-        .agg(F.sum("__v").alias("__t"))
-        .collect(),
-        key=lambda r: r["__pid"],
-    )
-    offsets, acc = [], 0
-    for r in totals:
-        offsets.append((r["__pid"], acc))
-        acc += r["__t"]
-    if total_out is not None:
-        total_out.append(acc)
-    spark = df.sparkSession
+    # the totals come from this pass's own output, so both join sides
+    # are the same subtree over the same range exchange (Spark reuses
+    # it); the mapInPandas also keeps column pruning from changing the
+    # exchange's input on the total side. Offset of partition p = sum
+    # of the totals of the partitions before it, over one P-long array.
     off = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+        summed.groupBy("__pid")
+        .agg(F.sum("__v").alias("__t"))
+        .agg(F.collect_list(F.struct("__pid", "__t")).alias("p"))
+        .select(
+            F.inline(
+                F.transform(
+                    "p",
+                    lambda x: F.struct(
+                        x["__pid"].alias("__pid"),
+                        F.aggregate(
+                            F.filter("p", lambda y: y["__pid"] < x["__pid"]),
+                            F.lit(0).cast("long"),
+                            lambda acc, y: acc + y["__t"],
+                        ).alias("__off"),
+                    ),
+                )
+            )
+        )
     )
     return (
         summed.join(off, "__pid")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import query
+from . import memo, query
 
 
 # ---------------------------------------------------------------------------
@@ -476,7 +476,7 @@ def q133(spark: SparkSession, sf: str) -> DataFrame:
         summary_quantile,
         summary_rank_bounds,
     )
-    from . import law, memo
+    from . import law
 
     li = table(spark, sf, "lineitem")
     # laws verify the CONSTRUCTION, so they hold on any row set; a
@@ -614,7 +614,6 @@ def q138(spark: SparkSession, sf: str) -> DataFrame:
     recomputes the identical threshold the brute way (ROW_NUMBER), so
     the approximation provably does not leak into the answer."""
     from ..operators.quantiles import exact_quantiles_via_summary
-    from . import memo
 
     e = table(spark, sf, "events")
     thr = memo(
@@ -672,7 +671,6 @@ def q137(spark: SparkSession, sf: str) -> DataFrame:
     bloom_params for the expected key count or swap in the threshold
     form (o_totalprice pushes to the orders scan either way)."""
     from ..operators.sketches import bloom_might_contain, build_bloom
-    from . import memo
 
     li = table(spark, sf, "lineitem")
     o = table(spark, sf, "orders").where(
@@ -823,7 +821,6 @@ def q142(spark: SparkSession, sf: str) -> DataFrame:
     cross-engine float drift cannot compound); finals to 9. A fixed
     iteration count keeps the whole thing one declarative plan — the
     convergence-loop form is kmeans_fit's driver-loop pattern."""
-    from .llm import _artifact
 
     def build_edges():
         from . import built
@@ -847,7 +844,7 @@ def q142(spark: SparkSession, sf: str) -> DataFrame:
         # real tasks, not a hundred empty ones
         return built(e.coalesce(8).persist())
 
-    e = _artifact(spark, sf, "pr_edges", build_edges)
+    e = memo(spark, ("pr_edges", sf), build_edges, label="pr_edges")
 
     def build_deg():
         from . import built
@@ -859,8 +856,7 @@ def q142(spark: SparkSession, sf: str) -> DataFrame:
             .persist()
         )
 
-    deg = _artifact(spark, sf, "pr_deg", build_deg)
-    from . import memo
+    deg = memo(spark, ("pr_deg", sf), build_deg, label="pr_deg")
 
     n = memo(spark, ("pr_n", sf), deg.count, label="pr_n")
     # rank/degree tables are NODE-sized (n rows, known exactly): while
@@ -921,7 +917,6 @@ def user_seq(spark: SparkSession, sf: str) -> DataFrame:
     suite re-asks the family per snapshot — and at 100 TB it is 7
     corpus shuffles per snapshot -> 1."""
     from . import built
-    from .llm import _artifact
 
     def _build() -> DataFrame:
         from pyspark.sql import Window
@@ -947,7 +942,7 @@ def user_seq(spark: SparkSession, sf: str) -> DataFrame:
             ).persist()
         )
 
-    return _artifact(spark, sf, "user_seq", _build)
+    return memo(spark, ("user_seq", sf), _build, label="user_seq")
 
 
 def daily_type_counts(spark: SparkSession, sf: str) -> DataFrame:
@@ -957,7 +952,6 @@ def daily_type_counts(spark: SparkSession, sf: str) -> DataFrame:
     the same types x days collapse, so it is ONE corpus scan per
     session, corpus-size independent after that."""
     from . import built
-    from .llm import _artifact
 
     def _daily() -> DataFrame:
         e = table(spark, sf, "events")
@@ -971,7 +965,7 @@ def daily_type_counts(spark: SparkSession, sf: str) -> DataFrame:
             .persist()
         )
 
-    return _artifact(spark, sf, "daily_type_counts", _daily)
+    return memo(spark, ("daily_type_counts", sf), _daily, label="daily_type_counts")
 
 
 @query(
@@ -1070,7 +1064,6 @@ def q144(spark: SparkSession, sf: str) -> DataFrame:
     order mirrors the oracle exactly — IEEE doubles agree bit-for-bit,
     ROUND(6) absorbs nothing but summation noise."""
     from ..operators.scoring import bigram_counts
-    from . import memo
 
     d = table(spark, sf, "documents")
     c = bigram_counts(d).where(F.col("c12") >= _PMI_MIN_C12)
@@ -1230,7 +1223,6 @@ def q146(spark: SparkSession, sf: str) -> DataFrame:
     refine contract is column-agnostic."""
     from ..operators.quantiles import exact_quantiles_via_summary
     from ..operators.scoring import hashed_linear_score
-    from . import memo
     from .scoring_q import _BIAS, _W
 
     d = table(spark, sf, "documents")
@@ -1425,7 +1417,7 @@ def q140(spark: SparkSession, sf: str) -> DataFrame:
 
     from . import broadcast_if_small
     from ..operators.scoring import hashed_linear_score
-    from .llm import _artifact, _exact_pairs
+    from .llm import _exact_pairs
     from .scoring_q import _BIAS, _W
 
     def build_clusters():
@@ -1438,7 +1430,11 @@ def q140(spark: SparkSession, sf: str) -> DataFrame:
             .persist()
         )
 
-    clusters = _artifact(spark, sf, "dup_cluster_map", build_clusters)
+    clusters = memo(
+        spark, ("dup_cluster_map", sf),
+        build_clusters,
+        label="dup_cluster_map",
+    )
     d = table(spark, sf, "documents")
     scored = d.select(
         "doc_id",
@@ -2270,11 +2266,12 @@ def q203(spark: SparkSession, sf: str) -> DataFrame:
     # persist + distinct-count re-ran two extra jobs on EVERY warm
     # evaluation and pinned a fresh cache entry per call; memoized,
     # the warm query is the single co-occur join pipeline
-    from . import built, memo
-    from .llm import _artifact
+    from . import built
 
-    st = _artifact(
-        spark, sf, "session_types", lambda: built(s.distinct().persist())
+    st = memo(
+        spark, ("session_types", sf),
+        lambda: built(s.distinct().persist()),
+        label="session_types",
     )
     n_sessions = memo(
         spark,

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..tables import table
-from . import broadcast_if_small, query
+from . import broadcast_if_small, memo, query
 
 # ---------------------------------------------------------------- scans ----
 
@@ -2463,7 +2463,7 @@ def q241(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: one map-side-combined groupBy collapses the fact
     table to parts-sized rows; rank and running revenue come from TWO
     passes of `global_running_sums`' distributed prefix sum (range
-    exchange + Arrow cumsum + P-row driver offsets) — at 100 TB the
+    exchange + Arrow cumsum + P-row offset join) — at 100 TB the
     part table is SF x 200k rows (~2e10), far past the
     single-partition-window cliff the plain OVER () form would hit.
     The ranked table is a materialize-once artifact (the q205
@@ -2479,7 +2479,6 @@ def q241(spark: SparkSession, sf: str) -> DataFrame:
     dominates and the 10x part-key growth rides the range exchange
     without a knee."""
     from ..operators.ranking import global_running_sums
-    from .llm import _artifact
 
     def _ranked() -> DataFrame:
         from . import built
@@ -2508,7 +2507,7 @@ def q241(spark: SparkSession, sf: str) -> DataFrame:
                                  sum_col="rk", num_partitions=npart)
         return built(rk.persist())
 
-    rk = _artifact(spark, sf, "pareto_ranked", _ranked)
+    rk = memo(spark, ("pareto_ranked", sf), _ranked, label="pareto_ranked")
     st = rk.agg(
         F.max("rk").alias("n"), F.max("cum").alias("tot")
     )

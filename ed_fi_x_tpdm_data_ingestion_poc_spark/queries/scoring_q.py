@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators.scoring import fixture_weights, md5_hash32_sql
 from ..tables import table
-from . import broadcast_if_small, query
+from . import broadcast_if_small, memo, query
 from .curation_q import _UNIFORM_SQL, _uniform01
 
 _W, _BIAS = fixture_weights(64)
@@ -167,7 +167,7 @@ def q120(spark: SparkSession, sf: str) -> DataFrame:
     engine-portable expression, hash-checked against DuckDB recomputing
     the clusters via recursive CTE."""
     from ..operators.sampling import mul_hash32
-    from .llm import _artifact, _exact_pairs
+    from .llm import _exact_pairs
 
     def build_clusters():
         from ..operators.graph import dup_clusters
@@ -178,7 +178,11 @@ def q120(spark: SparkSession, sf: str) -> DataFrame:
             _exact_pairs(spark, sf).select("ida", "idb")
         ).select("node", "cluster").persist())
 
-    clusters = _artifact(spark, sf, "dup_cluster_map", build_clusters)
+    clusters = memo(
+        spark, ("dup_cluster_map", sf),
+        build_clusters,
+        label="dup_cluster_map",
+    )
     d = table(spark, sf, "documents").select("doc_id")
     # same size-gated broadcast as q93: the cluster map is usually tiny
     # but can run corpus-proportional on heavy-dup web corpora
@@ -385,7 +389,12 @@ def q129(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-    n = d.where(F.size(toks) >= 2).count()  # docs that carry bigrams
+    n = memo(  # docs that carry bigrams
+        spark,
+        ("dsir_bigram_docs", sf),
+        lambda: d.where(F.size(toks) >= 2).count(),
+        label="dsir_bigram_docs",
+    )
     return s.orderBy(F.col("logw").desc(), "doc_id").limit(
         math.ceil(0.25 * n)
     )

@@ -106,14 +106,14 @@ def q90(spark: SparkSession, sf: str) -> DataFrame:
     5x the design fpp (slack for the small-sample variance at test SF)."""
     from ..operators.dedup import shingle_index
     from ..operators.sketches import bloom_might_contain, build_bloom
-    from .llm import _artifact
 
     d = table(spark, sf, "documents")
-    full_idx = _artifact(
-        spark, sf, "shingle_index_k5",
+    full_idx = memo(
+        spark, ("shingle_index_k5", sf),
         lambda: shingle_index(
             spread_scan(d.select("doc_id", "text")), k=5
         ).persist(),
+        label="shingle_index_k5",
     )
     ev_sh = full_idx.filter(F.col("id") < 20).select("s").distinct()
     corp_sh = full_idx.filter(F.col("id") >= 20)

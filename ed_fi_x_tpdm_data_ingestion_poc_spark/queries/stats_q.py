@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import law, query
+from . import law, memo, query
 
 # ---------------------------------------------------------------------------
 # q165 — exact Mann-Whitney AUC from grouped counts (no global row sort)
@@ -71,7 +71,6 @@ def _kw_ranked(spark: SparkSession, sf: str):
     aggregate over the same join, by q165 (AUC) and q180 (z test)."""
     from ..operators.ranking import global_running_sums
     from . import built
-    from .llm import _artifact
 
     def _build():
         e = table(spark, sf, "events").select(
@@ -90,7 +89,7 @@ def _kw_ranked(spark: SparkSession, sf: str):
         )
         return (built(gv.persist()), built(r.persist()))
 
-    return _artifact(spark, sf, "kw_ranked", _build)
+    return memo(spark, ("kw_ranked", sf), _build, label="kw_ranked")
 
 
 @query(
@@ -133,9 +132,9 @@ def q165(spark: SparkSession, sf: str) -> DataFrame:
     (map-side combine); the one order-dependent step — the running total
     of t over values ascending — is `global_running_sums`' distributed
     prefix sum (range exchange + per-partition Arrow cumsum + P-row
-    driver offsets), NEVER a single-partition window: score columns are
-    continuous, so distinct-value cardinality is corpus-sized in the
-    worst case. The final reduce is one row via `_mw_terms` (a
+    offset join, one plan), NEVER a single-partition window: score
+    columns are continuous, so distinct-value cardinality is
+    corpus-sized in the worst case. The final reduce is one row via `_mw_terms` (a
     conditional aggregate directly over the `_kw_ranked` artifact,
     shared with q180 — no intermediate table is persisted). Every
     integer product touching corpus-sized counts is operand-first
@@ -504,7 +503,6 @@ def q169(spark: SparkSession, sf: str) -> DataFrame:
 
     from ..operators.substring import token_ngrams
     from . import built
-    from .llm import _artifact
 
     d = table(spark, sf, "documents")
     toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
@@ -513,10 +511,8 @@ def q169(spark: SparkSession, sf: str) -> DataFrame:
     # regenerated per snapshot reuses the session's computed gates;
     # without them every warm call re-paid the gram stream twice
     # (broadcast_if_small-style recompute) at ~2.4 s
-    base = _artifact(
-        spark,
-        sf,
-        "ds_base",
+    base = memo(
+        spark, ("ds_base", sf),
         lambda: built(
             d.select(
                 "doc_id",
@@ -526,6 +522,7 @@ def q169(spark: SparkSession, sf: str) -> DataFrame:
                 F.md5("text").alias("h"),
             ).persist()
         ),
+        label="ds_base",
     )
 
     stats = base.groupBy("source").agg(
@@ -591,7 +588,7 @@ def q169(spark: SparkSession, sf: str) -> DataFrame:
             .persist()
         )
 
-    cont = _artifact(spark, sf, "ds_contam", _contam)
+    cont = memo(spark, ("ds_contam", sf), _contam, label="ds_contam")
 
     return (
         stats.join(med, "source")
@@ -670,7 +667,6 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: two map-only summary passes + the grouped exact pass;
     the driver-side estimate walks n_batches/eps kept points."""
     from ..operators.quantiles import quantile_summary
-    from .llm import _artifact
 
     ev = table(spark, sf, "events")
 
@@ -687,7 +683,7 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
         )
         return sa, sb
 
-    sa, sb = _artifact(spark, sf, "ks_summaries", _summaries)
+    sa, sb = memo(spark, ("ks_summaries", sf), _summaries, label="ks_summaries")
 
     # exact D on the same integer machinery as q166 (distributed)
     e = ev.where(F.col("event_type").isin(_SKS_A, _SKS_B)).select(
@@ -1321,14 +1317,13 @@ def _ks_pair_table(spark: SparkSession, sf: str):
     (Bonferroni decision), q185 (Benjamini-Hochberg FDR) and q196's law
     harness so the grid is built once per (session, sf)."""
     from . import built
-    from .llm import _artifact
 
     def build():
         docs = table(spark, sf, "documents").select("source", "n_chars")
         n_src = docs.select("source").distinct().count()
         return (built(_ks_grid_pairs(docs).persist()), n_src)
 
-    return _artifact(spark, sf, "ks_pairs", build)
+    return memo(spark, ("ks_pairs", sf), build, label="ks_pairs")
 
 
 # the measured all-pairs ceiling (BASELINE.md / tools/scale_probe.py
@@ -1351,7 +1346,6 @@ def _ks_source_summaries(spark: SparkSession, sf: str) -> dict[str, dict]:
     n/slack. Memoized artifact: the screening side of the q176 cutover
     and q196's law harness share it."""
     from ..operators.quantiles import quantile_summary_by
-    from .llm import _artifact
 
     def build():
         return quantile_summary_by(
@@ -1361,7 +1355,7 @@ def _ks_source_summaries(spark: SparkSession, sf: str) -> dict[str, dict]:
             eps=_KS_SCREEN_EPS,
         )
 
-    return _artifact(spark, sf, "ks_src_summaries", build)
+    return memo(spark, ("ks_src_summaries", sf), build, label="ks_src_summaries")
 
 
 def _ks_sketch_screen(summaries: dict[str, dict], crit_of, margin=None):
@@ -1660,17 +1654,15 @@ def ks_matrix_decisions(
         # invocation would pin one orphaned s^2-row cache entry per
         # call for the life of the session (ADVICE r13).
         from . import built
-        from .llm import _artifact
 
-        scr = _artifact(
-            spark,
-            sf,
-            f"ks_screen_dist_a{alpha}",
+        scr = memo(
+            spark, (f"ks_screen_dist_a{alpha}", sf),
             lambda: built(
                 _ks_sketch_screen_distributed(
                     spark, summaries, c_bonf
                 ).persist()
             ),
+            label=f"ks_screen_dist_a{alpha}",
         )
         out = scr.where(F.col("decision") >= 0).select(
             "source_a",
@@ -1874,7 +1866,6 @@ def q196(spark: SparkSession, sf: str) -> DataFrame:
     growth is the cutover=0 force now certifying BOTH the driver and
     distributed screens against the same exact grid; the spend is the
     certification itself, not overhead."""
-    from .llm import _artifact
 
     def _cert() -> list:
         dec = ks_matrix_decisions(spark, sf, cutover=0)
@@ -1914,7 +1905,7 @@ def q196(spark: SparkSession, sf: str) -> DataFrame:
             out.append((key[0], key[1], rows.get(key, -1), ok))
         return out
 
-    out = _artifact(spark, sf, "ks_screen_cert", _cert)
+    out = memo(spark, ("ks_screen_cert", sf), _cert, label="ks_screen_cert")
     return spark.createDataFrame(
         out, "source_a string, source_b string, reject_bonf int, ok int"
     )
@@ -1973,8 +1964,6 @@ def q207(spark: SparkSession, sf: str) -> DataFrame:
     bench re-runs each query ~8x)."""
     import math
 
-    from .llm import _artifact
-
     def _cert() -> list:
         dec = ks_matrix_decisions(spark, sf, cutover=0, driver_ceiling=0)
         rows = {
@@ -2020,7 +2009,7 @@ def q207(spark: SparkSession, sf: str) -> DataFrame:
             out.append((key[0], key[1], rows.get(key, -1), ok))
         return out
 
-    out = _artifact(spark, sf, "ks_screen_dist_cert", _cert)
+    out = memo(spark, ("ks_screen_dist_cert", sf), _cert, label="ks_screen_dist_cert")
     return spark.createDataFrame(
         out, "source_a string, source_b string, reject_bonf int, ok int"
     )
@@ -2087,7 +2076,6 @@ def q177(spark: SparkSession, sf: str) -> DataFrame:
     (source, bucket) aggregate; the PSI itself runs on the
     sources x 10 table with the reference row broadcast."""
     from ..operators.quantiles import exact_quantiles_via_summary
-    from . import memo
 
     d = table(spark, sf, "documents")
 
@@ -2768,20 +2756,22 @@ def q186(spark: SparkSession, sf: str) -> DataFrame:
     )
     lens = g.groupBy("n_chars").agg(F.sum("k").alias("tot"))
     srcs = g.groupBy("source").agg(F.sum("k").alias("ns"))
-    n_tot = g.agg(F.sum("k")).first()[0]
+    n = g.agg(F.sum("k").cast("double").alias("n"))
     cell = (
-        srcs.crossJoin(F.broadcast(lens))
+        srcs.crossJoin(F.broadcast(n))
+        .crossJoin(F.broadcast(lens))
         .join(g, ["source", "n_chars"], "left")
         .select(
             "source",
             "ns",
+            "n",
             "tot",
             F.coalesce(F.col("k"), F.lit(0)).alias("k"),
         )
     )
     pk = F.col("k").cast("double") / F.col("ns")
     qk = (F.col("tot") - F.col("k")).cast("double") / (
-        F.lit(float(n_tot)) - F.col("ns")
+        F.col("n") - F.col("ns")
     )
     mk = 0.5 * (pk + qk)
     term = F.when(F.col("k") > 0, 0.5 * pk * F.log(pk / mk)).otherwise(
@@ -2937,16 +2927,17 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
     )
     rt = wd.groupBy("event_type").agg(F.sum("cnt").alias("r"))
     ct = wd.groupBy("weekday").agg(F.sum("cnt").alias("cl"))
-    n_tot = wd.agg(F.sum("cnt")).first()[0]
+    n = wd.agg(F.sum("cnt").cast("double").alias("n"))
     mi = (
         wd.join(rt, "event_type")
         .join(ct, "weekday")
+        .crossJoin(F.broadcast(n))
         .agg(
             F.sum(
-                (F.col("cnt").cast("double") / F.lit(float(n_tot)))
+                (F.col("cnt").cast("double") / F.col("n"))
                 * F.log(
                     F.col("cnt").cast("double")
-                    * F.lit(float(n_tot))
+                    * F.col("n")
                     / (F.col("r").cast("double") * F.col("cl"))
                 )
             ).alias("mi")
@@ -3009,7 +3000,6 @@ def q189(spark: SparkSession, sf: str) -> DataFrame:
         exact_quantiles_via_summary,
         quantile_summary_by,
     )
-    from . import memo
 
     e = table(spark, sf, "events")
 
@@ -3298,7 +3288,6 @@ def q200(spark: SparkSession, sf: str) -> DataFrame:
     occurrences — the q82 shape), the unigram side joined twice
     (broadcast: vocabulary-sized), TakeOrdered top-k."""
     from . import broadcast_if_small, built
-    from .llm import _artifact
 
     d = table(spark, sf, "documents")
     toks = F.split(F.col("text"), " ")
@@ -3324,18 +3313,20 @@ def q200(spark: SparkSession, sf: str) -> DataFrame:
         )
         return ug, bg
 
-    ug, bg = _artifact(spark, sf, "pmi_counts", _counts)
-    m = ug.agg(F.sum("c")).first()[0]
-    n = bg.agg(F.sum("c")).first()[0]
+    ug, bg = memo(spark, ("pmi_counts", sf), _counts, label="pmi_counts")
+    mn = ug.agg(F.sum("c").cast("double").alias("m")).crossJoin(
+        bg.agg(F.sum("c").cast("double").alias("n"))
+    )
     a = broadcast_if_small(ug.select(F.col("w").alias("w1"),
                                      F.col("c").alias("ca")))
     z = broadcast_if_small(ug.select(F.col("w").alias("w2"),
                                      F.col("c").alias("cb")))
-    ratio = (1.0 * F.col("c") * float(m) * float(m)) / (
-        (1.0 * float(n)) * F.col("ca") * F.col("cb")
+    ratio = (1.0 * F.col("c") * F.col("m") * F.col("m")) / (
+        F.col("n") * F.col("ca") * F.col("cb")
     )
     return (
         bg.where(F.col("c") >= _PMI_MIN_N)
+        .crossJoin(F.broadcast(mn))
         .join(a, "w1")
         .join(z, "w2")
         .select(
@@ -3394,12 +3385,12 @@ def q205(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: one grouped count with map-side combine; the ranked
     running sum is vocabulary-sized, NOT corpus-sized, and runs through
     `global_running_sums`' distributed prefix sum (range exchange +
-    Arrow cumsum + P-row offsets) rather than a single-partition
+    Arrow cumsum + P-row offset join) rather than a single-partition
     window — web-scale vocabularies (hundreds of millions of types
-    with typos/URLs) keep the rank step parallel. Output is
-    len(ks) rows."""
+    with typos/URLs) keep the rank step parallel. The total is the
+    ranked artifact's largest running sum (max cum), read through a
+    1-row broadcast cross join as q241 does. Output is len(ks) rows."""
     from ..operators.ranking import global_running_sums
-    from .llm import _artifact
 
     def _ranked():
         from . import built
@@ -3424,18 +3415,23 @@ def q205(spark: SparkSession, sf: str) -> DataFrame:
         )
         return built(rk.persist())
 
-    r = _artifact(spark, sf, "token_coverage_ranked", _ranked)
-    tot = r.agg(F.sum("c")).first()[0]
+    r = memo(
+        spark, ("token_coverage_ranked", sf),
+        _ranked,
+        label="token_coverage_ranked",
+    )
     ks = spark.createDataFrame([(k,) for k in _COV_KS], "k int")
+    tot = r.agg(F.max("cum").alias("tot"))
     return (
         r.join(F.broadcast(ks), F.col("rk") <= F.col("k"))
         .groupBy("k")
         .agg(F.max("cum").alias("covered"))
+        .crossJoin(F.broadcast(tot))
         .select(
             F.col("k").cast("int").alias("k"),
             F.col("covered").cast("bigint").alias("covered"),
-            F.lit(int(tot)).cast("bigint").alias("total"),
-            F.round(F.col("covered") * 1.0 / float(tot), 6).alias("share"),
+            F.col("tot").cast("bigint").alias("total"),
+            F.round(F.col("covered") * 1.0 / F.col("tot"), 6).alias("share"),
         )
         .orderBy("k")
     )

@@ -960,9 +960,7 @@ def q179(spark: SparkSession, sf: str) -> DataFrame:
                 final[r.event_type] = r
         return spark.createDataFrame(list(final.values()))
 
-    from .llm import _artifact
-
-    out = _artifact(spark, sf, "ph_stream", _fold)
+    out = memo(spark, ("ph_stream", sf), _fold, label="ph_stream")
     return out.select(
         "event_type",
         F.col("n").cast("bigint").alias("n"),

@@ -584,8 +584,8 @@ def q154(spark: SparkSession, sf: str) -> DataFrame:
     finishing together instead of one straggling on the fat tail.
 
     Scale shape: the rank comes from operators/ranking.py::global_ranks
-    — range exchange + per-partition Arrow numbering + a P-row driver
-    prefix sum — NOT a single-partition row_number window (the oracle's
+    — range exchange + per-partition Arrow numbering + a P-row offset
+    join, one plan — NOT a single-partition row_number window (the oracle's
     form, fine for DuckDB, is the exact plan a 100 TB Spark job must
     avoid). The shard map is then pure JVM arithmetic on the rank and
     the final aggregate is S rows with map-side combine. The corpus
@@ -667,15 +667,15 @@ def q160(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: the cut needs an exact GLOBAL prefix sum in quality
     order — the textbook case for operators/ranking.py::
     global_running_sums (range exchange + per-partition Arrow cumsum +
-    P-row driver prefix; the oracle's single-ordering window form is
-    exactly what a 100 TB job cannot run). The scalar budget rides a
-    one-row broadcast (BroadcastNestedLoopJoin by construction); the
-    final aggregate is |sources| rows with map-side combine. Quality
-    is the q155 integer micro-score, so ordering has no float ties."""
+    P-row offset join; the oracle's single-ordering window form is
+    exactly what a 100 TB job cannot run). The budget is 40% of the
+    largest running sum, which is the corpus token total (n_toks >= 0),
+    so the corpus is scored once; it rides a one-row broadcast
+    (BroadcastNestedLoopJoin by construction). The final aggregate is
+    |sources| rows with map-side combine. Quality is the q155 integer
+    micro-score, so ordering has no float ties."""
     from ..operators.ranking import global_running_sums
     from ..operators.text import quality_score
-
-    import math
 
     d = table(spark, sf, "documents")
     toks = F.split(F.col("text"), " ")
@@ -685,25 +685,20 @@ def q160(spark: SparkSession, sf: str) -> DataFrame:
         F.size(F.filter(toks, lambda t: t != "")).cast("long").alias("n_toks"),
         F.round(quality_score("text") * 1e6, 0).cast("long").alias("qi"),
     )
-    # Round 17 (guide §1.2): the budget scalar is 40% of the SAME token
-    # total the prefix-sum operator already collects per partition for
-    # its offsets — take it from there (exact long) instead of a
-    # separate full scoring-pass aggregate + broadcast attach. floor on
-    # an IEEE double multiply, identical to the previous in-plan
-    # floor(lit(0.4) * sum). Plan diff: the second corpus scan subtree
-    # and the BroadcastNestedLoopJoin disappear.
-    total: list = []
     r = global_running_sums(
         q,
         [F.col("qi").desc(), F.col("doc_id")],
         F.col("n_toks"),
         num_partitions=32,
         sum_col="run",
-        total_out=total,
     )
-    b = int(math.floor(_BUDGET_FRAC * total[0]))
+    # floor on an IEEE double multiply, as the oracle's FLOOR(0.4 * SUM)
+    budget = r.agg(
+        F.floor(F.lit(_BUDGET_FRAC) * F.max("run")).alias("b")
+    )
     return (
-        r.where(F.col("run") <= F.lit(b))
+        r.crossJoin(F.broadcast(budget))
+        .where(F.col("run") <= F.col("b"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_sel"),

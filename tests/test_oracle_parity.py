@@ -21,14 +21,6 @@ _SPECS = all_queries()
 # artifact, which the first build made.
 BUILD_JOB_EXCEPTIONS = {
     "qz70_dup_clusters": "label propagation tests convergence and checkpoints per round",
-    "qz154_balanced_shards": "global_ranks collects per-partition totals for its offsets",
-    "qz160_token_budget_select": "global_running_sums collects per-partition totals",
-    "qz200_pmi_collocations": "unigram and bigram totals are collected as constants",
-    "qz186_js_divergence": "the grand total is collected as a constant",
-    "qz188_type_weekday_mi": "the grand total is collected as a constant",
-    "qz101_nightly_rollup": "the median split doc_id is collected",
-    "qz129_dsir_resample": "the bigram-carrying document count is collected",
-    "qz205_token_coverage": "global_running_sums and the token total are collected",
     "qz04_sink_roundtrip": "writes the JSON sink it reads back",
 }
 

@@ -120,3 +120,41 @@ def test_global_running_sums_budget_prefix_is_contiguous(spark):
     kept = r.where(F.col("run") <= total // 2).collect()
     ids = sorted(x["id"] for x in kept)
     assert ids == list(range(len(ids)))  # a prefix in the order given
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_global_running_sums_input_partitions_outgrow_the_range_sample(
+    spark, aqe
+):
+    """200,000 rows in 4 input partitions: each holds far more rows than
+    the range sampler reads, so two executions of the range exchange
+    pick different bounds. The offsets must come from the same
+    execution as the per-partition sums, under either AQE setting."""
+    from pyspark.sql import Window
+
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.ranking import (
+        global_running_sums,
+    )
+
+    order = [F.col("size").desc(), F.col("id")]
+    df = spark.range(0, 200_000, 1, 4).withColumn(
+        "size", F.pmod(F.xxhash64("id"), F.lit(997))
+    )
+    ref = df.select(
+        "id",
+        F.sum("size")
+        .over(Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0))
+        .alias("want"),
+    )
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        got = global_running_sums(
+            df, order, F.col("size"), num_partitions=16, sum_col="run"
+        )
+        n, wrong = got.join(ref, "id").agg(
+            F.count(F.lit(1)), F.sum((F.col("run") != F.col("want")).cast("int"))
+        ).first()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert (n, wrong) == (200_000, 0)
