@@ -2,25 +2,33 @@
 
 A dedup pipeline doesn't end at pairs — transitive near-dups (a~b, b~c)
 must collapse into ONE cluster with one survivor. That's connected
-components on the pair graph.
+components on the pair graph, and connected_components is the one
+operator every caller uses. Two paths, chosen by a bounded size probe
+(queries.size_gate):
 
-Scale design: iterative min-label propagation expressed as DataFrame
-joins — each round every node adopts the smallest label among itself and
-its neighbors; rounds = graph diameter. Near-dup graphs are dense
-little cliques (diameter 2-3), so convergence is fast; for adversarial
-long-chain graphs the same loop structure accepts the large-star/
-small-star optimization (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) which converges in O(log n) rounds.
-Each round is one shuffle (join on node) + one aggregate (min per node);
-intermediates are persisted and the previous round unpersisted, so peak
-storage is 2 label tables. The driver loop only inspects a one-row
-convergence aggregate per round — no data is collected.
+* at most _UNION_FIND_EDGE_CAP edges (every near-dup graph the fixtures
+  produce): union-find in ONE Python task, as a plan — the edges are
+  grouped onto one key and solved by applyInPandas, so building the
+  result runs no Spark job and any diameter costs one pass;
+* above the cap: large-star/small-star contraction (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14), O(log n)
+  rounds of groupBy + join whatever the diameter, lineage truncated
+  per round (localCheckpoint), the driver reading one two-scalar
+  fingerprint aggregate per round — no edge is collected.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Largest edge set solved by the single-task union-find; it holds the
+# edges and one parent entry per node in one Python worker.
+_UNION_FIND_EDGE_CAP = 100_000
+# Star contraction needs O(log n) rounds, so a graph that reaches this
+# cap points at a bug, not at a big input.
+_STAR_MAX_ROUNDS = 32
 
 
 def connected_components(
@@ -28,91 +36,61 @@ def connected_components(
     *,
     a_col: str = "ida",
     b_col: str = "idb",
-    max_iter: int = 20,
-    algorithm: str = "label",
 ) -> DataFrame:
     """(node, cluster) for every node in the pair graph; cluster = the
     minimum node id reachable from the node (deterministic, engine-
     independent — the DuckDB oracle recomputes it with a recursive CTE).
 
-    pairs: undirected edges (each pair listed once, either orientation).
+    pairs: undirected edges (each pair listed once, either orientation,
+    duplicates and self-edges allowed; a node seen only in self-edges is
+    not in the graph)."""
+    from ..queries import size_gate
 
-    algorithm="label" (default): min-label propagation, rounds = diameter.
-    Right for near-dup graphs (dense cliques, diameter 2-3) — one
-    join+agg per round. Raises if max_iter rounds don't converge.
-
-    algorithm="star": alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log n) rounds regardless of diameter, two groupBy+join
-    shuffles per round. The dial for adversarial/long-chain graphs
-    (linked-page chains, citation paths) at corpus scale.
-    """
-    if algorithm == "star":
-        return _connected_components_star(
-            pairs, a_col=a_col, b_col=b_col, max_iter=max_iter
-        )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    # symmetrize once; self-edges are harmless but dropped for volume
-    e = pairs.select(
+    edges = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).filter(F.col("src") != F.col("dst"))
-    edges = e.unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    if size_gate(edges, _UNION_FIND_EDGE_CAP, gate="connected_components"):
+        return _union_find(edges)
+    return _star_contraction(edges)
 
-    # Lineage MUST be truncated each round (localCheckpoint), not merely
-    # persisted: persist caches partitions but the logical plan still
-    # nests one join+agg per round, and analysis/codegen over the
-    # compounding plan goes super-linear (measured: a 10-round chain took
-    # minutes and then failed). On a cluster with a checkpoint dir set,
-    # spark.sparkContext.setCheckpointDir + .checkpoint() is the
-    # fault-tolerant equivalent.
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
+
+def _union_find(edges: DataFrame) -> DataFrame:
+    """Union-find over every edge in one task: union by min id and path
+    compression, so each root IS its component's minimum id."""
+    id_type = edges.schema["src"].dataType
+    schema = T.StructType(
+        [T.StructField("node", id_type), T.StructField("cluster", id_type)]
     )
 
-    def _label_sum(df: DataFrame):
-        # decimal(38) sum: overflow-safe convergence fingerprint at any id
-        # range; labels are per-node non-increasing, so the total strictly
-        # decreases iff ANY node changed — one cheap aggregate replaces a
-        # join-based change probe
-        return df.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).first()[0]
+    def solve(pdf):
+        import pandas as pd
 
-    # round 17: the first round always changes labels on any non-empty
-    # edge set (some node adopts a smaller neighbor label) — and on an
-    # empty one the loop converges on the first fingerprint compare
-    # anyway — so the pre-loop fingerprint job is pure overhead; start
-    # from None and pay one extra (cheap, cached-input) round only in
-    # the already-degenerate empty case. One scheduler-floor job saved
-    # per evaluation of every clustering query.
-    prev_sum = None
-    for _ in range(max_iter):
-        # candidate labels: own label + every neighbor's label
-        neighbor_lbls = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(edges.src.alias("node"), "lbl")
+        parent = {}
+
+        def find(x):
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
+
+        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        nodes = list(parent)
+        return pd.DataFrame(
+            {"node": nodes, "cluster": [find(n) for n in nodes]}
         )
-        labels = (
-            labels.select("node", "lbl")
-            .unionAll(neighbor_lbls)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint()
-        )
-        cur_sum = _label_sum(labels)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    edges.unpersist()
-    return labels.select(F.col("node"), F.col("lbl").alias("cluster"))
+
+    return (
+        edges.withColumn("__g", F.lit(0))
+        .groupBy("__g")
+        .applyInPandas(solve, schema)
+    )
 
 
 def _edge_fingerprint(edges: DataFrame):
@@ -127,21 +105,12 @@ def _edge_fingerprint(edges: DataFrame):
     return (row["n"], row["h"])
 
 
-def _connected_components_star(
-    pairs: DataFrame,
-    *,
-    a_col: str,
-    b_col: str,
-    max_iter: int = 32,
-) -> DataFrame:
-    """Large-star/small-star alternation. Invariant carried between rounds:
-    `edges` is a set of (src, dst) with dst < src (every edge points from
-    the larger id to a smaller one). At the fixed point the edge set is a
-    union of stars — every non-root node points directly at its
-    component's minimum id."""
-    raw = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
+def _star_contraction(raw: DataFrame) -> DataFrame:
+    """Large-star/small-star alternation over (src, dst) edges without
+    self-edges. Invariant carried between rounds: `edges` is a set of
+    (src, dst) with dst < src (every edge points from the larger id to a
+    smaller one). At the fixed point the edge set is a union of stars —
+    every non-root node points directly at its component's minimum id."""
     # All nodes that must appear in the output (star contraction drops
     # isolated roots from the edge list).
     nodes = (
@@ -161,7 +130,7 @@ def _connected_components_star(
     )
 
     prev = _edge_fingerprint(edges)
-    for _ in range(max_iter):
+    for _ in range(_STAR_MAX_ROUNDS):
         # -- large-star: for each node u (over the SYMMETRIZED adjacency),
         # m(u) = min(N(u) ∪ {u}); connect every strictly-larger neighbor
         # v > u directly to m(u). Long chains halve here.
@@ -203,7 +172,7 @@ def _connected_components_star(
         prev = cur
     else:
         raise RuntimeError(
-            f"star contraction did not converge in {max_iter} rounds"
+            f"star contraction did not converge in {_STAR_MAX_ROUNDS} rounds"
         )
     # Fixed point: edges = (node, root) stars. Roots (and any node whose
     # whole component collapsed into it) label themselves.
@@ -355,8 +324,8 @@ def core_numbers(
       exchange-free plan loses to ObjectHashAggregate overhead (12-15
       s) and is hub-unsafe besides.
 
-    Same engineering as connected_components: lineage truncated per
-    block (localCheckpoint) so analysis cost stays flat."""
+    Same engineering as connected_components' star contraction: lineage
+    truncated per block (localCheckpoint) so analysis cost stays flat."""
     import math
 
     from pyspark.sql import Observation, Window

@@ -211,14 +211,10 @@ def train_ivf_codebook(
     """Spherical-k-means codebook trained on a deterministic driver-side
     sample (shape (n_centroids, dim), unit rows). Random corpus anchors
     quantize badly — measured recall@10 0.54 untrained vs 0.95+ trained."""
-    sample_pdf = (
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.pmod(F.xxhash64(F.col("id") + seed), 9973), "id")
-        .limit(train_sample)
-        .toPandas()
+    x = _train_sample_matrix(
+        emb, id_col=id_col, vec_col=vec_col,
+        train_sample=train_sample, seed=seed,
     )
-    x = np.asarray([np.asarray(v, dtype="float64") for v in sample_pdf["v"]])
-    x = x / np.sqrt((x * x).sum(axis=1, keepdims=True))
     c = x[:n_centroids].copy()  # deterministic init from the shuffled sample
     for _ in range(kmeans_iters):  # Lloyd steps on the sample
         assign_idx = np.argmax(x @ c.T, axis=1)
@@ -884,9 +880,6 @@ def semantic_dup_pairs(
     )
 
 
-_SURVIVOR_DRIVER_EDGE_CAP = 100_000
-
-
 def semantic_dedup_survivors(
     emb: DataFrame,
     pairs: DataFrame,
@@ -900,62 +893,18 @@ def semantic_dedup_survivors(
     one-line ORDER BY swap on the same cluster map; min-id keeps the
     result engine-checkable.
 
-    Count-gated component strategy (round-12 verdict: the survivor
-    build's 3.5 s at sf0.1 was ~all fixed job floor — the THRESHOLDED
-    semantic pair set is 141 edges there, but distributed min-label
-    propagation still pays init + 3 rounds x (join + localCheckpoint +
-    convergence probe) of per-job overhead): at or below
-    _SURVIVOR_DRIVER_EDGE_CAP edges the pair set — persisted HERE if
-    the caller didn't (the gate count and the edge collect must share
-    one materialization of the cell-self-join scoring pipeline) and by
-    construction post-threshold, i.e. corpus-FRACTION-sized, not
-    corpus-sized — is collected and solved with driver union-find
-    (union-by-min + path compression, so roots ARE the min ids), and
-    the cluster map returns as a broadcast join: ONE job end to end.
-    Above the cap the distributed label/star propagation
-    (operators/graph.py) runs unchanged — a web-scale near-dup graph
-    with millions of pairs never touches the driver."""
+    The pair set is thresholded, so corpus-FRACTION-sized (141 edges at
+    sf0.1): graph.connected_components solves it as a one-task
+    union-find plan, and switches to star contraction only past its
+    edge cap. Persist `pairs` if it is expensive: the components' size
+    probe and the result both read it."""
+    from .graph import connected_components
+
     ids = emb.select(F.col(id_col).cast("long").alias("id"))
-    if not pairs.is_cached:
-        # enforce the materialize-once contract instead of assuming it
-        # (ADVICE r13: an unpersisted pair frame re-ran the full
-        # cell-self-join scoring pipeline twice — once for the gate
-        # probe count, once for the edge collect)
-        pairs = pairs.persist()
-    edge_df = pairs.select("ida", "idb")
-    if pairs.count() <= _SURVIVOR_DRIVER_EDGE_CAP:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in edge_df.collect():
-            a, b = int(row.ida), int(row.idb)
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:  # union by MIN id: the root is the survivor
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        comp = F.broadcast(
-            pairs.sparkSession.createDataFrame(
-                [(n, find(n)) for n in sorted(parent)],
-                "id long, cluster long",
-            )
-        )
-    else:
-        from .graph import connected_components
-
-        comp = connected_components(edge_df).select(
-            F.col("node").alias("id"), "cluster"
-        )
+    edges = pairs.select(F.col("ida").cast("long"), F.col("idb").cast("long"))
+    comp = connected_components(edges).select(
+        F.col("node").alias("id"), "cluster"
+    )
     return ids.join(comp, "id", "left").select(
         "id",
         F.coalesce("cluster", "id").alias("cluster"),

@@ -1417,24 +1417,10 @@ def q140(spark: SparkSession, sf: str) -> DataFrame:
 
     from . import broadcast_if_small
     from ..operators.scoring import hashed_linear_score
-    from .llm import _exact_pairs
+    from .llm import _dup_cluster_map
     from .scoring_q import _BIAS, _W
 
-    def build_clusters():
-        from ..operators.graph import dup_clusters
-        from . import built
-
-        return built(
-            dup_clusters(_exact_pairs(spark, sf).select("ida", "idb"))
-            .select("node", "cluster")
-            .persist()
-        )
-
-    clusters = memo(
-        spark, ("dup_cluster_map", sf),
-        build_clusters,
-        label="dup_cluster_map",
-    )
+    clusters = _dup_cluster_map(spark, sf)
     d = table(spark, sf, "documents")
     scored = d.select(
         "doc_id",

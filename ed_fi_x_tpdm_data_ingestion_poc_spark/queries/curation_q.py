@@ -162,6 +162,20 @@ def q74(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+# One 5-gram shingle index over ALL documents, materialized once per
+# (session, sf): eval and corpus sides are row-filters of it (q75, q100's
+# pipeline, q90's Bloom check) — re-shingling per run would dominate.
+def _shingle_index_k5(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.dedup import shingle_index
+
+    d = table(spark, sf, "documents").select("doc_id", "text")
+    return memo(
+        spark, ("shingle_index_k5", sf),
+        lambda: built(shingle_index(spread_scan(d), k=5).persist()),
+        label="shingle_index_k5",
+    )
+
+
 @query(
     "qz75_decontamination",
     oracle="""
@@ -190,20 +204,12 @@ def q75(spark: SparkSession, sf: str) -> DataFrame:
     set; emit corpus documents whose 5-gram CONTAINMENT of an eval doc is
     >= 0.5 (operators/dedup.py ngram_containment_pairs — inverted-index
     join, eval index broadcast, corpus never shuffles)."""
-    from ..operators.dedup import ngram_containment_pairs, shingle_index
+    from ..operators.dedup import ngram_containment_pairs
 
     d = table(spark, sf, "documents")
     evalset = d.filter(F.col("doc_id") < 20)
     corpus = d.filter(F.col("doc_id") >= 20)
-    # one shingle index over ALL docs, memoized per (session, sf); both
-    # sides are row-filters of it — re-shingling per run would dominate
-    full_idx = memo(
-        spark, ("shingle_index_k5", sf),
-        lambda: shingle_index(
-            spread_scan(d.select("doc_id", "text")), k=5
-        ).persist(),
-        label="shingle_index_k5",
-    )
+    full_idx = _shingle_index_k5(spark, sf)
     return ngram_containment_pairs(
         corpus, evalset, k=5, threshold=0.5,
         corpus_index=full_idx.filter(F.col("id") >= 20),
@@ -711,20 +717,13 @@ def q100(spark: SparkSession, sf: str) -> DataFrame:
     recursive-CTE components + window rank + shard rollup)."""
     from pyspark.sql.window import Window
 
-    from ..operators.dedup import ngram_containment_pairs, shingle_index
-    from ..operators.graph import dup_clusters
-    from .llm import _exact_pairs
+    from ..operators.dedup import ngram_containment_pairs
+    from .llm import _dup_cluster_map
 
     d = table(spark, sf, "documents")
     evalset = d.filter(F.col("doc_id") < 20)
     corpus = d.filter(F.col("doc_id") >= 20)
-    full_idx = memo(
-        spark, ("shingle_index_k5", sf),
-        lambda: shingle_index(
-            spread_scan(d.select("doc_id", "text")), k=5
-        ).persist(),
-        label="shingle_index_k5",
-    )
+    full_idx = _shingle_index_k5(spark, sf)
     contaminated = (
         ngram_containment_pairs(
             corpus, evalset, k=5, threshold=0.5,
@@ -734,13 +733,7 @@ def q100(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("corpus_id").alias("doc_id"))
         .distinct()
     )
-    clusters = memo(
-        spark, ("dup_cluster_map", sf),
-        lambda: dup_clusters(
-            _exact_pairs(spark, sf).select("ida", "idb")
-        ).select("node", "cluster").persist(),
-        label="dup_cluster_map",
-    )
+    clusters = _dup_cluster_map(spark, sf)
     memb = d.join(
         broadcast_if_small(clusters).filter(F.col("node") >= 20),
         d.doc_id == F.col("node"),
@@ -1094,6 +1087,18 @@ def q110(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+# q113's cut list, shared with q115's cut-and-stitch.
+def _dup_spans(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.substring import duplicate_spans
+
+    d = table(spark, sf, "documents").select("doc_id", "text")
+    return memo(
+        spark, ("dup_spans", sf),
+        lambda: built(duplicate_spans(d, n=16).persist()),
+        label="dup_spans",
+    )
+
+
 @query(
     "qz113_dup_spans",
     oracle="""
@@ -1126,14 +1131,7 @@ def q113(spark: SparkSession, sf: str) -> DataFrame:
     WHERE to cut). Digests are md5 of the gram string, so DuckDB
     recomputes the identical cut list and the result is fully
     hash-checked (window gaps-and-islands on both sides)."""
-    from ..operators.substring import duplicate_spans
-
-    d = table(spark, sf, "documents").select("doc_id", "text")
-    spans = memo(
-        spark, ("dup_spans", sf),
-        lambda: built(duplicate_spans(d, n=16).persist()),
-        label="dup_spans",
-    )
+    spans = _dup_spans(spark, sf)
     return spans.orderBy("id", "s")
 
 
@@ -1242,14 +1240,10 @@ def q115(spark: SparkSession, sf: str) -> DataFrame:
     pass through byte-identical. The md5 of every cleaned text is
     hash-checked against DuckDB recomputing the same cut-and-stitch, so
     reassembly ORDER is pinned, not just counts."""
-    from ..operators.substring import duplicate_spans, remove_spans
+    from ..operators.substring import remove_spans
 
     d = table(spark, sf, "documents").select("doc_id", "text")
-    spans = memo(
-        spark, ("dup_spans", sf),
-        lambda: built(duplicate_spans(d, n=16).persist()),
-        label="dup_spans",
-    )
+    spans = _dup_spans(spark, sf)
     return remove_spans(d, spans).select(
         "id", "n_kept", F.md5("clean_text").alias("clean_md5")
     )
@@ -1532,7 +1526,7 @@ def q164(spark: SparkSession, sf: str) -> DataFrame:
     rides one gram stream and one GEMM pass, and the final aggregate is
     sources-sized with three broadcast left joins."""
     from ..operators.substring import token_ngrams
-    from .llm import _exact_pairs
+    from .llm import _dup_cluster_map
     from .llm import q157 as _sem_flags
 
     d = table(spark, sf, "documents")
@@ -1576,20 +1570,7 @@ def q164(spark: SparkSession, sf: str) -> DataFrame:
 
     sem = memo(spark, ("release_sem_flags", sf), _sem, label="release_sem_flags")
 
-    def build_clusters():
-        from ..operators.graph import dup_clusters
-
-        return built(
-            dup_clusters(_exact_pairs(spark, sf).select("ida", "idb"))
-            .select("node", "cluster")
-            .persist()
-        )
-
-    clusters = memo(
-        spark, ("dup_cluster_map", sf),
-        build_clusters,
-        label="dup_cluster_map",
-    )
+    clusters = _dup_cluster_map(spark, sf)
     losers = (
         clusters.where(F.col("node") != F.col("cluster"))
         .select(F.col("node").alias("doc_id"))

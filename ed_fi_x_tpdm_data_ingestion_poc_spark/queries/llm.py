@@ -43,6 +43,18 @@ def _exact_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return memo(spark, ("exact_pairs", sf), build, label="exact_pairs")
 
 
+# (node, cluster) near-dup cluster map over the exact pair set: the
+# materialize-once artifact the survivor, split and release queries key
+# on (q93, q100, q120, q140, q164). q70 computes the same components live.
+def _dup_cluster_map(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.graph import connected_components
+
+    def build():
+        return built(connected_components(_exact_pairs(spark, sf)).persist())
+
+    return memo(spark, ("dup_cluster_map", sf), build, label="dup_cluster_map")
+
+
 # Exact cosine top-10: declared result (q51a) and the recall oracle for
 # both ANN variants (q51b LSH, q51c IVF) — shared like _exact_pairs.
 def _exact_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -61,6 +73,42 @@ def _exact_topk(spark: SparkSession, sf: str) -> DataFrame:
 # below they are memo()-ized per (session, sf) like _exact_pairs, so
 # repeated declared-query runs amortize the build instead of re-sketching
 # the corpus.
+
+
+# q50e and q112 share the corpus tiles; q51c and q112 share the IVF
+# codebook and its soft-assigned index.
+def _corpus_tiles(spark: SparkSession, sf: str) -> list:
+    from ..operators.dedup import broadcast_corpus_tiles
+
+    e = table(spark, sf, "embeddings")
+    return memo(
+        spark, ("corpus_tiles", sf),
+        lambda: broadcast_corpus_tiles(e, num_tiles=2),
+        label="corpus_tiles",
+    )
+
+
+def _ivf_codebook(spark: SparkSession, sf: str):
+    from ..operators.similarity import train_ivf_codebook
+
+    e = table(spark, sf, "embeddings")
+    return memo(
+        spark, ("ivf_codebook", sf),
+        lambda: train_ivf_codebook(e, n_centroids=8),
+        label="ivf_codebook",
+    )
+
+
+def _ivf_index(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.similarity import build_ivf_index
+
+    e = table(spark, sf, "embeddings")
+    cb = _ivf_codebook(spark, sf)
+    return memo(
+        spark, ("ivf_index", sf),
+        lambda: built(build_ivf_index(e, cb, n_assign=3).persist()),
+        label="ivf_index",
+    )
 
 
 def _recall_ok(approx: DataFrame, exact: DataFrame, keys=("qid", "nid")) -> DataFrame:
@@ -198,15 +246,10 @@ def q50e(spark: SparkSession, sf: str) -> DataFrame:
     The corpus artifact is a list of id-range broadcast tiles built by
     per-tile collect (num_tiles=2 here so even the driver gate exercises
     the no-full-corpus-collect path — round-1 VERDICT's scale fix)."""
-    from ..operators.dedup import broadcast_corpus_tiles, embedding_dup_pairs
+    from ..operators.dedup import embedding_dup_pairs
 
     e = table(spark, sf, "embeddings")
-    tiles = memo(
-        spark, ("corpus_tiles", sf),
-        lambda: broadcast_corpus_tiles(e, num_tiles=2),
-        label="corpus_tiles",
-    )
-    out = embedding_dup_pairs(e, threshold=0.45, tiles=tiles)
+    out = embedding_dup_pairs(e, threshold=0.45, tiles=_corpus_tiles(spark, sf))
     return out.filter(F.col("cosine") >= 0.45)
 
 
@@ -289,25 +332,12 @@ def q51c(spark: SparkSession, sf: str) -> DataFrame:
     scale path. The synthetic embeddings are near-uniform, which forces
     wide probing — real embedding corpora cluster, letting probe << cells
     carry the same recall."""
-    from ..operators.similarity import (
-        build_ivf_index,
-        build_ivf_queries,
-        ivf_topk,
-        train_ivf_codebook,
-    )
+    from ..operators.similarity import build_ivf_queries, ivf_topk
 
     e = table(spark, sf, "embeddings")
     qs = e.filter(F.col("vec_id") < 5)
-    cb = memo(
-        spark, ("ivf_codebook", sf),
-        lambda: train_ivf_codebook(e, n_centroids=8),
-        label="ivf_codebook",
-    )
-    idx = memo(
-        spark, ("ivf_index", sf),
-        lambda: built(build_ivf_index(e, cb, n_assign=3).persist()),
-        label="ivf_index",
-    )
+    cb = _ivf_codebook(spark, sf)
+    idx = _ivf_index(spark, sf)
     qidx = memo(
         spark, ("ivf_queries", sf),
         lambda: built(build_ivf_queries(qs, cb, n_probe=5).persist()),
@@ -566,14 +596,13 @@ def q295(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q70(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup CLUSTERS from the exact pair set (q50b): transitive pairs
-    collapse via iterative min-label propagation (operators/graph.py, one
-    join + one min-agg per round, rounds = graph diameter) — cluster id =
-    min reachable doc id, survivor = the min-id member. The oracle
-    recomputes the same fixpoint with a recursive CTE."""
+    collapse via operators/graph.py::connected_components (a one-task
+    union-find plan at this size, star contraction past its edge cap) —
+    cluster id = min reachable doc id, survivor = the min-id member. The
+    oracle recomputes the same fixpoint with a recursive CTE."""
     from ..operators.graph import dup_clusters
 
-    pairs = _exact_pairs(spark, sf).select("ida", "idb")
-    return dup_clusters(pairs)
+    return dup_clusters(_exact_pairs(spark, sf))
 
 
 @query(
@@ -618,20 +647,11 @@ def q93(spark: SparkSession, sf: str) -> DataFrame:
     shuffle; corpus-proportional map -> unhinted, AQE picks the shuffle
     join. Survivor choice is one max_by-style struct aggregate, no window
     over the corpus."""
-    from ..operators.graph import dup_clusters
-
     # The cluster map is a materialize-once artifact (dedup clusters are
     # computed once per corpus snapshot; survivor policies re-run against
-    # them) — q70 keeps computing the clustering LIVE as the declared
-    # iterative benchmark; this query's declared value-add is the
-    # survivor selection. Cold cost lands in build_s as dup_cluster_map.
-    clusters = memo(
-        spark, ("dup_cluster_map", sf),
-        lambda: dup_clusters(
-            _exact_pairs(spark, sf).select("ida", "idb")
-        ).select("node", "cluster").persist(),
-        label="dup_cluster_map",
-    )
+    # them) — q70 keeps computing the clustering LIVE; this query's
+    # declared value-add is the survivor selection.
+    clusters = _dup_cluster_map(spark, sf)
     d = table(spark, sf, "documents").select("doc_id", "n_chars")
     memb = d.join(
         broadcast_if_small(clusters), d.doc_id == clusters.node
@@ -871,31 +891,16 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
     1.0 at sf0.001-0.1 with n_assign=3); (3) survivor map covers every
     vector with exactly one keep per cluster. Cluster-bucketed blocking,
     never all-pairs."""
-    from ..operators.dedup import broadcast_corpus_tiles, embedding_dup_pairs
+    from ..operators.dedup import embedding_dup_pairs
     from ..operators.similarity import (
-        build_ivf_index,
         recall_at_k,
         semantic_dedup_survivors,
         semantic_dup_pairs,
-        train_ivf_codebook,
     )
 
     e = table(spark, sf, "embeddings")
-    cb = memo(
-        spark, ("ivf_codebook", sf),
-        lambda: train_ivf_codebook(e, n_centroids=8),
-        label="ivf_codebook",
-    )
-    idx = memo(
-        spark, ("ivf_index", sf),
-        lambda: built(build_ivf_index(e, cb, n_assign=3).persist()),
-        label="ivf_index",
-    )
-    tiles = memo(
-        spark, ("corpus_tiles", sf),
-        lambda: broadcast_corpus_tiles(e, num_tiles=2),
-        label="corpus_tiles",
-    )
+    idx = _ivf_index(spark, sf)
+    tiles = _corpus_tiles(spark, sf)
     exact = memo(
         spark, ("sem_exact_pairs", sf),
         lambda: built(
@@ -906,7 +911,7 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
         label="sem_exact_pairs",
     )
     # pairs and survivor map are materialize-once artifacts (production
-    # writes them; re-running the ITERATIVE connected-components pass per
+    # writes them; re-running the cell self-join and components pass per
     # flag evaluation would charge the bench the index-build cost on
     # every run) — the three law checks below still run per call
     sem = memo(

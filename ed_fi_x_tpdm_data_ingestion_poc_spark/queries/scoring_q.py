@@ -167,22 +167,9 @@ def q120(spark: SparkSession, sf: str) -> DataFrame:
     engine-portable expression, hash-checked against DuckDB recomputing
     the clusters via recursive CTE."""
     from ..operators.sampling import mul_hash32
-    from .llm import _exact_pairs
+    from .llm import _dup_cluster_map
 
-    def build_clusters():
-        from ..operators.graph import dup_clusters
-
-        from . import built
-
-        return built(dup_clusters(
-            _exact_pairs(spark, sf).select("ida", "idb")
-        ).select("node", "cluster").persist())
-
-    clusters = memo(
-        spark, ("dup_cluster_map", sf),
-        build_clusters,
-        label="dup_cluster_map",
-    )
+    clusters = _dup_cluster_map(spark, sf)
     d = table(spark, sf, "documents").select("doc_id")
     # same size-gated broadcast as q93: the cluster map is usually tiny
     # but can run corpus-proportional on heavy-dup web corpora

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-from . import built, law, memo, query, spread_scan
+from . import built, law, memo, query
 
 _FPP = 0.01
 
@@ -95,7 +95,7 @@ def q90(spark: SparkSession, sf: str) -> DataFrame:
     containment against the eval set (docs id < 20, q75's split) reaches
     0.5, using a driver-built Bloom over the eval shingle hashes probed
     with pure JVM expressions. Shingles come from the SAME memoized
-    64-bit shingle index q75/q50b share (one corpus shingling pass per
+    64-bit shingle index q75/q100 share (one corpus shingling pass per
     session, persisted); the corpus side is then MAP-ONLY until its
     per-doc aggregate — no join against the eval set, which is the plan
     you want when the verdict (keep/drop) is all you need at 100 TB.
@@ -104,17 +104,10 @@ def q90(spark: SparkSession, sf: str) -> DataFrame:
     a LAW of the filter, not a tolerance — and (b) the shingle-level
     false-positive rate among shingles NOT in the eval set is within
     5x the design fpp (slack for the small-sample variance at test SF)."""
-    from ..operators.dedup import shingle_index
     from ..operators.sketches import bloom_might_contain, build_bloom
+    from .curation_q import _shingle_index_k5
 
-    d = table(spark, sf, "documents")
-    full_idx = memo(
-        spark, ("shingle_index_k5", sf),
-        lambda: shingle_index(
-            spread_scan(d.select("doc_id", "text")), k=5
-        ).persist(),
-        label="shingle_index_k5",
-    )
+    full_idx = _shingle_index_k5(spark, sf)
     ev_sh = full_idx.filter(F.col("id") < 20).select("s").distinct()
     corp_sh = full_idx.filter(F.col("id") >= 20)
 
@@ -162,17 +155,21 @@ _DOC_DDL = "doc_id long, text string"
 
 def _docs_replay_dir(spark: SparkSession, sf: str) -> str:
     """Three doc_id-ordered parquet arrival slots over (doc_id, text) —
-    the micro-batch fixture for the streaming decontamination query."""
+    the micro-batch fixture for the streaming queries (q94, q161),
+    written once per (session, sf)."""
     from ..streaming.replay import write_replay_dir
 
-    d = table(spark, sf, "documents")
-    pdf = d.select("doc_id", "text").orderBy("doc_id").toPandas()
-    n = len(pdf)
-    chunks = [
-        pdf.iloc[: n // 3], pdf.iloc[n // 3 : 2 * n // 3],
-        pdf.iloc[2 * n // 3 :],
-    ]
-    return write_replay_dir(chunks)
+    def build() -> str:
+        d = table(spark, sf, "documents")
+        pdf = d.select("doc_id", "text").orderBy("doc_id").toPandas()
+        n = len(pdf)
+        chunks = [
+            pdf.iloc[: n // 3], pdf.iloc[n // 3 : 2 * n // 3],
+            pdf.iloc[2 * n // 3 :],
+        ]
+        return write_replay_dir(chunks)
+
+    return memo(spark, ("docs_replay", sf), build, label="docs_replay")
 
 
 def _shingle_arr(toks) -> "F.Column":
@@ -232,10 +229,7 @@ def q94(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     def stream():
-        replay = memo(
-            spark, ("docs_replay", sf), lambda: _docs_replay_dir(spark, sf),
-            label="docs_replay",
-        )
+        replay = _docs_replay_dir(spark, sf)
         return run_to_memory(
             verdict(read_replay_stream(spark, replay, _DOC_DDL)),
             output_mode="append",
@@ -794,10 +788,7 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
     shard_of = lambda c: F.pmod(F.xxhash64(c), F.lit(shards)).cast("int")  # noqa: E731
 
     def _stream() -> tuple:
-        replay = memo(
-            spark, ("docs_replay", sf), lambda: _docs_replay_dir(spark, sf),
-            label="docs_replay",
-        )
+        replay = _docs_replay_dir(spark, sf)
         docs = read_replay_stream(spark, replay, _DOC_DDL)
         toks = (
             docs.select(F.explode(F.split("text", " ")).alias("tok"))

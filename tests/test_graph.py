@@ -1,20 +1,35 @@
 """Connected-components tests (operators/graph.py): transitivity, chain
-diameters beyond one round, determinism, survivor convention."""
+diameters beyond one round, determinism, survivor convention. Every
+case runs through both paths: the one-task union-find plan (the size
+gate passes) and star contraction (edge cap patched to 0)."""
 
 from __future__ import annotations
 
 import pytest
 
+from ed_fi_x_tpdm_data_ingestion_poc_spark.operators import graph
 from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.graph import (
     connected_components,
     dup_clusters,
 )
 
 
+def _both_paths(run):
+    """run() on the union-find path, then on the star path; the two
+    results must agree, and the shared result is returned."""
+    small = run()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "_UNION_FIND_EDGE_CAP", 0)
+        star = run()
+    assert small == star
+    return small
+
+
 def _cc(spark, edges):
     df = spark.createDataFrame(edges, "ida long, idb long")
-    out = connected_components(df)
-    return {r["node"]: r["cluster"] for r in out.collect()}
+    return _both_paths(
+        lambda: {r["node"]: r["cluster"] for r in connected_components(df).collect()}
+    )
 
 
 def test_transitive_pairs_collapse(spark):
@@ -36,41 +51,38 @@ def test_orientation_and_duplicates_irrelevant(spark):
 
 def test_dup_clusters_survivor(spark):
     df = spark.createDataFrame([(5, 9), (9, 11)], "ida long, idb long")
-    rows = {r["node"]: (r["cluster"], r["keep"]) for r in dup_clusters(df).collect()}
+    rows = _both_paths(
+        lambda: {
+            r["node"]: (r["cluster"], r["keep"]) for r in dup_clusters(df).collect()
+        }
+    )
     assert rows == {5: (5, 1), 9: (5, 0), 11: (5, 0)}
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
     df = spark.createDataFrame([(i, i + 1) for i in range(9)], "ida long, idb long")
+    monkeypatch.setattr(graph, "_UNION_FIND_EDGE_CAP", 0)
+    monkeypatch.setattr(graph, "_STAR_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iter=2)
+        connected_components(df)
 
 
-def _cc_star(spark, edges):
-    df = spark.createDataFrame(edges, "ida long, idb long")
-    out = connected_components(df, algorithm="star")
-    return {r["node"]: r["cluster"] for r in out.collect()}
-
-
-def test_star_small_graphs_match_label(spark):
-    for edges in (
-        [(1, 2)],
-        [(1, 2), (2, 3), (7, 8)],
-        [(2, 1), (1, 2), (2, 3), (3, 2)],
-        [(5, 9), (9, 11), (20, 21), (30, 31), (31, 20)],
-        [(1, 2), (3, 4), (5, 6), (2, 3), (4, 5)],  # chained pairs
+def test_star_small_graphs_match_union_find(spark):
+    for edges, want in (
+        ([(1, 2)], {1: 1, 2: 1}),
+        ([(5, 9), (9, 11), (20, 21), (30, 31), (31, 20)],
+         {5: 5, 9: 5, 11: 5, 20: 20, 21: 20, 30: 20, 31: 20}),
+        ([(1, 2), (3, 4), (5, 6), (2, 3), (4, 5)],  # chained pairs
+         {i: 1 for i in range(1, 7)}),
+        ([(4, 4), (4, 8)], {4: 4, 8: 4}),  # a self-edge adds nothing
     ):
-        assert _cc_star(spark, edges) == _cc(spark, edges)
+        assert _cc(spark, edges) == want
 
 
-def test_star_adversarial_chain_beyond_label_cap(spark):
-    # Path graph of diameter 300: label propagation needs 300 rounds
-    # (far past its max_iter); star contraction converges in O(log n).
-    edges = [(i, i + 1) for i in range(300)]
-    df = spark.createDataFrame(edges, "ida long, idb long")
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iter=20)
-    got = _cc_star(spark, edges)
+def test_300_edge_chain_is_one_cluster(spark):
+    # Path graph of diameter 300: one union-find pass on the small path,
+    # O(log n) contraction rounds on the star path.
+    got = _cc(spark, [(i, i + 1) for i in range(300)])
     assert got == {i: 0 for i in range(301)}
 
 
@@ -98,13 +110,29 @@ def test_star_random_graph_matches_union_find(spark):
             parent[max(ra, rb)] = min(ra, rb)
     touched = {n for e in edges for n in e}
     want = {n: find(n) for n in touched}
-    assert _cc_star(spark, edges) == want
+    assert _cc(spark, edges) == want
 
 
-def test_star_unknown_algorithm_rejected(spark):
-    df = spark.createDataFrame([(1, 2)], "ida long, idb long")
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(df, algorithm="bogus")
+def test_small_input_is_one_plan_after_its_probe(spark):
+    """The union-find path is a plan: once the size probe is memoized,
+    re-building the components runs no Spark job, and the plan solves
+    them in one grouped pandas pass."""
+    df = spark.createDataFrame([(1, 2), (2, 3)], "ida long, idb long").persist()
+    connected_components(df)  # first build: runs the size probe
+    sc = spark.sparkContext
+    group = "build:cc_small"
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    df.unpersist()
+
+
 
 
 # ---------------------------------------------------------------------------

@@ -172,3 +172,29 @@ def test_broadcast_if_small_gate_and_memo(spark, sf_dir):
     out3 = broadcast_if_small(big, max_rows=10_000_000)
     assert out3 is not big  # hinted now
     assert gate_probes() == probes
+
+
+def test_size_gate_probe_is_bounded_and_memoized(spark, monkeypatch):
+    """size_gate reads at most bound + 1 rows (bound = max(cap,
+    _PROBE_ROWS)); a truncated probe answers every cap up to its bound,
+    a larger cap probes again, and bytes are rows x _est_row_bytes."""
+    from ed_fi_x_tpdm_data_ingestion_poc_spark import queries
+
+    monkeypatch.setattr(queries, "_PROBE_ROWS", 10)
+    s = spark.newSession()
+    df = s.range(100)
+    key = ("t_gate", df.semanticHash())
+    assert not queries.size_gate(df, 5, gate="t_gate")
+    assert queries.session_cache(s)[key] == (10, 11)  # stopped at bound + 1
+    # a new probe would now read to 51 rows; a cap within the old bound
+    # is answered from the memo instead
+    monkeypatch.setattr(queries, "_PROBE_ROWS", 50)
+    assert not queries.size_gate(df, 10, gate="t_gate")
+    assert queries.session_cache(s)[key] == (10, 11)
+    assert queries.size_gate(df, 200, gate="t_gate")  # above the bound: re-probed
+    assert queries.session_cache(s)[key] == (200, 100)
+    assert queries.size_gate(df, 100, gate="t_gate")
+    assert not queries.size_gate(df, 99, gate="t_gate")
+    width = queries._est_row_bytes(df.schema)
+    assert queries.size_gate(df, 100, max_bytes=100 * width, gate="t_gate")
+    assert not queries.size_gate(df, 100, max_bytes=100 * width - 1, gate="t_gate")

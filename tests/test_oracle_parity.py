@@ -20,7 +20,6 @@ _SPECS = all_queries()
 # plan (see the queries package docstring), and heavy work is a memo()
 # artifact, which the first build made.
 BUILD_JOB_EXCEPTIONS = {
-    "qz70_dup_clusters": "label propagation tests convergence and checkpoints per round",
     "qz04_sink_roundtrip": "writes the JSON sink it reads back",
 }
 

@@ -3,6 +3,7 @@ null/sentinel invariants (SURVEY.md §5 items 3-4)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -119,17 +120,19 @@ def _uf_components(edges):
 @settings(max_examples=8, deadline=None)
 @given(edges=_edges)
 def test_connected_components_matches_union_find(spark, edges):
-    """Min-label propagation on DataFrames == driver-side union-find for
-    arbitrary small graphs (self-loops, duplicate and reversed edges,
-    multiple components, chains)."""
-    from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.graph import (
-        connected_components,
-    )
+    """Both connected-components paths on DataFrames (the one-task
+    union-find plan, and star contraction with the edge cap patched to 0)
+    == driver-side union-find for arbitrary small graphs (self-loops,
+    duplicate and reversed edges, multiple components, chains)."""
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.operators import graph
 
     df = spark.createDataFrame(edges, "ida long, idb long")
-    got = {r["node"]: r["cluster"] for r in connected_components(df).collect()}
     want = _uf_components([e for e in edges if e[0] != e[1]])
-    assert got == want
+    for cap in (graph._UNION_FIND_EDGE_CAP, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "_UNION_FIND_EDGE_CAP", cap)
+            got = graph.connected_components(df).collect()
+        assert {r["node"]: r["cluster"] for r in got} == want, cap
 
 
 _ts_offsets = st.lists(st.integers(0, 2000), min_size=1, max_size=24, unique=True)

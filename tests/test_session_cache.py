@@ -139,3 +139,41 @@ def test_no_id_of_a_session_or_context():
             ):
                 found.append(f"{rel}:{node.lineno} {ast.unparse(node)}")
     assert not found, f"id() of a session or context (use queries.session_cache): {found}"
+
+
+def _memo_key_prefix(call: ast.Call) -> str | None:
+    """The constant head of a memo() call's key tuple: the string, or the
+    literal start of an f-string (f"ks_screen_dist_a{alpha}" ->
+    "ks_screen_dist_a"); None when the head is not written out."""
+    key = call.args[1] if len(call.args) > 1 else None
+    head = key.elts[0] if isinstance(key, ast.Tuple) and key.elts else None
+    if isinstance(head, ast.JoinedStr) and head.values:
+        head = head.values[0]
+    if isinstance(head, ast.Constant) and isinstance(head.value, str):
+        return head.value
+    return None
+
+
+def test_each_memo_key_is_built_at_one_call_site():
+    """One builder per artifact: two memo() sites sharing a key would let
+    whichever query runs first decide how (and whether eagerly) the
+    artifact is built. A shared artifact gets one module-level function
+    (e.g. llm._exact_pairs) that every consumer calls."""
+    sites: dict[str, list[str]] = {}
+    unnamed = []
+    for rel, tree in _package_modules():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name != "memo":
+                continue
+            prefix = _memo_key_prefix(node)
+            if prefix is None:
+                unnamed.append(f"{rel}:{node.lineno}")
+            else:
+                sites.setdefault(prefix, []).append(f"{rel}:{node.lineno}")
+    assert not unnamed, f"memo() keys must start with a literal name: {unnamed}"
+    shared = {k: v for k, v in sites.items() if len(v) > 1}
+    assert not shared, f"memo() keys built at more than one call site: {shared}"
