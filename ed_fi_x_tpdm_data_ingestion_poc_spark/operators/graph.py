@@ -29,6 +29,10 @@ _UNION_FIND_EDGE_CAP = 100_000
 # Star contraction needs O(log n) rounds, so a graph that reaches this
 # cap points at a bug, not at a big input.
 _STAR_MAX_ROUNDS = 32
+# core_numbers raises after this many h-steps (qz178's oracle iterates
+# exactly this many); it chains _CORE_STEPS_PER_JOB of them into one job.
+CORE_MAX_STEPS = 40
+_CORE_STEPS_PER_JOB = 2
 
 
 def connected_components(
@@ -280,9 +284,7 @@ def triangle_count(und: DataFrame) -> DataFrame:
     return oriented_triangle_count(oriented_edges(und))
 
 
-def core_numbers(
-    und: DataFrame, *, max_iter: int = 40, steps_per_job: int = 2
-) -> DataFrame:
+def core_numbers(und: DataFrame) -> DataFrame:
     """(node, coreness) for every node of an undirected (u, v) edge
     DataFrame — coreness(v) = the largest k such that v belongs to the
     k-core (the maximal subgraph with minimum degree >= k), the
@@ -310,7 +312,7 @@ def core_numbers(
       iterative fixpoint pays the per-task scheduling floor `steps x
       partitions` times, so 64-wide stages over a 264k-row graph were
       pure overhead (14.9 -> 11.5 s);
-    * multi-step jobs — `steps_per_job` h-steps are chained into ONE
+    * multi-step jobs — `_CORE_STEPS_PER_JOB` h-steps are chained into ONE
       materialized plan between localCheckpoints, halving the number
       of driver round-trips; the convergence probe rides the SAME job
       as a Dataset.observe metric instead of a separate agg action
@@ -378,21 +380,21 @@ def core_numbers(
     prev = c.agg(F.sum(F.col("val").cast("decimal(38,0)"))).first()[0]
     steps = 0
     converged = False
-    while steps < max_iter:
+    while steps < CORE_MAX_STEPS:
         obs = Observation(f"core_h_{steps}")
         x = c
-        for _ in range(steps_per_job):
+        for _ in range(_CORE_STEPS_PER_JOB):
             x = hstep(x)
         c = x.observe(
             obs, F.sum(F.col("val").cast("decimal(38,0)")).alias("tot")
         ).localCheckpoint()
-        steps += steps_per_job
+        steps += _CORE_STEPS_PER_JOB
         cur = obs.get["tot"]
         if cur == prev:
             converged = True
             break
         prev = cur
     if not converged:
-        raise RuntimeError(f"core_numbers did not converge in {max_iter} steps")
+        raise RuntimeError(f"core_numbers did not converge in {CORE_MAX_STEPS} steps")
     sym.unpersist()
     return c.select("node", F.col("val").alias("coreness"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import CORE_MAX_STEPS
 from ..tables import table
 from . import built, memo, query
 
@@ -382,8 +383,6 @@ def q159(spark: SparkSession, sf: str) -> DataFrame:
 # q178 — coreness (k-core decomposition) of the co-purchase graph
 # ---------------------------------------------------------------------------
 
-_CORE_CAP = 40  # oracle recursion cap; Spark raises if fixpoint needs more
-
 
 @query(
     "qz178_coreness",
@@ -405,11 +404,11 @@ _CORE_CAP = 40  # oracle recursion cap; Spark raises if fixpoint needs more
                                         ORDER BY c.val DESC),
                      c.val) AS mv
         FROM sym s JOIN c ON c.node = s.v) t
-      WHERE iter < {_CORE_CAP}
+      WHERE iter < {CORE_MAX_STEPS}
       GROUP BY iter, node)
     SELECT CAST(node AS BIGINT) AS node,
            CAST(val AS BIGINT) AS coreness
-    FROM c WHERE iter = {_CORE_CAP}
+    FROM c WHERE iter = {CORE_MAX_STEPS}
     """,
     tags=("graph", "analytics"),
 )
@@ -426,10 +425,10 @@ def q178(spark: SparkSession, sf: str) -> DataFrame:
     as O(rounds) shuffles instead).
 
     The oracle runs the SAME h-index iteration as a recursive CTE
-    (window inside the recursive term, capped at {_CORE_CAP}
-    iterations; the Spark side RAISES if it has not reached the
-    fixpoint by then, so a cap short of convergence can never
-    silently pass). Values, not just a flag: the full (node,
+    (window inside the recursive term, capped at CORE_MAX_STEPS
+    iterations, core_numbers' own step cap; the Spark side RAISES if it
+    has not reached the fixpoint by then, so a cap short of convergence
+    can never silently pass). Values, not just a flag: the full (node,
     coreness) table hash-checks — coreness spans 17-22 / 16-28 /
     10-27 at sf0.001/0.01/0.1, so the check is non-degenerate.
 
@@ -467,9 +466,7 @@ def q178(spark: SparkSession, sf: str) -> DataFrame:
             )
             .distinct()
         )
-        return built(
-            core_numbers(und, max_iter=_CORE_CAP).persist()
-        )
+        return built(core_numbers(und).persist())
 
     core = memo(spark, ("coreness", sf), build, label="coreness")
     return core.select(

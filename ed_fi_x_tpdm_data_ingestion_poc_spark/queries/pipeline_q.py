@@ -372,8 +372,10 @@ def q98(spark: SparkSession, sf: str) -> DataFrame:
     real DSv2 pushdown — the stub filters server-side and reports the
     filtered Total-Count, so only 25 rows ever cross the wire; asserted
     against the stub's request log in tests/test_rest_datasource.py).
-    Page partitions are planned from the probed count and fetched by
-    executors, same plan as q03's read_rest."""
+    Planning reads the first page with its Total-Count, and its rows ride
+    in the first partition; later pages come from the same page plan and
+    page walk as q03's read_rest, one partition each. Here the 25 rows
+    fit on the first page, so the read is one GET."""
     from ..sources.rest_datasource import register_rest_datasource
 
     server = _stub_server()

@@ -27,13 +27,15 @@ count, and tasks beyond the slot count never ran at the same time anyway.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
 from ..session import ship_package
-from ..sources.http import Client, OAuthConfig, fetch_token, resource_url
+from ..sources.http import Client, OAuthConfig, endpoint_url, resource_url
 
+OUTCOME_COLUMNS = ["key", "op", "status", "ok", "error"]
 OUTCOME_SCHEMA = "key string, op string, status int, ok boolean, error string"
 
 
@@ -45,37 +47,39 @@ class RestSink:
     timeout_sec: float = 30.0
 
 
-def _endpoint(sink: RestSink) -> str:
-    return f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
+def sink_client(sink: RestSink) -> Client:
+    """A client for one sink task; after a failed token fetch it starts
+    without a token, and the first 401 retries the fetch."""
+    try:
+        return Client.login(sink.auth, sink.timeout_sec)
+    except Exception:
+        return Client(sink.auth, sink.timeout_sec)
+
+
+def send_rows(client: Client, rows: Iterable, op: str, request) -> Iterator[tuple]:
+    """One request per row; yields one outcome (key, op, status, ok, error)
+    each, keyed by the row's first column. request(*row) gives (url,
+    method, body, headers)."""
+    for row in rows:
+        status, resp, _ = client.call(*request(*row))
+        ok = 200 <= status < 300
+        error = None if ok else resp[:500].decode(errors="replace")
+        yield str(row[0]), op, status, ok, error
 
 
 def _send_all(df: DataFrame, sink: RestSink, op: str, request) -> DataFrame:
-    """One request per row of `df`, from executor partitions; returns one
-    outcome row each (key, op, status, ok, error), keyed by the row's first
-    column. request(*row) gives (method, url, body, headers)."""
+    """send_rows over every row of `df`, from executor partitions, one
+    client (and token) per task; returns the outcome rows."""
     ship_package(df.sparkSession)
-    auth, timeout = sink.auth, sink.timeout_sec
 
     def send_partition(batches):
         import pandas as pd
 
-        client = Client(auth, timeout)
-        if auth is not None:
-            try:
-                client.token = fetch_token(auth, timeout)
-            except Exception:
-                pass  # start without a token; the first 401 retries the fetch
+        client = sink_client(sink)
         for pdf in batches:
-            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
-            for row in pdf.itertuples(index=False, name=None):
-                status, resp, _ = client.call(*request(*row))
-                ok = 200 <= status < 300
-                out["key"].append(str(row[0]))
-                out["op"].append(op)
-                out["status"].append(status)
-                out["ok"].append(ok)
-                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
-            yield pd.DataFrame(out)
+            rows = pdf.itertuples(index=False, name=None)
+            outcomes = list(send_rows(client, rows, op, request))
+            yield pd.DataFrame(outcomes, columns=OUTCOME_COLUMNS)
 
     slots = df.sparkSession.sparkContext.defaultParallelism
     return df.coalesce(slots).mapInPandas(send_partition, OUTCOME_SCHEMA)
@@ -88,7 +92,7 @@ def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str)
     docs must carry the natural key and the serialized JSON body
     (build with F.to_json(F.struct(...)) — ref R23).
     """
-    url = _endpoint(sink)
+    url = endpoint_url(sink.base_url, sink.path)
     return _send_all(
         docs.select(key_col, json_col), sink, "upsert",
         lambda key, body: (url, "POST", str(body).encode(), None),
@@ -97,7 +101,7 @@ def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str)
 
 def rest_delete(ids: DataFrame, sink: RestSink, *, id_col: str) -> DataFrame:
     """DELETE by resource id; outcome rows as in rest_upsert (ref R19)."""
-    base = _endpoint(sink)
+    base = endpoint_url(sink.base_url, sink.path)
     return _send_all(
         ids.select(id_col), sink, "delete",
         lambda rid: (resource_url(base, rid), "DELETE", None, None),
@@ -117,7 +121,7 @@ def rest_update(
     carries If-Match — a remote 412 (precondition failed) means the
     document changed since it was read, and is RECORDED like any other
     per-document failure."""
-    base = _endpoint(sink)
+    base = endpoint_url(sink.base_url, sink.path)
 
     def request(rid, body, etag=None):
         headers = {"If-Match": str(etag)} if etag is not None else None

@@ -1,8 +1,9 @@
 """The package's one HTTP client: the OAuth2 client-credentials grant
 (TokenRetriever.java:44-73), bearer requests, and the reference's "on 401
 refresh the token and retry once" rule (SisConnectorService.java:184-198),
-plus the Ed-Fi paging surface built on them (offset/limit URLs and the
-Total-Count probe).
+plus the Ed-Fi paging surface built on them: the first page with its
+Total-Count, the page plan derived from it, and the one page walk every
+REST reader uses.
 
 Executor code (mapInPandas closures, DataSource readers and writers) may
 import this module because session.ship_package zips the package onto
@@ -19,6 +20,7 @@ import json
 import urllib.error
 import urllib.parse
 import urllib.request
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 # the response header carrying an endpoint's row count (looked up
@@ -62,6 +64,11 @@ def _page_url(
     if total_count:
         q["totalCount"] = "true"
     return f"{endpoint}?{urllib.parse.urlencode(q)}"
+
+
+def endpoint_url(base_url: str, path: str) -> str:
+    """``base_url/path`` with exactly one slash between them."""
+    return f"{base_url.rstrip('/')}/{path.strip('/')}"
 
 
 def resource_url(endpoint: str, rid) -> str:
@@ -128,7 +135,8 @@ class Client:
     def get_page(
         self, endpoint: str, offset: int, limit: int, params: dict[str, str]
     ) -> list[dict]:
-        """One page of rows; any status but 200 raises."""
+        """One page of rows; any status but 200 raises. Its one caller is
+        iter_pages."""
         return self._get_rows(_page_url(endpoint, offset, limit, params))[0]
 
     def first_page(
@@ -144,9 +152,30 @@ class Client:
         count = hdrs.get(TOTAL_COUNT)
         return rows, None if count is None else int(count)
 
-    def total_count(self, endpoint: str, params: dict[str, str]) -> int | None:
-        """Probe (offset=0, limit=1, totalCount=true) for the row count;
-        None when the endpoint does not answer 200 with the count header."""
-        status, _, hdrs = self.call(_page_url(endpoint, 0, 1, params, total_count=True))
-        count = hdrs.get(TOTAL_COUNT) if status == 200 else None
-        return None if count is None else int(count)
+
+def iter_pages(
+    client: Client, endpoint: str, params: dict, start: int, stop: int | None, step: int
+) -> Iterator[list[dict]]:
+    """The pages of rows [start, stop) (stop None: to the end). Each asks
+    for min(step, stop - offset) rows and the next starts where its rows
+    end, since a server may cap `limit` below `step`; an empty page (or
+    step 0) ends the walk."""
+    offset = start
+    while step and (stop is None or offset < stop):
+        limit = step if stop is None else min(step, stop - offset)
+        page = client.get_page(endpoint, offset, limit, params)[:limit]
+        if not page:
+            return
+        yield page
+        offset += len(page)
+
+
+def page_plan(step: int, total: int, lo: int = 0, hi: int | None = None) -> list:
+    """(offset, take) of the pages after the first that cover rows [lo, hi)
+    (hi None: to the end) of a `total`-row endpoint, `step` rows apart:
+    the first page's row count. The first page, rows [0, step), is never
+    planned again."""
+    hi = total if hi is None else min(hi, total)
+    if not step:
+        return []
+    return [(o, min(step, hi - o)) for o in range(max(lo, step), hi, step)]

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
 
 @dataclass
@@ -38,39 +38,26 @@ class JdbcSource:
     options: dict[str, str] = field(default_factory=dict)
 
 
-def read_query(
-    spark: SparkSession,
-    src: JdbcSource,
-    sql: str,
-    *,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 1,
-) -> DataFrame:
-    """Run SQL on the remote RDBMS (ref R1 — the predicate/projection text is
-    pushed down by construction). With partitioning bounds, Spark issues
-    num_partitions range-sliced queries in parallel."""
+def _reader(spark: SparkSession, src: JdbcSource, **options: str) -> DataFrameReader:
+    """A jdbc reader on `src`'s url with `options`, its fetch size and
+    driver, then src.options (which win over the others)."""
     reader = (
         spark.read.format("jdbc")
         .option("url", src.url)
-        .option("query", sql)
-        .option("user", src.user)
-        .option("password", src.password)
+        .options(**options)
         .option("fetchsize", str(src.fetch_size))
     )
     if src.driver:
         reader = reader.option("driver", src.driver)
-    for k, v in src.options.items():
-        reader = reader.option(k, v)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    return reader.load()
+    return reader.options(**src.options)
+
+
+def read_query(spark: SparkSession, src: JdbcSource, sql: str) -> DataFrame:
+    """Run SQL on the remote RDBMS (ref R1 — the predicate/projection text is
+    pushed down by construction). Spark reads a query through one
+    connection: it rejects partitionColumn together with `query`, so a
+    parallel scan goes through read_table."""
+    return _reader(spark, src, query=sql, user=src.user, password=src.password).load()
 
 
 def read_table(
@@ -87,23 +74,13 @@ def read_table(
     num_partitions parallel connections each scanning one slice of
     partition_column. Filters/projections on the result push down into the
     remote SQL (visible as PushedFilters in .explain)."""
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", src.url)
-        .option("dbtable", dbtable)
-        .option("fetchsize", str(src.fetch_size))
-    )
-    if src.user:
-        reader = reader.option("user", src.user).option("password", src.password)
-    if src.driver:
-        reader = reader.option("driver", src.driver)
-    for k, v in src.options.items():
-        reader = reader.option(k, v)
+    creds = {"user": src.user, "password": src.password} if src.user else {}
+    reader = _reader(spark, src, dbtable=dbtable, **creds)
     if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
+        reader = reader.options(
+            partitionColumn=partition_column,
+            lowerBound=str(lower_bound),
+            upperBound=str(upper_bound),
+            numPartitions=str(num_partitions),
         )
     return reader.load()

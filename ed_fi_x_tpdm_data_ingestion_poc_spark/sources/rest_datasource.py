@@ -1,8 +1,8 @@
 """The paginated REST source as a Spark 4 Python DataSource —
 ``spark.read.format("edfi_rest")`` with real filter pushdown.
 
-Where ``sources/rest.py::read_rest`` is a helper function, this is the
-first-class integration: the reader participates in Catalyst planning, so
+It reads what ``sources/rest.py::read_rest`` reads, through the same
+first page, page plan and page walk (sources/http.py), and adds:
 
 * equality predicates PUSH DOWN into the REST query string — the Ed-Fi
   API's native filter surface (ref R17: equality-AND + offset/limit,
@@ -19,15 +19,14 @@ first-class integration: the reader participates in Catalyst planning, so
 * ``option("limit", n)`` / ``option("offset", n)`` plan only the pages
   covering [offset, offset+limit) instead of the whole collection —
   the reference's own paging surface (TeacherCandidatesApi.java:187-191);
-* pagination is planned as one InputPartition per page from the first
-  page and its Total-Count, stepping by the rows that page returns (as
-  ``read_rest`` does, so a server capping ``limit`` below ``page_size``
-  loses no rows), fetched in parallel by executors; endpoints that report
-  no count fall back to one sequential partition — complete, just not
-  parallel;
-* OAuth2 client-credentials + the reference's 401-refresh-retry pattern
-  run inside each partition read (TokenRetriever.java:44-73,
-  SisConnectorService.java:494-501).
+* planning logs in once and reads the first page with its Total-Count;
+  its rows in the window ride in the first partition, and each later
+  page is one partition fetched by an executor (without a count, the
+  first partition walks the rest — complete, just not parallel). The
+  token rides in the partitions: Spark pickles the reader before it
+  plans them. A 401 refreshes it (TokenRetriever.java:44-73,
+  SisConnectorService.java:494-501);
+* writes POST each row through sinks/rest_sink.py::send_rows.
 
 All HTTP goes through sources/http.py.
 """
@@ -35,8 +34,8 @@ All HTTP goes through sources/http.py.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
 from collections.abc import Iterator, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -51,37 +50,45 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..session import ship_package
-from .http import Client, OAuthConfig
+from ..sinks.rest_sink import RestSink, send_rows, sink_client
+from .http import Client, OAuthConfig, endpoint_url, iter_pages, page_plan
 
 
+def _auth(options: dict) -> OAuthConfig | None:
+    if "token_url" not in options:
+        return None
+    return OAuthConfig(
+        options["token_url"],
+        options.get("client_id", ""),
+        options.get("client_secret", ""),
+    )
+
+
+@dataclass
 class _Page(InputPartition):
-    def __init__(self, offset: int | None, take: int = 0):
-        self.offset = offset  # None -> sequential drain fallback
-        self.take = take  # rows this page holds (the page's limit)
+    """`rows`, fetched at planning, then the rows [start, stop) (stop None:
+    to the end) walked page by page, `step` rows apart, with `token`."""
+
+    token: str | None
+    start: int
+    stop: int | None
+    step: int
+    rows: Sequence[tuple] = ()
 
 
 class RestDataSourceReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
-        self.fields = [f.name for f in schema.fields]
-        self.endpoint = (
-            options["base_url"].rstrip("/") + "/" + options.get("path", "/").strip("/")
-        )
+        self.fields = schema.fieldNames()
+        self.endpoint = endpoint_url(options["base_url"], options.get("path", "/"))
         self.page_size = int(options.get("page_size", "100"))
         self.timeout = float(options.get("timeout_sec", "30"))
-        self.auth = None
-        if "token_url" in options:
-            self.auth = OAuthConfig(
-                options["token_url"],
-                options.get("client_id", ""),
-                options.get("client_secret", ""),
-            )
+        self.auth = _auth(options)
         self.params: dict[str, str] = {}
-        # user-declared page window (R17 offset/limit surface): plan only
-        # the pages covering [opt_offset, opt_offset + opt_limit)
-        self.opt_offset = int(options.get("offset", "0"))
-        self.opt_limit = (
-            int(options["limit"]) if "limit" in options else None
-        )
+        # user-declared window (R17 offset/limit surface,
+        # TeacherCandidatesApi.java:187-191): plan only the pages covering
+        # rows [lo, hi), so a LIMIT-style read fetches ceil(n/step) pages
+        self.lo = int(options.get("offset", "0"))
+        self.hi = self.lo + int(options["limit"]) if "limit" in options else None
 
     # -- filter pushdown (R17) ----------------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -101,56 +108,32 @@ class RestDataSourceReader(DataSourceReader):
                 self.params[f.attribute[0]] = v
             yield f
 
-    # -- http ----------------------------------------------------------
-    def _client(self) -> Client:
-        return Client.login(self.auth, self.timeout)
-
-    def _fetch(self, client: Client, offset: int, limit: int) -> list[dict]:
-        """GET one page; a 401-refreshed token stays on `client`, so later
-        pages do not each pay a 401 round-trip plus a token fetch."""
-        return client.get_page(self.endpoint, offset, limit, self.params)
-
-    def _total(self, client: Client) -> int | None:
-        return client.total_count(self.endpoint, self.params)
-
-    def _drain(self, client: Client, start: int, stop: int | None) -> Iterator[tuple]:
-        """The rows in [start, stop) (stop None: to the end), page by page.
-        Each page starts where the rows of the one before end, since a
-        server may cap `limit` below page_size; an empty page ends it."""
-        offset = start
-        while stop is None or offset < stop:
-            limit = self.page_size if stop is None else min(self.page_size, stop - offset)
-            page = self._fetch(client, offset, limit)[:limit]
-            if not page:
-                return
-            for r in page:
-                yield tuple(r.get(f) for f in self.fields)
-            offset += len(page)
-
     # -- planning + read ------------------------------------------------
+    def _tuples(self, rows: list[dict]) -> list[tuple]:
+        return [tuple(r.get(f) for f in self.fields) for r in rows]
+
+    def _walk(self, client: Client, start: int, stop: int | None, step: int):
+        """The rows [start, stop) as tuples, page by page; a 401-refreshed
+        token stays on `client` for the later pages."""
+        for page in iter_pages(client, self.endpoint, self.params, start, stop, step):
+            yield from self._tuples(page)
+
     def partitions(self) -> Sequence[InputPartition]:
-        first, total = self._client().first_page(
-            self.endpoint, self.page_size, self.params
-        )
-        step = len(first)
-        if total is None or not step:
-            return [_Page(None)]
-        # plan only the pages covering the declared [offset, offset+limit)
-        # window — a LIMIT-style read fetches ceil(n/step) pages, not the
-        # whole collection (R17, TeacherCandidatesApi.java:187-191)
-        lo = min(self.opt_offset, total)
-        hi = total if self.opt_limit is None else min(total, lo + self.opt_limit)
-        pages = [_Page(o, take=min(step, hi - o)) for o in range(lo, hi, step)]
-        return pages or [_Page(lo, take=0)]
+        client = Client.login(self.auth, self.timeout)
+        first, total = client.first_page(self.endpoint, self.page_size, self.params)
+        step, lo, hi, tok = len(first), self.lo, self.hi, client.token
+        head = self._tuples(first[lo:hi])
+        if total is None:
+            return [_Page(tok, lo + len(head), hi, step, head)]
+        pages = page_plan(step, total, lo, hi)
+        return [_Page(tok, 0, 0, step, head)] + [
+            _Page(tok, o, o + take, step) for o, take in pages
+        ]
 
     def read(self, partition: _Page) -> Iterator[tuple]:
-        if partition.offset is None:
-            stop = None if self.opt_limit is None else self.opt_offset + self.opt_limit
-            yield from self._drain(self._client(), self.opt_offset, stop)
-        elif partition.take:
-            page = self._fetch(self._client(), partition.offset, partition.take)
-            for r in page[: partition.take]:
-                yield tuple(r.get(f) for f in self.fields)
+        yield from partition.rows
+        client = Client(self.auth, self.timeout, partition.token)
+        yield from self._walk(client, partition.start, partition.stop, partition.step)
 
 
 class RestDataSource(DataSource):
@@ -234,34 +217,30 @@ class RestStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"offset": 0}
 
-    def _total(self) -> int:
-        total = self.inner._total(self.inner._client())
-        if total is None:
-            raise OSError("REST count probe got no Total-Count; cannot stream")
-        return total
-
-    def _slice(self, start: int, end: int) -> tuple[list[tuple], int]:
-        """Fetch rows in [start, end); returns (rows, reached) where
-        `reached` is the offset ACTUALLY consumed. A server can return a
-        short page below its own advertised Total-Count (concurrent
-        delete between the probe and the page fetch) — committing the
-        probed count then would permanently skip the rows in between, so
-        the caller commits `reached`, and the next poll re-reads from
-        there."""
-        rows = list(self.inner._drain(self.inner._client(), start, end))
-        return rows, start + len(rows)
+    def _slice(self, client: Client, start: int, end: int) -> list[tuple]:
+        """The rows in [start, end). A server can return a short page below
+        its own advertised Total-Count (concurrent delete between the count
+        and the page fetch), so the offset actually reached is start plus
+        the rows returned — committing the counted total instead would
+        permanently skip the rows in between."""
+        r = self.inner
+        return list(r._walk(client, start, end, r.page_size))
 
     def read(self, start: dict):
         # rows are prefetched driver-side and PICKLED by the engine —
         # must be a concrete list, not a generator. Commit the offset
-        # actually reached, never the probed total (see _slice).
-        end = max(self._total(), start["offset"])
-        rows, reached = self._slice(start["offset"], end)
-        return rows, {"offset": reached}
+        # actually reached, never the counted total (see _slice).
+        r = self.inner
+        client = Client.login(r.auth, r.timeout)
+        _, total = client.first_page(r.endpoint, 1, r.params)
+        if total is None:
+            raise OSError("REST first page got no Total-Count; cannot stream")
+        rows = self._slice(client, start["offset"], max(total, start["offset"]))
+        return rows, {"offset": start["offset"] + len(rows)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        rows, _ = self._slice(start["offset"], end["offset"])
-        return rows
+        client = Client.login(self.inner.auth, self.inner.timeout)
+        return self._slice(client, start["offset"], end["offset"])
 
 
 @dataclass
@@ -285,24 +264,29 @@ class RestDataSourceWriter(DataSourceWriter):
     mirroring sinks/rest_sink.py's error-accumulation mode."""
 
     def __init__(self, schema: StructType, options: dict):
-        self.inner = RestDataSourceReader(schema, options)
-        self.best_effort = (
-            str(options.get("best_effort", "false")).lower() == "true"
+        self.sink = RestSink(
+            options["base_url"],
+            options.get("path", "/"),
+            _auth(options),
+            float(options.get("timeout_sec", "30")),
         )
+        self.best_effort = str(options.get("best_effort", "false")).lower() == "true"
 
     def write(self, rows) -> _Posted:
-        r = self.inner
-        client = r._client()
+        url = endpoint_url(self.sink.base_url, self.sink.path)
+        bodies = ((json.dumps(row.asDict(), default=str),) for row in rows)
+        outcomes = send_rows(
+            sink_client(self.sink), bodies, "upsert",
+            lambda body: (url, "POST", body.encode(), None),
+        )
         ok = failed = 0
-        for row in rows:
-            body = json.dumps(row.asDict(), default=str).encode()
-            status, resp, _ = client.call(r.endpoint, "POST", body)
-            if 200 <= status < 300:
+        for _, _, status, good, error in outcomes:
+            if good:
                 ok += 1
             elif self.best_effort:
                 failed += 1
             else:
-                raise OSError(f"REST POST {r.endpoint}: HTTP {status}: {resp[:200]!r}")
+                raise OSError(f"REST POST {url}: HTTP {status}: {error[:200]!r}")
         return _Posted(ok=ok, failed=failed)
 
     def commit(self, messages) -> None:

@@ -23,6 +23,10 @@ def stub():
         yield s
 
 
+def _offsets(requests):
+    return sorted(int(q.split("offset=")[1].split("&")[0]) for q in requests)
+
+
 def _reader(spark, stub):
     register_rest_datasource(spark)
     return (
@@ -37,13 +41,14 @@ def _reader(spark, stub):
 
 def test_equality_filter_pushed_to_server(spark, stub):
     """The EqualTo predicate must reach the REST query string: the stub
-    filters server-side, so every data request carries grp=3 and only the
-    25 matching rows cross the wire."""
+    filters server-side, so every request (the first page with its count
+    included) carries grp=3 and only the 25 matching rows cross the
+    wire."""
     stub.get_requests.clear()
     rows = _reader(spark, stub).filter(F.col("grp") == 3).collect()
     assert sorted(r.id for r in rows) == list(range(3, 250, 10))
-    data_reqs = [q for q in stub.get_requests if "totalCount" not in q]
-    assert data_reqs and all("grp=3" in q for q in data_reqs), data_reqs
+    reqs = list(stub.get_requests)
+    assert reqs and all("grp=3" in q for q in reqs), reqs
 
 
 def test_unsupported_filter_still_correct(spark, stub):
@@ -56,17 +61,13 @@ def test_unsupported_filter_still_correct(spark, stub):
 
 
 def test_pages_planned_from_total_count(spark, stub):
-    """Unfiltered read: 250 rows at page size 100 -> 3 page partitions,
-    each fetched with its own offset."""
+    """Unfiltered read: 250 rows at page size 100 -> 3 pages, each fetched
+    once: the first at planning (with its count), whose rows ride in the
+    first partition, and the other two by their own partitions."""
     stub.get_requests.clear()
     df = _reader(spark, stub)
     assert df.count() == 250
-    offsets = sorted(
-        int(q.split("offset=")[1].split("&")[0])
-        for q in stub.get_requests
-        if "totalCount" not in q
-    )
-    assert offsets == [0, 100, 200]
+    assert _offsets(stub.get_requests) == [0, 100, 200]
 
 
 def test_combined_pushed_and_residual(spark, stub):
@@ -140,7 +141,7 @@ def test_pushed_filter_reapplied_on_nonconforming_server(spark):
         # server returned all 50 rows; Spark's re-check keeps only the 5
         assert sorted(r.id for r in got) == list(range(3, 50, 10))
         assert any(
-            "grp=3" in q for q in s.get_requests if "totalCount" not in q
+            "grp=3" in q for q in s.get_requests
         )  # the param WAS sent — pushdown attempted, just not honored
 
 
@@ -159,12 +160,7 @@ def test_limit_offset_options_fetch_only_needed_pages(spark, stub):
     )
     rows = df.collect()
     assert sorted(r.id for r in rows) == list(range(120))
-    offsets = sorted(
-        int(q.split("offset=")[1].split("&")[0])
-        for q in stub.get_requests
-        if "totalCount" not in q
-    )
-    assert offsets == [0, 100]  # 2 pages for 120 rows, not 3
+    assert _offsets(stub.get_requests) == [0, 100]  # 2 pages for 120 rows, not 3
 
     stub.get_requests.clear()
     df2 = (
@@ -185,35 +181,42 @@ def test_limit_offset_options_fetch_only_needed_pages(spark, stub):
     assert offsets == [200]
 
 
-def test_refreshed_token_propagates_across_pages():
-    """Under hard token expiry (tok-1 ALWAYS 401s), a multi-page drain
+def test_refreshed_token_propagates_across_pages(spark):
+    """Under hard token expiry (tok-1 ALWAYS 401s), a multi-page read
     must pay exactly ONE refresh: the token returned by the first page's
-    retry is reused by every later page."""
+    retry is reused by every later page — carried to the executors in the
+    planned partitions, and kept by the stream's sequential walk."""
     from pyspark.sql.types import StructType
 
     from ed_fi_x_tpdm_data_ingestion_poc_spark.sources.rest_datasource import (
-        RestDataSourceReader,
-        _Page,
+        RestStreamReader,
     )
 
     rows = [{"id": i, "name": f"r{i}"} for i in range(10)]
+    opts = {"path": "/items", "page_size": "3", "client_id": "c", "client_secret": "x"}
+    register_rest_datasource(spark)
     with StubRestServer(
         rows, require_auth=True, reject_tokens_below=2
     ) as s:
-        reader = RestDataSourceReader(
-            StructType.fromDDL("id long, name string"),
-            {
-                "base_url": s.url,
-                "path": "/items",
-                "page_size": "3",
-                "token_url": s.token_url,
-                "client_id": "c",
-                "client_secret": "x",
-            },
+        got = (
+            spark.read.format("edfi_rest")
+            .schema("id long, name string")
+            .options(base_url=s.url, token_url=s.token_url, **opts)
+            .load()
+            .collect()
         )
-        got = list(reader.read(_Page(None)))
         assert len(got) == 10  # 4 pages
         # tok-1 (initial) + tok-2 (one refresh) — NOT one per page
+        assert s.token_requests == 2
+    with StubRestServer(
+        rows, require_auth=True, reject_tokens_below=2
+    ) as s:
+        reader = RestStreamReader(
+            StructType.fromDDL("id long, name string"),
+            {"base_url": s.url, "token_url": s.token_url, **opts},
+        )
+        got, _ = reader.read(reader.initialOffset())
+        assert len(got) == 10  # 4 pages
         assert s.token_requests == 2
 
 
@@ -290,12 +293,11 @@ def test_server_limit_cap_below_page_size_loses_no_rows(spark, stub):
     """The stub caps `limit` at 100. With page_size=500 every page holds
     100 rows, so pages must step by the rows the first page returned,
     not by page_size — in the planned read, inside an offset/limit
-    window, and in the sequential fallback."""
+    window, and in the stream's sequential walk."""
     from pyspark.sql.types import StructType
 
     from ed_fi_x_tpdm_data_ingestion_poc_spark.sources.rest_datasource import (
-        RestDataSourceReader,
-        _Page,
+        RestStreamReader,
     )
 
     def read(**opts):
@@ -313,8 +315,9 @@ def test_server_limit_cap_below_page_size_loses_no_rows(spark, stub):
     register_rest_datasource(spark)
     assert read() == list(range(250))
     assert read(offset="30", limit="150") == list(range(30, 180))
-    reader = RestDataSourceReader(
+    reader = RestStreamReader(
         StructType.fromDDL("id long, name string, grp long"),
         {"base_url": stub.url, "path": "/items", "page_size": "500"},
     )
-    assert [row[0] for row in reader.read(_Page(None))] == list(range(250))
+    rows, _ = reader.read(reader.initialOffset())
+    assert [row[0] for row in rows] == list(range(250))
