@@ -132,7 +132,6 @@ def bigram_nll(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    counts: DataFrame | None = None,
 ) -> DataFrame:
     """(id, n_bigrams, nll): per-document mean negative log-likelihood
     under the corpus bigram LM with add-one smoothing —
@@ -142,8 +141,8 @@ def bigram_nll(
     recomputable cross-engine; ROUND(.,6) absorbs summation-order
     noise).
 
-    Plan: the self-scoring form (counts=None) is GATED on input size
-    (_window_form_ok, ADVICE r18). Small inputs use the round-17
+    Plan: the form is GATED on input size (_window_form_ok, ADVICE
+    r18). Small inputs use the round-17
     window form (guide §2.4): the model IS an aggregate of the
     document bigram stream, so c12 and c1 come from two count windows
     over ONE exploded stream instead of a separate counts-aggregate
@@ -156,13 +155,10 @@ def bigram_nll(
     partition in one WindowExec task — a hot stopword context becomes
     a single-task sort+spill straggler at corpus scale — while the
     groupBy model does map-side partial aggregation and never shuffles
-    the corpus pre-aggregation. Both forms compute identical values.
-
-    With a FOREIGN `counts` table the fold-then-join shape is always
-    used (the model is not derivable from `docs` there)."""
+    the corpus pre-aggregation. Both forms compute identical values."""
     from pyspark.sql.window import Window
 
-    if counts is None and _window_form_ok(docs):
+    if _window_form_ok(docs):
         db = docs.select(
             F.col(id_col).alias("id"),
             F.explode(_bigram_pairs(text_col)).alias("p"),
@@ -185,13 +181,10 @@ def bigram_nll(
                 6,
             ).alias("nll"),
         )
-    if counts is None:
-        # large self-scoring input: train the vocab-bounded model via
-        # groupBy (map-side partial agg; the corpus never shuffles
-        # pre-aggregation) and fall through to the fold-then-join
-        # score pass — the inner join is lossless for self-scoring
-        # (every doc bigram is in its own corpus counts)
-        counts = bigram_counts(docs, text_col=text_col)
+    # large input: train the vocab-bounded model via groupBy (map-side
+    # partial agg; the corpus never shuffles pre-aggregation), then the
+    # fold-then-join score pass
+    counts = bigram_counts(docs, text_col=text_col)
     v = counts.select(F.count_distinct("w2").alias("v"))
     c1w = Window.partitionBy("w1")
     model = counts.withColumn(
@@ -219,51 +212,6 @@ def bigram_nll(
     )
 
 
-def bigram_nll_under(
-    docs: DataFrame,
-    counts: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, n_bigrams, nll) under a FOREIGN bigram model — the `counts`
-    table need not come from `docs`, so unseen pairs and unseen
-    contexts must survive: add-one smoothing degrades gracefully to
-    p = (0+1)/(c1+V) for an unseen pair and 1/(0+V) for an unseen
-    context (LEFT joins + coalesce, where bigram_nll's inner join is
-    valid only for self-scoring). This is what importance-weighting
-    needs: every document scores under BOTH the raw and the target
-    model, whichever corpus it came from. Same plan shape as
-    bigram_nll: vocabulary-bounded model folds (c1, V) in before the
-    single corpus-side join."""
-    from pyspark.sql.window import Window
-
-    v = counts.select(F.count_distinct("w2").alias("v"))
-    c1w = Window.partitionBy("w1")
-    model = counts.withColumn("c1", F.sum("c12").over(c1w))
-    c1tab = model.select("w1", "c1").distinct()
-    doc_bigrams = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(_bigram_pairs(text_col)).alias("p"),
-    ).select("id", "p.w1", "p.w2")
-    scored = (
-        doc_bigrams.join(model.select("w1", "w2", "c12"), ["w1", "w2"], "left")
-        .join(c1tab, ["w1"], "left")
-        .crossJoin(F.broadcast(v))
-        .select(
-            "id",
-            (
-                (F.coalesce(F.col("c12"), F.lit(0)) + 1)
-                / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("v"))
-            ).alias("p"),
-        )
-    )
-    return scored.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.round(-F.sum(F.log("p")) / F.count(F.lit(1)), 6).alias("nll"),
-    )
-
-
 def bigram_nll_dual(
     docs: DataFrame,
     curated: Column,
@@ -274,16 +222,17 @@ def bigram_nll_dual(
     """(id, nll_raw, nll_tgt): per-document surprisal under BOTH the
     whole-corpus bigram model and the curated-subset model — the two
     quantities DSIR importance weighting subtracts — in ONE fused plan
-    instead of two bigram_counts + two bigram_nll_under graphs (which
-    cost four corpus tokenize+explode passes and two corpus-side joins).
+    instead of training two bigram_counts models and scoring every
+    document under each with LEFT joins (four corpus tokenize+explode
+    passes and two corpus-side joins).
 
     Here the corpus explodes twice total (once to train, once to score)
     and the exploded stream joins ONCE: the combined model table carries
     (c12_raw, c12_tgt, c1_raw, c1_tgt) per bigram, where the target
     columns are conditional aggregates of the SAME groupBy — a bigram
     outside the curated subset gets c12_tgt = 0 and c1_tgt = the curated
-    mass of its context, which is exactly bigram_nll_under's LEFT-join
-    add-one smoothing, now for free on the inner join that is valid
+    mass of its context, which is exactly the add-one smoothing a
+    LEFT join against the curated model alone would give, now for free on the inner join that is valid
     against the raw model (every corpus bigram is in it). V_raw / V_tgt
     fold to one broadcast scalar row off the vocab-bounded model. At
     scale: model size is vocab^2-bounded (AQE broadcasts it when small),

@@ -10,10 +10,17 @@ only scores its bucket's candidates. Dot products are JVM-side (zip_with +
 aggregate) — no Python, no UDF, vectorizable by codegen; at 100 TB the N
 side stays partitioned and only the compact (id, bucket) index shuffles.
 
-Both ANN paths split INDEX BUILD from QUERY: build_hyperplane_index /
-train_ivf_codebook + build_ivf_index produce a persistable corpus index
-that is computed once and queried many times — the production ANN
-lifecycle (and how the declared queries amortize it across bench runs).
+All four ANN paths split INDEX BUILD from QUERY: the train_* / build_* /
+pq_encode / pq_query_luts functions produce persistable codebooks, corpus
+indexes and query indexes that are computed once and queried many times
+— the production ANN lifecycle (and how the declared queries amortize it
+across bench runs). The *_topk searches and semantic_dup_pairs only read
+the artifacts they are handed; they never train or build.
+
+The Arrow encoders share one copy of each numpy kernel (_decode,
+_unit_rows, _top_cells, _nearest_codeword, _adc_luts). Executor closures
+call them by reference: session.ship_package puts this package on every
+worker.
 """
 
 from __future__ import annotations
@@ -37,13 +44,83 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
 
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(qid, nid, cosine, rank) top-k per query over (qid, nid, qv, nv)
+    candidate pairs. Rank is computed on the ROUNDED cosine (6 dp) with
+    id tie-break, making the result engine-deterministic."""
+    scored = pairs.select(
+        "qid", "nid", F.round(_dot(F.col("qv"), F.col("nv")), 6).alias("cosine")
+    )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nid", "cosine", "rank")
     )
+
+
+# ------------------------------------------------- Arrow-batch kernels --
+
+
+def _decode(pdf) -> np.ndarray:
+    """The batch's `v` column as an (n, dim) float64 matrix. A null or
+    ragged vector raises ValueError naming its row's `id`; numpy alone
+    would only report an inhomogeneous shape."""
+    rows = [None if v is None else np.asarray(v, dtype="float64") for v in pdf["v"]]
+    dim = next((len(r) for r in rows if r is not None), 0)
+    for i, r in zip(pdf["id"], rows):
+        if r is None or len(r) != dim:
+            what = "null" if r is None else f"{len(r)}-dim, not {dim}-dim"
+            raise ValueError(f"vector of id {i} is {what}")
+    return np.asarray(rows)
+
+
+def _unit_rows(x: np.ndarray, ids) -> np.ndarray:
+    """Rows of x scaled to unit L2 norm. A zero vector raises ValueError
+    naming its id (from `ids`, aligned with x) — its cosine is undefined,
+    and NaN distances would silently encode it as codeword 0. The JVM
+    _normalized fails on the same row (DIVIDE_BY_ZERO under ANSI)."""
+    norm = np.sqrt((x * x).sum(axis=1, keepdims=True))
+    zero = np.flatnonzero(norm[:, 0] == 0)
+    if len(zero):
+        raise ValueError(f"vector of id {list(ids)[zero[0]]} has zero norm")
+    return x / norm
+
+
+def _top_cells(sims: np.ndarray, probes: int) -> np.ndarray:
+    """(n, min(probes, n_cells)) indexes of the most similar cells per row."""
+    return np.argsort(-sims, axis=1)[:, :probes]
+
+
+def _nearest_codeword(xs: np.ndarray, book: np.ndarray) -> np.ndarray:
+    """Index of the L2-nearest row of `book` for each row of xs."""
+    return np.argmin(((xs[:, None, :] - book[None, :, :]) ** 2).sum(axis=2), axis=1)
+
+
+def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) int32 codes: the nearest codeword per contiguous subspace."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype="int32")
+    for s in range(m):
+        codes[:, s] = _nearest_codeword(x[:, s * dsub : (s + 1) * dsub], books[s])
+    return codes
+
+
+def _adc_luts(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m*k) ADC tables lut[s*k + j] = <x_sub_s, books[s][j]>."""
+    m, k, dsub = books.shape
+    luts = np.empty((len(x), m * k))
+    for s in range(m):
+        luts[:, s * k : (s + 1) * k] = x[:, s * dsub : (s + 1) * dsub] @ books[s].T
+    return luts
+
+
+def _id_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The (id long, v) input every Arrow encoder reads."""
+    return df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
+
+
+# ------------------------------------------------------------ searches --
 
 
 def cosine_topk(
@@ -57,22 +134,29 @@ def cosine_topk(
     """Exact cosine top-k: (query_id, neighbor_id, cosine, rank).
 
     queries has the same (id_col, vec_col) shape; the query side is
-    broadcast so the corpus never shuffles. Rank is computed on the ROUNDED
-    cosine (6 dp) with id tie-break, making the result engine-deterministic.
-    """
+    broadcast so the corpus never shuffles."""
     corpus = _normalized(emb, id_col, vec_col)
     qs = _normalized(queries, id_col, vec_col).select(
         F.col("id").alias("qid"), F.col("nv").alias("qv")
     )
-    scored = (
-        corpus.join(F.broadcast(qs), F.col("id") != F.col("qid"))
-        .select(
-            "qid",
-            F.col("id").alias("nid"),
-            F.round(_dot(F.col("qv"), F.col("nv")), 6).alias("cosine"),
-        )
+    pairs = corpus.join(F.broadcast(qs), F.col("id") != F.col("qid")).select(
+        "qid", F.col("id").alias("nid"), "qv", "nv"
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(pairs, k)
+
+
+def _bucket_topk(
+    corpus_index: DataFrame, query_index: DataFrame, key: str, k: int
+) -> DataFrame:
+    """Top-k over the corpus vectors sharing a `key` bucket with the query;
+    candidates found in several buckets are scored once."""
+    cands = (
+        corpus_index.join(F.broadcast(query_index), on=key)
+        .filter(F.col("id") != F.col("qid"))
+        .select("qid", F.col("id").alias("nid"), "qv", "nv")
+        .dropDuplicates(["qid", "nid"])
+    )
+    return _rank_topk(cands, k)
 
 
 def hyperplane_planes(dim: int, tables: int, bits: int, seed: int = 42) -> np.ndarray:
@@ -86,18 +170,17 @@ def _hyperplane_buckets(
 ) -> DataFrame:
     """(id, bk) bucket keys: sign patterns of X @ planes per hash table,
     computed per Arrow batch in numpy (tables*bits interpreted per-row dot
-    products measured ~10x slower); sign is scale-invariant so raw vectors
-    need no normalization."""
+    products measured ~10x slower). Sign is scale-invariant, so the rows
+    stay unnormalized: normalizing could flip the sign bit of a near-zero
+    dot product and move the vector to another bucket."""
     tables, bits, dim = planes.shape
     p = planes.reshape(tables * bits, dim)
 
     def key_batches(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            x = np.asarray([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            signs = (x @ p.T) > 0  # (n, tables*bits)
+            signs = (_decode(pdf) @ p.T) > 0  # (n, tables*bits)
             out_ids, out_keys = [], []
             for t in range(tables):
                 key = np.full(len(pdf), t << bits, dtype="int64")
@@ -109,9 +192,7 @@ def _hyperplane_buckets(
                 {"id": np.concatenate(out_ids), "bk": np.concatenate(out_keys)}
             )
 
-    return df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(key_batches, "id long, bk long")
+    return _id_vectors(df, id_col, vec_col).mapInPandas(key_batches, "id long, bk long")
 
 
 def build_hyperplane_index(
@@ -154,48 +235,17 @@ def build_hyperplane_queries(
 
 
 def hyperplane_lsh_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    tables: int = 8,
-    bits: int = 6,
-    seed: int = 42,
-    corpus_index: DataFrame | None = None,
-    query_index: DataFrame | None = None,
+    corpus_index: DataFrame, query_index: DataFrame, *, k: int = 10
 ) -> DataFrame:
-    """Approximate cosine top-k via sign-random-projection LSH.
+    """Approximate cosine top-k via sign-random-projection LSH over a
+    build_hyperplane_index corpus and build_hyperplane_queries queries
+    built with the same (dim, tables, bits, seed).
 
-    Each vector gets `tables` bucket keys (one per hash table); a query
-    scores only vectors sharing a bucket in any table. Candidates are exact-
-    scored and re-ranked, so precision is exact and only recall is
-    approximate (more tables/fewer bits => higher recall, more candidates).
-
-    corpus_index: pre-built index from build_hyperplane_index (same
-    dim/tables/bits/seed); None builds it inline.
-    """
-    if corpus_index is None:
-        corpus_index = build_hyperplane_index(
-            emb, id_col=id_col, vec_col=vec_col,
-            dim=dim, tables=tables, bits=bits, seed=seed,
-        )
-    qs = query_index if query_index is not None else build_hyperplane_queries(
-        queries, id_col=id_col, vec_col=vec_col,
-        dim=dim, tables=tables, bits=bits, seed=seed,
-    )
-    cands = (
-        corpus_index.join(F.broadcast(qs), on="bk")
-        .filter(F.col("id") != F.col("qid"))
-        .select("qid", F.col("id").alias("nid"), "qv", "nv")
-        .dropDuplicates(["qid", "nid"])
-    )
-    scored = cands.select(
-        "qid", "nid", F.round(_dot(F.col("qv"), F.col("nv")), 6).alias("cosine")
-    )
-    return _rank_topk(scored, k)
+    Each vector has one bucket key per hash table; a query scores only
+    vectors sharing a bucket in any table. Candidates are exact-scored
+    and re-ranked, so precision is exact and only recall is approximate
+    (more tables/fewer bits => higher recall, more candidates)."""
+    return _bucket_topk(corpus_index, query_index, "bk", k)
 
 
 def train_ivf_codebook(
@@ -233,21 +283,16 @@ def _ivf_assign(
     bc = df.sparkSession.sparkContext.broadcast(codebook)
 
     def batches(it):
-        import numpy as np
         import pandas as pd
 
         cm = bc.value
         for pdf in it:
-            x = np.asarray([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            x = x / np.sqrt((x * x).sum(axis=1, keepdims=True))
-            sims = x @ cm.T  # (n, n_centroids)
-            top = np.argsort(-sims, axis=1)[:, :probes]
-            ids = np.repeat(pdf["id"].to_numpy(), probes)
+            x = _unit_rows(_decode(pdf), pdf["id"])
+            top = _top_cells(x @ cm.T, probes)
+            ids = np.repeat(pdf["id"].to_numpy(), top.shape[1])
             yield pd.DataFrame({"id": ids, "cell": top.ravel()})
 
-    return df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(batches, "id long, cell int")
+    return _id_vectors(df, id_col, vec_col).mapInPandas(batches, "id long, cell int")
 
 
 def build_ivf_index(
@@ -287,57 +332,18 @@ def build_ivf_queries(
 
 
 def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 6,
-    n_assign: int = 2,
-    kmeans_iters: int = 5,
-    train_sample: int = 4096,
-    seed: int = 7,
-    codebook: np.ndarray | None = None,
-    corpus_index: DataFrame | None = None,
-    query_index: DataFrame | None = None,
+    corpus_index: DataFrame, query_index: DataFrame, *, k: int = 10
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: partition the corpus into
-    n_centroids cells via a spherical-k-means codebook, search only the
-    n_probe cells nearest each query, exact-score the candidates.
+    """IVF (inverted-file) approximate top-k over a build_ivf_index corpus
+    and build_ivf_queries queries sharing one train_ivf_codebook: search
+    only the cells each query probes, exact-score the candidates.
 
-    Recall dials: trained codebook (train_ivf_codebook), soft assignment
-    (n_assign), probe count (n_probe). Precision is exact — candidates are
-    rescored with true cosine. Compared to hyperplane LSH the codebook
-    adapts to the data distribution; the cost is training and a
-    re-buildable index, the standard IVF trade.
-
-    codebook/corpus_index: pre-built artifacts (train once, query many);
-    None trains/builds inline.
-    """
-    if codebook is None:
-        codebook = train_ivf_codebook(
-            emb, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
-            kmeans_iters=kmeans_iters, train_sample=train_sample, seed=seed,
-        )
-    if corpus_index is None:
-        corpus_index = build_ivf_index(
-            emb, codebook, id_col=id_col, vec_col=vec_col, n_assign=n_assign
-        )
-    qs = query_index if query_index is not None else build_ivf_queries(
-        queries, codebook, id_col=id_col, vec_col=vec_col, n_probe=n_probe
-    )
-    cands = (
-        corpus_index.join(F.broadcast(qs), on="cell")
-        .filter(F.col("id") != F.col("qid"))
-        .select("qid", F.col("id").alias("nid"), "qv", "nv")
-        .dropDuplicates(["qid", "nid"])
-    )
-    scored = cands.select(
-        "qid", "nid", F.round(_dot(F.col("qv"), F.col("nv")), 6).alias("cosine")
-    )
-    return _rank_topk(scored, k)
+    Recall dials live in the artifacts: a trained codebook, soft
+    assignment (n_assign), probe count (n_probe). Precision is exact —
+    candidates are rescored with true cosine. Compared to hyperplane LSH
+    the codebook adapts to the data distribution; the cost is training
+    and a re-buildable index, the standard IVF trade."""
+    return _bucket_topk(corpus_index, query_index, "cell", k)
 
 
 def recall_at_k(
@@ -400,8 +406,7 @@ def _train_sample_matrix(
         .limit(train_sample)
         .toPandas()
     )
-    x = np.asarray([np.asarray(v, dtype="float64") for v in sample_pdf["v"]])
-    return x / np.sqrt((x * x).sum(axis=1, keepdims=True))
+    return _unit_rows(_decode(sample_pdf), sample_pdf["id"])
 
 
 def _kmeans_subspaces(
@@ -419,8 +424,7 @@ def _kmeans_subspaces(
         xs = x[:, s * dsub : (s + 1) * dsub]
         c = xs[:k].copy()
         for _ in range(iters):
-            d2 = ((xs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            assign_idx = np.argmin(d2, axis=1)
+            assign_idx = _nearest_codeword(xs, c)
             for j in range(k):
                 members = xs[assign_idx == j]
                 if len(members):
@@ -443,26 +447,16 @@ def pq_encode(
     bc = emb.sparkSession.sparkContext.broadcast(codebooks)
 
     def batches(it):
-        import numpy as np
         import pandas as pd
 
         books = bc.value
-        m, _, dsub = books.shape
         for pdf in it:
-            x = np.asarray([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            x = x / np.sqrt((x * x).sum(axis=1, keepdims=True))
-            codes = np.empty((len(x), m), dtype="int32")
-            for s in range(m):
-                xs = x[:, s * dsub : (s + 1) * dsub]
-                d2 = ((xs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {"id": pdf["id"].to_numpy(), "codes": list(codes)}
-            )
+            codes = _pq_codes(_unit_rows(_decode(pdf), pdf["id"]), books)
+            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "codes": list(codes)})
 
-    return emb.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(batches, "id long, codes array<int>")
+    return _id_vectors(emb, id_col, vec_col).mapInPandas(
+        batches, "id long, codes array<int>"
+    )
 
 
 def pq_query_luts(
@@ -479,46 +473,69 @@ def pq_query_luts(
     bc = queries.sparkSession.sparkContext.broadcast(codebooks)
 
     def batches(it):
-        import numpy as np
         import pandas as pd
 
         books = bc.value
-        m, k, dsub = books.shape
         for pdf in it:
-            x = np.asarray([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            x = x / np.sqrt((x * x).sum(axis=1, keepdims=True))
-            luts = np.empty((len(x), m * k))
-            for s in range(m):
-                qs = x[:, s * dsub : (s + 1) * dsub]
-                luts[:, s * k : (s + 1) * k] = qs @ books[s].T
+            x = _unit_rows(_decode(pdf), pdf["id"])
             yield pd.DataFrame(
                 {
                     "qid": pdf["id"].to_numpy(),
                     "qv": list(x),
-                    "lut": list(luts),
+                    "lut": list(_adc_luts(x, books)),
                 }
             )
 
-    return queries.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(batches, "qid long, qv array<double>, lut array<double>")
+    return _id_vectors(queries, id_col, vec_col).mapInPandas(
+        batches, "qid long, qv array<double>, lut array<double>"
+    )
+
+
+def _adc(book_size: int):
+    """sum_s lut[s*k + codes[s]]: the ADC score as a JVM gather over the
+    code array against the row's query LUT."""
+    gather = F.transform(
+        F.col("codes"), lambda c, i: F.element_at(F.col("lut"), i * book_size + c + 1)
+    )
+    return F.aggregate(gather, F.lit(0.0), lambda a, x: a + x)
+
+
+def _rerank_shortlist(
+    approx: DataFrame,
+    emb: DataFrame,
+    qv: DataFrame,
+    *,
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact top-k over the shortlist*k best (qid, nid, adc) per query,
+    scored from the full-precision vectors of `emb` against (qid, qv)."""
+    wa = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("nid"))
+    short = (
+        approx.withColumn("r", F.row_number().over(wa))
+        .filter(F.col("r") <= shortlist * k)
+        .select("qid", "nid")
+    )
+    nv = _normalized(emb, id_col, vec_col)
+    return _rank_topk(short.join(nv, short.nid == nv.id).join(F.broadcast(qv), "qid"), k)
 
 
 def pq_topk(
     emb: DataFrame,
-    queries: DataFrame,
+    corpus_codes: DataFrame,
+    query_luts: DataFrame,
     *,
+    book_size: int,
     k: int = 10,
+    shortlist: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    codes_k: int = 16,
-    shortlist: int = 4,
-    codebooks: np.ndarray | None = None,
-    corpus_codes: DataFrame | None = None,
-    query_luts: DataFrame | None = None,
 ) -> DataFrame:
-    """PQ/ADC approximate top-k with exact re-rank.
+    """PQ/ADC approximate top-k with exact re-rank, over pq_encode codes
+    and pq_query_luts tables of one codebook set with `book_size`
+    codewords per subspace; `emb` holds the full-precision vectors.
 
     Scan phase: approx_score(id) = sum_s lut[s*k + codes[s]] — a pure-JVM
     aggregate over the compressed code array against the broadcast query
@@ -530,47 +547,15 @@ def pq_topk(
     the LSH/IVF paths. At 100 TB the scan touches 8-byte codes instead
     of 256-byte vectors: the shuffle-free map-side gather is the entire
     corpus cost."""
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            emb, id_col=id_col, vec_col=vec_col, m=m, k=codes_k
-        )
-    if corpus_codes is None:
-        corpus_codes = pq_encode(emb, codebooks, id_col=id_col, vec_col=vec_col)
-    if query_luts is None:
-        query_luts = pq_query_luts(
-            queries, codebooks, id_col=id_col, vec_col=vec_col
-        )
-    kk = codebooks.shape[1]
-    approx = corpus_codes.join(
-        F.broadcast(query_luts.select("qid", "lut")), how="cross"
-    ).filter(F.col("id") != F.col("qid"))
-    gather = F.transform(
-        F.col("codes"), lambda c, i: F.element_at(F.col("lut"), i * kk + c + 1)
+    approx = (
+        corpus_codes.join(F.broadcast(query_luts.select("qid", "lut")), how="cross")
+        .filter(F.col("id") != F.col("qid"))
+        .select("qid", F.col("id").alias("nid"), _adc(book_size).alias("adc"))
     )
-    approx = approx.select(
-        "qid",
-        F.col("id").alias("nid"),
-        F.aggregate(gather, F.lit(0.0), lambda a, x: a + x).alias("adc"),
+    return _rerank_shortlist(
+        approx, emb, query_luts.select("qid", "qv"),
+        k=k, shortlist=shortlist, id_col=id_col, vec_col=vec_col,
     )
-    wa = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("nid"))
-    cands = (
-        approx.withColumn("r", F.row_number().over(wa))
-        .filter(F.col("r") <= shortlist * k)
-        .select("qid", "nid")
-    )
-    nv = _normalized(emb, id_col, vec_col)
-    scored = (
-        cands.join(nv, cands.nid == nv.id)
-        .join(
-            F.broadcast(query_luts.select("qid", "qv")).alias("q"), "qid"
-        )
-        .select(
-            "qid",
-            "nid",
-            F.round(_dot(F.col("qv"), F.col("nv")), 6).alias("cosine"),
-        )
-    )
-    return _rank_topk(scored, k)
 
 
 # --------------------------------------------------------- IVF+PQ (residual) --
@@ -627,29 +612,17 @@ def build_ivfpq_index(
     bc = emb.sparkSession.sparkContext.broadcast((coarse, books))
 
     def batches(it):
-        import numpy as np
         import pandas as pd
 
         cm, bks = bc.value
-        m, _, dsub = bks.shape
-        n_cells = cm.shape[0]
-        probes = min(n_assign, n_cells)
         for pdf in it:
-            x = np.asarray([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            x = x / np.sqrt((x * x).sum(axis=1, keepdims=True))
-            top = np.argsort(-(x @ cm.T), axis=1)[:, :probes]
+            x = _unit_rows(_decode(pdf), pdf["id"])
+            top = _top_cells(x @ cm.T, n_assign)
             ids, cells, codes_out = [], [], []
-            for a in range(probes):
-                cell = top[:, a]
-                res = x - cm[cell]
-                codes = np.empty((len(x), m), dtype="int32")
-                for s in range(m):
-                    rs = res[:, s * dsub : (s + 1) * dsub]
-                    d2 = ((rs[:, None, :] - bks[s][None, :, :]) ** 2).sum(axis=2)
-                    codes[:, s] = np.argmin(d2, axis=1)
+            for cell in top.T:
                 ids.append(pdf["id"].to_numpy())
                 cells.append(cell)
-                codes_out.extend(list(codes))
+                codes_out.extend(list(_pq_codes(x - cm[cell], bks)))
             yield pd.DataFrame(
                 {
                     "id": np.concatenate(ids),
@@ -658,9 +631,9 @@ def build_ivfpq_index(
                 }
             )
 
-    return emb.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(batches, "id long, cell int, codes array<int>")
+    return _id_vectors(emb, id_col, vec_col).mapInPandas(
+        batches, "id long, cell int, codes array<int>"
+    )
 
 
 def build_ivfpq_queries(
@@ -680,21 +653,15 @@ def build_ivfpq_queries(
     bc = queries.sparkSession.sparkContext.broadcast((coarse, books))
 
     def batches(it):
-        import numpy as np
         import pandas as pd
 
         cm, bks = bc.value
-        m, k, dsub = bks.shape
-        probes = min(n_probe, cm.shape[0])
         for pdf in it:
-            x = np.asarray([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            x = x / np.sqrt((x * x).sum(axis=1, keepdims=True))
+            x = _unit_rows(_decode(pdf), pdf["id"])
             sims = x @ cm.T
-            top = np.argsort(-sims, axis=1)[:, :probes]
-            luts = np.empty((len(x), m * k))
-            for s in range(m):
-                qs = x[:, s * dsub : (s + 1) * dsub]
-                luts[:, s * k : (s + 1) * k] = qs @ bks[s].T
+            top = _top_cells(sims, n_probe)
+            probes = top.shape[1]
+            luts = _adc_luts(x, bks)
             rows = {
                 "qid": np.repeat(pdf["id"].to_numpy(), probes),
                 "qv": [v for v in x for _ in range(probes)],
@@ -704,9 +671,7 @@ def build_ivfpq_queries(
             }
             yield pd.DataFrame(rows)
 
-    return queries.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(
+    return _id_vectors(queries, id_col, vec_col).mapInPandas(
         batches,
         "qid long, qv array<double>, cell int, qc_dot double, lut array<double>",
     )
@@ -714,96 +679,45 @@ def build_ivfpq_queries(
 
 def ivfpq_topk(
     emb: DataFrame,
-    queries: DataFrame,
+    corpus_index: DataFrame,
+    query_index: DataFrame,
     *,
+    book_size: int,
     k: int = 10,
+    shortlist: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = 8,
-    n_probe: int = 6,
-    n_assign: int = 2,
-    pq_m: int = 8,
-    pq_k: int = 64,
-    shortlist: int = 4,
-    model: tuple[np.ndarray, np.ndarray] | None = None,
-    corpus_index: DataFrame | None = None,
-    query_index: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF+PQ approximate top-k: cell equi-join prunes the corpus to the
+    """IVF+PQ approximate top-k over a build_ivfpq_index corpus and
+    build_ivfpq_queries queries of one train_ivfpq model whose residual
+    books have `book_size` codewords per subspace; `emb` holds the
+    full-precision vectors. The cell equi-join prunes the corpus to the
     probed cells (partition pruning at scale), the residual-ADC gather
     scores candidates from 8-byte codes (pure JVM), the shortlist is
     exact-re-ranked from full precision. Same exact-precision /
     approximate-recall contract as the other ANN paths; vs plain PQ the
     scan touches only n_probe/n_centroids of the corpus, vs plain IVF
     each candidate costs a flat gather instead of a dim-length dot."""
-    if model is None:
-        model = train_ivfpq(
-            emb, id_col=id_col, vec_col=vec_col,
-            n_centroids=n_centroids, m=pq_m, k=pq_k,
-        )
-    coarse, books = model
-    if corpus_index is None:
-        corpus_index = build_ivfpq_index(
-            emb, coarse, books, id_col=id_col, vec_col=vec_col,
-            n_assign=n_assign,
-        )
-    qs = query_index if query_index is not None else build_ivfpq_queries(
-        queries, coarse, books, id_col=id_col, vec_col=vec_col,
-        n_probe=n_probe,
-    )
-    kk = books.shape[1]
     cands = corpus_index.join(
-        F.broadcast(qs.select("qid", "cell", "qc_dot", "lut")), on="cell"
+        F.broadcast(query_index.select("qid", "cell", "qc_dot", "lut")), on="cell"
     ).filter(F.col("id") != F.col("qid"))
-    gather = F.transform(
-        F.col("codes"), lambda c, i: F.element_at(F.col("lut"), i * kk + c + 1)
-    )
     approx = cands.select(
         "qid",
         F.col("id").alias("nid"),
-        (
-            F.col("qc_dot")
-            + F.aggregate(gather, F.lit(0.0), lambda a, x: a + x)
-        ).alias("adc"),
+        (F.col("qc_dot") + _adc(book_size)).alias("adc"),
     ).groupBy("qid", "nid").agg(F.max("adc").alias("adc"))
-    wa = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("nid"))
-    short = (
-        approx.withColumn("r", F.row_number().over(wa))
-        .filter(F.col("r") <= shortlist * k)
-        .select("qid", "nid")
+    return _rerank_shortlist(
+        approx, emb, query_index.select("qid", "qv").dropDuplicates(["qid"]),
+        k=k, shortlist=shortlist, id_col=id_col, vec_col=vec_col,
     )
-    nv = _normalized(emb, id_col, vec_col)
-    qv = qs.select("qid", "qv").dropDuplicates(["qid"])
-    scored = (
-        short.join(nv, short.nid == nv.id)
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "nid",
-            F.round(_dot(F.col("qv"), F.col("nv")), 6).alias("cosine"),
-        )
-    )
-    return _rank_topk(scored, k)
 
 
 # ------------------------------------------------------------- SemDeDup --
 
 
-def semantic_dup_pairs(
-    emb: DataFrame,
-    *,
-    threshold: float,
-    codebook: np.ndarray | None = None,
-    corpus_index: DataFrame | None = None,
-    n_centroids: int = 16,
-    n_assign: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    kmeans_iters: int = 5,
-    train_sample: int = 4096,
-    seed: int = 7,
-) -> DataFrame:
-    """Semantic near-duplicate pairs, SemDeDup-shape (Abbas et al. 2023,
+def semantic_dup_pairs(corpus_index: DataFrame, *, threshold: float) -> DataFrame:
+    """Semantic near-duplicate pairs (ida, idb, cosine) over a
+    build_ivf_index corpus, SemDeDup-shape (Abbas et al. 2023,
     arXiv:2303.09540): embeddings are partitioned into IVF/k-means cells
     and cosine similarity is computed only WITHIN cells — cluster-
     bucketed blocking, never an all-pairs join. Soft assignment
@@ -816,19 +730,9 @@ def semantic_dup_pairs(
 
     Scale: per-cell self-join cost is sum over cells of |cell|^2; keep
     cells bounded by sizing n_centroids ~ corpus / target_cell_size (the
-    paper runs ~11k clusters for LAION-440M). Reuses the SAME codebook /
-    index artifacts as ANN search (build_ivf_index) — one clustering
-    pass serves both retrieval and dedup."""
-    if corpus_index is None:
-        if codebook is None:
-            codebook = train_ivf_codebook(
-                emb, id_col=id_col, vec_col=vec_col,
-                n_centroids=n_centroids, kmeans_iters=kmeans_iters,
-                train_sample=train_sample, seed=seed,
-            )
-        corpus_index = build_ivf_index(
-            emb, codebook, id_col=id_col, vec_col=vec_col, n_assign=n_assign
-        ).persist()
+    paper runs ~11k clusters for LAION-440M). Reads the SAME index
+    artifact as ANN search — one clustering pass serves both retrieval
+    and dedup. Persist the index: both join sides read it."""
     # The probe side is re-spread by (cell, id): a persisted index often
     # sits in a handful of partitions (one, at test SFs), and with the
     # build side broadcast the per-cell self-join would then score EVERY
@@ -927,84 +831,21 @@ def semantic_dedup_survivors(
 #   retrain:  only when a cheap drift screen says the stored codebooks
 #             no longer fit the data distribution.
 #
-# Equivalence law (tested, and certified end-to-end by q295): PQ/IVF
-# encoding is a deterministic PER-ROW function of the frozen codebooks,
-# so  update(build(C), B) == build(C ∪ B)  as exact row-set equality —
-# the same law minhash_lsh_pairs_incremental pins for sketch dedup.
-
-
-def hyperplane_index_update(
-    stored_index: DataFrame,
-    new_batch: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    tables: int = 8,
-    bits: int = 6,
-    seed: int = 42,
-) -> DataFrame:
-    """Nightly LSH index refresh: bucket only the new batch under the SAME
-    (dim, tables, bits, seed) plane family and union with the stored
-    index. The plane family is deterministic and data-oblivious, so
-    update(build(C), B) == build(C ∪ B) exactly — and there is no drift
-    trigger to gate: hyperplanes never go stale (the trade vs the
-    trained IVF/PQ paths). Same caller contract as ivfpq_index_update:
-    batch ids disjoint from the stored index."""
-    return stored_index.unionByName(
-        build_hyperplane_index(
-            new_batch, id_col=id_col, vec_col=vec_col,
-            dim=dim, tables=tables, bits=bits, seed=seed,
-        )
-    )
-
-
-def ivf_index_update(
-    stored_index: DataFrame,
-    new_batch: DataFrame,
-    codebook: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_assign: int = 2,
-) -> DataFrame:
-    """Nightly IVF index refresh under the STORED codebook — cell-assign
-    and append only the batch; same equivalence law and drift posture as
-    ivfpq_index_update (gate retrains with variance_drift against the
-    baseline stored at train time)."""
-    return stored_index.unionByName(
-        build_ivf_index(
-            new_batch, codebook,
-            id_col=id_col, vec_col=vec_col, n_assign=n_assign,
-        )
-    )
-
-
-def ivfpq_index_update(
-    stored_index: DataFrame,
-    new_batch: DataFrame,
-    coarse: np.ndarray,
-    books: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_assign: int = 2,
-) -> DataFrame:
-    """Nightly IVF+PQ index refresh: (id, cell, codes) for the new batch
-    under the STORED codebooks, unioned with the stored index. The corpus
-    is never re-read and never re-encoded — at 100 TB the nightly cost is
-    O(|batch|) encode + an append to the cell-partitioned index table,
-    while a full rebuild is O(|corpus|) through a Python encoder.
-
-    Caller contract: `new_batch` must be disjoint from the indexed ids
-    (append-only corpus); for upserts, anti-join the stored index on id
-    first — deletes are the stored-side anti-join, same as the snapshot
-    reconciliation sink."""
-    batch_idx = build_ivfpq_index(
-        new_batch, coarse, books,
-        id_col=id_col, vec_col=vec_col, n_assign=n_assign,
-    )
-    return stored_index.unionByName(batch_idx)
+# Equivalence law (tested, and certified end-to-end by q295): LSH/IVF/PQ
+# encoding is a deterministic PER-ROW function of the frozen planes or
+# codebooks, so the nightly update
+#
+#   stored.unionByName(build_*_index(batch, <stored planes/codebooks>))
+#
+# equals build_*_index(C ∪ B) as exact row-set equality — the same law
+# minhash_lsh_pairs_incremental pins for sketch dedup. The caller keeps
+# `batch` disjoint from the indexed ids (append-only corpus); upserts and
+# deletes go through ivfpq_index_reconcile. Hyperplanes are data-
+# oblivious and never go stale; the trained IVF/PQ codebooks gate
+# retraining on variance_drift against the profile stored at train time
+# (maintain_ivfpq_index). At 100 TB the nightly cost is O(|batch|)
+# encode + an append to the cell-partitioned index table, while a full
+# rebuild is O(|corpus|) through a Python encoder.
 
 
 def ivfpq_index_reconcile(
@@ -1019,7 +860,7 @@ def ivfpq_index_reconcile(
     n_assign: int = 2,
 ) -> DataFrame:
     """The full snapshot-reconciliation triple for the vector index —
-    upserts AND deletes, completing ivfpq_index_update's append-only
+    upserts AND deletes, completing the append-only update's
     contract (reference idiom: SisConnectorService.java:463-470 /
     operators/relational.py::reconcile_snapshot, R21): drop every
     stored row whose id is deleted or re-submitted (one anti-join on
@@ -1147,8 +988,10 @@ def maintain_ivfpq_index(
     drift = variance_drift(
         baseline_profile, dim_variance_profile(new_batch, vec_col=vec_col)
     )
-    updated = ivfpq_index_update(
-        stored_index, new_batch, coarse, books,
-        id_col=id_col, vec_col=vec_col, n_assign=n_assign,
+    updated = stored_index.unionByName(
+        build_ivfpq_index(
+            new_batch, coarse, books,
+            id_col=id_col, vec_col=vec_col, n_assign=n_assign,
+        )
     )
     return updated, drift > drift_threshold, drift

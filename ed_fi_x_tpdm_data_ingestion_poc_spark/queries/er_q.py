@@ -132,14 +132,13 @@ def _copurchase_und(spark: SparkSession, sf: str) -> DataFrame:
     materialized once per (session, sf) like every heavy artifact (the
     edge set feeds the degree pass, both wedge sides, and the closing
     join — without the persist each branch would recompute the pair
-    self-join). localCheckpoint rather than persist (round 18, guide
-    §3.3 "materialising an intermediate truncates the plan"): every
-    consumer branch of a persist()ed artifact re-prints the artifact's
-    FULL build lineage inside its InMemoryRelation, and qz150's three
-    self-joined branches nested that recursively — its r17 physical
-    plan was 10,096 lines, a driver/planner hazard at scale.
-    Truncating the lineage here makes each consumer scan a one-line
-    ExistingRDD; same blocks, same rows."""
+    self-join). persist(), like the other shared artifacts: the
+    artifact outlives the query that built it, and localCheckpoint
+    blocks die with their executor on a cluster, with no lineage to
+    rebuild them. Plan size stays bounded downstream: the one consumer,
+    graph.py::oriented_edges, truncates the lineage itself, so qz150's
+    three self-joined branches scan a one-line ExistingRDD (its r17
+    physical plan, before any truncation, was 10,096 lines)."""
     from . import built
 
     def build() -> DataFrame:
@@ -170,7 +169,7 @@ def _copurchase_und(spark: SparkSession, sf: str) -> DataFrame:
         und = knn.select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).distinct()
-        return built(und.localCheckpoint())
+        return built(und.persist())
 
     return memo(spark, ("copurchase_und", sf), build, label="copurchase_und")
 

@@ -312,10 +312,7 @@ def q51b(spark: SparkSession, sf: str) -> DataFrame:
         lambda: built(build_hyperplane_queries(qs, tables=24, bits=4, seed=42).persist()),
         label="lsh_queries",
     )
-    approx = hyperplane_lsh_topk(
-        e, qs, k=10, tables=24, bits=4, seed=42,
-        corpus_index=idx, query_index=qidx,
-    )
+    approx = hyperplane_lsh_topk(idx, qidx, k=10)
     return _recall_ok(approx, _exact_topk(spark, sf))
 
 
@@ -343,10 +340,7 @@ def q51c(spark: SparkSession, sf: str) -> DataFrame:
         lambda: built(build_ivf_queries(qs, cb, n_probe=5).persist()),
         label="ivf_queries",
     )
-    approx = ivf_topk(
-        e, qs, k=10, n_centroids=8, n_probe=5, n_assign=3,
-        codebook=cb, corpus_index=idx, query_index=qidx,
-    )
+    approx = ivf_topk(idx, qidx, k=10)
     return _recall_ok(approx, _exact_topk(spark, sf))
 
 
@@ -394,10 +388,7 @@ def q102(spark: SparkSession, sf: str) -> DataFrame:
         lambda: built(pq_query_luts(qs, books).persist()),
         label="pq_query_luts",
     )
-    approx = pq_topk(
-        e, qs, k=10, shortlist=40,
-        codebooks=books, corpus_codes=codes, query_luts=luts,
-    )
+    approx = pq_topk(e, codes, luts, book_size=books.shape[1], k=10, shortlist=40)
     return _recall_ok(approx, _exact_topk(spark, sf))
 
 
@@ -446,8 +437,7 @@ def q103(spark: SparkSession, sf: str) -> DataFrame:
         label="ivfpq_queries",
     )
     approx = ivfpq_topk(
-        e, qs, k=10, n_probe=6, n_assign=3, shortlist=40,
-        model=model, corpus_index=idx, query_index=qidx,
+        e, idx, qidx, book_size=model[1].shape[1], k=10, shortlist=40
     )
     return _recall_ok(approx, _exact_topk(spark, sf))
 
@@ -496,7 +486,6 @@ def q295(spark: SparkSession, sf: str) -> DataFrame:
         build_ivfpq_index,
         build_ivfpq_queries,
         dim_variance_profile,
-        ivfpq_index_update,
         ivfpq_topk,
         recall_at_k,
         train_ivfpq,
@@ -529,8 +518,8 @@ def q295(spark: SparkSession, sf: str) -> DataFrame:
     updated = memo(
         spark, ("inc_ivfpq_updated", sf),
         lambda: built(
-            ivfpq_index_update(
-                stored, batch, coarse, books, n_assign=3
+            stored.unionByName(
+                build_ivfpq_index(batch, coarse, books, n_assign=3)
             ).persist()
         ),
         label="inc_ivfpq_updated",
@@ -552,8 +541,7 @@ def q295(spark: SparkSession, sf: str) -> DataFrame:
         label="inc_ivfpq_queries",
     )
     approx = ivfpq_topk(
-        e, qs, k=10, n_probe=6, n_assign=3, shortlist=40,
-        model=model, corpus_index=updated, query_index=qidx,
+        e, updated, qidx, book_size=books.shape[1], k=10, shortlist=40
     )
     # the production path is maintain_ivfpq_index (drift + update in one
     # call, tests/test_similarity_incremental.py); the law checks the two
@@ -917,7 +905,7 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
     sem = memo(
         spark, ("sem_pairs", sf),
         lambda: built(
-            semantic_dup_pairs(e, threshold=0.45, corpus_index=idx).persist()
+            semantic_dup_pairs(idx, threshold=0.45).persist()
         ),
         label="sem_pairs",
     )

@@ -351,7 +351,7 @@ def q129(spark: SparkSession, sf: str) -> DataFrame:
     carries raw and curated counts as conditional aggregates of the
     same groupBy, so the corpus explodes twice total (train, score) and
     the exploded stream joins once — where the naive composition (two
-    bigram_counts + two bigram_nll_under) costs four tokenize+explode
+    bigram_counts + two LEFT-join scorings) costs four tokenize+explode
     passes and two corpus-side joins, and benched ~6x slower. The top
     25% by log-weight are the selected pretraining subset; k comes from
     a lightweight >= 2-token doc count (never a re-execution of the

@@ -344,16 +344,16 @@ def test_semdedup_blocks_on_cell_key(spark, sf_dir):
     """q112's pair generation: a single equi-join keyed on the cell (the
     cluster-bucketed block), never cartesian; scoring is JVM zip_with."""
     from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.similarity import (
+        build_ivf_index,
         semantic_dup_pairs,
+        train_ivf_codebook,
     )
     from ed_fi_x_tpdm_data_ingestion_poc_spark.tables import table
 
     e = table(spark, sf_dir, "embeddings")
-    f = audit(
-        semantic_dup_pairs(
-            e, threshold=0.45, n_centroids=4, n_assign=2, train_sample=256
-        )
-    )
+    cb = train_ivf_codebook(e, n_centroids=4, train_sample=256)
+    idx = build_ivf_index(e, cb, n_assign=2).persist()
+    f = audit(semantic_dup_pairs(idx, threshold=0.45))
     assert f.cartesian_products == 0 and f.nested_loop_joins == 0
     assert f.joins >= 1
     assert f.python_evals == 0  # assignment is Arrow-batched, scoring JVM

@@ -1,5 +1,7 @@
 """Product-quantization ANN (operators/similarity.py PQ family): laws the
-compressed path must satisfy regardless of data distribution."""
+compressed path must satisfy regardless of data distribution, the
+encoders' loud failure on null and zero vectors, and the guard that every
+ANN search only reads the artifacts it is handed."""
 
 from __future__ import annotations
 
@@ -32,7 +34,8 @@ def test_pq_full_shortlist_equals_exact(spark, emb):
     n = emb.count()
     books = train_pq_codebooks(emb, m=8, k=16)
     approx = pq_topk(
-        emb, qs, k=5, codebooks=books, shortlist=(n // 5) + 1
+        emb, pq_encode(emb, books), pq_query_luts(qs, books),
+        book_size=books.shape[1], k=5, shortlist=(n // 5) + 1,
     )
     exact = cosine_topk(emb, qs, k=5)
     a = sorted(map(tuple, approx.collect()))
@@ -97,16 +100,20 @@ def test_ivfpq_full_probe_and_shortlist_equals_exact(spark, emb):
     IVF+PQ to a candidate generator over the whole corpus — the exact
     re-rank must then reproduce cosine_topk exactly."""
     from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.similarity import (
+        build_ivfpq_index,
+        build_ivfpq_queries,
         ivfpq_topk,
         train_ivfpq,
     )
 
     qs = emb.filter(F.col("vec_id") < 3)
     n = emb.count()
-    model = train_ivfpq(emb, n_centroids=4, m=8, k=16)
+    coarse, books = train_ivfpq(emb, n_centroids=4, m=8, k=16)
     approx = ivfpq_topk(
-        emb, qs, k=5, model=model,
-        n_probe=4, n_assign=1, shortlist=(n // 5) + 1,
+        emb,
+        build_ivfpq_index(emb, coarse, books, n_assign=1),
+        build_ivfpq_queries(qs, coarse, books, n_probe=4),
+        book_size=books.shape[1], k=5, shortlist=(n // 5) + 1,
     )
     exact = cosine_topk(emb, qs, k=5)
     assert sorted(map(tuple, approx.collect())) == sorted(
@@ -171,3 +178,79 @@ def test_recall_law_tail_fails_below_threshold(spark):
         law(F.col("recall") >= 0.9)
     )
     assert full.collect()[0]["ok"] == 1
+
+
+def _bad_row_frames(spark):
+    """16 clean 8-dim rows, plus the same with a null (id 16) or an
+    all-zero (id 17) vector appended."""
+    import random
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(16)]
+    ddl = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, ddl)
+    null = spark.createDataFrame(rows + [(16, None)], ddl)
+    zero = spark.createDataFrame(rows + [(17, [0.0] * 8)], ddl)
+    return clean, {"null": (null, "id 16 is null"), "zero": (zero, "id 17 has zero norm")}
+
+
+@pytest.mark.parametrize("bad", ["null", "zero"])
+def test_encoders_reject_null_and_zero_vectors(spark, bad):
+    """A null vector has no codes and a zero vector has no direction: the
+    encoders fail naming the row's id instead of numpy's shape error or
+    a silent all-zero code (NaN distances make argmin return 0)."""
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.similarity import (
+        build_ivfpq_index,
+        train_ivfpq,
+    )
+
+    clean, frames = _bad_row_frames(spark)
+    df, msg = frames[bad]
+    books = train_pq_codebooks(clean, m=2, k=4)
+    coarse, residual_books = train_ivfpq(clean, n_centroids=2, m=2, k=4)
+    with pytest.raises(Exception, match=msg):
+        pq_encode(df, books).collect()
+    with pytest.raises(Exception, match=msg):
+        build_ivfpq_index(df, coarse, residual_books).collect()
+
+
+def test_searches_read_artifacts_only():
+    """Every *_topk search and semantic_dup_pairs is a pure search over
+    the artifacts it is handed: neither it nor a private helper it calls
+    trains, builds or encodes, and no parameter defaults to None (the
+    shape of an 'or build it inline' fork)."""
+    import ast
+    import inspect
+
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.operators import similarity
+
+    funcs = {
+        f.name: f
+        for f in ast.parse(inspect.getsource(similarity)).body
+        if isinstance(f, ast.FunctionDef)
+    }
+
+    def calls(fn, seen):
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                name = node.func.id
+                if name not in seen:
+                    seen.add(name)
+                    if name.startswith("_") and name in funcs:
+                        calls(funcs[name], seen)
+        return seen
+
+    searches = [n for n in funcs if n.endswith("_topk") or n == "semantic_dup_pairs"]
+    assert {"hyperplane_lsh_topk", "ivf_topk", "pq_topk", "ivfpq_topk"} <= set(searches)
+    for name in searches:
+        builders = sorted(
+            c for c in calls(funcs[name], set())
+            if c.startswith(("train_", "build_")) or c in ("pq_encode", "pq_query_luts")
+        )
+        assert not builders, (name, builders)
+        args = funcs[name].args
+        none_defaults = [
+            d for d in args.defaults + args.kw_defaults
+            if isinstance(d, ast.Constant) and d.value is None
+        ]
+        assert not none_defaults, name

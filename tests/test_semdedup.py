@@ -49,6 +49,13 @@ def _mk_embeddings(seed=3, dim=8):
     return rows, groups
 
 
+def _index(df):
+    """A persisted soft-assigned IVF index, as q112 uses: 4 cells, 2 per
+    vector."""
+    cb = train_ivf_codebook(df, n_centroids=4, train_sample=64)
+    return build_ivf_index(df, cb, n_assign=2).persist()
+
+
 def _exact_pairs(rows, threshold):
     out = set()
     for i in range(len(rows)):
@@ -66,9 +73,7 @@ def test_semantic_pairs_precision_exact_and_high_recall(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {
         (r.ida, r.idb): r.cosine
-        for r in semantic_dup_pairs(
-            df, threshold=0.9, n_centroids=4, n_assign=2, train_sample=64
-        ).collect()
+        for r in semantic_dup_pairs(_index(df), threshold=0.9).collect()
     }
     want = _exact_pairs(rows, 0.9)
     # precision is exact by construction (true cosines thresholded)
@@ -82,9 +87,7 @@ def test_semantic_pairs_precision_exact_and_high_recall(spark):
 def test_survivors_one_keep_per_group_and_singletons(spark):
     rows, groups = _mk_embeddings()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = semantic_dup_pairs(
-        df, threshold=0.9, n_centroids=4, n_assign=2, train_sample=64
-    )
+    pairs = semantic_dup_pairs(_index(df), threshold=0.9)
     surv = {
         r.id: (r.cluster, r.keep)
         for r in semantic_dedup_survivors(df, pairs).collect()
@@ -102,6 +105,8 @@ def test_survivors_one_keep_per_group_and_singletons(spark):
 
 
 def test_reuses_prebuilt_index_without_retraining(spark):
+    """The pairs depend only on the index: a lazy index and a persisted
+    rebuild from the same codebook give the same pairs."""
     rows, _ = _mk_embeddings(seed=9)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cb = train_ivf_codebook(
@@ -110,12 +115,12 @@ def test_reuses_prebuilt_index_without_retraining(spark):
     idx = build_ivf_index(df, cb, n_assign=2)
     a = {
         (r.ida, r.idb)
-        for r in semantic_dup_pairs(df, threshold=0.9, corpus_index=idx).collect()
+        for r in semantic_dup_pairs(idx, threshold=0.9).collect()
     }
     b = {
         (r.ida, r.idb)
         for r in semantic_dup_pairs(
-            df, threshold=0.9, codebook=cb, n_assign=2
+            build_ivf_index(df, cb, n_assign=2).persist(), threshold=0.9
         ).collect()
     }
     assert a == b
