@@ -238,10 +238,10 @@ def orient_edges(und: DataFrame) -> DataFrame:
     )
 
 
-def oriented_edges(und: DataFrame) -> DataFrame:
-    """The edge set triangle counting consumes: an undirected (u, v)
-    edge DataFrame (orientation of the input rows is irrelevant)
-    canonicalized + deduplicated, then oriented by (degree, id) via
+def oriented_edges(canon: DataFrame) -> DataFrame:
+    """The edge set triangle counting consumes: CANONICAL undirected
+    edges (u < v, each edge once — what er_q's copurchase_und and
+    triangle_count's canonicalization give) oriented by (degree, id) via
     orient_edges. Eager: it feeds three plan branches (both wedge sides
     and the closing join), so localCheckpoint runs orientation once AND
     the three branches embed a one-line ExistingRDD scan instead of
@@ -249,9 +249,6 @@ def oriented_edges(und: DataFrame) -> DataFrame:
     edge-artifact's InMemoryRelation under every branch — qz150's r17
     plan dump was 10k lines; guide §3.3 plan truncation). Build it once
     per input and reuse it across counts."""
-    canon = und.select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-    ).distinct()
     return orient_edges(canon).localCheckpoint()
 
 
@@ -278,10 +275,15 @@ def oriented_triangle_count(ori: DataFrame) -> DataFrame:
 
 def triangle_count(und: DataFrame) -> DataFrame:
     """Global triangle count of an undirected graph given as a (u, v)
-    edge DataFrame (u != v): one row (n_edges, n_tri). The caller should
+    edge DataFrame (u != v; orientation and duplicates of the input rows
+    are irrelevant): one row (n_edges, n_tri). The edges are
+    canonicalized + deduplicated here, then oriented. The caller should
     persist `und` if it is expensive to recompute — the edge set feeds
     the degree pass and the orientation."""
-    return oriented_triangle_count(oriented_edges(und))
+    canon = und.select(
+        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+    ).distinct()
+    return oriented_triangle_count(oriented_edges(canon))
 
 
 def core_numbers(und: DataFrame) -> DataFrame:

@@ -198,6 +198,23 @@ def summary_rank_bounds(summary: dict, value: float) -> tuple[int, int]:
     return lo, min(lo + summary["slack"], summary["n"])
 
 
+def summary_cdf(summary: dict, xs: "np.ndarray") -> tuple["np.ndarray", float]:
+    """(lo(x)/n at each of the sorted points `xs`, (slack + max w)/n): the
+    summary's lower-rank CDF and its error bound. Between consecutive
+    kept points the true CDF rises by at most one batch stride, so the
+    true CDF lies within the bound of lo/n everywhere, and two summaries'
+    max CDF gap is within the sum of their bounds of the exact
+    two-sample Kolmogorov-Smirnov D, for every batching."""
+    pts = summary["points"]
+    vals = np.fromiter((v for v, _ in pts), dtype="float64", count=len(pts))
+    w = np.fromiter((w for _, w in pts), dtype="int64", count=len(pts))
+    cums = np.cumsum(w)
+    idx = np.searchsorted(vals, xs, side="right")
+    lo = np.where(idx > 0, cums[np.maximum(idx - 1, 0)], 0)
+    n = summary["n"]
+    return lo / n, (summary["slack"] + int(w.max())) / n
+
+
 def exact_quantiles_via_summary(
     df: DataFrame,
     col: str,

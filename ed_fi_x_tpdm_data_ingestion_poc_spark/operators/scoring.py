@@ -98,20 +98,29 @@ def _bigram_pairs(text_col: str) -> Column:
 # dominates (measured r17: window form 1.48 -> 1.09 s on qz121's
 # stripped-HTML input).
 _WINDOW_FORM_MAX_PARTS = 200
+# ... and the bytes those splits may hold: 200 default 128 MiB splits.
+# The partition count alone lets 200 splits of 1 GB through.
+_WINDOW_FORM_MAX_BYTES = _WINDOW_FORM_MAX_PARTS * (128 << 20)
 
 
 def _window_form_ok(docs: DataFrame) -> bool:
-    """True when `docs` is small enough for the window-form fast path
-    (scan partition count as the size proxy — a corpus table at
+    """True when `docs` is small enough for the window-form fast path:
+    at most _WINDOW_FORM_MAX_PARTS scan partitions (a corpus table at
     production scale splits into thousands of tasks on its own, so the
-    gate picks the skew-safe groupBy form there with no size job).
-    Memoized per (session, canonical plan) like queries.spread_scan."""
-    from ..queries import memo_unlocked
+    gate picks the skew-safe groupBy form there with no size job) AND at
+    most _PROBE_ROWS rows of at most _WINDOW_FORM_MAX_BYTES estimated
+    bytes (queries.size_gate's bounded row probe). Both answers are
+    memoized per (session, canonical plan), so a warm build runs no
+    job."""
+    from ..queries import _PROBE_ROWS, memo_unlocked, size_gate
 
-    return memo_unlocked(
+    few_parts = memo_unlocked(
         docs.sparkSession,
         ("window_form_ok", docs.semanticHash()),
         lambda: docs.rdd.getNumPartitions() <= _WINDOW_FORM_MAX_PARTS,
+    )
+    return few_parts and size_gate(
+        docs, _PROBE_ROWS, _WINDOW_FORM_MAX_BYTES, gate="window_form"
     )
 
 

@@ -16,7 +16,9 @@ move a hash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
@@ -162,6 +164,73 @@ def q165(spark: SparkSession, sf: str) -> DataFrame:
 _KS_A = "src0"
 _KS_B = "src1"
 _KS_C95 = 1.3581  # c(alpha) for alpha = 0.05 (two-sided asymptotic)
+_KS_ALPHA = 0.05  # family-wise level of the all-pairs drift matrices
+
+
+def _ks_exact(rows: DataFrame, x: str) -> DataFrame:
+    """The exact two-sample KS numerator: a one-row (n1, n2, dnum) plan
+    over (x, a) rows, a = 1 for the first sample and 0 for the second.
+    Rows collapse to per-x counts, one ordered window over that grouped
+    table gives both running CDF counts, and dnum = max |cum1*n2 -
+    cum2*n1| is D cross-multiplied by n1*n2 — bigint arithmetic until
+    the single division in _ks_d."""
+    from pyspark.sql import Window
+
+    g = rows.groupBy(x).agg(
+        F.sum("a").alias("c1"),
+        (F.count(F.lit(1)) - F.sum("a")).alias("c2"),
+    )
+    cum = Window.orderBy(x).rowsBetween(Window.unboundedPreceding, 0)
+    tot = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    w = g.select(
+        F.sum("c1").over(cum).alias("cum1"),
+        F.sum("c2").over(cum).alias("cum2"),
+        F.sum("c1").over(tot).alias("n1"),
+        F.sum("c2").over(tot).alias("n2"),
+    )
+    # decimal(38,0): cum*n reaches n1*n2, which wraps int64 past ~3e9
+    # rows per side while the DuckDB twin's window SUM is already
+    # HUGEINT (the q165 s2 advice, same silent-asymmetric-wrap class)
+    return w.groupBy("n1", "n2").agg(
+        F.max(
+            F.abs(
+                F.col("cum1").cast("decimal(38,0)") * F.col("n2")
+                - F.col("cum2").cast("decimal(38,0)") * F.col("n1")
+            )
+        ).alias("dnum")
+    )
+
+
+def _ks_d(na: str = "na", nb: str = "nb") -> Column:
+    """D = dnum / (na * nb), the statistic's one float division."""
+    return F.col("dnum").cast("double") / (1.0 * F.col(na) * F.col(nb))
+
+
+def _ks_crit(c: float, na: str = "na", nb: str = "nb") -> Column:
+    """The asymptotic critical D, c * sqrt((na + nb) / (na * nb))."""
+    return F.lit(c) * F.sqrt(
+        (F.col(na) + F.col(nb)) / (1.0 * F.col(na) * F.col(nb))
+    )
+
+
+def _ks_reject(c: float, na: str = "na", nb: str = "nb") -> Column:
+    """1 iff ROUND(D, 6) > ROUND(crit, 6): both sides are rounded
+    (HALF_UP, like DuckDB's ROUND), so the decision boundary is the
+    same in both engines."""
+    return (
+        F.round(_ks_d(na, nb), 6) > F.round(_ks_crit(c, na, nb), 6)
+    ).cast("int")
+
+
+def _ks_c(n_src: int) -> float:
+    """c(alpha/m) = sqrt(ln(2 / (alpha/m)) / 2), the Bonferroni-adjusted
+    critical constant for the m = n_src*(n_src-1)/2 pairs. Below two
+    sources there is no pair, and any constant serves the empty
+    table."""
+    m = max(1, n_src * (n_src - 1) // 2)
+    return math.sqrt(math.log(2.0 / (_KS_ALPHA / m)) / 2.0)
 
 
 @query(
@@ -215,8 +284,6 @@ def q166(spark: SparkSession, sf: str) -> DataFrame:
     continuous scores, so one ordered window over the grouped table is
     the right plan and `global_running_sums` would only add a shuffle);
     the final reduce is one row."""
-    from pyspark.sql import Window
-
     d = (
         table(spark, sf, "documents")
         .where(F.col("source").isin(_KS_A, _KS_B))
@@ -224,47 +291,10 @@ def q166(spark: SparkSession, sf: str) -> DataFrame:
             "n_chars", (F.col("source") == _KS_A).cast("long").alias("a")
         )
     )
-    g = d.groupBy("n_chars").agg(
-        F.sum("a").alias("c1"),
-        (F.count(F.lit(1)) - F.sum("a")).alias("c2"),
-    )
-    cum = Window.orderBy("n_chars").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    tot = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w = g.select(
-        F.sum("c1").over(cum).alias("cum1"),
-        F.sum("c2").over(cum).alias("cum2"),
-        F.sum("c1").over(tot).alias("n1"),
-        F.sum("c2").over(tot).alias("n2"),
-    )
-    # decimal(38,0): cum*n reaches n1*n2, which wraps int64 past ~3e9
-    # rows per side while the DuckDB twin's window SUM is already
-    # HUGEINT (the q165 s2 advice, same silent-asymmetric-wrap class)
-    t = w.groupBy("n1", "n2").agg(
-        F.max(
-            F.abs(
-                F.col("cum1").cast("decimal(38,0)") * F.col("n2")
-                - F.col("cum2").cast("decimal(38,0)") * F.col("n1")
-            )
-        ).alias("dnum")
-    )
-    d_stat = F.round(
-        F.col("dnum").cast("double") / (1.0 * F.col("n1") * F.col("n2")), 6
-    )
-    crit = F.round(
-        _KS_C95
-        * F.sqrt(
-            (F.col("n1") + F.col("n2")) / (1.0 * F.col("n1") * F.col("n2"))
-        ),
-        6,
-    )
-    return t.select(
-        d_stat.alias("d"),
-        crit.alias("crit_95"),
-        (d_stat > crit).cast("int").alias("reject"),
+    return _ks_exact(d, "n_chars").select(
+        F.round(_ks_d("n1", "n2"), 6).alias("d"),
+        F.round(_ks_crit(_KS_C95, "n1", "n2"), 6).alias("crit_95"),
+        _ks_reject(_KS_C95, "n1", "n2").alias("reject"),
         F.col("n1").cast("bigint").alias("n1"),
         F.col("n2").cast("bigint").alias("n2"),
     )
@@ -664,94 +694,34 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
     batching-dependent by construction, so they feed ONLY the flag,
     never the hash.
 
-    Scale shape: two map-only summary passes + the grouped exact pass;
-    the driver-side estimate walks n_batches/eps kept points."""
-    from ..operators.quantiles import quantile_summary
+    Scale shape: one map-only pass builds both summaries
+    (quantile_summary_by), plus the grouped exact pass; the driver-side
+    estimate (`_ks_sketch`) reads n_batches/eps kept points."""
+    from ..operators.quantiles import quantile_summary_by
 
     ev = table(spark, sf, "events")
-
-    def _summaries() -> tuple[dict, dict]:
-        sa = quantile_summary(
-            ev.where(F.col("event_type") == _SKS_A).select("value"),
-            "value",
-            eps=0.02,
-        )
-        sb = quantile_summary(
-            ev.where(F.col("event_type") == _SKS_B).select("value"),
-            "value",
-            eps=0.02,
-        )
-        return sa, sb
-
-    sa, sb = memo(spark, ("ks_summaries", sf), _summaries, label="ks_summaries")
-
-    # exact D on the same integer machinery as q166 (distributed)
-    e = ev.where(F.col("event_type").isin(_SKS_A, _SKS_B)).select(
-        F.col("value").alias("v"),
-        (F.col("event_type") == _SKS_A).cast("long").alias("a"),
+    e = ev.where(F.col("event_type").isin(_SKS_A, _SKS_B))
+    by = memo(
+        spark,
+        ("ks_summaries", sf),
+        lambda: quantile_summary_by(e, "value", "event_type", eps=0.02),
+        label="ks_summaries",
     )
-    from pyspark.sql import Window
-
-    g = e.groupBy("v").agg(
-        F.sum("a").alias("c1"),
-        (F.count(F.lit(1)) - F.sum("a")).alias("c2"),
-    )
-    cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w = g.select(
-        F.sum("c1").over(cum).alias("cum1"),
-        F.sum("c2").over(cum).alias("cum2"),
-        F.sum("c1").over(tot).alias("n1"),
-        F.sum("c2").over(tot).alias("n2"),
-    )
-    exact = w.groupBy("n1", "n2").agg(
-        F.max(
-            F.abs(
-                F.col("cum1").cast("decimal(38,0)") * F.col("n2")
-                - F.col("cum2").cast("decimal(38,0)") * F.col("n1")
-            )
-        ).alias("dnum")
-    )
-
-    # sketch estimate: evaluate both summaries' LOWER rank bounds at the
-    # union of kept values (driver-side, kilobytes)
-    def _lo_cdf(summary: dict):
-        vals = [v for v, _ in summary["points"]]
-        cums, acc = [], 0
-        for _, wgt in summary["points"]:
-            acc += wgt
-            cums.append(acc)
-        return vals, cums
-
-    import bisect
-
-    va, ca = _lo_cdf(sa)
-    vb, cb = _lo_cdf(sb)
-
-    def lo(vals, cums, x):
-        i = bisect.bisect_right(vals, x)
-        return cums[i - 1] if i else 0
-
-    union = sorted(set(va) | set(vb))
-    d_sketch = max(
-        abs(lo(va, ca, x) / sa["n"] - lo(vb, cb, x) / sb["n"])
-        for x in union
-    )
-    maxw_a = max(wgt for _, wgt in sa["points"])
-    maxw_b = max(wgt for _, wgt in sb["points"])
-    bound = (sa["slack"] + maxw_a) / sa["n"] + (sb["slack"] + maxw_b) / sb[
-        "n"
-    ]
+    sa, sb = by[_SKS_A], by[_SKS_B]
+    d_sketch, bound = _ks_sketch(sa, sb)
     accounting = (
         sum(wgt for _, wgt in sa["points"]) == sa["n"]
         and sum(wgt for _, wgt in sb["points"]) == sb["n"]
     )
+    exact = _ks_exact(
+        e.select(
+            F.col("value").alias("v"),
+            (F.col("event_type") == _SKS_A).cast("long").alias("a"),
+        ),
+        "v",
+    )
     n1, n2 = F.col("n1"), F.col("n2")
-    d_exact = F.col("dnum").cast("double") / (n1.cast("double") * n2)
-    # F.round is HALF_UP like DuckDB ROUND (Python round is half-even —
-    # a .5 tie at the 7th decimal is reachable for rationals over n1*n2)
+    d_exact = _ks_d("n1", "n2")
     return exact.select(
         F.round(d_exact, 6).alias("d_exact"),
         n1.cast("bigint").alias("n1"),
@@ -763,6 +733,23 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
             & (n2 == sb["n"])
         ),
     )
+
+
+def _ks_sketch(sa: dict, sb: dict) -> tuple[float, float]:
+    """(D_sketch, bound) of two quantile summaries: the max gap of their
+    lower-rank CDFs over the union of kept values (both step functions
+    are constant between their own kept points) and the sum of their
+    error bounds, so |D_sketch - D_exact| <= bound for every batching."""
+    import numpy as np
+
+    from ..operators.quantiles import summary_cdf
+
+    xs = np.union1d(
+        [v for v, _ in sa["points"]], [v for v, _ in sb["points"]]
+    )
+    ca, ba = summary_cdf(sa, xs)
+    cb, bb = summary_cdf(sb, xs)
+    return float(np.max(np.abs(ca - cb))), ba + bb
 
 
 # ---------------------------------------------------------------------------
@@ -1310,407 +1297,9 @@ def _ks_grid_pairs(docs: DataFrame, pairs: DataFrame | None = None):
     )
 
 
-def _ks_pair_table(spark: SparkSession, sf: str):
-    """(pairs, n_src): the all-pairs KS numerator table (source_a,
-    source_b, na, nb, dnum) over document lengths plus the source count —
-    `_ks_grid_pairs` unrestricted. Memoized artifact shared by q176
-    (Bonferroni decision), q185 (Benjamini-Hochberg FDR) and q196's law
-    harness so the grid is built once per (session, sf)."""
-    from . import built
-
-    def build():
-        docs = table(spark, sf, "documents").select("source", "n_chars")
-        n_src = docs.select("source").distinct().count()
-        return (built(_ks_grid_pairs(docs).persist()), n_src)
-
-    return memo(spark, ("ks_pairs", sf), build, label="ks_pairs")
-
-
-# the measured all-pairs ceiling (BASELINE.md / tools/scale_probe.py
-# ks_matrix_sources2: 0.91x-linear to 200 sources, extrapolated
-# single-digit-minutes to ~1,000) — above it the exact grid's s^2 pair
-# join dominates and ks_matrix_decisions switches to sketch screening
-_KS_SKETCH_CUTOVER = 1000
-_KS_SCREEN_EPS = 0.02
-# decision margin: the exact path compares ROUND(d,6) > ROUND(crit,6);
-# a screen at |d_sketch - crit| > bound + 2e-6 guarantees the rounded
-# comparison cannot flip (round moves each side by <= 5e-7, and 2e-6
-# clears the half-grid tie case a 1e-6 margin leaves open)
-_KS_SCREEN_MARGIN = 2e-6
-
-
-def _ks_source_summaries(spark: SparkSession, sf: str) -> dict[str, dict]:
-    """Per-source mergeable quantile summaries over document lengths —
-    ONE map-only Arrow pass for ALL sources (quantile_summary_by), each
-    summary kilobytes: n_batches/eps kept (value, weight) points plus
-    n/slack. Memoized artifact: the screening side of the q176 cutover
-    and q196's law harness share it."""
-    from ..operators.quantiles import quantile_summary_by
-
-    def build():
-        return quantile_summary_by(
-            table(spark, sf, "documents").select("source", "n_chars"),
-            "n_chars",
-            "source",
-            eps=_KS_SCREEN_EPS,
-        )
-
-    return memo(spark, ("ks_src_summaries", sf), build, label="ks_src_summaries")
-
-
-def _ks_sketch_screen(summaries: dict[str, dict], crit_of, margin=None):
-    """Screen every source pair with q170's sketch-KS error law.
-
-    For each source the summary's lower-rank CDF is evaluated on the
-    global union of kept values (numpy, vectorized: an (s x p) matrix
-    — exact for every pair, since both step functions are constant
-    between their own kept points, so the global union is just a
-    superset of the pair union q170 walks). Per pair:
-      d_sketch = max |lo_a/n_a - lo_b/n_b|,
-      bound    = (slack_a + maxw_a)/n_a + (slack_b + maxw_b)/n_b
-    (q170's law: |d_sketch - d_exact| <= bound for EVERY batching).
-    A pair is DECIDED not-reject when d_sketch + bound < crit - margin,
-    DECIDED reject when d_sketch - bound > crit + margin — both imply
-    the exact rounded decision — and UNDECIDED otherwise (it pays the
-    exact grid).
-
-    Driver cost is (s x p) floats for the CDF matrix plus a vectorized
-    row-vs-rest max per source: ~10^4 x 10^4 at 10k sources with
-    eps=0.02 — hundreds of MB and minutes, fine to ~10k feeds; past
-    that the screen itself should move into Spark (pair-bucketed
-    summary joins), noted in ks_matrix_decisions."""
-    import numpy as np
-
-    if margin is None:
-        margin = _KS_SCREEN_MARGIN
-    srcs = sorted(summaries)
-    union = np.unique(
-        np.concatenate(
-            [
-                np.fromiter(
-                    (v for v, _ in summaries[s]["points"]), dtype="float64"
-                )
-                for s in srcs
-            ]
-        )
-    )
-    cdf = np.empty((len(srcs), len(union)))
-    bnd = np.empty(len(srcs))
-    for i, s in enumerate(srcs):
-        pts = summaries[s]["points"]
-        vals = np.fromiter((v for v, _ in pts), dtype="float64")
-        cums = np.cumsum(
-            np.fromiter((w for _, w in pts), dtype="int64")
-        )
-        idx = np.searchsorted(vals, union, side="right")
-        lo = np.where(idx > 0, cums[np.maximum(idx - 1, 0)], 0)
-        cdf[i] = lo / summaries[s]["n"]
-        bnd[i] = (
-            summaries[s]["slack"] + max(w for _, w in pts)
-        ) / summaries[s]["n"]
-    decided, undecided, info = [], [], {}
-    for i in range(len(srcs) - 1):
-        d_row = np.max(np.abs(cdf[i + 1:] - cdf[i]), axis=1)
-        for k, j in enumerate(range(i + 1, len(srcs))):
-            a, b = srcs[i], srcs[j]
-            ds = float(d_row[k])
-            bound = float(bnd[i] + bnd[j])
-            crit = crit_of(summaries[a]["n"], summaries[b]["n"])
-            info[(a, b)] = (ds, bound)
-            if ds + bound < crit - margin:
-                decided.append((a, b, 0))
-            elif ds - bound > crit + margin:
-                decided.append((a, b, 1))
-            else:
-                undecided.append((a, b))
-    return decided, undecided, info
-
-
-_KS_GRID_SIZE = 128
-
-
-def _ks_sketch_screen_distributed(
-    spark: SparkSession,
-    summaries: dict[str, dict],
-    c_bonf: float,
-    margin: float | None = None,
-    grid_size: int = _KS_GRID_SIZE,
-) -> DataFrame:
-    """The >10k-source rung of the screen ladder: any all-pairs screen
-    is Ω(s²), and the driver matrix walk's s²·p flops outgrow one
-    machine around ~10k sources — so the PAIR work moves into Spark.
-    Every source's lower-rank CDF is evaluated on ONE fixed global grid
-    of ~grid_size pooled kept values (exact at grid points), each
-    source becomes a single (source, n, slack-bound, max-rise,
-    G-double-array) row, and the screen is a deliberate, BOUNDED
-    broadcast nested-loop self-join over those s kilobyte rows — s²·G
-    comparisons spread over the cluster, zip_with/array_max JVM
-    higher-order expressions, never the corpus and never the driver.
-
-    Fixing the grid forfeits exactness BETWEEN grid points; the forfeit
-    is itself bounded: a step CDF rises at most its largest inter-grid
-    increment within any interval, so
-      D_grid <= D_union <= D_grid + min(max_rise_a, max_rise_b)
-    (min, because within one interval the gap can grow by at most the
-    SMALLER side's rise before the other side's endpoint value catches
-    it), which simply joins q170's (slack+maxw)/n term in the decision
-    interval. Decisions therefore stay provably equal to the exact
-    rounded decision: grid coarseness widens the undecided band, never
-    flips a decided pair — q207 asserts exactly that law.
-
-    Returns (source_a, source_b, d_grid, lo_bound, up_bound, decision)
-    with decision 0 = certainly-not-reject, 1 = certainly-reject,
-    -1 = undecided (pay the restricted exact grid).
-
-    Driver footprint here is building the s vector rows from the
-    summaries dict (s·(p+G) floats — storage is fine far past 10k
-    sources; it is the s²·p COMPUTE the driver cannot hold, and that is
-    what this moves).
-
-    Measured at 200 sources (sf0.1 inflated, G=128): decides
-    19,800/19,900 pairs (the fixed grid's interpolation slack leaves
-    100 undecided vs the driver walk's 0), consistent with the driver
-    screen on every decided pair, 2.9 s vs the driver walk's 0.06 s —
-    job overhead dominates at this scale, which is exactly why the
-    ladder keeps the driver rung preferred until its s²·p flops
-    (~10^10 at 10k sources) outgrow one machine."""
-    import numpy as np
-
-    if margin is None:
-        margin = _KS_SCREEN_MARGIN
-    srcs = sorted(summaries)
-    pooled = np.unique(
-        np.concatenate(
-            [
-                np.fromiter(
-                    (v for v, _ in summaries[s]["points"]), dtype="float64"
-                )
-                for s in srcs
-            ]
-        )
-    )
-    stride = max(1, int(np.ceil(len(pooled) / grid_size)))
-    grid = pooled[::stride]
-    if grid[-1] != pooled[-1]:
-        grid = np.append(grid, pooled[-1])
-    rows = []
-    for s in srcs:
-        pts = summaries[s]["points"]
-        vals = np.fromiter((v for v, _ in pts), dtype="float64")
-        cums = np.cumsum(np.fromiter((w for _, w in pts), dtype="int64"))
-        n = summaries[s]["n"]
-        idx = np.searchsorted(vals, grid, side="right")
-        lo = np.where(idx > 0, cums[np.maximum(idx - 1, 0)], 0) / n
-        rise = float(
-            max(lo[0], float(np.max(np.diff(lo))) if len(lo) > 1 else 0.0)
-        )
-        bnd = (summaries[s]["slack"] + max(w for _, w in pts)) / n
-        rows.append((s, int(n), float(bnd), rise, [float(x) for x in lo]))
-    vecs = spark.createDataFrame(
-        rows,
-        "source string, n long, bnd double, rise double, cdf array<double>",
-    )
-    a = vecs.select(
-        F.col("source").alias("source_a"),
-        F.col("n").alias("na"),
-        F.col("bnd").alias("bnd_a"),
-        F.col("rise").alias("rise_a"),
-        F.col("cdf").alias("cdf_a"),
-    )
-    b = vecs.select(
-        F.col("source").alias("source_b"),
-        F.col("n").alias("nb"),
-        F.col("bnd").alias("bnd_b"),
-        F.col("rise").alias("rise_b"),
-        F.col("cdf").alias("cdf_b"),
-    )
-    d_grid = F.array_max(
-        F.zip_with(F.col("cdf_a"), F.col("cdf_b"), lambda x, y: F.abs(x - y))
-    )
-    crit = F.lit(c_bonf) * F.sqrt(
-        (F.col("na") + F.col("nb")) / (1.0 * F.col("na") * F.col("nb"))
-    )
-    slack = F.col("bnd_a") + F.col("bnd_b")
-    up = d_grid + F.least(F.col("rise_a"), F.col("rise_b")) + slack
-    lo_b = d_grid - slack
-    return (
-        a.join(F.broadcast(b), F.col("source_a") < F.col("source_b"))
-        .select(
-            "source_a",
-            "source_b",
-            d_grid.alias("d_grid"),
-            lo_b.alias("lo_bound"),
-            up.alias("up_bound"),
-            F.when(up < crit - F.lit(margin), F.lit(0))
-            .when(lo_b > crit + F.lit(margin), F.lit(1))
-            .otherwise(F.lit(-1))
-            .alias("decision"),
-        )
-    )
-
-
-def _ks_bonf_crit(n_src: int, alpha: float = 0.05):
-    """c(alpha/m) Bonferroni critical-value closure over (na, nb)."""
-    import math
-
-    m = n_src * (n_src - 1) // 2
-    c = math.sqrt(math.log(2.0 / (alpha / m)) / 2.0)
-    return lambda na, nb: c * math.sqrt((na + nb) / (1.0 * na * nb))
-
-
-_KS_DRIVER_SCREEN_CEILING = 10_000
-
-
-def ks_matrix_decisions(
-    spark: SparkSession,
-    sf: str,
-    *,
-    alpha: float = 0.05,
-    cutover: int = _KS_SKETCH_CUTOVER,
-    driver_ceiling: int = _KS_DRIVER_SCREEN_CEILING,
-) -> DataFrame:
-    """(source_a, source_b, reject_bonf) for EVERY source pair — the
-    executable form of the documented KS-matrix scale law (round-12
-    verdict: the law was prose, so a 5,000-feed user silently got the
-    quadratic grid). Strategy is selected by source count:
-
-    * n_src <= cutover — the exact all-pairs grid (`_ks_pair_table`,
-      q176's machinery; measured 0.91x-linear to 200 sources, ceiling
-      ~1,000).
-    * n_src >  cutover — kilobyte-per-source quantile summaries screen
-      every pair with q170's error law (`_ks_sketch_screen`); only the
-      pairs whose sketch interval straddles the critical value pay the
-      exact grid, RESTRICTED to exactly those pairs
-      (`_ks_grid_pairs(pairs=...)`). Decisions from both paths are
-      provably equal to the exact rounded decision (screen margins
-      absorb both 6-decimal roundings), so the cutover is
-      result-invisible — q196 asserts that law.
-
-    * n_src >  driver_ceiling — the screen itself moves into Spark
-      (`_ks_sketch_screen_distributed`): each source collapses to one
-      kilobyte grid-CDF row and the s² pair comparisons run as a
-      bounded broadcast nested-loop join of those rows (zip_with /
-      array_max, JVM-side) — the driver matrix walk's s²·p flops are
-      the resource that runs out first past ~10k sources. The fixed
-      grid only WIDENS the undecided band (its interpolation slack
-      joins the q170 term); decided pairs remain provably exact, q207's
-      law.
-
-    Scale: screening is one map-only Arrow pass + a driver matrix walk
-    to ~10k sources, the distributed grid-CDF join beyond; the
-    restricted grid re-scans only undecided sources' rows.
-
-    Measured (tools/scale_probe.py ks_sketch_cutover, sf0.1 inflated to
-    200 sources / 19,900 pairs): the sketch path decided ALL pairs from
-    summaries (0 undecided), decisions identical to exact, 2.6 s vs
-    8.5 s for the exact grid — 3.3x at 200 sources, widening
-    quadratically since the screen is linear in sources while the grid
-    is s^2 in the pair join."""
-    docs = table(spark, sf, "documents").select("source", "n_chars")
-    reject_exact = lambda crit_c: (  # noqa: E731
-        F.round(
-            F.col("dnum").cast("double")
-            / (1.0 * F.col("na") * F.col("nb")),
-            6,
-        )
-        > F.round(
-            crit_c
-            * F.sqrt(
-                (F.col("na") + F.col("nb"))
-                / (1.0 * F.col("na") * F.col("nb"))
-            ),
-            6,
-        )
-    ).cast("int")
-
-    n_src = docs.select("source").distinct().count()
-    import math
-
-    if n_src < 2:
-        # degenerate feed (0 or 1 sources): no pairs exist — m = 0
-        # would divide alpha by zero below, and the driver-screen path
-        # would index an empty parts list. An empty decision table is
-        # the correct answer, not an exception.
-        return spark.createDataFrame(
-            [], "source_a string, source_b string, reject_bonf int"
-        )
-    m = n_src * (n_src - 1) // 2
-    c_bonf = math.sqrt(math.log(2.0 / (alpha / m)) / 2.0)
-    if n_src <= cutover:
-        p, _ = _ks_pair_table(spark, sf)
-        return p.select(
-            "source_a",
-            "source_b",
-            reject_exact(F.lit(c_bonf)).alias("reject_bonf"),
-        )
-    summaries = _ks_source_summaries(spark, sf)
-    if n_src > driver_ceiling:
-        # the s^2 decision table NEVER lands on the driver: decided
-        # pairs flow straight through as a DataFrame, and only the
-        # undecided band (small by construction — the screen's whole
-        # point) is broadcast into the restricted exact grid. The
-        # persisted screen is memoized per (session, sf, alpha) like
-        # every other persisted intermediate — a fresh persist per
-        # invocation would pin one orphaned s^2-row cache entry per
-        # call for the life of the session (ADVICE r13).
-        from . import built
-
-        scr = memo(
-            spark, (f"ks_screen_dist_a{alpha}", sf),
-            lambda: built(
-                _ks_sketch_screen_distributed(
-                    spark, summaries, c_bonf
-                ).persist()
-            ),
-            label=f"ks_screen_dist_a{alpha}",
-        )
-        out = scr.where(F.col("decision") >= 0).select(
-            "source_a",
-            "source_b",
-            F.col("decision").cast("int").alias("reject_bonf"),
-        )
-        und = scr.where(F.col("decision") < 0).select(
-            "source_a", "source_b"
-        )
-        if und.limit(1).count():
-            out = out.unionByName(
-                _ks_grid_pairs(docs, pairs=und).select(
-                    "source_a",
-                    "source_b",
-                    reject_exact(F.lit(c_bonf)).alias("reject_bonf"),
-                )
-            )
-        return out
-    decided, undecided, _ = _ks_sketch_screen(
-        summaries, _ks_bonf_crit(n_src, alpha)
-    )
-    parts = []
-    if decided:
-        parts.append(
-            spark.createDataFrame(
-                decided, "source_a string, source_b string, reject_bonf int"
-            )
-        )
-    if undecided:
-        pairs = spark.createDataFrame(
-            undecided, "source_a string, source_b string"
-        )
-        parts.append(
-            _ks_grid_pairs(docs, pairs=pairs).select(
-                "source_a",
-                "source_b",
-                reject_exact(F.lit(c_bonf)).alias("reject_bonf"),
-            )
-        )
-    out = parts[0]
-    for extra in parts[1:]:
-        out = out.unionByName(extra)
-    return out
-
-
-@query(
-    "qz176_ks_matrix",
-    oracle="""
+# the DuckDB twin of the exact all-pairs table (_ks_grid_pairs as p),
+# plus m, the number of pairs
+_KS_PAIRS_SQL = """
     WITH g AS (SELECT source, n_chars, COUNT(*) AS k
                FROM documents GROUP BY 1, 2),
     lens AS (SELECT DISTINCT n_chars FROM g),
@@ -1729,7 +1318,390 @@ def ks_matrix_decisions(
                  MAX(ABS(a.cum * b.n - b.cum * a.n)) AS dnum
           FROM c a JOIN c b ON a.n_chars = b.n_chars
                             AND a.source < b.source
-          GROUP BY 1, 2, 3, 4)
+          GROUP BY 1, 2, 3, 4)"""
+
+
+def _ks_n_sources(spark: SparkSession, sf: str) -> int:
+    """Distinct sources of the documents table: the count that picks
+    the ks_matrix_decisions rung and sizes the Bonferroni family.
+    Memoized artifact, shared with `_ks_pair_table`."""
+    return memo(
+        spark,
+        ("ks_n_src", sf),
+        lambda: table(spark, sf, "documents")
+        .select("source")
+        .distinct()
+        .count(),
+        label="ks_n_src",
+    )
+
+
+def _ks_pair_table(spark: SparkSession, sf: str):
+    """(pairs, n_src): the all-pairs KS numerator table (source_a,
+    source_b, na, nb, dnum) over document lengths plus the source count —
+    `_ks_grid_pairs` unrestricted. Memoized artifact shared by q176
+    (Bonferroni decision), q185 (Benjamini-Hochberg FDR) and the q196 /
+    q207 laws, so the grid is built once per (session, sf)."""
+    from . import built
+
+    def build():
+        docs = table(spark, sf, "documents").select("source", "n_chars")
+        return built(_ks_grid_pairs(docs).persist())
+
+    pairs = memo(spark, ("ks_pairs", sf), build, label="ks_pairs")
+    return pairs, _ks_n_sources(spark, sf)
+
+
+# the measured all-pairs ceiling (BASELINE.md / tools/scale_probe.py
+# ks_matrix_sources2: 0.91x-linear to 200 sources, extrapolated
+# single-digit-minutes to ~1,000) — above it the exact grid's s^2 pair
+# join dominates and ks_matrix_decisions switches to sketch screening
+_KS_SKETCH_CUTOVER = 1000
+# past ~10k sources the driver screen's s^2*p flops outgrow one machine
+# and the pair work moves into Spark
+_KS_DRIVER_SCREEN_CEILING = 10_000
+_KS_SCREEN_EPS = 0.02
+# decision margin: the exact path compares ROUND(d,6) > ROUND(crit,6);
+# a screen at |d_sketch - crit| > bound + 2e-6 guarantees the rounded
+# comparison cannot flip (round moves each side by <= 5e-7, and 2e-6
+# clears the half-grid tie case a 1e-6 margin leaves open)
+_KS_SCREEN_MARGIN = 2e-6
+# pooled kept values per source row of the distributed screen
+_KS_GRID_SIZE = 128
+
+
+def _ks_source_summaries(spark: SparkSession, sf: str) -> dict[str, dict]:
+    """Per-source mergeable quantile summaries over document lengths —
+    ONE map-only Arrow pass for ALL sources (quantile_summary_by), each
+    summary kilobytes: n_batches/eps kept (value, weight) points plus
+    n/slack. Memoized artifact shared by both screens."""
+    from ..operators.quantiles import quantile_summary_by
+
+    def build():
+        return quantile_summary_by(
+            table(spark, sf, "documents").select("source", "n_chars"),
+            "n_chars",
+            "source",
+            eps=_KS_SCREEN_EPS,
+        )
+
+    return memo(spark, ("ks_src_summaries", sf), build, label="ks_src_summaries")
+
+
+def _ks_sketch_pairs(spark: SparkSession, summaries: dict[str, dict]):
+    """(source_a, source_b, na, nb, d_sketch, bound) for every source
+    pair a < b: q170's sketch estimate and error bound, with
+    |d_sketch - d_exact| <= bound for every batching.
+
+    Each source's lower-rank CDF is evaluated once on the global union
+    of kept values (an s x p matrix; the global union is a superset of
+    each pair's own, and both step functions are constant between their
+    kept points, so the per-pair max is unchanged). Driver cost is the
+    matrix plus a row-vs-rest max per source: ~10^4 x 10^4 floats at
+    10k sources with eps=0.02, the ceiling of this rung. The rows come
+    back as a local frame: building it runs no Spark job."""
+    import numpy as np
+    from pyspark.sql.types import StructType
+
+    from ..operators.quantiles import summary_cdf
+    from ..sources.rest import local_frame
+
+    srcs = sorted(summaries)
+    union = np.unique(
+        np.concatenate([[v for v, _ in summaries[s]["points"]] for s in srcs])
+    )
+    cdfs, bnds = zip(*(summary_cdf(summaries[s], union) for s in srcs))
+    cdf = np.vstack(cdfs)
+    rows = []
+    for i, a in enumerate(srcs[:-1]):
+        d_row = np.max(np.abs(cdf[i + 1:] - cdf[i]), axis=1)
+        for k, b in enumerate(srcs[i + 1:]):
+            rows.append({
+                "source_a": a,
+                "source_b": b,
+                "na": summaries[a]["n"],
+                "nb": summaries[b]["n"],
+                "d_sketch": float(d_row[k]),
+                "bound": bnds[i] + bnds[i + 1 + k],
+            })
+    return local_frame(spark, rows, StructType.fromDDL(
+        "source_a string, source_b string, na long, nb long, "
+        "d_sketch double, bound double"
+    ))
+
+
+def _ks_screen(pairs: DataFrame, c: float) -> DataFrame:
+    """(source_a, source_b, lo_bound, up_bound, decision): a screen's
+    per-pair bracket [lo_bound, up_bound] on the exact D, decided
+    against the critical D with the rounding margin. decision is 0 =
+    certainly not reject, 1 = certainly reject, -1 = undecided (the pair
+    pays the restricted exact grid). Both decided cases imply the exact
+    rounded decision."""
+    crit = _ks_crit(c)
+    lo, up = F.col("lo_bound"), F.col("up_bound")
+    return pairs.select(
+        "source_a",
+        "source_b",
+        "lo_bound",
+        "up_bound",
+        F.when(up < crit - _KS_SCREEN_MARGIN, F.lit(0))
+        .when(lo > crit + _KS_SCREEN_MARGIN, F.lit(1))
+        .otherwise(F.lit(-1))
+        .alias("decision"),
+    )
+
+
+def _ks_screen_driver(sketch: DataFrame, c: float) -> DataFrame:
+    """The driver screen over `_ks_sketch_pairs` rows: every pair's
+    bracket is d_sketch -/+ bound."""
+    d, b = F.col("d_sketch"), F.col("bound")
+    return _ks_screen(
+        sketch.select(
+            "source_a",
+            "source_b",
+            "na",
+            "nb",
+            (d - b).alias("lo_bound"),
+            (d + b).alias("up_bound"),
+        ),
+        c,
+    )
+
+
+def _ks_screen_distributed(
+    spark: SparkSession, summaries: dict[str, dict], c: float
+) -> DataFrame:
+    """The distributed screen, for past ~10k sources: any all-pairs
+    screen is Ω(s²), and the driver matrix walk's s²·p flops outgrow one
+    machine there — so the PAIR work moves into Spark. Every source's
+    lower-rank CDF is evaluated on ONE fixed global grid of
+    ~_KS_GRID_SIZE pooled kept values (exact at grid points), each
+    source becomes a single (source, n, bound, max-rise, G-double-array)
+    row, and the screen is a deliberate, BOUNDED broadcast nested-loop
+    self-join over those s kilobyte rows — s²·G comparisons spread over
+    the cluster, zip_with/array_max JVM higher-order expressions, never
+    the corpus and never the driver.
+
+    Fixing the grid forfeits exactness BETWEEN grid points; the forfeit
+    is itself bounded: a step CDF rises at most its largest inter-grid
+    increment within any interval, so
+      D_grid <= D_union <= D_grid + min(max_rise_a, max_rise_b)
+    (min, because within one interval the gap can grow by at most the
+    SMALLER side's rise before the other side's endpoint value catches
+    it), which joins q170's (slack+maxw)/n term in the bracket. Grid
+    coarseness widens the undecided band, never flips a decided pair —
+    q207 asserts exactly that law.
+
+    Driver footprint is the s vector rows (s·(p+G) floats — storage is
+    fine far past 10k sources; it is the s²·p COMPUTE the driver cannot
+    hold, and that is what this moves).
+
+    Measured at 200 sources (sf0.1 inflated, G=128): decides
+    19,800/19,900 pairs (the fixed grid's interpolation slack leaves
+    100 undecided vs the driver screen's 0), consistent with the driver
+    screen on every decided pair, 2.9 s vs the driver screen's 0.06 s —
+    job overhead dominates at this scale, which is exactly why the
+    ladder keeps the driver rung preferred until its s²·p flops
+    (~10^10 at 10k sources) outgrow one machine."""
+    import numpy as np
+
+    from ..operators.quantiles import summary_cdf
+
+    srcs = sorted(summaries)
+    pooled = np.unique(
+        np.concatenate([[v for v, _ in summaries[s]["points"]] for s in srcs])
+    )
+    stride = max(1, int(np.ceil(len(pooled) / _KS_GRID_SIZE)))
+    grid = pooled[::stride]
+    if grid[-1] != pooled[-1]:
+        grid = np.append(grid, pooled[-1])
+    rows = []
+    for s in srcs:
+        lo, bnd = summary_cdf(summaries[s], grid)
+        rise = float(
+            max(lo[0], float(np.max(np.diff(lo))) if len(lo) > 1 else 0.0)
+        )
+        rows.append(
+            (s, summaries[s]["n"], bnd, rise, [float(x) for x in lo])
+        )
+    vecs = spark.createDataFrame(
+        rows,
+        "source string, n long, bnd double, rise double, cdf array<double>",
+    )
+
+    def side(x: str) -> DataFrame:
+        return vecs.select(
+            F.col("source").alias(f"source_{x}"),
+            F.col("n").alias(f"n{x}"),
+            F.col("bnd").alias(f"bnd_{x}"),
+            F.col("rise").alias(f"rise_{x}"),
+            F.col("cdf").alias(f"cdf_{x}"),
+        )
+
+    d_grid = F.array_max(
+        F.zip_with(F.col("cdf_a"), F.col("cdf_b"), lambda x, y: F.abs(x - y))
+    )
+    slack = F.col("bnd_a") + F.col("bnd_b")
+    return _ks_screen(
+        side("a")
+        .join(F.broadcast(side("b")), F.col("source_a") < F.col("source_b"))
+        .select(
+            "source_a",
+            "source_b",
+            "na",
+            "nb",
+            (d_grid - slack).alias("lo_bound"),
+            (d_grid + F.least(F.col("rise_a"), F.col("rise_b")) + slack)
+            .alias("up_bound"),
+        ),
+        c,
+    )
+
+
+def _ks_screen_dist(spark: SparkSession, sf: str) -> DataFrame:
+    """The distributed screen over the documents' sources, persisted:
+    memoized per (session, sf) like every persisted intermediate, so an
+    evaluation never pins a fresh s²-row cache entry."""
+    from . import built
+
+    return memo(
+        spark,
+        ("ks_screen_dist", sf),
+        lambda: built(
+            _ks_screen_distributed(
+                spark,
+                _ks_source_summaries(spark, sf),
+                _ks_c(_ks_n_sources(spark, sf)),
+            ).persist()
+        ),
+        label="ks_screen_dist",
+    )
+
+
+def _ks_decided(spark: SparkSession, sf: str, screen: DataFrame) -> DataFrame:
+    """(source_a, source_b, reject_bonf) from a screen: decided pairs
+    pass through, and only the undecided band (small by construction,
+    the screen's whole point) pays the exact grid, restricted to exactly
+    those pairs. The s² decision table never lands on the driver."""
+    docs = table(spark, sf, "documents").select("source", "n_chars")
+    c = _ks_c(_ks_n_sources(spark, sf))
+    und = screen.where(F.col("decision") < 0).select("source_a", "source_b")
+    return (
+        screen.where(F.col("decision") >= 0)
+        .select(
+            "source_a",
+            "source_b",
+            F.col("decision").cast("int").alias("reject_bonf"),
+        )
+        .unionByName(
+            _ks_grid_pairs(docs, pairs=und).select(
+                "source_a", "source_b", _ks_reject(c).alias("reject_bonf")
+            )
+        )
+    )
+
+
+def _ks_rung_exact(spark: SparkSession, sf: str) -> DataFrame:
+    """Up to _KS_SKETCH_CUTOVER sources: the exact all-pairs grid."""
+    p, n_src = _ks_pair_table(spark, sf)
+    return p.select(
+        "source_a", "source_b", _ks_reject(_ks_c(n_src)).alias("reject_bonf")
+    )
+
+
+def _ks_rung_driver(spark: SparkSession, sf: str) -> DataFrame:
+    """Up to _KS_DRIVER_SCREEN_CEILING sources: the driver screen."""
+    c = _ks_c(_ks_n_sources(spark, sf))
+    sketch = _ks_sketch_pairs(spark, _ks_source_summaries(spark, sf))
+    return _ks_decided(spark, sf, _ks_screen_driver(sketch, c))
+
+
+def _ks_rung_distributed(spark: SparkSession, sf: str) -> DataFrame:
+    """Past _KS_DRIVER_SCREEN_CEILING sources: the distributed screen."""
+    return _ks_decided(spark, sf, _ks_screen_dist(spark, sf))
+
+
+def ks_matrix_decisions(spark: SparkSession, sf: str) -> DataFrame:
+    """(source_a, source_b, reject_bonf) for EVERY source pair — the
+    executable form of the documented KS-matrix scale law (round-12
+    verdict: the law was prose, so a 5,000-feed user silently got the
+    quadratic grid). The rung is picked by the memoized source count:
+
+    * <= _KS_SKETCH_CUTOVER (1,000) — the exact all-pairs grid
+      (`_ks_pair_table`, q176's machinery; measured 0.91x-linear to 200
+      sources).
+    * <= _KS_DRIVER_SCREEN_CEILING (10,000) — kilobyte-per-source
+      quantile summaries screen every pair on the driver with q170's
+      error law (`_ks_screen_driver`); only the pairs whose bracket
+      straddles the critical value pay the exact grid, RESTRICTED to
+      exactly those pairs (`_ks_grid_pairs(pairs=...)`). q196 certifies
+      this rung.
+    * beyond — the screen itself moves into Spark
+      (`_ks_screen_distributed`): each source collapses to one kilobyte
+      grid-CDF row and the s² pair comparisons run as a bounded
+      broadcast nested-loop join of those rows. The fixed grid only
+      WIDENS the undecided band. q207 certifies this rung.
+
+    Both screens' decided pairs provably equal the exact rounded
+    decision (the margin absorbs both 6-decimal roundings), so the rung
+    is result-invisible. Below two sources every rung's answer is the
+    empty table; the exact rung gives it.
+
+    Measured (tools/scale_probe.py ks_sketch_cutover, sf0.1 inflated to
+    200 sources / 19,900 pairs): the driver screen decided ALL pairs
+    from summaries (0 undecided), decisions identical to exact, 2.6 s vs
+    8.5 s for the exact grid — 3.3x at 200 sources, widening
+    quadratically since the screen is linear in sources while the grid
+    is s^2 in the pair join."""
+    n_src = _ks_n_sources(spark, sf)
+    if n_src <= _KS_SKETCH_CUTOVER:
+        return _ks_rung_exact(spark, sf)
+    if n_src <= _KS_DRIVER_SCREEN_CEILING:
+        return _ks_rung_driver(spark, sf)
+    return _ks_rung_distributed(spark, sf)
+
+
+def _ks_screen_law(
+    spark: SparkSession,
+    sf: str,
+    decisions: DataFrame,
+    screen: DataFrame,
+    bracket: Column,
+) -> DataFrame:
+    """(source_a, source_b, reject_bonf, ok) for every pair of the exact
+    `ks_pairs` artifact: reject_bonf is the rung's decision (-1 when the
+    rung lost the pair), and ok requires the screen's `bracket` law on
+    the exact D, the rung's decision to equal the exact rounded
+    decision, and every screen-decided pair to equal it too."""
+    p, n_src = _ks_pair_table(spark, sf)
+    exact = _ks_reject(_ks_c(n_src))
+    keys = ["source_a", "source_b"]
+    rej, dec = F.col("reject_bonf"), F.col("decision")
+    return (
+        p.join(decisions, keys, "left")
+        .join(screen, keys, "left")
+        .select(
+            *keys,
+            F.coalesce(rej, F.lit(-1)).alias("reject_bonf"),
+            law(bracket & (rej == exact) & ((dec < 0) | (dec == exact))),
+        )
+    )
+
+
+_KS_SCREEN_ORACLE = _KS_PAIRS_SQL + """
+    SELECT source_a, source_b,
+           CAST(ROUND(CAST(dnum AS DOUBLE) / (1.0 * na * nb), 6)
+                > ROUND(SQRT(LN(2.0 / (0.05 / (SELECT pairs FROM m))) / 2.0)
+                        * SQRT((na + nb) / (1.0 * na * nb)), 6)
+                AS INT) AS reject_bonf,
+           CAST(1 AS INT) AS ok
+    FROM p
+    """
+
+
+@query(
+    "qz176_ks_matrix",
+    oracle=_KS_PAIRS_SQL + """
     SELECT source_a, source_b,
            ROUND(CAST(dnum AS DOUBLE) / (1.0 * na * nb), 6) AS d,
            CAST(ROUND(CAST(dnum AS DOUBLE) / (1.0 * na * nb), 6)
@@ -1768,71 +1740,29 @@ def q176(spark: SparkSession, sf: str) -> DataFrame:
     EXECUTABLE: `ks_matrix_decisions` switches to sketch-KS pair
     screening above `_KS_SKETCH_CUTOVER` sources (q170's mergeable MRL
     summaries compare kilobytes per pair) and reserves the exact grid
-    for the pairs the screen cannot decide — q196 pins that the two
-    paths produce identical decisions; this query remains the exact
+    for the pairs the screen cannot decide — q196 and q207 pin that the
+    screens produce the exact decisions; this query remains the exact
     per-pair-D form (d itself is only computable by the grid)."""
-    import math
-
     p, n_src = _ks_pair_table(spark, sf)
-    n_pairs = n_src * (n_src - 1) // 2
-    c_bonf = math.sqrt(math.log(2.0 / (0.05 / n_pairs)) / 2.0)
-    d_stat = F.round(
-        F.col("dnum").cast("double") / (1.0 * F.col("na") * F.col("nb")), 6
-    )
-    crit = F.round(
-        F.lit(c_bonf)
-        * F.sqrt(
-            (F.col("na") + F.col("nb")) / (1.0 * F.col("na") * F.col("nb"))
-        ),
-        6,
-    )
     return p.select(
         "source_a",
         "source_b",
-        d_stat.alias("d"),
-        (d_stat > crit).cast("int").alias("reject_bonf"),
+        F.round(_ks_d(), 6).alias("d"),
+        _ks_reject(_ks_c(n_src)).alias("reject_bonf"),
     )
 
 
 @query(
     "qz196_ks_sketch_screen",
-    oracle="""
-    WITH g AS (SELECT source, n_chars, COUNT(*) AS k
-               FROM documents GROUP BY 1, 2),
-    lens AS (SELECT DISTINCT n_chars FROM g),
-    srcs AS (SELECT source, SUM(k) AS n FROM g GROUP BY source),
-    m AS (SELECT COUNT(*) * (COUNT(*) - 1) / 2 AS pairs FROM srcs),
-    grid AS (SELECT s.source, s.n, l.n_chars FROM srcs s CROSS JOIN lens l),
-    c AS (SELECT grid.source, grid.n, grid.n_chars,
-                 SUM(COALESCE(g.k, 0)) OVER (PARTITION BY grid.source
-                                             ORDER BY grid.n_chars
-                                             ROWS UNBOUNDED PRECEDING)
-                   AS cum
-          FROM grid LEFT JOIN g ON g.source = grid.source
-                                AND g.n_chars = grid.n_chars),
-    p AS (SELECT a.source AS source_a, b.source AS source_b,
-                 a.n AS na, b.n AS nb,
-                 MAX(ABS(a.cum * b.n - b.cum * a.n)) AS dnum
-          FROM c a JOIN c b ON a.n_chars = b.n_chars
-                            AND a.source < b.source
-          GROUP BY 1, 2, 3, 4)
-    SELECT source_a, source_b,
-           CAST(ROUND(CAST(dnum AS DOUBLE) / (1.0 * na * nb), 6)
-                > ROUND(SQRT(LN(2.0 / (0.05 / (SELECT pairs FROM m))) / 2.0)
-                        * SQRT((na + nb) / (1.0 * na * nb)), 6)
-                AS INT) AS reject_bonf,
-           CAST(1 AS INT) AS ok
-    FROM p
-    """,
+    oracle=_KS_SCREEN_ORACLE,
     tags=("llm", "stats", "sketch", "quality"),
 )
 def q196(spark: SparkSession, sf: str) -> DataFrame:
-    """The KS-matrix sketch-screening cutover, exercised and law-checked
-    — `ks_matrix_decisions` with the cutover FORCED below the fixture's
-    source count, so the fixture runs the production >1,000-source
-    path: per-source kilobyte summaries screen every pair against the
-    Bonferroni critical value (q170's error law gives each pair a
-    certain interval [d_sketch - bound, d_sketch + bound]), and only
+    """The driver-screen rung of `ks_matrix_decisions`, run at the
+    fixture's 20 sources (in production it serves 1,000-10,000) and
+    law-checked: per-source kilobyte summaries screen every pair against
+    the Bonferroni critical value (q170's error law gives each pair a
+    certain bracket [d_sketch - bound, d_sketch + bound]), and only
     straddling pairs pay the exact grid, restricted to exactly those
     pairs.
 
@@ -1841,177 +1771,64 @@ def q196(spark: SparkSession, sf: str) -> DataFrame:
     it, so the batching-dependent sketch values never touch the hash
     (the q170 rule). The per-row `ok` flag pins the laws the hash
     cannot see, against the SAME exact `ks_pairs` artifact q176/q185
-    use: |d_sketch - d_exact| <= bound for EVERY pair, and every
-    sketch-decided pair's decision equals the exact decision. A
-    violated law yields ok=0 rows and a loud hash mismatch.
+    use: |d_sketch - d_exact| <= bound for EVERY pair, the rung's
+    decision equals the exact decision, and so does every
+    screen-decided pair's. A violated law yields ok=0 rows and a loud
+    hash mismatch.
 
-    Scale shape: one map-only Arrow summary pass for all sources, a
-    driver matrix screen over kilobytes-per-source, and an exact grid
-    over only the undecided sources' rows; the all-pairs law JOIN here
-    is the test harness, not the production path (a >1,000-source
+    Scale shape: one map-only Arrow summary pass for all sources
+    (memoized), a driver screen over kilobytes per source, and an exact
+    grid over only the undecided sources' rows; the all-pairs law JOIN
+    here is the test harness, not the production path (a >1,000-source
     deployment never builds the full exact grid — that is the point).
-    The certification rows are a materialize-once artifact: the bench
-    protocol re-runs each query ~8x, and the screen + restricted grid
-    + law joins are deterministic per (session, sf).
-
-    Build-cost measurement (r15, the repo's no-new->5s-build-without-a-
-    measurement rule, for the r13->r14 2.6 -> 6.9 s growth): isolated
-    cold timing at sf0.1/local[32] splits the build as
-    ks_matrix_decisions(cutover=0) ~12 s cold / ~5 s suite-warm (the
-    forced screen: summaries + pair screen + the restricted exact grid
-    for undecided pairs — the production path under certification, not
-    removable without un-certifying it) + ~1.9 s for the full exact
-    ks_pairs law table (a memoized artifact SHARED with q176/q185/q207,
-    so the suite pays it once) + <0.01 s driver screen. The r13->r14
-    growth is the cutover=0 force now certifying BOTH the driver and
-    distributed screens against the same exact grid; the spend is the
-    certification itself, not overhead."""
-
-    def _cert() -> list:
-        dec = ks_matrix_decisions(spark, sf, cutover=0)
-        rows = {(r.source_a, r.source_b): int(r.reject_bonf)
-                for r in dec.collect()}
-
-        # law harness: exact pair table + the screen's internals
-        p, n_src = _ks_pair_table(spark, sf)
-        crit_of = _ks_bonf_crit(n_src)
-        exact = {
-            (r.source_a, r.source_b): (int(r.dnum), int(r.na), int(r.nb))
-            for r in p.collect()
-        }
-        summaries = _ks_source_summaries(spark, sf)
-        decided, undecided, info = _ks_sketch_screen(summaries, crit_of)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def _r6(x: float) -> float:
-            return float(
-                Decimal(repr(x)).quantize(
-                    Decimal("0.000001"), ROUND_HALF_UP
-                )
-            )
-
-        screen_reject = {(a, b): r for a, b, r in decided}
-        out = []
-        for key in sorted(exact):
-            dnum, na, nb = exact[key]
-            d_exact = dnum / (1.0 * na * nb)
-            ex_reject = int(_r6(d_exact) > _r6(crit_of(na, nb)))
-            d_sketch, bound = info[key]
-            ok = int(
-                abs(d_sketch - d_exact) <= bound
-                and rows.get(key) == ex_reject
-                and screen_reject.get(key, ex_reject) == ex_reject
-            )
-            out.append((key[0], key[1], rows.get(key, -1), ok))
-        return out
-
-    out = memo(spark, ("ks_screen_cert", sf), _cert, label="ks_screen_cert")
-    return spark.createDataFrame(
-        out, "source_a string, source_b string, reject_bonf int, ok int"
+    The law runs on every evaluation; its inputs are the memoized
+    `ks_pairs`, `ks_src_summaries` and `ks_n_src` artifacts, and the
+    screen rows enter as a local frame, so a warm build runs no job."""
+    c = _ks_c(_ks_n_sources(spark, sf))
+    sketch = _ks_sketch_pairs(spark, _ks_source_summaries(spark, sf))
+    screen = _ks_screen_driver(sketch, c).join(
+        sketch.select("source_a", "source_b", "d_sketch", "bound"),
+        ["source_a", "source_b"],
+    )
+    return _ks_screen_law(
+        spark,
+        sf,
+        _ks_rung_driver(spark, sf),
+        screen,
+        F.abs(F.col("d_sketch") - _ks_d()) <= F.col("bound"),
     )
 
 
 @query(
     "qz207_ks_screen_distributed",
-    oracle="""
-    WITH g AS (SELECT source, n_chars, COUNT(*) AS k
-               FROM documents GROUP BY 1, 2),
-    lens AS (SELECT DISTINCT n_chars FROM g),
-    srcs AS (SELECT source, SUM(k) AS n FROM g GROUP BY source),
-    m AS (SELECT COUNT(*) * (COUNT(*) - 1) / 2 AS pairs FROM srcs),
-    grid AS (SELECT s.source, s.n, l.n_chars FROM srcs s CROSS JOIN lens l),
-    c AS (SELECT grid.source, grid.n, grid.n_chars,
-                 SUM(COALESCE(g.k, 0)) OVER (PARTITION BY grid.source
-                                             ORDER BY grid.n_chars
-                                             ROWS UNBOUNDED PRECEDING)
-                   AS cum
-          FROM grid LEFT JOIN g ON g.source = grid.source
-                                AND g.n_chars = grid.n_chars),
-    p AS (SELECT a.source AS source_a, b.source AS source_b,
-                 a.n AS na, b.n AS nb,
-                 MAX(ABS(a.cum * b.n - b.cum * a.n)) AS dnum
-          FROM c a JOIN c b ON a.n_chars = b.n_chars
-                            AND a.source < b.source
-          GROUP BY 1, 2, 3, 4)
-    SELECT source_a, source_b,
-           CAST(ROUND(CAST(dnum AS DOUBLE) / (1.0 * na * nb), 6)
-                > ROUND(SQRT(LN(2.0 / (0.05 / (SELECT pairs FROM m))) / 2.0)
-                        * SQRT((na + nb) / (1.0 * na * nb)), 6)
-                AS INT) AS reject_bonf,
-           CAST(1 AS INT) AS ok
-    FROM p
-    """,
+    oracle=_KS_SCREEN_ORACLE,
     tags=("llm", "stats", "sketch", "quality"),
 )
 def q207(spark: SparkSession, sf: str) -> DataFrame:
-    """The DISTRIBUTED screen rung exercised and law-checked — q196's
-    twin with the pair work in Spark instead of the driver:
-    `ks_matrix_decisions` forced past BOTH thresholds, so the fixture
-    runs the >10k-source path (grid-CDF vector rows, bounded broadcast
-    NL self-join, zip_with/array_max JVM comparisons, undecided band
-    into the restricted exact grid — the s² decision table never lands
-    on the driver).
+    """The distributed-screen rung of `ks_matrix_decisions` (the
+    >10k-source path: grid-CDF vector rows, bounded broadcast NL
+    self-join, zip_with/array_max JVM comparisons, undecided band into
+    the restricted exact grid — the s² decision table never lands on the
+    driver), run at the fixture's 20 sources and law-checked like q196.
 
     Laws in the per-row ok flag, against the SAME exact `ks_pairs`
-    artifact: the two-sided grid interval really brackets the exact D
-    (lo_bound <= d_exact <= up_bound — the q170 slack term PLUS the
-    fixed-grid interpolation term min(max_rise_a, max_rise_b)); every
-    sketch-DECIDED pair's decision equals the exact rounded decision;
-    and the composed output equals the exact path pair-for-pair. The
-    hash-checked columns are the decisions, path-invisible by the same
-    margin argument as q196. Certification rows are a materialize-once
-    artifact (the q196 rationale: deterministic per session/sf, and the
-    bench re-runs each query ~8x)."""
-    import math
-
-    def _cert() -> list:
-        dec = ks_matrix_decisions(spark, sf, cutover=0, driver_ceiling=0)
-        rows = {
-            (r.source_a, r.source_b): int(r.reject_bonf)
-            for r in dec.collect()
-        }
-
-        p, n_src = _ks_pair_table(spark, sf)
-        crit_of = _ks_bonf_crit(n_src)
-        m = n_src * (n_src - 1) // 2
-        c_bonf = math.sqrt(math.log(2.0 / (0.05 / m)) / 2.0)
-        exact = {
-            (r.source_a, r.source_b): (int(r.dnum), int(r.na), int(r.nb))
-            for r in p.collect()
-        }
-        summaries = _ks_source_summaries(spark, sf)
-        scr = {
-            (r.source_a, r.source_b): r
-            for r in _ks_sketch_screen_distributed(
-                spark, summaries, c_bonf
-            ).collect()
-        }
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def _r6(x: float) -> float:
-            return float(
-                Decimal(repr(x)).quantize(
-                    Decimal("0.000001"), ROUND_HALF_UP
-                )
-            )
-
-        out = []
-        for key in sorted(exact):
-            dnum, na, nb = exact[key]
-            d_exact = dnum / (1.0 * na * nb)
-            ex_reject = int(_r6(d_exact) > _r6(crit_of(na, nb)))
-            s = scr[key]
-            ok = int(
-                s.lo_bound - 1e-12 <= d_exact <= s.up_bound + 1e-12
-                and rows.get(key) == ex_reject
-                and (s.decision < 0 or s.decision == ex_reject)
-            )
-            out.append((key[0], key[1], rows.get(key, -1), ok))
-        return out
-
-    out = memo(spark, ("ks_screen_dist_cert", sf), _cert, label="ks_screen_dist_cert")
-    return spark.createDataFrame(
-        out, "source_a string, source_b string, reject_bonf int, ok int"
+    artifact: the two-sided grid bracket really contains the exact D
+    (lo_bound <= d_exact <= up_bound within 1e-12 — the q170 slack term
+    PLUS the fixed-grid interpolation term min(max_rise_a, max_rise_b));
+    every screen-decided pair's decision equals the exact rounded
+    decision; and the rung's output equals the exact path pair-for-pair.
+    The hash-checked columns are the decisions, path-invisible by the
+    same margin argument as q196. The persisted screen is the memoized
+    `ks_screen_dist` artifact the rung itself reads, so a warm build
+    runs no job."""
+    d_exact = _ks_d()
+    return _ks_screen_law(
+        spark,
+        sf,
+        _ks_rung_distributed(spark, sf),
+        _ks_screen_dist(spark, sf),
+        (F.col("lo_bound") - 1e-12 <= d_exact)
+        & (d_exact <= F.col("up_bound") + 1e-12),
     )
 
 
@@ -2595,25 +2412,7 @@ def q184(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "qz185_ks_matrix_fdr",
-    oracle="""
-    WITH g AS (SELECT source, n_chars, COUNT(*) AS k
-               FROM documents GROUP BY 1, 2),
-    lens AS (SELECT DISTINCT n_chars FROM g),
-    srcs AS (SELECT source, SUM(k) AS n FROM g GROUP BY source),
-    grid AS (SELECT s.source, s.n, l.n_chars FROM srcs s CROSS JOIN lens l),
-    c AS (SELECT grid.source, grid.n, grid.n_chars,
-                 SUM(COALESCE(g.k, 0)) OVER (PARTITION BY grid.source
-                                             ORDER BY grid.n_chars
-                                             ROWS UNBOUNDED PRECEDING)
-                   AS cum
-          FROM grid LEFT JOIN g ON g.source = grid.source
-                                AND g.n_chars = grid.n_chars),
-    p AS (SELECT a.source AS source_a, b.source AS source_b,
-                 a.n AS na, b.n AS nb,
-                 MAX(ABS(a.cum * b.n - b.cum * a.n)) AS dnum
-          FROM c a JOIN c b ON a.n_chars = b.n_chars
-                            AND a.source < b.source
-          GROUP BY 1, 2, 3, 4),
+    oracle=_KS_PAIRS_SQL + """,
     pv AS (SELECT source_a, source_b,
                   ROUND(LEAST(1.0,
                         2.0 * EXP(-2.0 * CAST(dnum AS DOUBLE) * dnum
@@ -2679,9 +2478,9 @@ def q185(spark: SparkSession, sf: str) -> DataFrame:
     )
     kstar = rk.agg(
         F.max(
-            F.when(F.col("p6") <= F.col("i") * 0.05 / m, F.col("i")).otherwise(
-                F.lit(0)
-            )
+            F.when(
+                F.col("p6") <= F.col("i") * _KS_ALPHA / m, F.col("i")
+            ).otherwise(F.lit(0))
         ).alias("kstar")
     )
     return rk.crossJoin(F.broadcast(kstar)).select(

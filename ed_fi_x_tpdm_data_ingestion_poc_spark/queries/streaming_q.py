@@ -1339,155 +1339,96 @@ def q192(spark: SparkSession, sf: str) -> DataFrame:
     * the stream carried state across >1 micro-batch;
     * q170's error law on STREAM-built summaries: |D_sketch - D_exact|
       <= (slack_m + maxw_m)/n_m + (slack_r + maxw_r)/n_r, with D_exact
-      from the exact integer machinery (grouped value counts + TWO
-      global_running_sums distributed prefix sums — the q165 rule:
-      event values are continuous, so the running totals never ride a
-      single-partition window).
+      from the exact two-sample plan q166 and q170 run
+      (stats_q._ks_exact).
+
+    The memo holds only the stream's final state row per type; the law
+    runs on every evaluation. The sketch estimate is computed on the
+    driver from those rows and enters the plan as literals, and the
+    per-type stream counts enter as a local frame, so building the plan
+    runs no job.
 
     Scale shape: stream state is n_batches/eps points per type; the
-    exact check is one grouped collapse + two range-exchange prefix
-    sums; the sketch comparison walks kilobytes on the driver."""
-    import bisect
-
+    exact check is one grouped collapse, one ordered window over the
+    grouped values and a one-row reduce; the sketch comparison reads
+    kilobytes on the driver."""
     from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import StructType
 
-    from ..operators.ranking import global_running_sums
+    from ..sources.rest import local_frame
     from ..streaming.replay import run_to_memory
     from ..tables import table
     from . import memo
+    from .stats_q import _ks_d, _ks_exact, _ks_sketch
 
-    eps = _SKM_EPS
-
-    def _build() -> DataFrame:
+    def _final() -> dict:
         ev = _events_stream(spark, sf, layout="thirds", shuffle_n=4).select(
             "event_type", "value"
         )
-
         updates = ev.groupBy("event_type").applyInPandasWithState(
-            mrl_state_update(eps),
+            mrl_state_update(_SKM_EPS),
             outputStructType=MRL_MONITOR_OUT_DDL,
             stateStructType=MRL_MONITOR_STATE_DDL,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        res = run_to_memory(updates, output_mode="update").collect()
         final: dict[str, object] = {}
-        for r in res:
+        for r in run_to_memory(updates, output_mode="update").collect():
             if r.event_type not in final or r.b > final[r.event_type].b:
                 final[r.event_type] = r
-        multi_batch = max(r.b for r in final.values()) > 1
+        return final
 
-        # batch-side exact counts per type (accounting law for EVERY type)
-        ebatch = table(spark, sf, "events")
-        exact_n = {
-            r.event_type: r.n
-            for r in ebatch.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        acct_ok = all(
-            final[t].n == exact_n.get(t, -1) for t in final
-        ) and set(final) == set(exact_n)
+    final = memo(spark, ("sketch_ks_stream", sf), _final, label="sketch_ks_stream")
 
-        # exact D between monitored and reference feeds: grouped counts +
-        # two distributed prefix sums (cum_mon and cum_total; cum_ref =
-        # cum_total - cum_mon), one-row reduce
-        e = ebatch.where(
-            F.col("event_type").isin(_SKM_MON, _SKM_REF)
-        ).select(
-            F.col("value").alias("v"),
-            (F.col("event_type") == _SKM_MON).cast("long").alias("a"),
+    def summ(t):
+        r = final[t]
+        return {"points": sorted(zip(r.pv, r.pw)), "n": r.n, "slack": r.slack}
+
+    sm, sr = summ(_SKM_MON), summ(_SKM_REF)
+    d_sketch, bound = _ks_sketch(sm, sr)
+    multi_batch = max(r.b for r in final.values()) > 1
+
+    # per-type accounting against the batch table, for EVERY type: a
+    # type on one side only leaves a null and fails the law
+    ebatch = table(spark, sf, "events")
+    streamed = local_frame(
+        spark,
+        [{"event_type": t, "n_stream": r.n} for t, r in final.items()],
+        StructType.fromDDL("event_type string, n_stream long"),
+    )
+    counts = ebatch.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    acct = (
+        counts.join(
+            streamed,
+            counts["event_type"].eqNullSafe(streamed["event_type"]),
+            "full",
         )
-        g = e.groupBy("v").agg(
-            F.sum("a").alias("c1"),
-            F.count(F.lit(1)).alias("ct"),
+        .agg(
+            F.min(
+                F.coalesce(F.col("n") == F.col("n_stream"), F.lit(False))
+            ).alias("acct")
         )
-        r1 = global_running_sums(
-            g, order=[F.col("v")], value=F.col("c1"), sum_col="cum1"
-        )
-        r2 = global_running_sums(
-            r1, order=[F.col("v")], value=F.col("ct"), sum_col="cumt"
-        )
-        # the max gap needs the totals first: two one-row reduces
-        tot = r2.agg(
-            F.sum("c1").alias("n1"),
-            F.sum(F.col("ct") - F.col("c1")).alias("n2"),
-        ).first()
-        n1, n2 = int(tot["n1"]), int(tot["n2"])
-        # decimal(38,0): cum*n reaches n1*n2, which wraps int64 past
-        # ~3e9 rows per side (the q165 s2 advice, same class)
-        dnum = (
-            r2.select(
-                F.abs(
-                    F.col("cum1").cast("decimal(38,0)") * F.lit(n2)
-                    - (F.col("cumt") - F.col("cum1")).cast("decimal(38,0)")
-                    * F.lit(n1)
-                ).alias("d")
-            )
-            .agg(F.max("d"))
-            .first()[0]
-        )
-        d_exact = float(int(dnum) / (1.0 * n1 * n2))
-        from decimal import ROUND_HALF_UP, Decimal
-
-        d_exact_r = float(
-            Decimal(repr(d_exact)).quantize(
-                Decimal("0.000001"), ROUND_HALF_UP
-            )
-        )
-
-        # sketch D from the STREAM-built summaries + q170's error law
-        def summ(t):
-            r = final[t]
-            pts = sorted(zip(r.pv, r.pw))
-            return {
-                "points": pts,
-                "n": r.n,
-                "slack": r.slack,
-            }
-
-        sm, sr = summ(_SKM_MON), summ(_SKM_REF)
-
-        def _lo_cdf(summary):
-            vals = [v for v, _ in summary["points"]]
-            cums, acc = [], 0
-            for _, wgt in summary["points"]:
-                acc += wgt
-                cums.append(acc)
-            return vals, cums
-
-        vm, cm = _lo_cdf(sm)
-        vr, cr = _lo_cdf(sr)
-
-        def lo(vals, cums, x):
-            i = bisect.bisect_right(vals, x)
-            return cums[i - 1] if i else 0
-
-        union = sorted(set(vm) | set(vr))
-        d_sketch = max(
-            abs(lo(vm, cm, x) / sm["n"] - lo(vr, cr, x) / sr["n"])
-            for x in union
-        )
-        bound = (
-            sm["slack"] + max(w for _, w in sm["points"])
-        ) / sm["n"] + (
-            sr["slack"] + max(w for _, w in sr["points"])
-        ) / sr["n"]
-        ok = (
-            multi_batch
-            and acct_ok
-            and abs(d_sketch - d_exact) <= bound
-            and sum(w for _, w in sm["points"]) == sm["n"] == n1
-            and sum(w for _, w in sr["points"]) == sr["n"] == n2
-        )
-        return spark.range(1).select(
-            F.lit(d_exact_r).alias("d_exact"),
-            F.lit(n1).cast("bigint").alias("n_mon"),
-            F.lit(n2).cast("bigint").alias("n_ref"),
-            F.lit(1 if ok else 0).cast("int").alias("ok"),
-        )
-
-    return memo(spark, ("sketch_ks_stream", sf), _build, label="sketch_ks_stream")
+    )
+    e = ebatch.where(F.col("event_type").isin(_SKM_MON, _SKM_REF)).select(
+        F.col("value").alias("v"),
+        (F.col("event_type") == _SKM_MON).cast("long").alias("a"),
+    )
+    n1, n2 = F.col("n1"), F.col("n2")
+    d_exact = _ks_d("n1", "n2")
+    return _ks_exact(e, "v").crossJoin(acct).select(
+        F.round(d_exact, 6).alias("d_exact"),
+        n1.cast("bigint").alias("n_mon"),
+        n2.cast("bigint").alias("n_ref"),
+        law(
+            F.lit(multi_batch)
+            & F.col("acct")
+            & (F.abs(F.lit(d_sketch) - d_exact) <= bound)
+            & F.lit(sum(w for _, w in sm["points"]) == sm["n"])
+            & (n1 == sm["n"])
+            & F.lit(sum(w for _, w in sr["points"]) == sr["n"])
+            & (n2 == sr["n"])
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------

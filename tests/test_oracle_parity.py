@@ -7,6 +7,8 @@ standalone runner; sf0.01 is checked there before commits).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from ed_fi_x_tpdm_data_ingestion_poc_spark.queries import all_queries
@@ -48,3 +50,51 @@ def test_query_matches_oracle(name: str, spark, sf_dir: str) -> None:
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert not jobs, f"{name}: building the plan ran {len(jobs)} Spark jobs"
+
+
+# Law queries: the DuckDB twin selects `CAST(1 AS INT) AS ok`, so the
+# hash sees only that the flag is 1. The flag must be computed by the
+# plan on every evaluation (see the queries package docstring).
+_LAWS = sorted(
+    name
+    for name, spec in _SPECS.items()
+    if spec.oracle and re.search(r"CAST\(1 AS INT\)\s+AS ok\b", spec.oracle)
+)
+
+
+def _ok_alias_references(df) -> int | None:
+    """How many attributes the expression behind the `ok` output column
+    references, in the analyzed plan with cached subtrees replaced by
+    their InMemoryRelation leaves; None when no Alias in that plan makes
+    `ok` (a LocalRelation, LogicalRDD or InMemoryRelation leaf carries
+    it)."""
+    plan = df._jdf.queryExecution().withCachedData()
+    out = plan.output()
+    (ok_id,) = [
+        out.apply(i).exprId().id()
+        for i in range(out.size())
+        if out.apply(i).name() == "ok"
+    ]
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        exprs, kids = node.expressions(), node.children()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if (
+                e.getClass().getSimpleName() == "Alias"
+                and e.exprId().id() == ok_id
+            ):
+                return e.references().size()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return None
+
+
+@pytest.mark.parametrize("name", _LAWS)
+def test_law_ok_is_computed_in_the_plan(name: str, spark, sf_dir: str) -> None:
+    """A memo never stores a verdict: `ok` is aliased from an expression
+    over at least one attribute — not a literal, and not a column a
+    leaf (a local or RDD scan of driver rows, a cached frame) already
+    carries."""
+    refs = _ok_alias_references(_SPECS[name].build(spark, sf_dir))
+    assert refs, f"{name}: ok is not computed in the plan (references={refs})"

@@ -122,6 +122,33 @@ def test_bigram_nll_forms_agree(spark):
     assert da == db
 
 
+def test_window_form_byte_gate(spark, monkeypatch):
+    """Few partitions are not enough: an input whose estimated bytes
+    exceed _WINDOW_FORM_MAX_BYTES takes the groupBy form even at one
+    partition, and computes the same values as the window form."""
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.operators import scoring
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.queries import _est_row_bytes
+
+    corpus = [
+        (0, "a b a c b a"),
+        (1, "b a c c a b"),
+        (2, "c c c b a a"),
+    ]
+    small = spark.createDataFrame(corpus, "doc_id long, text string")
+    assert small.rdd.getNumPartitions() <= scoring._WINDOW_FORM_MAX_PARTS
+    assert scoring._window_form_ok(small)
+    window = {r.id: (r.n_bigrams, r.nll) for r in bigram_nll(small).collect()}
+
+    nbytes = len(corpus) * _est_row_bytes(small.schema)
+    monkeypatch.setattr(scoring, "_WINDOW_FORM_MAX_BYTES", nbytes - 1)
+    assert not scoring._window_form_ok(small)
+    grouped = {r.id: (r.n_bigrams, r.nll) for r in bigram_nll(small).collect()}
+    assert grouped == window
+
+    monkeypatch.setattr(scoring, "_WINDOW_FORM_MAX_BYTES", nbytes)
+    assert scoring._window_form_ok(small)
+
+
 def test_score_plan_is_map_only_jvm(spark):
     from ed_fi_x_tpdm_data_ingestion_poc_spark.plans import audit
 

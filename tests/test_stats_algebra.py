@@ -140,8 +140,8 @@ def test_cusum_crossmultiplied_identity(c):
 # --------------------------------------------------------------------------
 # KS sketch-screen decision-safety: a PROPERTY of the margin algebra, so it
 # gets a hypothesis sweep over arbitrary two-sample data and batchings —
-# no Spark involved: summaries built with the same batch_points kernel the
-# distributed passes use.
+# summaries built with the same batch_points kernel the distributed passes
+# use; the screen's rows are a local frame, so collecting them runs no job.
 # --------------------------------------------------------------------------
 
 import numpy as np
@@ -152,7 +152,8 @@ from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.quantiles import (
     batch_points,
 )
 from ed_fi_x_tpdm_data_ingestion_poc_spark.queries.stats_q import (
-    _ks_sketch_screen,
+    _ks_screen_driver,
+    _ks_sketch_pairs,
 )
 
 
@@ -199,29 +200,35 @@ def _exact_ks(a: list[float], b: list[float]) -> float:
     crit=st.floats(min_value=0.01, max_value=1.0),
 )
 def test_screen_decision_safety_property(
-    a, b, na_batches, nb_batches, eps, crit
+    spark, a, b, na_batches, nb_batches, eps, crit
 ):
     """For ARBITRARY two-sample data, batching, compression rate, and
     critical value: (1) the sketch interval brackets the exact D;
     (2) any DECIDED pair's decision equals the exact rounded decision —
-    the margin algebra's whole contract, independent of the fixtures."""
+    the margin algebra's whole contract, independent of the fixtures.
+    The screen takes the Bonferroni constant c and compares against
+    c * sqrt((na + nb)/(na * nb)), so c is chosen to put that critical
+    value at `crit`, and the decision is checked against the value the
+    plan computes."""
     from decimal import ROUND_HALF_UP, Decimal
 
     summ = {
         "sa": _summary_of(a, na_batches, eps),
         "sb": _summary_of(b, nb_batches, eps),
     }
-    decided, undecided, info = _ks_sketch_screen(
-        summ, lambda na, nb: crit
-    )
-    d_sketch, bound = info[("sa", "sb")]
+    scale = math.sqrt((len(a) + len(b)) / (1.0 * len(a) * len(b)))
+    c = crit / scale
+    crit_plan = c * scale
+    sketch = _ks_sketch_pairs(spark, summ)
+    (row,) = sketch.collect()
+    (screen,) = _ks_screen_driver(sketch, c).collect()
     d_exact = _exact_ks(a, b)
-    assert abs(d_sketch - d_exact) <= bound + 1e-12
+    assert abs(row.d_sketch - d_exact) <= row.bound + 1e-12
 
     def r6(x):
         return float(
             Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
         )
 
-    for _, _, rej in decided:
-        assert rej == int(r6(d_exact) > r6(crit))
+    if screen.decision >= 0:
+        assert screen.decision == int(r6(d_exact) > r6(crit_plan))

@@ -583,18 +583,31 @@ def _ks_exact_ref(docs: pd.DataFrame) -> dict:
     return out
 
 
+def _ks_crit_of(c: float):
+    """The critical D the plans compute, c * sqrt((na + nb)/(na * nb)),
+    as a Python closure over (na, nb)."""
+    import math
+
+    return lambda na, nb: c * math.sqrt((na + nb) / (1.0 * na * nb))
+
+
+def _r6(x: float) -> float:
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
 def test_ks_screen_law_and_decision_safety(spark, sf_dir):
     """q170's error law on the per-source summaries, and the screen's
     core contract: every DECIDED pair's decision equals the exact
     rounded Bonferroni decision (the margins absorb both roundings)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.quantiles import (
         quantile_summary_by,
     )
     from ed_fi_x_tpdm_data_ingestion_poc_spark.queries.stats_q import (
-        _ks_bonf_crit,
-        _ks_sketch_screen,
+        _ks_c,
+        _ks_screen_driver,
+        _ks_sketch_pairs,
     )
 
     docs = _docs(sf_dir)
@@ -605,22 +618,25 @@ def test_ks_screen_law_and_decision_safety(spark, sf_dir):
         "source",
         eps=0.02,
     )
-    n_src = docs["source"].nunique()
-    crit_of = _ks_bonf_crit(n_src)
-    decided, undecided, info = _ks_sketch_screen(summ, crit_of)
-    assert len(decided) + len(undecided) == len(exact)
-
-    def r6(x):
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
+    c = _ks_c(docs["source"].nunique())
+    crit_of = _ks_crit_of(c)
+    sketch = _ks_sketch_pairs(spark, summ)
+    info = {
+        (r.source_a, r.source_b): (r.d_sketch, r.bound)
+        for r in sketch.collect()
+    }
+    screen = _ks_screen_driver(sketch, c).collect()
+    assert len(screen) == len(exact)
 
     for (a, b), (d_exact, na, nb) in exact.items():
         d_sketch, bound = info[(a, b)]
         assert abs(d_sketch - d_exact) <= bound + 1e-12, (a, b)
-    for a, b, rej in decided:
-        d_exact, na, nb = exact[(a, b)]
-        assert rej == int(r6(d_exact) > r6(crit_of(na, nb))), (a, b)
+    for r in screen:
+        if r.decision >= 0:
+            d_exact, na, nb = exact[(r.source_a, r.source_b)]
+            assert r.decision == int(
+                _r6(d_exact) > _r6(crit_of(na, nb))
+            ), (r.source_a, r.source_b)
 
 
 def test_ks_restricted_grid_equals_full(spark, sf_dir):
@@ -865,22 +881,18 @@ def test_token_coverage_matches_reference(spark, sf_dir):
         assert abs(row["share"] - covered / tot) < 1e-6
 
 
-def test_ks_distributed_screen_brackets_and_decision_safety(spark, sf_dir):
+def test_ks_distributed_screen_brackets_and_decision_safety(
+    spark, sf_dir, monkeypatch
+):
     """The distributed grid-CDF screen's two-sided interval must bracket
     the exact D for every pair (q170 slack + fixed-grid interpolation
     term), and every DECIDED pair must match the exact rounded
     Bonferroni decision — including under an adversarially COARSE grid,
     which may only widen the undecided band, never flip a decision."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
     from ed_fi_x_tpdm_data_ingestion_poc_spark.operators.quantiles import (
         quantile_summary_by,
     )
-    from ed_fi_x_tpdm_data_ingestion_poc_spark.queries.stats_q import (
-        _ks_bonf_crit,
-        _ks_sketch_screen_distributed,
-    )
+    from ed_fi_x_tpdm_data_ingestion_poc_spark.queries import stats_q
 
     docs = _docs(sf_dir)
     exact = _ks_exact_ref(docs)
@@ -890,36 +902,29 @@ def test_ks_distributed_screen_brackets_and_decision_safety(spark, sf_dir):
         "source",
         eps=0.02,
     )
-    n_src = docs["source"].nunique()
-    m = n_src * (n_src - 1) // 2
-    c_bonf = math.sqrt(math.log(2.0 / (0.05 / m)) / 2.0)
-    crit_of = _ks_bonf_crit(n_src)
-
-    def r6(x):
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
+    c = stats_q._ks_c(docs["source"].nunique())
+    crit_of = _ks_crit_of(c)
 
     for grid_size in (128, 8):  # production grid and an adversarial one
-        rows = _ks_sketch_screen_distributed(
-            spark, summ, c_bonf, grid_size=grid_size
-        ).collect()
+        monkeypatch.setattr(stats_q, "_KS_GRID_SIZE", grid_size)
+        rows = stats_q._ks_screen_distributed(spark, summ, c).collect()
         assert len(rows) == len(exact)
         for r in rows:
             d_exact, na, nb = exact[(r.source_a, r.source_b)]
             assert r.lo_bound - 1e-12 <= d_exact <= r.up_bound + 1e-12
             if r.decision >= 0:
                 assert r.decision == int(
-                    r6(d_exact) > r6(crit_of(na, nb))
+                    _r6(d_exact) > _r6(crit_of(na, nb))
                 ), (r.source_a, r.source_b, grid_size)
 
 
-def test_ks_matrix_decisions_degenerate_sources(spark, tmp_path):
+def test_ks_matrix_decisions_degenerate_sources(spark, sf_dir, tmp_path):
     """ADVICE r13: with fewer than 2 sources there are no pairs — m = 0
     used to divide alpha by zero (and the driver-screen path indexed an
     empty parts list). The correct answer is an EMPTY decision table
     with the production schema, on both the single-source and the
-    zero-row feed."""
+    zero-row feed. On the fixture's 20-source feed the selector's
+    decisions are q176's reject_bonf."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -948,6 +953,17 @@ def test_ks_matrix_decisions_degenerate_sources(spark, tmp_path):
         out = ks_matrix_decisions(spark, str(d))
         assert out.columns == ["source_a", "source_b", "reject_bonf"]
         assert out.count() == 0, label
+
+    got = sorted(tuple(r) for r in ks_matrix_decisions(spark, sf_dir).collect())
+    want = sorted(
+        tuple(r)
+        for r in _SPECS["qz176_ks_matrix"]
+        .build(spark, sf_dir)
+        .select("source_a", "source_b", "reject_bonf")
+        .collect()
+    )
+    assert len(got) == 190
+    assert got == want
 
 
 def test_benford_filters_subresolution_values(spark, tmp_path):
