@@ -217,26 +217,48 @@ def tune(spark: SparkSession, cfg: EngineConfig | None = None) -> SparkSession:
     return spark
 
 
+# Tungsten page size for the local session. Spark derives it from the heap
+# (64 MiB at 8g), and every broadcast hash relation takes at least one
+# whole page: a 4-row descriptor vocabulary's broadcast held a 64 MiB
+# long[], and an ingest sync's relations stay reachable into the next
+# sync. At 4 MiB the 8192-entry page table still covers a 20g heap's
+# per-task share.
+PAGE_SIZE = "4m"
+
+
+def _submitted_conf(launch: dict[str, str]):
+    """The conf spark-submit gives the driver (its --conf flags,
+    PYSPARK_SUBMIT_ARGS, spark-defaults.conf): the JVM's spark.* system
+    properties. Launches the JVM with `launch` when none runs yet."""
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(launch.items()))
+    return SparkConf()
+
+
 def get_spark(cfg: EngineConfig | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the engine.
 
     local[N] in tests; on a real cluster the master/resources come from
-    spark-submit and this only applies SQL-level conf.
+    spark-submit and this only applies SQL-level conf. The page size is
+    PAGE_SIZE unless extra_conf or spark-submit sets spark.buffer.pageSize.
     """
     cfg = cfg or EngineConfig()
     par = _default_parallelism()
-    builder = (
-        SparkSession.builder.appName(cfg.app_name)
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions or max(32, par)))
+    conf = {
+        "spark.app.name": cfg.app_name,
+        "spark.sql.shuffle.partitions": str(cfg.shuffle_partitions or max(32, par)),
         # Local-mode heap default: adaptive to the box (see
         # _default_driver_memory), overridable via SPARK_DRIVER_MEMORY.
-        .config("spark.driver.memory", _default_driver_memory(par))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", cfg.session_timezone)
-    )
+        "spark.driver.memory": _default_driver_memory(par),
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": cfg.session_timezone,
+    }
     if cfg.master:
-        builder = builder.master(cfg.master)
+        conf["spark.master"] = cfg.master
     elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{par}]")
-    spark = builder.getOrCreate()
+        conf["spark.master"] = f"local[{par}]"
+    key = "spark.buffer.pageSize"
+    conf[key] = cfg.extra_conf.get(key) or _submitted_conf(conf).get(key, PAGE_SIZE)
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     return tune(spark, cfg)

@@ -23,6 +23,12 @@ the outcomes and AQE does not coalesce the shuffles inside a cached plan
 (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is false).
 coalesce is narrow: it adds no shuffle and never raises the partition
 count, and tasks beyond the slot count never ran at the same time anyway.
+
+Every op is a request row (op, key, body, etag) and one send loop serves
+them all, so the request rows of several ops union into ONE send:
+app.run sends a sync's upserts and deletes in one wave of tasks, each
+with one token and one kept-alive connection (sources/http.py), instead
+of a wave per op. Each Python task costs a fixed ~0.3 s to start.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..session import ship_package
 from ..sources.http import Client, OAuthConfig, endpoint_url, resource_url
@@ -56,33 +63,64 @@ def sink_client(sink: RestSink) -> Client:
         return Client(sink.auth, sink.timeout_sec)
 
 
-def send_rows(client: Client, rows: Iterable, op: str, request) -> Iterator[tuple]:
-    """One request per row; yields one outcome (key, op, status, ok, error)
-    each, keyed by the row's first column. request(*row) gives (url,
-    method, body, headers)."""
-    for row in rows:
-        status, resp, _ = client.call(*request(*row))
+_METHODS = {"upsert": "POST", "delete": "DELETE", "update": "PUT"}
+
+
+def _request(base: str, op: str, key, body, etag) -> tuple:
+    """(url, method, body, headers) of one request row against endpoint
+    `base`: an upsert POSTs its body to the endpoint; a delete or an
+    update addresses the resource `key`, and an update with an etag
+    carries If-Match."""
+    url = base if op == "upsert" else resource_url(base, key)
+    data = None if op == "delete" else str(body).encode()
+    headers = None if etag is None else {"If-Match": str(etag)}
+    return url, _METHODS[op], data, headers
+
+
+def send_rows(client: Client, base: str, rows: Iterable) -> Iterator[tuple]:
+    """One request per (op, key, body, etag) row; yields one outcome
+    (key, op, status, ok, error) each."""
+    for op, key, body, etag in rows:
+        status, resp, _ = client.call(*_request(base, op, key, body, etag))
         ok = 200 <= status < 300
         error = None if ok else resp[:500].decode(errors="replace")
-        yield str(row[0]), op, status, ok, error
+        yield str(key), op, status, ok, error
 
 
-def _send_all(df: DataFrame, sink: RestSink, op: str, request) -> DataFrame:
-    """send_rows over every row of `df`, from executor partitions, one
-    client (and token) per task; returns the outcome rows."""
-    ship_package(df.sparkSession)
+def request_rows(
+    df: DataFrame, op: str, key_col: str, body_col: str | None = None,
+    etag_col: str | None = None,
+) -> DataFrame:
+    """The request rows (op, key, body, etag) for `op` on every row of
+    `df`; columns not given are null. Request rows of several ops union
+    into one send."""
+    def col(name):
+        return (F.col(name) if name else F.lit(None)).cast("string")
+
+    return df.select(
+        F.lit(op).alias("op"), col(key_col).alias("key"),
+        col(body_col).alias("body"), col(etag_col).alias("etag"),
+    )
+
+
+def send_requests(reqs: DataFrame, sink: RestSink) -> DataFrame:
+    """send_rows over every request row, from executor partitions; returns
+    the outcome rows. One task per task slot, each with one client, one
+    token and one kept connection, closed when its partition ends."""
+    ship_package(reqs.sparkSession)
+    base = endpoint_url(sink.base_url, sink.path)
 
     def send_partition(batches):
         import pandas as pd
 
-        client = sink_client(sink)
-        for pdf in batches:
-            rows = pdf.itertuples(index=False, name=None)
-            outcomes = list(send_rows(client, rows, op, request))
-            yield pd.DataFrame(outcomes, columns=OUTCOME_COLUMNS)
+        with sink_client(sink) as client:
+            for pdf in batches:
+                rows = pdf.itertuples(index=False, name=None)
+                outcomes = list(send_rows(client, base, rows))
+                yield pd.DataFrame(outcomes, columns=OUTCOME_COLUMNS)
 
-    slots = df.sparkSession.sparkContext.defaultParallelism
-    return df.coalesce(slots).mapInPandas(send_partition, OUTCOME_SCHEMA)
+    slots = reqs.sparkSession.sparkContext.defaultParallelism
+    return reqs.coalesce(slots).mapInPandas(send_partition, OUTCOME_SCHEMA)
 
 
 def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str) -> DataFrame:
@@ -92,20 +130,12 @@ def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str)
     docs must carry the natural key and the serialized JSON body
     (build with F.to_json(F.struct(...)) — ref R23).
     """
-    url = endpoint_url(sink.base_url, sink.path)
-    return _send_all(
-        docs.select(key_col, json_col), sink, "upsert",
-        lambda key, body: (url, "POST", str(body).encode(), None),
-    )
+    return send_requests(request_rows(docs, "upsert", key_col, json_col), sink)
 
 
 def rest_delete(ids: DataFrame, sink: RestSink, *, id_col: str) -> DataFrame:
     """DELETE by resource id; outcome rows as in rest_upsert (ref R19)."""
-    base = endpoint_url(sink.base_url, sink.path)
-    return _send_all(
-        ids.select(id_col), sink, "delete",
-        lambda rid: (resource_url(base, rid), "DELETE", None, None),
-    )
+    return send_requests(request_rows(ids, "delete", id_col), sink)
 
 
 def rest_update(
@@ -121,11 +151,4 @@ def rest_update(
     carries If-Match — a remote 412 (precondition failed) means the
     document changed since it was read, and is RECORDED like any other
     per-document failure."""
-    base = endpoint_url(sink.base_url, sink.path)
-
-    def request(rid, body, etag=None):
-        headers = {"If-Match": str(etag)} if etag is not None else None
-        return resource_url(base, rid), "PUT", str(body).encode(), headers
-
-    cols = [id_col, json_col] + ([etag_col] if etag_col else [])
-    return _send_all(docs.select(*cols), sink, "update", request)
+    return send_requests(request_rows(docs, "update", id_col, json_col, etag_col), sink)

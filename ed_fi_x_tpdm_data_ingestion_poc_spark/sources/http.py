@@ -9,7 +9,8 @@ Executor code (mapInPandas closures, DataSource readers and writers) may
 import this module because session.ship_package zips the package onto
 every worker; the entry points that run it there call ship_package first.
 
-Only stdlib HTTP (urllib) — no extra dependencies.
+Only stdlib HTTP (http.client over kept-alive connections) — no extra
+dependencies.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from __future__ import annotations
 import base64
 import http.client
 import json
-import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Iterator
@@ -38,21 +38,9 @@ class OAuthConfig:
 
 
 def fetch_token(auth: OAuthConfig, timeout: float = 30.0) -> str:
-    """POST grant_type=client_credentials with Basic auth; parse access_token."""
-    basic = base64.b64encode(
-        f"{auth.client_id}:{auth.client_secret}".encode()
-    ).decode()
-    req = urllib.request.Request(
-        auth.token_url,
-        data=b"grant_type=client_credentials",
-        headers={
-            "Authorization": f"Basic {basic}",
-            "Content-Type": "application/x-www-form-urlencoded",
-        },
-        method="POST",
-    )
-    with urllib.request.urlopen(req, timeout=timeout) as resp:
-        return json.loads(resp.read())["access_token"]
+    """A fresh access token for `auth` over a connection of its own."""
+    with Client(auth, timeout) as client:
+        return client.grant()
 
 
 def _page_url(
@@ -77,9 +65,36 @@ def resource_url(endpoint: str, rid) -> str:
     return f"{endpoint}/{urllib.parse.quote(str(rid), safe='')}"
 
 
+def _open(scheme: str, netloc: str, timeout: float):
+    """A connection to `netloc` -> (connection, request-target prefix,
+    headers for every request). Like urllib, it goes through the proxy
+    that http_proxy/https_proxy name unless no_proxy covers the host: an
+    http request goes to the proxy in absolute form, an https one through
+    a CONNECT tunnel; user:password in the proxy URL becomes
+    Proxy-Authorization."""
+    https = scheme == "https"
+    cls = http.client.HTTPSConnection if https else http.client.HTTPConnection
+    proxy = urllib.request.getproxies().get(scheme)
+    if not proxy or urllib.request.proxy_bypass(netloc):
+        return cls(netloc, timeout=timeout), "", {}
+    p = urllib.parse.urlsplit(proxy if "://" in proxy else f"http://{proxy}")
+    auth = {}
+    if p.username is not None:
+        cred = f"{urllib.parse.unquote(p.username)}:{urllib.parse.unquote(p.password or '')}"
+        auth["Proxy-Authorization"] = f"Basic {base64.b64encode(cred.encode()).decode()}"
+    hostport = p.netloc.rpartition("@")[2]
+    if https:
+        conn = cls(hostport, timeout=timeout)
+        conn.set_tunnel(netloc, headers=auth)
+        return conn, "", {}
+    return http.client.HTTPConnection(hostport, timeout=timeout), f"{scheme}://{netloc}", auth
+
+
 class Client:
-    """Bearer-token client. Plain attributes, so it pickles to executors;
-    a token refreshed by a 401 is kept for this client's later calls."""
+    """Bearer-token client that keeps one persistent connection per
+    (scheme, host). A token refreshed by a 401 is kept for this client's
+    later calls. It pickles to executors without its connections, which
+    reopen on first use; close() (or leaving a `with` block) closes them."""
 
     def __init__(
         self, auth: OAuthConfig | None, timeout: float, token: str | None = None
@@ -87,11 +102,73 @@ class Client:
         self.auth = auth
         self.timeout = timeout
         self.token = token
+        self._conns: dict[tuple[str, str], tuple] = {}
+
+    def __getstate__(self) -> dict:
+        return {k: v for k, v in self.__dict__.items() if k != "_conns"}
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state, _conns={})
+
+    def __enter__(self) -> Client:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def close(self) -> None:
+        for conn, _, _ in self._conns.values():
+            conn.close()
+        self._conns.clear()
 
     @classmethod
     def login(cls, auth: OAuthConfig | None, timeout: float) -> Client:
         """A client holding a fresh token (no token without auth)."""
-        return cls(auth, timeout, fetch_token(auth, timeout) if auth else None)
+        client = cls(auth, timeout)
+        if auth:
+            client.token = client.grant()
+        return client
+
+    def grant(self) -> str:
+        """POST grant_type=client_credentials with Basic auth; parse
+        access_token. A status outside 2xx raises."""
+        basic = base64.b64encode(
+            f"{self.auth.client_id}:{self.auth.client_secret}".encode()
+        ).decode()
+        status, body, _ = self._send(
+            self.auth.token_url,
+            "POST",
+            b"grant_type=client_credentials",
+            {
+                "Authorization": f"Basic {basic}",
+                "Content-Type": "application/x-www-form-urlencoded",
+            },
+        )
+        if not 200 <= status < 300:
+            raise OSError(
+                f"token request {self.auth.token_url} failed: HTTP {status}: {body[:200]!r}"
+            )
+        return json.loads(body)["access_token"]
+
+    def _exchange(self, key, method, target, body, headers) -> http.client.HTTPResponse:
+        """One request on the kept connection for `key`. A reused
+        connection that the server closed while it was idle fails before
+        any response arrives; it is reopened and the request sent once
+        more."""
+        if key not in self._conns:
+            self._conns[key] = _open(*key, self.timeout)
+        conn, prefix, extra = self._conns[key]
+        headers = {**headers, **extra}
+        reused = conn.sock is not None
+        try:
+            conn.request(method, prefix + target, body, headers)
+            return conn.getresponse()
+        except ConnectionError:
+            conn.close()
+            if not reused:
+                raise
+        conn.request(method, prefix + target, body, headers)
+        return conn.getresponse()
 
     def _send(self, url, method, body, headers):
         h = {"Accept": "application/json"}
@@ -100,13 +177,15 @@ class Client:
         if self.token:
             h["Authorization"] = f"Bearer {self.token}"
         h.update(headers or {})
-        req = urllib.request.Request(url, data=body, headers=h, method=method)
+        split = urllib.parse.urlsplit(url)
+        key = (split.scheme, split.netloc)
+        target = (split.path or "/") + (f"?{split.query}" if split.query else "")
         try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                return resp.status, resp.read(), resp.headers
-        except urllib.error.HTTPError as e:
-            return e.code, e.read(), e.headers
+            resp = self._exchange(key, method, target, body, h)
+            return resp.status, resp.read(), resp.headers
         except (OSError, http.client.HTTPException) as e:
+            if key in self._conns:  # its state is unknown: start afresh
+                self._conns[key][0].close()
             return -1, str(e).encode(), http.client.HTTPMessage()
 
     def call(
@@ -122,7 +201,7 @@ class Client:
         refreshes the token once and retries."""
         status, resp, hdrs = self._send(url, method, body, headers)
         if status == 401 and self.auth is not None:
-            self.token = fetch_token(self.auth, self.timeout)
+            self.token = self.grant()
             status, resp, hdrs = self._send(url, method, body, headers)
         return status, resp, hdrs
 

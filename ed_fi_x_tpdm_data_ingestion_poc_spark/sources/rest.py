@@ -75,12 +75,12 @@ def local_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> Da
 def iter_all_rows(src: RestSource) -> Iterator[dict]:
     """Every row, page by page on the driver (fixes the reference's
     first-page-only truncation)."""
-    client = Client.login(src.auth, src.timeout_sec)
     url = endpoint_url(src.base_url, src.path)
-    first, total = client.first_page(url, src.page_size, {})
-    yield from first
-    for page in iter_pages(client, url, {}, len(first), total, len(first)):
-        yield from page
+    with Client.login(src.auth, src.timeout_sec) as client:
+        first, total = client.first_page(url, src.page_size, {})
+        yield from first
+        for page in iter_pages(client, url, {}, len(first), total, len(first)):
+            yield from page
 
 
 def get_by_id(
@@ -90,9 +90,10 @@ def get_by_id(
     read (ref R20, TeacherCandidatesApi.java:508): returns (status, doc,
     etag); 304 -> (304, None, etag) meaning the cached copy is current."""
     headers = {"If-None-Match": str(etag)} if etag is not None else None
-    status, body, hdrs = Client.login(src.auth, src.timeout_sec).call(
-        resource_url(endpoint_url(src.base_url, src.path), rid), headers=headers
-    )
+    with Client.login(src.auth, src.timeout_sec) as client:
+        status, body, hdrs = client.call(
+            resource_url(endpoint_url(src.base_url, src.path), rid), headers=headers
+        )
     if status == 304:
         return 304, None, etag
     return status, (json.loads(body) if status == 200 and body else None), hdrs.get("ETag")
@@ -109,13 +110,14 @@ def read_rest(spark: SparkSession, src: RestSource, schema: StructType) -> DataF
     count: sequential driver pagination (still complete, just not
     parallel).
     """
-    client = Client.login(src.auth, src.timeout_sec)
     url = endpoint_url(src.base_url, src.path)
-    first, total = client.first_page(url, src.page_size, {})
-    step = len(first)
-    if total is None:
-        rows = chain(first, *iter_pages(client, url, {}, step, None, step))
-        return local_frame(spark, list(rows), schema)
+    # the driver's connection closes here; executors reopen their own
+    with Client.login(src.auth, src.timeout_sec) as client:
+        first, total = client.first_page(url, src.page_size, {})
+        step = len(first)
+        if total is None:
+            rows = chain(first, *iter_pages(client, url, {}, step, None, step))
+            return local_frame(spark, list(rows), schema)
     head = local_frame(spark, first, schema)
     pages = page_plan(step, total)
     if not pages:
@@ -128,10 +130,11 @@ def read_rest(spark: SparkSession, src: RestSource, schema: StructType) -> DataF
     field_names = schema.fieldNames()
 
     def fetch_partition(batches):
-        for pdf in batches:
-            for off, take in zip(pdf["offset"].tolist(), pdf["take"].tolist()):
-                for page in iter_pages(client, url, {}, off, off + take, step):
-                    yield _page_frame(page, field_names)
+        with client:  # this task's copy
+            for pdf in batches:
+                for off, take in zip(pdf["offset"].tolist(), pdf["take"].tolist()):
+                    for page in iter_pages(client, url, {}, off, off + take, step):
+                        yield _page_frame(page, field_names)
 
     json_df = plan.mapInPandas(fetch_partition, schema=schema)
     # Columns arrive as python objects; enforce declared types.

@@ -26,7 +26,8 @@ first page, page plan and page walk (sources/http.py), and adds:
   token rides in the partitions: Spark pickles the reader before it
   plans them. A 401 refreshes it (TokenRetriever.java:44-73,
   SisConnectorService.java:494-501);
-* writes POST each row through sinks/rest_sink.py::send_rows.
+* writes POST each row through sinks/rest_sink.py::send_rows, on one
+  kept connection per task.
 
 All HTTP goes through sources/http.py.
 """
@@ -119,8 +120,8 @@ class RestDataSourceReader(DataSourceReader):
             yield from self._tuples(page)
 
     def partitions(self) -> Sequence[InputPartition]:
-        client = Client.login(self.auth, self.timeout)
-        first, total = client.first_page(self.endpoint, self.page_size, self.params)
+        with Client.login(self.auth, self.timeout) as client:
+            first, total = client.first_page(self.endpoint, self.page_size, self.params)
         step, lo, hi, tok = len(first), self.lo, self.hi, client.token
         head = self._tuples(first[lo:hi])
         if total is None:
@@ -132,8 +133,8 @@ class RestDataSourceReader(DataSourceReader):
 
     def read(self, partition: _Page) -> Iterator[tuple]:
         yield from partition.rows
-        client = Client(self.auth, self.timeout, partition.token)
-        yield from self._walk(client, partition.start, partition.stop, partition.step)
+        with Client(self.auth, self.timeout, partition.token) as client:
+            yield from self._walk(client, partition.start, partition.stop, partition.step)
 
 
 class RestDataSource(DataSource):
@@ -231,16 +232,16 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         # must be a concrete list, not a generator. Commit the offset
         # actually reached, never the counted total (see _slice).
         r = self.inner
-        client = Client.login(r.auth, r.timeout)
-        _, total = client.first_page(r.endpoint, 1, r.params)
-        if total is None:
-            raise OSError("REST first page got no Total-Count; cannot stream")
-        rows = self._slice(client, start["offset"], max(total, start["offset"]))
+        with Client.login(r.auth, r.timeout) as client:
+            _, total = client.first_page(r.endpoint, 1, r.params)
+            if total is None:
+                raise OSError("REST first page got no Total-Count; cannot stream")
+            rows = self._slice(client, start["offset"], max(total, start["offset"]))
         return rows, {"offset": start["offset"] + len(rows)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        client = Client.login(self.inner.auth, self.inner.timeout)
-        return self._slice(client, start["offset"], end["offset"])
+        with Client.login(self.inner.auth, self.inner.timeout) as client:
+            return self._slice(client, start["offset"], end["offset"])
 
 
 @dataclass
@@ -274,19 +275,17 @@ class RestDataSourceWriter(DataSourceWriter):
 
     def write(self, rows) -> _Posted:
         url = endpoint_url(self.sink.base_url, self.sink.path)
-        bodies = ((json.dumps(row.asDict(), default=str),) for row in rows)
-        outcomes = send_rows(
-            sink_client(self.sink), bodies, "upsert",
-            lambda body: (url, "POST", body.encode(), None),
-        )
+        bodies = (json.dumps(row.asDict(), default=str) for row in rows)
+        reqs = (("upsert", body, body, None) for body in bodies)
         ok = failed = 0
-        for _, _, status, good, error in outcomes:
-            if good:
-                ok += 1
-            elif self.best_effort:
-                failed += 1
-            else:
-                raise OSError(f"REST POST {url}: HTTP {status}: {error[:200]!r}")
+        with sink_client(self.sink) as client:
+            for _, _, status, good, error in send_rows(client, url, reqs):
+                if good:
+                    ok += 1
+                elif self.best_effort:
+                    failed += 1
+                else:
+                    raise OSError(f"REST POST {url}: HTTP {status}: {error[:200]!r}")
         return _Posted(ok=ok, failed=failed)
 
     def commit(self, messages) -> None:

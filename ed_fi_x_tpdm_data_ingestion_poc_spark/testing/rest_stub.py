@@ -5,6 +5,10 @@ with offset/limit (+ Total-Count header), OAuth2 client-credentials token
 endpoint, POST upsert, DELETE by id — plus fault injection (401-once) to
 exercise the token-refresh retry pattern
 (SisConnectorService.java:189-196).
+
+Like a real ODS it speaks HTTP/1.1 and keeps connections alive, with
+Nagle's algorithm off: without that, a kept-alive request waits on Nagle
+plus the peer's delayed ACK (~44 ms a request on Linux loopback).
 """
 
 from __future__ import annotations
@@ -21,6 +25,9 @@ class StubRestServer:
     rows: list of dicts served at GET /items.
     fail_first_with_401: every worker's FIRST request 401s unless it carries
       the refreshed token ("tok-2"), proving the retry path.
+    keep_alive: False answers as HTTP/1.0 and closes after each response.
+    idle_timeout: seconds after which an idle connection is dropped.
+    connections counts the connections accepted.
     """
 
     def __init__(
@@ -33,6 +40,8 @@ class StubRestServer:
         ignore_filters: bool = False,
         extra_total: int = 0,
         reject_tokens_below: int = 0,
+        keep_alive: bool = True,
+        idle_timeout: float | None = None,
     ) -> None:
         self.rows = rows
         self.page_size_cap = page_size_cap
@@ -47,6 +56,9 @@ class StubRestServer:
         # hard expiry: tokens tok-n with n < this ALWAYS 401 (vs
         # fail_first_with_401's fail-once) — exercises refresh propagation
         self.reject_tokens_below = reject_tokens_below
+        self.keep_alive = keep_alive
+        self.idle_timeout = idle_timeout
+        self.connections = 0
         self.upserts: list[dict] = []
         self.deletes: list[str] = []
         self.get_requests: list[str] = []  # raw query strings, for pushdown asserts
@@ -64,6 +76,15 @@ class StubRestServer:
         stub = self
 
         class Handler(BaseHTTPRequestHandler):
+            protocol_version = "HTTP/1.1" if stub.keep_alive else "HTTP/1.0"
+            disable_nagle_algorithm = True
+            timeout = stub.idle_timeout
+
+            def setup(self):
+                super().setup()
+                with stub._lock:
+                    stub.connections += 1
+
             def log_message(self, *a):  # silence
                 pass
 

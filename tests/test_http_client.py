@@ -1,13 +1,16 @@
 """The one HTTP client (sources/http.py) as every REST caller sees it: the
 401 refresh-retry on by-id reads and first pages, percent-encoded
 resource ids, connection errors as status -1, one login and one GET per
-page for both REST readers, and guards that no other module speaks HTTP
-or pages."""
+page for both REST readers, kept-alive connections (one per client,
+reopened when stale, never pickled), proxies from the environment, and
+guards that no other module speaks HTTP or pages."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import pickle
+import time
 
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -135,6 +138,71 @@ def test_writer_best_effort_counts_connection_errors(spark):
     save(best_effort="true")  # connection error counted, task completes
     with pytest.raises(Exception, match="HTTP -1"):
         save()
+
+
+def _post(client: Client, s: StubRestServer, n: int) -> list[int]:
+    return [client.call(f"{s.url}/items", "POST", b'{"v":%d}' % i)[0] for i in range(n)]
+
+
+def test_calls_on_one_client_share_one_connection():
+    with StubRestServer([]) as s, Client(None, 5.0) as client:
+        assert _post(client, s, 20) == [200] * 20
+        assert (s.connections, len(s.upserts)) == (1, 20)
+
+
+def test_server_that_closes_after_each_response():
+    with StubRestServer([], keep_alive=False) as s, Client(None, 5.0) as client:
+        assert _post(client, s, 5) == [200] * 5
+        assert (s.connections, len(s.upserts)) == (5, 5)
+
+
+def test_connection_dropped_while_idle_is_reopened_once():
+    """The server drops the idle kept connection; the next request fails on
+    it before any response, goes out once on a new connection, and the
+    server sees it once."""
+    with StubRestServer([], idle_timeout=0.2) as s, Client(None, 5.0) as client:
+        assert _post(client, s, 1) == [200]
+        time.sleep(0.6)
+        assert client.call(f"{s.url}/items", "POST", b'{"v":"late"}')[0] == 200
+        assert s.connections == 2
+        assert s.upserts == [{"v": 0}, {"v": "late"}]
+
+
+def test_401_on_a_kept_connection_refreshes_and_retries_once():
+    with StubRestServer([], fail_first_with_401=True) as s:
+        with Client.login(OAuthConfig(s.token_url, "c", "x"), 5.0) as client:
+            assert _post(client, s, 3) == [200] * 3
+            assert client.token == "tok-2"
+        assert (s.connections, s.token_requests, len(s.upserts)) == (1, 2, 3)
+
+
+def test_used_client_pickles_without_its_connection():
+    with StubRestServer([], require_auth=True) as s:
+        client = Client.login(OAuthConfig(s.token_url, "c", "x"), 5.0)
+        assert _post(client, s, 2) == [200, 200]
+        copy = pickle.loads(pickle.dumps(client))
+        assert (copy.token, copy.auth, copy._conns) == (client.token, client.auth, {})
+        assert _post(copy, s, 1) == [200]
+        client.close()
+        copy.close()
+        assert (s.connections, s.token_requests, len(s.upserts)) == (2, 1, 3)
+
+
+def test_http_proxy_from_the_environment(monkeypatch):
+    """http_proxy names the stub: a request for a loopback address where
+    nothing listens reaches the stub in absolute form; no_proxy covering
+    the host bypasses it."""
+    for var in ("no_proxy", "NO_PROXY", "HTTP_PROXY"):
+        monkeypatch.delenv(var, raising=False)
+    with StubRestServer([{"id": 1}]) as s:
+        monkeypatch.setenv("http_proxy", s.url)
+        with Client(None, 5.0) as client:
+            status, body, _ = client.call("http://127.0.0.2:9/items?offset=0&limit=5")
+        assert (status, body) == (200, b'[{"id": 1}]')
+        monkeypatch.setenv("no_proxy", "127.0.0.2")
+        with Client(None, 2.0) as client:
+            assert client.call("http://127.0.0.2:9/items")[0] == -1
+        assert s.connections == 1
 
 
 def _speaks_http(tree: ast.AST) -> list[str]:

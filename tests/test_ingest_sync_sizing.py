@@ -1,9 +1,15 @@
 """The ingest sync sized to the cores: one REST sink task (and token) per
-task slot, descriptor vocabularies loaded without a Spark job, REST reads
-that page past a server-side cap on `limit`, and app.run freeing the
-frames it persists."""
+task slot, upserts and deletes sent in one wave of such tasks, descriptor
+vocabularies loaded without a Spark job, REST reads that page past a
+server-side cap on `limit`, app.run freeing the frames it persists, and
+4 MiB Tungsten pages."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import textwrap
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -145,12 +151,76 @@ def _app_config(tmp_path, derby_url, server) -> AppConfig:
     })
 
 
+def _write_candidates(spark, derby_url, rows):
+    spark.createDataFrame(
+        rows, "SPRIDEN_ID string, SPRIDEN_LAST_NAME string, SRC_ORDER int",
+    ).write.jdbc(derby_url, "cand_src", mode="overwrite", properties={"driver": DERBY})
+
+
+def test_run_sends_upserts_and_deletes_in_one_wave(spark, tmp_path):
+    """Upserts and deletes share one wave of sink tasks: at most one token
+    and one connection per task slot, where a wave per op takes twice
+    that."""
+    derby_url = f"jdbc:derby:{tmp_path}/db;create=true"
+    _write_candidates(spark, derby_url, [(str(i), f"n{i}", 1) for i in range(60)])
+    remote = spark.createDataFrame(
+        [(str(i), f"res-{i}") for i in range(0, 60, 2)]
+        + [(f"ghost-{i}", f"res-ghost-{i}") for i in range(20)],
+        "teacherCandidateIdentifier string, resource_id string",
+    )
+    with StubRestServer([], require_auth=True) as server:
+        cfg = _app_config(tmp_path, derby_url, server)
+        cfg.properties.update({
+            "oauth.token.url": server.token_url,
+            "oauth.client.id": "c",
+            "oauth.client.secret": "x",
+            "output.data.to.dir": "false",
+        })
+        report = run(cfg, teacher_candidate_builder(), spark=spark, remote_snapshot=remote)
+        slots = spark.sparkContext.defaultParallelism
+        assert server.token_requests <= slots
+        assert server.connections <= slots
+        assert sorted(server.deletes) == sorted(f"res-ghost-{i}" for i in range(20))
+    assert (report.upsert_count, report.delete_count, report.error_count) == (60, 20, 0)
+
+
+def test_local_session_uses_4m_pages(spark):
+    env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
+    assert env.memoryManager().pageSizeBytes() == 4 << 20
+
+
+def test_page_size_from_spark_submit_or_extra_conf_wins():
+    """In a fresh driver: a page size given to spark-submit wins over the
+    default, and one in extra_conf wins over both."""
+    script = textwrap.dedent("""
+        from ed_fi_x_tpdm_data_ingestion_poc_spark.session import EngineConfig, get_spark
+
+        def page(cfg):
+            s = get_spark(cfg)
+            got = s.sparkContext._jvm.org.apache.spark.SparkEnv.get()
+            print("PAGE", got.memoryManager().pageSizeBytes())
+            s.stop()
+
+        page(EngineConfig(master="local[1]"))
+        page(EngineConfig(master="local[1]", extra_conf={"spark.buffer.pageSize": "1m"}))
+    """)
+    env = {
+        **os.environ,
+        "SPARK_DRIVER_MEMORY": "1g",
+        "PYSPARK_SUBMIT_ARGS": "--conf spark.buffer.pageSize=2m pyspark-shell",
+    }
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=root,
+        capture_output=True, text=True, timeout=300,
+    )
+    pages = [line.split()[1] for line in out.stdout.splitlines() if line.startswith("PAGE")]
+    assert pages == [str(2 << 20), str(1 << 20)], out.stderr[-2000:]
+
+
 def test_run_frees_the_frames_it_persists(spark, tmp_path):
     derby_url = f"jdbc:derby:{tmp_path}/db;create=true"
-    spark.createDataFrame(
-        [("101", "Alvarez", 1), ("102", "Baker", 1)],
-        "SPRIDEN_ID string, SPRIDEN_LAST_NAME string, SRC_ORDER int",
-    ).write.jdbc(derby_url, "cand_src", mode="overwrite", properties={"driver": DERBY})
+    _write_candidates(spark, derby_url, [("101", "Alvarez", 1), ("102", "Baker", 1)])
     remote = spark.createDataFrame(
         [("101", "res-101"), ("ghost-9", "res-ghost")],
         "teacherCandidateIdentifier string, resource_id string",
